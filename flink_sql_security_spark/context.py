@@ -8,6 +8,12 @@ rewrite (row filter first, then mask — order is load-bearing,
 string-in/string-out like the reference (``SecurityContext.java:126-167``):
 engine-agnostic and auditable; Catalyst re-plans it with predicate pushdown and
 column pruning doing the physical heavy lifting.
+
+One enforcement path serves SQL, DataFrames and streams: the per-(user, table)
+resolvers ``row_filter_condition`` and ``masked_projection`` feed both the
+statement rewrite and :meth:`SecurityContext.apply_policies`. The mask wraps
+the table and the filter reads the wrapped table, so in every API the row
+filter compares the masked values.
 """
 
 from __future__ import annotations
@@ -15,11 +21,10 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import functions as F
 
-from .catalog import CatalogAdapter
-from .operators.data_mask import DataMaskVisitor
-from .operators.row_filter import RowFilterVisitor, qualify_condition
+from .catalog import CatalogAdapter, type_ddl_string
+from .operators.data_mask import DataMaskVisitor, masked_projection
+from .operators.row_filter import RowFilterVisitor, row_filter_condition
 from .plans.nodes import Node
 from .plans.parser import parse_statement
 from .plans.qualify import qualify
@@ -55,18 +60,19 @@ class SecurityContext:
     def rewrite_data_mask(self, username: str, sql: str) -> str:
         ast = self._parse_and_qualify(sql)
         DataMaskVisitor(
-            self.policy_manager, username, self.catalog.get_table
+            self.policy_manager, username, self.catalog.schema_provider
         ).visit(ast)
         return ast.sql()
 
     def mixed_rewrite(self, username: str, sql: str) -> str:
         """Row filter first, then mask (SecurityContext.java:154-167)."""
-        ast = self._parse_and_qualify(sql)
-        RowFilterVisitor(self.policy_manager, username).visit(ast)
-        DataMaskVisitor(
-            self.policy_manager, username, self.catalog.get_table
-        ).visit(ast)
-        return ast.sql()
+        return self._secure(username, self._parse_and_qualify(sql)).sql()
+
+    def _secure(self, username: str, node: Node) -> Node:
+        RowFilterVisitor(self.policy_manager, username).visit(node)
+        return DataMaskVisitor(
+            self.policy_manager, username, self.catalog.schema_provider
+        ).visit(node)
 
     # -- execution (SecurityContext.java:190-242) --------------------------
     def execute(self, sql: str, size: int = DEFAULT_FETCH_SIZE) -> list[Row]:
@@ -95,44 +101,29 @@ class SecurityContext:
 
     def apply_policies(self, username: str, df: DataFrame,
                        table_name: str) -> DataFrame:
-        """Apply a user's row filter + masks to any DataFrame (batch OR
+        """Apply a user's masks + row filter to any DataFrame (batch OR
         streaming) whose schema matches ``table_name``'s policies.
 
-        The shared fast path: the row filter becomes ``F.expr`` (Catalyst
-        pushes it into the scan), masks become a ``select`` of lowered
-        expressions CAST back to the column's type — all whole-stage codegen,
-        valid on streaming DataFrames too (stateless projections/filters).
+        The same two resolvers and the same order as :meth:`mixed_rewrite`:
+        select the masked projection, then filter on the masked values.
+        Both are stateless and codegen-friendly, so Catalyst pushes the
+        filter down and a streaming plan accepts them unchanged.
         """
         parts = table_name.split(".")
-        mask_policies = {
-            c: p
-            for c, p in self.policy_manager.get_table_mask_policies(
-                username, parts
-            ).items()
-            if p.condition != "MASK_NONE"
-        }
-        condition = self.policy_manager.get_row_filter_condition(username, parts)
+        projection = masked_projection(
+            self.policy_manager, username, parts,
+            lambda _: [(f.name, type_ddl_string(f.dataType))
+                       for f in df.schema.fields])
+        if projection is not None:
+            df = df.selectExpr(*(p.sql() for p in projection))
+        condition = row_filter_condition(
+            self.policy_manager, username, parts, parts[-1])
         if condition is not None:
-            df = df.filter(F.expr(condition))
-        if mask_policies:
-            visitor = DataMaskVisitor(
-                self.policy_manager, username, self.catalog.get_table
-            )
-            cols = []
-            for field in df.schema.fields:
-                policy = mask_policies.get(field.name.lower())
-                if policy is None:
-                    cols.append(F.col(field.name))
-                else:
-                    masked = visitor._mask_expr(policy, field.name)
-                    cols.append(
-                        F.expr(masked.sql())
-                        .cast(field.dataType)
-                        .alias(field.name)
-                    )
-            df = df.select(*cols)
+            # the condition's own subqueries go through the same rewrite
+            self._secure(username, condition)
+            df = df.alias(parts[-1]).filter(condition.sql())
         return df
 
     def table(self, username: str, name: str) -> DataFrame:
-        """Secured spark.table: masks + filters applied via the DataFrame API."""
+        """Secured spark.table: :meth:`apply_policies` over the table."""
         return self.apply_policies(username, self.spark.table(name), name)

@@ -490,15 +490,6 @@ def c4_select_sql(table: str = "documents", text_col: str = "text",
 
 # -- language identification ----------------------------------------------
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    words = F.split(F.lower(F.trim(text)), _WS)
-    out = {}
-    for lang, markers in LANG_MARKERS.items():
-        hits = F.size(F.filter(words, lambda w: w.isin(*markers)))
-        out[lang] = _ratio(hits, F.size(words))
-    return out
-
-
 def lang_id(text: Column) -> Column:
     """argmax over marker-stopword hit ratios; 'und' when nothing matches.
     Ties resolve by language-code order (deterministic in both engines).

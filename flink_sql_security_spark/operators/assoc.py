@@ -46,27 +46,6 @@ from ..functions.text import floor_round, floor_round_col
 
 _log = logging.getLogger(__name__)
 
-_BROADCAST_LIMIT_DEFAULT = 5_000_000
-_warned_broadcast_limit = False
-
-
-def _warn_broadcast_limit_ignored(value: int, op_name: str) -> None:
-    """One-time no-op warning (ADVICE r11): ``broadcast_items_limit``
-    stopped steering the plan when the family moved to AQE's runtime
-    broadcast decision from real aggregate sizes — a caller passing a
-    non-default value to force or suppress the plan-time broadcast
-    gets AQE's decision instead, and deserves a signal, not silence."""
-    global _warned_broadcast_limit
-    if value != _BROADCAST_LIMIT_DEFAULT and not _warned_broadcast_limit:
-        _warned_broadcast_limit = True
-        _log.warning(
-            "%s: broadcast_items_limit=%d is accepted for API "
-            "compatibility but NO LONGER steers the join strategy — "
-            "the small-side broadcast is AQE's runtime decision from "
-            "real aggregate sizes (this warning prints once)",
-            op_name, value)
-
-
 def _capped_items(df: DataFrame, basket_col: str, item_col: str,
                   max_basket_items: int | None) -> DataFrame:
     """Distinct (b, i) pairs, truncated to the ``max_basket_items``
@@ -172,24 +151,21 @@ def _capped_items_cte(table: str, basket_col: str, item_col: str,
 
 def basket_rules(df: DataFrame, *, basket_col: str, item_col: str,
                  min_support: int = 2,
-                 max_basket_items: int | None = 1000,
-                 broadcast_items_limit: int = 5_000_000) -> DataFrame:
+                 max_basket_items: int | None = 1000) -> DataFrame:
     """(antecedent, consequent, n_pair, n_ante, n_cons, confidence,
     lift) for every ordered pair with pair support ≥ ``min_support``.
 
     ``max_basket_items`` (default 1000) truncates every basket to its
     smallest items before counting — the hot-basket guard documented
     in the module docstring. Pass ``None`` to count uncapped (only
-    safe when the basket-size distribution is known bounded).
-    ``broadcast_items_limit`` is retained for API compatibility; the
-    small-side join strategy is now AQE's runtime decision from real
+    safe when the basket-size distribution is known bounded). The
+    small-side join strategy is AQE's runtime decision from real
     aggregate sizes (see :func:`_truncation_check`).
     """
     if min_support < 1:
         raise ValueError(f"min_support must be >= 1: {min_support}")
     bi = _capped_items(df, basket_col, item_col,
                        max_basket_items).persist()
-    _warn_broadcast_limit_ignored(broadcast_items_limit, "basket_rules")
     _truncation_check(bi, max_basket_items, "basket_rules")
     nb = _n_baskets_col(bi)
     item_n = bi.groupBy("i").agg(F.count("*").alias("n_i"))
@@ -281,8 +257,7 @@ CROSS JOIN nb
 
 def basket_rules_2to1(df: DataFrame, *, basket_col: str, item_col: str,
                       min_support: int = 2,
-                      max_basket_items: int | None = 1000,
-                      broadcast_items_limit: int = 5_000_000) -> DataFrame:
+                      max_basket_items: int | None = 1000) -> DataFrame:
     """Rules ``{ante_1, ante_2} → consequent`` from frequent triples:
     (ante_1, ante_2, consequent, n_triple, n_ante_pair, n_cons,
     confidence, lift), ``ante_1 < ante_2``, for every unordered triple
@@ -305,7 +280,6 @@ def basket_rules_2to1(df: DataFrame, *, basket_col: str, item_col: str,
         raise ValueError(f"min_support must be >= 1: {min_support}")
     bi = _capped_items(df, basket_col, item_col,
                        max_basket_items).persist()
-    _warn_broadcast_limit_ignored(broadcast_items_limit, "basket_rules_2to1")
     _truncation_check(bi, max_basket_items, "basket_rules_2to1")
     nb = _n_baskets_col(bi)
     item_n = bi.groupBy("i").agg(F.count("*").alias("n_i"))
@@ -431,8 +405,7 @@ CROSS JOIN nb
 
 def basket_rules_3to1(df: DataFrame, *, basket_col: str, item_col: str,
                       min_support: int = 2,
-                      max_basket_items: int | None = 1000,
-                      broadcast_items_limit: int = 5_000_000) -> DataFrame:
+                      max_basket_items: int | None = 1000) -> DataFrame:
     """Rules ``{ante_1, ante_2, ante_3} → consequent`` from frequent
     quadruples: (ante_1, ante_2, ante_3, consequent, n_quad,
     n_ante_triple, n_cons, confidence, lift), antecedents sorted
@@ -466,7 +439,6 @@ def basket_rules_3to1(df: DataFrame, *, basket_col: str, item_col: str,
         raise ValueError(f"min_support must be >= 1: {min_support}")
     bi = _capped_items(df, basket_col, item_col,
                        max_basket_items).persist()
-    _warn_broadcast_limit_ignored(broadcast_items_limit, "basket_rules_3to1")
     _truncation_check(bi, max_basket_items, "basket_rules_3to1")
     nb = _n_baskets_col(bi)
     item_n = bi.groupBy("i").agg(F.count("*").alias("n_i"))

@@ -1,130 +1,105 @@
-"""Data-mask subquery-wrap visitor.
+"""Data masks: one per-(user, table) resolver and the subquery-wrap visitor.
 
-Parity target: ``visitor/DataMaskVisitor.java:54-157``. For each base-table
-reference with ≥1 masked column for the user, build
+Parity target: ``visitor/DataMaskVisitor.java:54-157``.
+:func:`masked_projection` turns a table's column list into
 
-    (SELECT c1, …, CAST(<mask_expr>(ck) AS <declared type>) AS ck, … FROM t) AS alias
+    c1, …, CAST(<mask_expr>(ck) AS <declared type>) AS ck, …
 
-re-emitting *every* column of the base table in declared order
-(``DataMaskVisitor.java:116-141``; order is load-bearing, SURVEY §1.3) and
-splice it in place of the table ref (``:143-157``). Catalyst's ColumnPruning
-strips unused columns from the wide subquery, so this costs nothing physically.
+re-emitting *every* column in declared order (``DataMaskVisitor.java:116-141``;
+order is load-bearing, SURVEY §1.3). The visitor splices
+``(SELECT <projection> FROM t) AS alias`` in place of each masked base-table
+ref (``:143-157``); the DataFrame path selects the same projection. Catalyst's
+ColumnPruning strips unused columns from the wide subquery, so this costs
+nothing physically. A WHERE over the wrapped table, the injected row filter
+included, therefore compares the masked values.
 
 The reference prevents re-masking its own generated subqueries by
 bytecode-injecting a ``custom`` flag into Calcite's SqlSelect
 (``SecurityContext.java:67-90``, ``DataMaskVisitor.java:168-184``). Here the
-rewrite simply tracks generated Select nodes in a Python set — no engine
-involvement (SURVEY §2.A8).
+statement walk never visits what a rewrite step builds, so no marker is
+needed (SURVEY §2.A8).
 """
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+from typing import Optional
 
 from ..functions.masks import instantiate_transformer
 from ..plans.nodes import (
-    Alias, Cast, Identifier, Insert, Join, LateralView, Node, Relation, Select,
-    SetOp, SubqueryRef, TableRef, With,
+    Alias, Cast, Expr, Identifier, Literal, Node, Relation, Select,
+    SubqueryRef, TableRef, rewrite_tables,
 )
+from ..plans.qualify import SchemaProvider
 from ..policy.manager import PolicyManager
-from ..policy.models import DataMaskPolicy, TableEntity
+from ..policy.models import DataMaskPolicy
 
-# table parts → TableEntity (ordered columns + DDL types), e.g. CatalogAdapter.get_table
-TableProvider = Callable[[list[str]], Optional[TableEntity]]
+
+def masked_projection(policy_manager: PolicyManager, username: str,
+                      parts: list[str],
+                      schema_provider: SchemaProvider) -> Optional[list[Expr]]:
+    """The ordered projection that masks table ``parts`` for ``username``,
+    or None when no mask applies. ``schema_provider`` gives the table's
+    (column, DDL type) list and is only called when a mask applies."""
+    policies = {
+        c: p
+        for c, p in policy_manager.get_table_mask_policies(username, parts).items()
+        if p.condition != "MASK_NONE"
+    }
+    if not policies:
+        return None
+    columns = schema_provider(parts)
+    if columns is None:
+        raise ValueError(
+            f"cannot mask columns of unknown table {'.'.join(parts)}"
+        )
+    projection: list[Expr] = []
+    for name, ddl_type in columns:
+        policy = policies.get(name.lower())
+        if policy is None:
+            projection.append(Identifier([name]))
+        else:
+            # re-cast to the declared type and keep the original name
+            # (DataMaskVisitor.java:130-132)
+            masked = _mask_expr(policy_manager, policy, name)
+            projection.append(Alias(Cast(masked, ddl_type), name))
+    return projection
+
+
+def _mask_expr(policy_manager: PolicyManager, policy: DataMaskPolicy,
+               column_name: str) -> Expr:
+    mask_type = policy_manager.get_data_mask_type(policy.condition)
+    if mask_type.name == "MASK_NULL":
+        return Literal.null()
+    if mask_type.name == "CUSTOM":
+        template = policy.custom_transformer
+        if not template:
+            raise ValueError(
+                f"CUSTOM mask for {policy.table_name}.{policy.column_name} "
+                "requires custom_transformer"
+            )
+    else:
+        template = mask_type.transformer
+        if template is None:
+            raise ValueError(f"mask type {mask_type.name} has no transformer")
+    return instantiate_transformer(template, column_name)
 
 
 class DataMaskVisitor:
     def __init__(self, policy_manager: PolicyManager, username: str,
-                 table_provider: TableProvider) -> None:
+                 schema_provider: SchemaProvider) -> None:
         self.policy_manager = policy_manager
         self.username = username
-        self.table_provider = table_provider
-        self._generated: set[int] = set()  # id()s of generated Select nodes
+        self.schema_provider = schema_provider
 
     def visit(self, node: Node) -> Node:
-        if isinstance(node, Insert):
-            self.visit(node.query)
-            return node
-        if isinstance(node, With):
-            for _, cte in node.ctes:
-                self.visit(cte)
-            self.visit(node.body)
-            return node
-        if isinstance(node, SetOp):
-            self.visit(node.left)
-            self.visit(node.right)
-            return node
-        if isinstance(node, Select):
-            if id(node) not in self._generated and node.from_ is not None:
-                node.from_ = self._rewrite_relation(node.from_)
-            for child in node.children():
-                self._visit_nested(child)
-            return node
-        return node
+        """Wrap every masked base table under ``node`` (in place)."""
+        return rewrite_tables(node, self._wrap)
 
-    def _visit_nested(self, node: Node) -> None:
-        if isinstance(node, (Select, SetOp, With, Insert)):
-            self.visit(node)
-            return
-        for c in node.children():
-            self._visit_nested(c)
-
-    def _rewrite_relation(self, rel: Relation) -> Relation:
-        if isinstance(rel, Join):
-            rel.left = self._rewrite_relation(rel.left)
-            rel.right = self._rewrite_relation(rel.right)
-            return rel
-        if isinstance(rel, LateralView):
-            rel.base = self._rewrite_relation(rel.base)
-            return rel
-        if isinstance(rel, TableRef):
-            return self._maybe_wrap(rel)
-        # SubqueryRef: inner select handled by the walk; never re-wrapped
-        return rel
-
-    def _maybe_wrap(self, table: TableRef) -> Relation:
-        policies = self.policy_manager.get_table_mask_policies(
-            self.username, table.parts
-        )
-        # drop no-op policies early
-        policies = {c: p for c, p in policies.items() if p.condition != "MASK_NONE"}
-        if not policies:
+    def _wrap(self, select: Select, table: TableRef) -> Relation:
+        projection = masked_projection(self.policy_manager, self.username,
+                                       table.parts, self.schema_provider)
+        if projection is None:
             return table
-        entity = self.table_provider(table.parts)
-        if entity is None:
-            raise ValueError(
-                f"cannot mask columns of unknown table {'.'.join(table.parts)}"
-            )
-        inner = Select()
-        for col in entity.columns:
-            policy = policies.get(col.column_name.lower())
-            if policy is None:
-                inner.projections.append(Identifier([col.column_name]))
-            else:
-                masked = self._mask_expr(policy, col.column_name)
-                # re-cast to the declared type and keep the original name
-                # (DataMaskVisitor.java:130-132)
-                inner.projections.append(Alias(
-                    Cast(masked, col.column_type), col.column_name,
-                ))
-        inner.from_ = TableRef(parts=list(table.parts))
-        self._generated.add(id(inner))
+        inner = Select(projections=projection,
+                       from_=TableRef(parts=list(table.parts)))
         return SubqueryRef(query=inner, alias=table.effective_alias())
-
-    def _mask_expr(self, policy: DataMaskPolicy, column_name: str):
-        mask_type = self.policy_manager.get_data_mask_type(policy.condition)
-        if mask_type.name == "MASK_NULL":
-            from ..plans.nodes import Literal
-            return Literal.null()
-        if mask_type.name == "CUSTOM":
-            template = policy.custom_transformer
-            if not template:
-                raise ValueError(
-                    f"CUSTOM mask for {policy.table_name}.{policy.column_name} "
-                    "requires custom_transformer"
-                )
-        else:
-            template = mask_type.transformer
-            if template is None:
-                raise ValueError(f"mask type {mask_type.name} has no transformer")
-        return instantiate_transformer(template, column_name)

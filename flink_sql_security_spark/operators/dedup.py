@@ -374,22 +374,6 @@ def hashed_shingle_sets(df: DataFrame, text_col: str = "text",
     )
 
 
-def hashed_shingles(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    """Distinct (id, h): shingles as 60-bit ints instead of strings.
-
-    Joining 8-byte longs instead of ~n·6-char strings cuts the self-join
-    exchange severalfold; per-doc distinctness comes free from
-    :func:`hashed_shingle_sets` (array_distinct, no shuffle). Collisions
-    are harmless for engine-parity: the oracle hashes identically, so
-    both engines see the same (astronomically rare) merge.
-    """
-    return (
-        hashed_shingle_sets(df, text_col, id_col, n)
-        .select(F.col(id_col), F.explode("hs").alias("h"))
-    )
-
-
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", n: int = 3,
                         threshold: float = 0.2) -> DataFrame:

@@ -1,32 +1,41 @@
-"""Row-filter injection visitor.
+"""Row filters: one per-(user, table) resolver and the injection visitor.
 
-Parity target: ``visitor/RowFilterVisitor.java:45-125``. For every SELECT in
-the statement tree, walk its FROM; for each base-table reference, look up the
-(user, table) policy, parse its condition, qualify the condition's column refs
-with the table's alias, and AND it into that SELECT's WHERE. Join operands are
-recursed (``RowFilterVisitor.java:64-86``) so every table of an n-way join
-lands in the same top-level WHERE; subquery operands are skipped
-(``:73-79``) — the nested SELECT gets its own filters when the walker reaches
-it.
+Parity target: ``visitor/RowFilterVisitor.java:45-125``.
+:func:`row_filter_condition` turns the user's policy on a table into a parsed
+condition whose column refs are qualified with the table's alias. The visitor
+ANDs it into the WHERE of every SELECT whose FROM tree reads that table, so
+every table of an n-way join lands in the same WHERE
+(``RowFilterVisitor.java:64-86``) and a derived table gets its own filter
+(``:73-79``). A condition's own subquery is a query of its own: the visitor
+filters it too. ``SecurityContext`` then masks the statement, wrapping each
+table under its injected WHERE, so the filter compares the masked values;
+its DataFrame and streaming path applies the same condition the same way.
 
 Deliberate fix over the reference (documented in SURVEY §7): the reference
 qualifies only ``operands[0]`` of the parsed condition
 (``RowFilterVisitor.java:101-102``), which breaks compound conditions like
-``a = 1 AND b = 2``. We qualify every unqualified column reference instead.
+``a = 1 AND b = 2``. We qualify every unqualified column reference of the
+condition's own scope instead.
 """
 
 from __future__ import annotations
 
+from typing import Optional
+
 from ..plans.nodes import (
-    Expr, Identifier, Insert, Join, Lambda, LateralView, Node, Query, Relation,
-    Select, SetOp, SubqueryRef, TableRef, With, and_,
+    Expr, Identifier, Lambda, Node, Query, Relation, Select, TableRef, and_,
+    rewrite_tables,
 )
 from ..plans.parser import parse_expression
 from ..policy.manager import PolicyManager
 
 
 def qualify_condition(cond: Expr, alias: str) -> Expr:
-    """Prefix every unqualified column ref in ``cond`` with ``alias``."""
+    """Prefix every unqualified column ref in ``cond`` with ``alias``.
+
+    A nested query resolves its own column refs, so the walk stops there:
+    prefixing them would point the subquery back at the filtered table.
+    """
 
     def _walk(e: Node, lambda_params: frozenset[str]) -> None:
         if isinstance(e, Identifier):
@@ -36,11 +45,23 @@ def qualify_condition(cond: Expr, alias: str) -> Expr:
         if isinstance(e, Lambda):
             _walk(e.body, lambda_params | frozenset(p.lower() for p in e.params))
             return
+        if isinstance(e, Query):
+            return
         for c in e.children():
             _walk(c, lambda_params)
 
     _walk(cond, frozenset())
     return cond
+
+
+def row_filter_condition(policy_manager: PolicyManager, username: str,
+                         parts: list[str], alias: str) -> Optional[Expr]:
+    """The user's row-filter condition on table ``parts``, parsed and
+    qualified with ``alias``; None when no policy applies."""
+    condition = policy_manager.get_row_filter_condition(username, parts)
+    if condition is None:
+        return None
+    return qualify_condition(parse_expression(condition), alias)
 
 
 class RowFilterVisitor:
@@ -49,57 +70,12 @@ class RowFilterVisitor:
         self.username = username
 
     def visit(self, node: Node) -> Node:
-        """Apply row filters to every SELECT in the statement (in place)."""
-        if isinstance(node, Insert):
-            self.visit(node.query)
-            return node
-        if isinstance(node, With):
-            for _, cte in node.ctes:
-                self.visit(cte)
-            self.visit(node.body)
-            return node
-        if isinstance(node, SetOp):
-            self.visit(node.left)
-            self.visit(node.right)
-            return node
-        if isinstance(node, Select):
-            self._apply_to_select(node)
-            # recurse into nested queries anywhere under this select
-            # (FROM-subqueries, IN/EXISTS/scalar subqueries)
-            for child in node.children():
-                self._visit_nested(child)
-            return node
-        return node
+        """Apply row filters to every SELECT under ``node`` (in place)."""
+        return rewrite_tables(node, self._filter)
 
-    def _visit_nested(self, node: Node) -> None:
-        if isinstance(node, (Select, SetOp, With, Insert)):
-            self.visit(node)
-            return
-        for c in node.children():
-            self._visit_nested(c)
-
-    def _apply_to_select(self, select: Select) -> None:
-        if select.from_ is None:
-            return
-        select.where = self._add_condition(select.from_, select.where)
-
-    def _add_condition(self, rel: Relation, where: Expr | None) -> Expr | None:
-        """FROM-tree recursion, mirroring ``addCondition`` RowFilterVisitor.java:64-86."""
-        if isinstance(rel, Join):
-            where = self._add_condition(rel.left, where)
-            where = self._add_condition(rel.right, where)
-            return where
-        if isinstance(rel, LateralView):
-            return self._add_condition(rel.base, where)
-        if isinstance(rel, TableRef):
-            condition = self.policy_manager.get_row_filter_condition(
-                self.username, rel.parts
-            )
-            if condition is None:
-                return where
-            cond_ast = parse_expression(condition)
-            qualify_condition(cond_ast, rel.effective_alias())
-            return and_(where, cond_ast)
-        # SubqueryRef: leave WHERE untouched (RowFilterVisitor.java:73-79);
-        # the inner SELECT is rewritten when the visitor reaches it.
-        return where
+    def _filter(self, select: Select, table: TableRef) -> Relation:
+        cond = row_filter_condition(self.policy_manager, self.username,
+                                    table.parts, table.effective_alias())
+        if cond is not None:
+            select.where = and_(select.where, self.visit(cond))
+        return table

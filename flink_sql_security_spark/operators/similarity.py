@@ -23,14 +23,6 @@ _DOT = "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOU
 _NORM = "sqrt(aggregate({a}, 0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
 
 
-def cosine_expr(a: str, b: str) -> str:
-    """Spark SQL expression for cosine similarity of two float arrays."""
-    return (
-        f"{_DOT.format(a=a, b=b)} / "
-        f"({_NORM.format(a=a)} * {_NORM.format(a=b)})"
-    )
-
-
 def unit_vectors(df: DataFrame, vec_col: str = "embedding",
                  id_col: str = "vec_id") -> DataFrame:
     """(id, unit): L2-normalized double vectors, computed once per vector.

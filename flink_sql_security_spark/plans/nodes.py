@@ -11,7 +11,7 @@ from __future__ import annotations
 import dataclasses
 import re
 from dataclasses import dataclass, field
-from typing import Iterator, Optional, Union
+from typing import Callable, Iterator, Optional, Union
 
 _BARE_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
@@ -543,3 +543,33 @@ def and_(left: Optional[Expr], right: Expr) -> Expr:
     if left is None:
         return right
     return BinaryOp("AND", left, right)
+
+
+def rewrite_tables(node: Node,
+                   step: Callable[[Select, TableRef], Relation]) -> Node:
+    """Replace every base-table ref read by a SELECT under ``node`` with
+    ``step(select, table)``, in place; nested queries are rewritten first.
+
+    The one statement walk of the security layer (``AbstractBasicVisitor``
+    in the reference): it reaches every query of the statement (CTEs, set
+    operands, derived tables, IN/EXISTS/scalar subqueries) and, per SELECT,
+    recurses the FROM tree through join operands and a lateral view's base
+    (``RowFilterVisitor.java:64-86``). A derived table is a query of its own
+    and gets its own step; what ``step`` builds is never walked.
+    """
+    for child in node.children():
+        rewrite_tables(child, step)
+    if isinstance(node, Select) and node.from_ is not None:
+        node.from_ = _rewrite_from(node.from_, node, step)
+    return node
+
+
+def _rewrite_from(rel: Relation, select: Select, step) -> Relation:
+    if isinstance(rel, Join):
+        rel.left = _rewrite_from(rel.left, select, step)
+        rel.right = _rewrite_from(rel.right, select, step)
+    elif isinstance(rel, LateralView):
+        rel.base = _rewrite_from(rel.base, select, step)
+    elif isinstance(rel, TableRef):
+        return step(select, rel)
+    return rel

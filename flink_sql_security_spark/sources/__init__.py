@@ -98,16 +98,6 @@ def print_sink(df, n: int = 20, truncate: bool = True) -> None:
     df.show(n=n, truncate=truncate)
 
 
-def console_stream_sink(df, trigger_seconds: int = 5):
-    """Streaming print sink: returns the started StreamingQuery."""
-    return (
-        df.writeStream.format("console")
-        .outputMode("append")
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
-
-
 def build_session(app_name: str = "flink-sql-security-spark",
                   cpus: int | None = None,
                   hive_metastore: bool = False,

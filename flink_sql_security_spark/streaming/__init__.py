@@ -28,8 +28,9 @@ def secure_stream(ctx: SecurityContext, username: str, stream_df: DataFrame,
                   table_name: str) -> DataFrame:
     """Apply the user's policies for ``table_name`` to a streaming DataFrame.
 
-    Same path as batch (``SecurityContext.apply_policies``): filters and
-    masks are stateless, so the streaming planner accepts them unchanged.
+    Same path as batch and SQL (``SecurityContext.apply_policies``): the
+    masked projection, then the row filter on the masked values. Both are
+    stateless, so the streaming planner accepts them unchanged.
     """
     if not stream_df.isStreaming:
         raise ValueError("secure_stream expects a streaming DataFrame")

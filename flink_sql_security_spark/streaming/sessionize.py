@@ -80,31 +80,6 @@ def sessionize_batch(events: DataFrame, gap_minutes: int = 30,
     )
 
 
-def sessionize_batch_duckdb_sql(table: str = "events", gap_minutes: int = 30,
-                                user_col: str = "user_id", ts_col: str = "ts",
-                                value_col: str = "value") -> str:
-    """DuckDB SQL computing the identical batch sessionization (oracle)."""
-    gap_s = gap_minutes * 60
-    return f"""
-WITH b AS (
-  SELECT {user_col}, {ts_col}, {value_col},
-    CASE WHEN lag({ts_col}) OVER w IS NULL
-           OR epoch({ts_col}) - epoch(lag({ts_col}) OVER w) > {gap_s}
-         THEN 1 ELSE 0 END AS new_session
-  FROM {table}
-  WINDOW w AS (PARTITION BY {user_col} ORDER BY {ts_col})
-), s AS (
-  SELECT *, sum(new_session) OVER (
-    PARTITION BY {user_col} ORDER BY {ts_col}
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-  FROM b
-)
-SELECT {user_col}, min({ts_col}) AS session_start, max({ts_col}) AS session_end,
-       CAST(count(*) AS INTEGER) AS n_events, sum({value_col}) AS total_value
-FROM s GROUP BY {user_col}, session_id
-"""
-
-
 def sessionize_stream(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Streaming sessionization with per-user state and processing-time
     timeout: a closed session (gap exceeded or timeout fired) is emitted as

@@ -1,9 +1,7 @@
 """Focused pins for the r12 ADVICE fixes: diagnosability of the Arrow
 kernels' NaN rejection (the error must NAME the offending row, like the
-expr paths' assert_true message) and the one-time no-op warning for the
-retired ``broadcast_items_limit`` parameter."""
+expr paths' assert_true message)."""
 
-import logging
 import math
 
 import pytest
@@ -36,34 +34,6 @@ def test_rp_project_nan_error_names_row(spark):
                                 "vec_id long, embedding array<double>")
     with pytest.raises(Exception, match="4242"):
         RP.rp_project(bad, in_dim=64, out_dim=8).collect()
-
-
-def test_broadcast_items_limit_warns_once(spark, caplog):
-    """A non-default broadcast_items_limit no longer steers the plan
-    (AQE decides from real sizes) — the caller must get ONE warning,
-    not silence and not a warning per call."""
-    from flink_sql_security_spark.operators import assoc as A
-
-    df = spark.createDataFrame(
-        [(1, "a"), (1, "b"), (2, "a"), (2, "b")], "b long, i string")
-    A._warned_broadcast_limit = False
-    with caplog.at_level(logging.WARNING,
-                         logger="flink_sql_security_spark.operators.assoc"):
-        A.basket_rules(df, basket_col="b", item_col="i",
-                       broadcast_items_limit=123).collect()
-        A.basket_rules(df, basket_col="b", item_col="i",
-                       broadcast_items_limit=123).collect()
-    hits = [r for r in caplog.records
-            if "broadcast_items_limit" in r.getMessage()]
-    assert len(hits) == 1, hits
-    # default value stays silent
-    A._warned_broadcast_limit = False
-    caplog.clear()
-    with caplog.at_level(logging.WARNING,
-                         logger="flink_sql_security_spark.operators.assoc"):
-        A.basket_rules(df, basket_col="b", item_col="i").collect()
-    assert not [r for r in caplog.records
-                if "broadcast_items_limit" in r.getMessage()]
 
 
 def test_capped_items_nonnullable_keys_and_null_drop(spark):

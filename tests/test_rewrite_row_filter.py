@@ -171,3 +171,55 @@ def test_compound_condition_fully_qualified(ctx):
                                    "region = 'beijing' AND price > 10"))
     out = ctx.rewrite_row_filter("user_D", "SELECT order_id FROM orders AS o")
     assert out.endswith("WHERE o.region = 'beijing' AND o.price > 10")
+
+
+def test_left_join_right_side_filter_drops_null_extended_rows(ctx):
+    # Deliberate parity with the reference (RowFilterVisitor.java:64-86): a
+    # LEFT JOIN's right-side filter lands in the outer WHERE, so a left row
+    # whose match the filter hides is dropped, not kept null-extended.
+    rows = ctx.sql(
+        "user_C",
+        "SELECT o.order_id, p.name FROM orders AS o "
+        "LEFT JOIN products AS p ON o.product_id = p.id").collect()
+    assert len(rows) == 6  # no policy: every order, matched
+    ctx.add_policy(RowFilterPolicy("user_C", "products", "name = 'hammer'"))
+    rows = ctx.sql(
+        "user_C",
+        "SELECT o.order_id, p.name FROM orders AS o "
+        "LEFT JOIN products AS p ON o.product_id = p.id").collect()
+    assert sorted(map(tuple, rows)) == [
+        (10002, "hammer"), (10003, "hammer"), (10005, "hammer")]
+
+
+def test_condition_subquery_keeps_its_own_scope(ctx, demo_tables):
+    # the columns of a condition's subquery resolve in that subquery:
+    # qualifying them with the filtered table's alias would correlate it
+    # and let every row through
+    demo_tables.createDataFrame([(10002,)], "order_id INT") \
+        .createOrReplaceTempView("allowed")
+    ctx.add_policy(RowFilterPolicy(
+        "user_C", "orders", "order_id IN (SELECT order_id FROM allowed)"))
+    sql = "SELECT order_id FROM orders"
+    assert ctx.rewrite_row_filter("user_C", sql) == (
+        "SELECT orders.order_id FROM orders AS orders "
+        "WHERE orders.order_id IN (SELECT order_id FROM allowed)")
+    assert [r.order_id for r in ctx.sql("user_C", sql).collect()] == [10002]
+    assert [r.order_id for r in ctx.table("user_C", "orders").collect()] \
+        == [10002]
+
+
+def test_condition_subquery_is_itself_filtered(ctx, demo_tables):
+    # the subquery is a query of its own: its table's policy applies to it,
+    # through ctx.sql and ctx.table alike
+    demo_tables.createDataFrame([(10002,), (10004,)], "order_id INT") \
+        .createOrReplaceTempView("allowed")
+    ctx.add_policy(RowFilterPolicy(
+        "user_C", "orders", "order_id IN (SELECT order_id FROM allowed)"))
+    ctx.add_policy(RowFilterPolicy("user_C", "allowed", "order_id > 10003"))
+    sql = "SELECT order_id FROM orders"
+    assert ctx.rewrite_row_filter("user_C", sql).endswith(
+        "WHERE orders.order_id IN (SELECT order_id FROM allowed "
+        "WHERE allowed.order_id > 10003)")
+    assert [r.order_id for r in ctx.sql("user_C", sql).collect()] == [10004]
+    assert [r.order_id for r in ctx.table("user_C", "orders").collect()] \
+        == [10004]
