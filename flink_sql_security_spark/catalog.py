@@ -21,7 +21,11 @@ def type_ddl_string(data_type) -> str:
 
 
 class CatalogAdapter:
-    """Schema lookup against a live SparkSession, with a per-rewrite cache."""
+    """Schema lookup against a live SparkSession.
+
+    Found schemas are cached for the adapter's lifetime, which is the
+    lifetime of its ``SecurityContext``, until :meth:`invalidate`. Misses
+    are not cached, so a table registered later is still found."""
 
     def __init__(self, spark: SparkSession) -> None:
         self.spark = spark

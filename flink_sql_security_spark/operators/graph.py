@@ -799,6 +799,8 @@ def _triangles_driver(e, *, node_type, wedge_limit: int):
     much for one driver), so the kernel re-checks the true Σ c·(c−1)/2
     after orientation — O(m) to compute — and cleanly falls back to
     the distributed join, which streams the same volume across tasks.
+    A NaN node value also returns ``None``: Spark groups NaN as one
+    node, the factorize below cannot.
     Wedges are enumerated in bounded chunks either way, so peak driver
     memory stays ~3 int64 arrays × chunk, never × total."""
     import numpy as np
@@ -814,6 +816,10 @@ def _triangles_driver(e, *, node_type, wedge_limit: int):
     # tie-break (a < b on VALUES) is a code comparison
     codes, uniques = pd.factorize(
         pd.concat([a_vals, b_vals], ignore_index=True), sort=True)
+    if (codes == -1).any():
+        # factorize codes NaN as -1, which bincount rejects; Spark
+        # groups NaN as one ordinary node, so the distributed join does
+        return None
     m = len(a_vals)
     ai = codes[:m].astype(np.int64)
     bi = codes[m:].astype(np.int64)

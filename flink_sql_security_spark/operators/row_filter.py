@@ -7,9 +7,11 @@ ANDs it into the WHERE of every SELECT whose FROM tree reads that table, so
 every table of an n-way join lands in the same WHERE
 (``RowFilterVisitor.java:64-86``) and a derived table gets its own filter
 (``:73-79``). A condition's own subquery is a query of its own: the visitor
-filters it too. ``SecurityContext`` then masks the statement, wrapping each
-table under its injected WHERE, so the filter compares the masked values;
-its DataFrame and streaming path applies the same condition the same way.
+filters it too, and raises ``ValueError`` when that subquery reads, directly
+or through another table's condition, the table being filtered.
+``SecurityContext`` then masks the statement, wrapping each table under its
+injected WHERE, so the filter compares the masked values; its DataFrame and
+streaming path applies the same condition the same way.
 
 Deliberate fix over the reference (documented in SURVEY §7): the reference
 qualifies only ``operands[0]`` of the parsed condition
@@ -68,6 +70,9 @@ class RowFilterVisitor:
     def __init__(self, policy_manager: PolicyManager, username: str) -> None:
         self.policy_manager = policy_manager
         self.username = username
+        # tables whose condition is being filtered right now: meeting one
+        # again inside its own condition would expand it without end
+        self._expanding: set[tuple[str, ...]] = set()
 
     def visit(self, node: Node) -> Node:
         """Apply row filters to every SELECT under ``node`` (in place)."""
@@ -76,6 +81,19 @@ class RowFilterVisitor:
     def _filter(self, select: Select, table: TableRef) -> Relation:
         cond = row_filter_condition(self.policy_manager, self.username,
                                     table.parts, table.effective_alias())
-        if cond is not None:
+        if cond is None:
+            return table
+        key = tuple(p.lower() for p in table.parts)
+        if key in self._expanding:
+            condition = self.policy_manager.get_row_filter_condition(
+                self.username, table.parts)
+            raise ValueError(
+                f"row-filter condition of user {self.username!r} reads "
+                f"table {'.'.join(table.parts)!r} again while filtering "
+                f"it: {condition!r}")
+        self._expanding.add(key)
+        try:
             select.where = and_(select.where, self.visit(cond))
+        finally:
+            self._expanding.discard(key)
         return table

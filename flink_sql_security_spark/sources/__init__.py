@@ -4,12 +4,15 @@ The reference reads MySQL-CDC changelog tables registered in a Hive catalog
 (``AbstractBasicTest.java:179-233``). Here sources are parquet scans registered
 as temp views — Catalyst gets full predicate pushdown / column pruning /
 partition pruning on them, which is what makes the injected security
-constructs free at scale (SURVEY §4).
+constructs free at scale (SURVEY §4). :func:`register_tables` registers the
+tables side by side: each ``spark.read.parquet`` runs a one-task schema
+inference job, and local Spark overlaps the independent jobs.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
 
@@ -23,27 +26,38 @@ def register_tables(spark: SparkSession, sf_dir: str,
                     tables: tuple[str, ...] = TPCH_TABLES) -> None:
     """Register each ``{sf_dir}/{t}.parquet`` as temp view ``t`` (idempotent).
 
+    Missing files are skipped. The views are registered concurrently, one
+    pool thread per table: ``spark.read.parquet`` infers a file's schema with
+    a one-task Spark job, and the jobs of different tables are independent.
+    Each worker is wrapped in ``inheritable_thread_target``, so it runs with
+    the caller's local properties (job group, scheduler pool) and tags. The
+    first failing table's error is raised from this call.
+
     ``events.parquet`` carries TIMESTAMP(NANOS) which Spark's parquet reader
-    rejects; it is read with ``nanosAsLong`` (the conf must stay set for the
-    lifetime of the lazy scan) and the column floor-converted to µs timestamps,
-    matching DuckDB's µs truncation of the same file.
+    rejects; it is read with ``nanosAsLong`` and the column floor-converted
+    to µs timestamps, matching DuckDB's µs truncation of the same file. The
+    conf is set in the calling thread before any worker reads, and it must
+    stay set for the lifetime of the lazy scan.
     """
     from pyspark.sql import functions as F
+    from pyspark.util import inheritable_thread_target
 
-    for t in tables:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if not os.path.exists(path):
-            continue
-        if t == "events":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(path)
-            if dict(df.dtypes).get("ts") == "bigint":
-                df = df.withColumn(
-                    "ts", F.expr("timestamp_micros(ts div 1000)")
-                )
-            df.createOrReplaceTempView(t)
-        else:
-            spark.read.parquet(path).createOrReplaceTempView(t)
+    present = [t for t in tables
+               if os.path.exists(os.path.join(sf_dir, f"{t}.parquet"))]
+    if not present:
+        return
+    if "events" in present:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+    @inheritable_thread_target(spark)
+    def register(t: str) -> None:
+        df = spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet"))
+        if t == "events" and dict(df.dtypes).get("ts") == "bigint":
+            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+        df.createOrReplaceTempView(t)
+
+    with ThreadPoolExecutor(max_workers=len(present)) as pool:
+        list(pool.map(register, present))
 
 
 def register_jdbc_table(spark: SparkSession, name: str, url: str, table: str,

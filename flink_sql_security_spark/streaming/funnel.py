@@ -96,7 +96,17 @@ def funnel_state_stream(events: DataFrame, steps, *,
     state volume per group stays bounded by the same horizon-window
     argument (the module docstring), just summed over the group's
     users. None (the default) preserves the historical per-user
-    keying."""
+    keying.
+
+    ``coarse_groups`` is part of the checkpoint contract. A user's
+    state lives in group ``pmod(xxhash64(user), coarse_groups)``, so a
+    checkpointed query must restart with the same value, and with the
+    same choice of coarse or per-user keying. A different value routes
+    users to groups that hold no state, or other users' state, and
+    their ``upd`` and ``depth`` silently start over; nothing here
+    detects it. For a checkpointed query, take the value from pinned
+    configuration, not from ``drain_state_partitions``, which follows
+    the input's size and the cluster's parallelism."""
     steps = _check_steps(steps)
     k = len(steps)
     h_us = (None if within_hours is None

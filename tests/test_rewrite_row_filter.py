@@ -223,3 +223,29 @@ def test_condition_subquery_is_itself_filtered(ctx, demo_tables):
     assert [r.order_id for r in ctx.sql("user_C", sql).collect()] == [10004]
     assert [r.order_id for r in ctx.table("user_C", "orders").collect()] \
         == [10004]
+
+
+def test_condition_reading_its_own_table_raises(ctx):
+    # the condition's subquery is filtered by the same condition, which
+    # would expand without end: a clear error instead of RecursionError,
+    # through ctx.sql and ctx.table alike
+    cond = "order_id IN (SELECT order_id FROM orders WHERE price > 20)"
+    ctx.add_policy(RowFilterPolicy("user_C", "orders", cond))
+    for call in (lambda: ctx.sql("user_C", "SELECT order_id FROM orders"),
+                 lambda: ctx.table("user_C", "orders")):
+        with pytest.raises(ValueError) as err:
+            call()
+        msg = str(err.value)
+        assert "'user_C'" in msg and "'orders'" in msg and cond in msg, msg
+
+
+def test_condition_cycle_across_tables_raises(ctx, demo_tables):
+    # orders -> allowed -> orders: the same endless expansion, one hop longer
+    demo_tables.createDataFrame([(10002,)], "order_id INT") \
+        .createOrReplaceTempView("allowed")
+    ctx.add_policy(RowFilterPolicy(
+        "user_C", "orders", "order_id IN (SELECT order_id FROM allowed)"))
+    ctx.add_policy(RowFilterPolicy(
+        "user_C", "allowed", "order_id IN (SELECT order_id FROM orders)"))
+    with pytest.raises(ValueError, match="user_C"):
+        ctx.sql("user_C", "SELECT order_id FROM orders")

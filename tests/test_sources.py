@@ -11,8 +11,11 @@ import pytest
 
 from flink_sql_security_spark import PolicyManager, RowFilterPolicy, SecurityContext
 from flink_sql_security_spark.sources import (
-    print_sink, register_file_table, register_jdbc_table, register_tables,
+    TPCH_TABLES, print_sink, register_file_table, register_jdbc_table,
+    register_tables,
 )
+
+SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_register_csv_table(spark, demo_tables):
@@ -55,10 +58,75 @@ def test_print_sink(spark, demo_tables, capsys):
 
 
 def test_register_tables_idempotent(spark):
-    register_tables(spark, "/root/testdata/sf0.001")
+    register_tables(spark, SF_DIR)
     n1 = spark.table("orders").count()
-    register_tables(spark, "/root/testdata/sf0.001")
+    register_tables(spark, SF_DIR)
     assert spark.table("orders").count() == n1 == 1500
+
+
+def _tpch_views(spark):
+    return {t.name: spark.table(t.name).schema.json()
+            for t in spark.catalog.listTables()
+            if t.isTemporary and t.name in TPCH_TABLES}
+
+
+def test_register_tables_concurrent_matches_one_at_a_time(spark):
+    """The concurrent registration creates the same views, with the same
+    schemas, as registering one table per call."""
+    for t in TPCH_TABLES:
+        spark.catalog.dropTempView(t)
+    register_tables(spark, SF_DIR)
+    together = _tpch_views(spark)
+    for t in TPCH_TABLES:
+        spark.catalog.dropTempView(t)
+    for t in TPCH_TABLES:
+        register_tables(spark, SF_DIR, tables=(t,))
+    apart = _tpch_views(spark)
+    assert set(together) == set(TPCH_TABLES)
+    assert together == apart
+    # this corpus stores ts in µs; the NANOS file is the next test's
+    assert dict(spark.table("events").dtypes)["ts"] in (
+        "timestamp", "timestamp_ntz")
+
+
+def test_register_tables_reads_nanos_events_as_timestamp(spark, tmp_path):
+    """``events.ts`` stored as TIMESTAMP(NANOS): the ``nanosAsLong`` conf is
+    set before the pool reads, so ``ts`` comes back as µs timestamps, not
+    bigint, with the nanoseconds floored."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999]
+    pq.write_table(pa.table({"event_id": pa.array([1, 2], pa.int64()),
+                             "ts": pa.array(ns, pa.timestamp("ns"))}),
+                   str(tmp_path / "events.parquet"))
+    try:
+        register_tables(spark, str(tmp_path), tables=("events",))
+        assert dict(spark.table("events").dtypes)["ts"] == "timestamp"
+        got = [r.us for r in spark.table("events").orderBy("event_id")
+               .selectExpr("unix_micros(ts) AS us").collect()]
+        assert got == [v // 1000 for v in ns]
+    finally:
+        register_tables(spark, SF_DIR, tables=("events",))
+
+
+def test_register_tables_skips_missing_file(spark, tmp_path):
+    spark.range(3).write.parquet(str(tmp_path / "fss_present.parquet"))
+    register_tables(spark, str(tmp_path),
+                    tables=("fss_missing", "fss_present"))
+    try:
+        assert spark.table("fss_present").count() == 3
+        assert not spark.catalog.tableExists("fss_missing")
+    finally:
+        spark.catalog.dropTempView("fss_present")
+
+
+def test_register_tables_raises_on_unreadable_file(spark, tmp_path):
+    """A worker's failure surfaces from the call, it is not swallowed."""
+    (tmp_path / "orders.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception) as err:
+        register_tables(spark, str(tmp_path), tables=("orders",))
+    assert "orders.parquet" in str(err.value), err.value
 
 
 def test_register_orc_table(spark, demo_tables):
