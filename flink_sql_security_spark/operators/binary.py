@@ -430,11 +430,11 @@ def _gate_probe_broadcast(queries_df: DataFrame, id_col: str, vec_col: str,
     batch. Same contract as similarity._auto_broadcast / pq's LUT gate:
     explicit flag wins; unknown input size → scale-safe (shuffle join
     on cell), never a surprise broadcast."""
-    from .similarity import _plan_size_bytes
+    from ..plan_stats import plan_size_bytes
 
     if flag is not None:
         return flag
-    size = _plan_size_bytes(queries_df.select(id_col, vec_col))
+    size = plan_size_bytes(queries_df.select(id_col, vec_col))
     if size is None:
         return False
     d = n_words * WORD_BITS

@@ -759,12 +759,11 @@ def _gate_lut_broadcast(queries_df: DataFrame, id_col: str, vec_col: str,
     blows the broadcast (the exact OOM the gate exists to prevent).
     Unknown input size → scale-safe (no broadcast), as everywhere else.
     """
-    from flink_sql_security_spark.operators.similarity import (
-        _plan_size_bytes)
+    from flink_sql_security_spark.plan_stats import plan_size_bytes
 
     if flag is not None:
         return flag
-    size = _plan_size_bytes(queries_df.select(id_col, vec_col))
+    size = plan_size_bytes(queries_df.select(id_col, vec_col))
     if size is None:
         return False
     total = sum(len(book[0]) for book in codebooks)

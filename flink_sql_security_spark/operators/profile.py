@@ -147,10 +147,9 @@ def profile_quantiles(df: DataFrame, cols: list[str],
     distinct-value histogram OOMing an executor at 100 TB.
     """
     if exact == "auto":
-        from flink_sql_security_spark.operators.similarity import (
-            _plan_size_bytes)
+        from flink_sql_security_spark.plan_stats import plan_size_bytes
 
-        size = _plan_size_bytes(df.select(*cols))
+        size = plan_size_bytes(df.select(*cols))
         if size is not None and size <= auto_small_bytes:
             exact = True
         else:

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from flink_sql_security_spark.functions.text import floor_round, floor_round_py
 from flink_sql_security_spark.operators.cache import attach
+from flink_sql_security_spark.plan_stats import plan_size_bytes
 
 _DOT = "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v)"
 _NORM = "sqrt(aggregate({a}, 0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
@@ -105,21 +106,6 @@ def _round_half_up(x: float, nd: int = 6) -> float:
         q, rounding=decimal.ROUND_HALF_UP))
 
 
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's size estimate for the optimized plan, in bytes.
-
-    Free — reads the optimizer's statistics, triggers no job. Returns
-    None when the estimate is unavailable (e.g. Spark Connect, where
-    ``_jdf`` does not exist); callers must treat None as "large" and
-    take the scale-safe path.
-    """
-    try:
-        return int(str(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    except Exception:
-        return None
-
-
 def _corpus_rows(df: DataFrame) -> int:
     """EXACT corpus cardinality for plan-time sizing rules: always ONE
     count job (metadata-only on unfiltered parquet scans — footer row
@@ -145,7 +131,7 @@ def _auto_broadcast(df: DataFrame, flag: bool | None,
     """
     if flag is not None:
         return flag
-    size = _plan_size_bytes(df)
+    size = plan_size_bytes(df)
     return size is not None and size <= limit_bytes
 
 

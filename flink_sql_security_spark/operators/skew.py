@@ -113,11 +113,11 @@ def spread_partitions(df: DataFrame, key_col: str | None = None,
     dedup-family contract where the exchange also provides per-doc
     clustering that downstream operators reuse.
     """
-    from .similarity import _plan_size_bytes
+    from ..plan_stats import plan_size_bytes
 
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
-    est = _plan_size_bytes(df)
+    est = plan_size_bytes(df)
     raw = spark.conf.get(
         "spark.sql.files.maxPartitionBytes", "134217728b").lower()
     units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}

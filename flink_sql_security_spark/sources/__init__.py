@@ -4,9 +4,10 @@ The reference reads MySQL-CDC changelog tables registered in a Hive catalog
 (``AbstractBasicTest.java:179-233``). Here sources are parquet scans registered
 as temp views — Catalyst gets full predicate pushdown / column pruning /
 partition pruning on them, which is what makes the injected security
-constructs free at scale (SURVEY §4). :func:`register_tables` registers the
-tables side by side: each ``spark.read.parquet`` runs a one-task schema
-inference job, and local Spark overlaps the independent jobs.
+constructs free at scale (SURVEY §4). :func:`register_tables` launches no
+Spark job: it reads each table's parquet footer on the driver and converts it
+with Spark's own parquet-to-Spark schema converter, the calls Spark's schema
+inference task makes, then hands the schema to ``spark.read.schema``.
 """
 
 from __future__ import annotations
@@ -21,25 +22,84 @@ TPCH_TABLES = (
     "lineitem", "events", "documents", "embeddings",
 )
 
+# parquet summary files, preferred in this order for a directory's schema
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def _hidden(name: str) -> bool:
+    """Spark's rule for the names a file listing skips
+    (``HadoopFSUtils.shouldFilterOutPathName``): a leading ``.``, a
+    leading ``_`` without ``=``, a ``._COPYING_`` suffix. The parquet
+    summary files ``_common_metadata`` and ``_metadata`` are kept."""
+    if name.startswith(_SUMMARY_FILES):
+        return False
+    return (name.startswith(".") or name.endswith("._COPYING_")
+            or (name.startswith("_") and "=" not in name))
+
+
+def _leaf_files(directory: str) -> list[str]:
+    out = []
+    for entry in os.scandir(directory):
+        if _hidden(entry.name):
+            continue
+        if entry.is_dir():
+            out.extend(_leaf_files(entry.path))
+        else:
+            out.append(entry.path)
+    return out
+
+
+def _schema_file(path: str) -> str:
+    """The one file whose footer Spark's parquet schema inference reads
+    for ``path`` (``ParquetUtils.inferSchema`` without ``mergeSchema``).
+
+    A file is read as itself. For a directory: the leaf files sorted by
+    path, then ``_common_metadata``, else ``_metadata``, else the first
+    data file. Raises ``ValueError`` naming ``path`` when it holds none.
+    """
+    if not os.path.isdir(path):
+        return path
+    leaves = sorted(_leaf_files(path))
+    names = [os.path.basename(f) for f in leaves]
+    for summary in _SUMMARY_FILES:
+        if summary in names:
+            return leaves[names.index(summary)]
+    data = [f for f, n in zip(leaves, names) if n not in _SUMMARY_FILES]
+    if not data:
+        raise ValueError(f"no parquet file to read a schema from in {path}")
+    return data[0]
+
 
 def register_tables(spark: SparkSession, sf_dir: str,
                     tables: tuple[str, ...] = TPCH_TABLES) -> None:
     """Register each ``{sf_dir}/{t}.parquet`` as temp view ``t`` (idempotent).
 
-    Missing files are skipped. The views are registered concurrently, one
-    pool thread per table: ``spark.read.parquet`` infers a file's schema with
-    a one-task Spark job, and the jobs of different tables are independent.
-    Each worker is wrapped in ``inheritable_thread_target``, so it runs with
-    the caller's local properties (job group, scheduler pool) and tags. The
-    first failing table's error is raised from this call.
+    Missing files are skipped. No Spark job runs. Each table's schema
+    comes from one parquet footer read on the driver: the file Spark's
+    inference would read (:func:`_schema_file`; for a directory,
+    ``_common_metadata``, else ``_metadata``, else the first data file by
+    path) is opened with ``ParquetFooterReader.readFooter`` skipping row
+    groups, and ``ParquetFileFormat.readSchemaFromFooter`` converts it with
+    a ``ParquetToSparkSchemaConverter`` built from the session conf — the
+    embedded Spark schema when the file carries one, Spark's own parquet
+    type mapping otherwise. The table is then read with that schema
+    (``spark.read.schema(...).parquet``), so partition columns of a
+    ``k=v`` directory are still discovered from the listing.
+
+    The footers are read and the views registered on a pool, one thread
+    per table; each worker is wrapped in ``inheritable_thread_target``, so
+    it runs with the caller's local properties (job group, scheduler pool)
+    and tags. The first failing table's error is raised from this call.
 
     ``events.parquet`` carries TIMESTAMP(NANOS) which Spark's parquet reader
     rejects; it is read with ``nanosAsLong`` and the column floor-converted
     to µs timestamps, matching DuckDB's µs truncation of the same file. The
-    conf is set in the calling thread before any worker reads, and it must
-    stay set for the lifetime of the lazy scan.
+    conf is set in the calling thread before the converter is built, since
+    the converter reads it once, at construction; it must stay set for the
+    lifetime of the lazy scan.
     """
     from pyspark.sql import functions as F
+    from pyspark.sql.types import _parse_datatype_json_string
     from pyspark.util import inheritable_thread_target
 
     present = [t for t in tables
@@ -48,10 +108,27 @@ def register_tables(spark: SparkSession, sf_dir: str,
         return
     if "events" in present:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    hadoop_conf = state.newHadoopConf()
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    converter = pq.ParquetToSparkSchemaConverter(state.conf())
+    skip_row_groups = (jvm.org.apache.parquet.format.converter
+                       .ParquetMetadataConverter.SKIP_ROW_GROUPS)
+
+    def footer_schema(path: str):
+        p = jvm.org.apache.hadoop.fs.Path(_schema_file(path))
+        meta = pq.ParquetFooterReader.readFooter(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                p, hadoop_conf), skip_row_groups)
+        schema = pq.ParquetFileFormat.readSchemaFromFooter(
+            jvm.org.apache.parquet.hadoop.Footer(p, meta), converter)
+        return _parse_datatype_json_string(schema.json())
 
     @inheritable_thread_target(spark)
     def register(t: str) -> None:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet"))
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        df = spark.read.schema(footer_schema(path)).parquet(path)
         if t == "events" and dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         df.createOrReplaceTempView(t)
@@ -228,17 +305,22 @@ def write_compacted(df, path: str, target_file_mb: int = 256,
     A 100 TB table written from a 50k-task shuffle otherwise lands as
     50k files; listing and footer overhead then dominate every
     subsequent scan. Sizing comes from Catalyst's own statistics
-    (``optimizedPlan().stats().sizeInBytes`` — column-pruned, filter-
-    adjusted in-memory estimate, no extra scan); the write repartitions
-    to ``ceil(size / target)`` round-robin. Returns the partition count
-    used. Pair with ``zorder_layout`` when the table should also be
-    multi-dimensionally clustered (range partition + sort instead of
-    round-robin).
+    (:func:`~flink_sql_security_spark.plan_stats.plan_size_bytes` —
+    column-pruned, filter-adjusted in-memory estimate, no extra scan);
+    the write repartitions to ``ceil(size / target)`` round-robin.
+    Raises ``ValueError`` when the estimate is unavailable. Returns the
+    partition count used. Pair with ``zorder_layout`` when the table
+    should also be multi-dimensionally clustered (range partition +
+    sort instead of round-robin).
     """
     import math
 
-    size = int(df._jdf.queryExecution().optimizedPlan().stats()
-               .sizeInBytes())
+    from ..plan_stats import plan_size_bytes
+
+    size = plan_size_bytes(df)
+    if size is None:
+        raise ValueError("write_compacted needs Catalyst's size estimate, "
+                         "which this DataFrame does not expose")
     n = max(1, math.ceil(size / (target_file_mb * 1024 * 1024)))
     df.repartition(n).write.mode("overwrite").format(fmt).save(path)
     return n

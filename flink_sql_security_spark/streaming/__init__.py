@@ -64,10 +64,10 @@ def drain_state_partitions(df: DataFrame, floor_n: int,
     """
     if floor_n < 1:
         raise ValueError(f"floor_n must be >= 1, got {floor_n}")
-    from ..operators.similarity import _plan_size_bytes
+    from ..plan_stats import plan_size_bytes
 
     cores = df.sparkSession.sparkContext.defaultParallelism
-    est = _plan_size_bytes(df)
+    est = plan_size_bytes(df)
     # a relation Catalyst cannot estimate reports defaultSizeInBytes
     # (Long.MaxValue) — treat anything absurd as UNKNOWN, i.e. large
     # (the spread_partitions convention)

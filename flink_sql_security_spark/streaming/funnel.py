@@ -101,12 +101,15 @@ def funnel_state_stream(events: DataFrame, steps, *,
     ``coarse_groups`` is part of the checkpoint contract. A user's
     state lives in group ``pmod(xxhash64(user), coarse_groups)``, so a
     checkpointed query must restart with the same value, and with the
-    same choice of coarse or per-user keying. A different value routes
-    users to groups that hold no state, or other users' state, and
-    their ``upd`` and ``depth`` silently start over; nothing here
-    detects it. For a checkpointed query, take the value from pinned
-    configuration, not from ``drain_state_partitions``, which follows
-    the input's size and the cluster's parallelism."""
+    same choice of coarse or per-user keying. Each group's state stores
+    the value it was written with, and an update that meets state
+    written with another value raises ``ValueError`` naming both, at
+    the first batch that touches a group holding state (a different
+    value would route users to groups that hold no state, or other
+    users' state, and restart their ``upd`` and ``depth``). For a
+    checkpointed query, take the value from pinned configuration, not
+    from ``drain_state_partitions``, which follows the input's size and
+    the cluster's parallelism."""
     steps = _check_steps(steps)
     k = len(steps)
     h_us = (None if within_hours is None
@@ -199,7 +202,8 @@ def funnel_state_stream(events: DataFrame, steps, *,
         u_dt = events.schema[user_col].dataType.simpleString()
         g_state_schema = (
             f"users array<{u_dt}>, upds array<int>, "
-            + ", ".join(f"p{i} array<array<long>>" for i in range(k)))
+            + ", ".join(f"p{i} array<array<long>>" for i in range(k))
+            + ", groups int")
 
         def update_group(key: Tuple[Any, ...],
                          batches: Iterator[pd.DataFrame],
@@ -210,6 +214,12 @@ def funnel_state_stream(events: DataFrame, steps, *,
             store: dict = {}
             if state.exists:
                 got = state.get
+                if got[-1] != coarse_groups:
+                    raise ValueError(
+                        f"funnel state was written with coarse_groups="
+                        f"{got[-1]}, this query runs with coarse_groups="
+                        f"{coarse_groups}; restart the checkpoint with "
+                        f"the value it was written with")
                 users, upds = got[0], got[1]
                 for j, u in enumerate(users):
                     store[u] = ([list(got[2 + i][j]) for i in range(k)],
@@ -261,7 +271,8 @@ def funnel_state_stream(events: DataFrame, steps, *,
                 state.update((
                     list(order),
                     [store[u][1] for u in order],
-                    *[[store[u][0][i] for u in order] for i in range(k)]))
+                    *[[store[u][0][i] for u in order] for i in range(k)],
+                    coarse_groups))
             if rows:
                 yield pd.DataFrame(
                     rows, columns=["user_id"]

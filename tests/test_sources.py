@@ -4,6 +4,7 @@ JDBC is exercised to the option-plumbing boundary only (no database server in
 this environment); the reader construction and partitioning guard are real.
 """
 
+import os
 import shutil
 import tempfile
 
@@ -89,10 +90,115 @@ def test_register_tables_concurrent_matches_one_at_a_time(spark):
         "timestamp", "timestamp_ntz")
 
 
+def test_register_tables_runs_no_spark_job(spark):
+    """The schemas come from footers read on the driver: registering the
+    ten tables starts no Spark job, in the calling thread or the pool's
+    (the workers inherit the job group)."""
+    sc = spark.sparkContext
+    group = "fss_register_tables_no_job"
+    sc.setJobGroup(group, "register_tables")
+    try:
+        register_tables(spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_register_tables_schema_matches_inference(spark, sf):
+    """Every view has the schema Spark's own inference gives the file."""
+    sf_dir = f"/root/testdata/{sf}"
+    try:
+        register_tables(spark, sf_dir)
+        for t in TPCH_TABLES:
+            inferred = spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet"))
+            assert spark.table(t).schema.json() == inferred.schema.json(), t
+    finally:
+        register_tables(spark, SF_DIR)
+
+
+def _register_as_inferred(spark, sf_dir, t):
+    """Register ``t`` alone, check it against Spark's inference of the
+    same path, drop it and return its columns."""
+    register_tables(spark, sf_dir, tables=(t,))
+    try:
+        inferred = spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet"))
+        assert spark.table(t).schema.json() == inferred.schema.json(), t
+        assert spark.table(t).count() == inferred.count(), t
+        return spark.table(t).columns
+    finally:
+        spark.catalog.dropTempView(t)
+
+
+def test_register_tables_directory_layouts_match_inference(spark, tmp_path):
+    """Directories read from the file Spark's inference reads: hidden
+    names and ``_temporary`` skipped, ``k=v`` directories descended and
+    their partition columns kept."""
+    d = str(tmp_path)
+    df = spark.range(20).selectExpr(
+        "id", "CAST(id AS STRING) AS s", "id % 3 AS k",
+        "array(id, id) AS arr", "named_struct('a', id) AS st")
+    written = os.path.join(d, "fss_written.parquet")
+    df.coalesce(2).write.parquet(written)
+    names = os.listdir(written)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    _register_as_inferred(spark, d, "fss_written")
+
+    df.write.partitionBy("k").parquet(os.path.join(d, "fss_parted.parquet"))
+    _register_as_inferred(spark, d, "fss_parted")
+
+    temp = os.path.join(d, "fss_temp.parquet")
+    df.coalesce(1).write.parquet(temp)
+    spark.range(2).selectExpr("'x' AS other").write.parquet(
+        os.path.join(temp, "_temporary", "0", "task"))
+    _register_as_inferred(spark, d, "fss_temp")
+
+
+def test_register_tables_directory_picks_inference_file(spark, tmp_path):
+    """``_common_metadata``, else ``_metadata``, else the first data file
+    by path: the same file, so the same schema, as Spark's inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def data(path, **cols):
+        pq.write_table(pa.table({k: pa.array(v, pa.int64())
+                                 for k, v in cols.items()}), path)
+
+    def summary(path, *names):
+        pq.write_metadata(pa.schema([(n, pa.int64()) for n in names]), path)
+
+    both = tmp_path / "fss_both.parquet"
+    both.mkdir()
+    data(str(both / "a.parquet"), a=[1])
+    summary(str(both / "_metadata"), "a", "c")
+    summary(str(both / "_common_metadata"), "a", "b")
+    only_meta = tmp_path / "fss_meta.parquet"
+    only_meta.mkdir()
+    data(str(only_meta / "a.parquet"), a=[1])
+    summary(str(only_meta / "_metadata"), "a", "c")
+    by_path = tmp_path / "fss_first.parquet"
+    by_path.mkdir()
+    data(str(by_path / "b.parquet"), a=[2], z=[2])
+    data(str(by_path / "a.parquet"), a=[1])
+    data(str(by_path / ".hidden.parquet"), a=[0], h=[0])
+    for t, cols in (("fss_both", ["a", "b"]), ("fss_meta", ["a", "c"]),
+                    ("fss_first", ["a"])):
+        assert _register_as_inferred(spark, str(tmp_path), t) == cols, t
+
+
+def test_register_tables_empty_directory_raises(spark, tmp_path):
+    empty = tmp_path / "orders.parquet"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_bytes(b"")
+    with pytest.raises(ValueError, match="orders.parquet"):
+        register_tables(spark, str(tmp_path), tables=("orders",))
+
+
 def test_register_tables_reads_nanos_events_as_timestamp(spark, tmp_path):
     """``events.ts`` stored as TIMESTAMP(NANOS): the ``nanosAsLong`` conf is
-    set before the pool reads, so ``ts`` comes back as µs timestamps, not
-    bigint, with the nanoseconds floored."""
+    set before the schema converter is built, so ``ts`` comes back as µs
+    timestamps, not bigint, with the nanoseconds floored."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 

@@ -1114,17 +1114,17 @@ def test_drain_state_partitions_derivation(spark, monkeypatch):
     assert st.drain_state_partitions(tiny, 8) == 8
     # scale regime: a corpus-sized estimate caps at cluster parallelism
     monkeypatch.setattr(
-        "flink_sql_security_spark.operators.similarity._plan_size_bytes",
+        "flink_sql_security_spark.plan_stats.plan_size_bytes",
         lambda df: 100 << 40)  # 100 TB
     assert st.drain_state_partitions(tiny, 4) == cores
     # unknown estimate reads as LARGE — the scale-safe path
     monkeypatch.setattr(
-        "flink_sql_security_spark.operators.similarity._plan_size_bytes",
+        "flink_sql_security_spark.plan_stats.plan_size_bytes",
         lambda df: None)
     assert st.drain_state_partitions(tiny, 4) == cores
     # mid regime: the estimate term itself sizes the store
     monkeypatch.setattr(
-        "flink_sql_security_spark.operators.similarity._plan_size_bytes",
+        "flink_sql_security_spark.plan_stats.plan_size_bytes",
         lambda df: (64 << 20) * 2 + 1)  # just past 2 task-quanta
     assert st.drain_state_partitions(tiny, 1) == min(cores, 3)
     import pytest as _pytest
@@ -1184,5 +1184,58 @@ def test_funnel_stream_coarse_keying_row_identical(spark):
                     map(tuple, spark.table(name).collect()), key=repr)
             assert got["fine"] == got["coarse"], horizon
             assert len(got["fine"]) > 0
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def test_funnel_stream_coarse_restart_with_other_group_count_fails(spark):
+    """``coarse_groups`` is stored in the coarse state: restarting a
+    checkpointed stream with another group count fails loudly, naming
+    both counts, instead of re-routing users to groups without their
+    state."""
+    import datetime as dt
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from flink_sql_security_spark.streaming.funnel import (
+        funnel_state_stream)
+
+    d = dt.datetime
+    schema = "user_id long, ts timestamp, event_type string"
+    path = tempfile.mkdtemp(prefix="fss_funnel_restart")
+    src_dir, ck = os.path.join(path, "src"), os.path.join(path, "ck")
+
+    emitted: list = []
+
+    def drain(groups: int):
+        src = spark.readStream.schema(schema).parquet(
+            os.path.join(src_dir, "b*"))
+        q = (funnel_state_stream(src, ["view", "click"],
+                                 coarse_groups=groups)
+             .writeStream.option("checkpointLocation", ck)
+             .foreachBatch(lambda b, _: emitted.extend(b.collect()))
+             .outputMode("update").start())
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    try:
+        spark.createDataFrame(
+            [(u, d(2024, 1, 1, 9), "view") for u in range(1, 9)],
+            schema).coalesce(1).write.parquet(os.path.join(src_dir, "b0"))
+        drain(4)
+        assert len(emitted) == 8
+        spark.createDataFrame(
+            [(u, d(2024, 1, 1, 10), "click") for u in range(1, 9)],
+            schema).coalesce(1).write.parquet(os.path.join(src_dir, "b1"))
+        with pytest.raises(StreamingQueryException) as err:
+            drain(2)
+        msg = str(err.value)
+        assert "coarse_groups=4" in msg and "coarse_groups=2" in msg, msg
+        drain(4)    # the count the state was written with still resumes
+        assert len(emitted) == 16
+        assert {r["depth"] for r in emitted[8:]} == {2}
     finally:
         shutil.rmtree(path, ignore_errors=True)

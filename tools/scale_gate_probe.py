@@ -223,8 +223,13 @@ def child_ep(n_docs: int) -> int:
         wall = min(ts[1:])
         stages = json.load(urllib.request.urlopen(
             f"{ui}/api/v1/applications/{app}/stages?status=complete"))
+        if not stages:
+            print(f"EP {stage} {wall:.3f} - no completed stage listed")
+            continue
+        # the noop write's stage is named save…; if the UI names it
+        # otherwise, the latest completed stage is the write
         save = [s for s in stages if s["name"].startswith("save")]
-        last = max(save, key=lambda s: s["stageId"])
+        last = max(save or stages, key=lambda s: s["stageId"])
         cpu_s = last.get("executorRunTime", 0) / 1000.0
         util = cpu_s / (wall * cpus) if wall else 0.0
         print(f"EP {stage} {wall:.3f} {last['numCompleteTasks']} "
