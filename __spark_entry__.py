@@ -23,26 +23,13 @@ from flink_sql_security_spark.presets import (
     USER_CUSTOM, USER_DATE, USER_FILTER, USER_HASH, USER_MASK, USER_MIXED,
     USER_NULL, demo_context,
 )
+from flink_sql_security_spark.functions import masks as _masks
 from flink_sql_security_spark.functions.text import (
     floor_round as _floor_round,
 )
 from flink_sql_security_spark.sources import register_tables
 
 _NOBODY = "user_nobody"  # no policies: SecurityContext passes queries through
-
-# DuckDB-side mask emulations (see functions/masks.py duckdb_* emitters)
-_DUCK_MASK_DEFAULT = (
-    "regexp_replace(regexp_replace(regexp_replace({c}, '[A-Z]', 'X', 'g'), "
-    "'[a-z]', 'x', 'g'), '[0-9]', 'n', 'g')"
-)
-_DUCK_MASK_ALL_X = (
-    "regexp_replace(regexp_replace(regexp_replace({c}, '[A-Z]', 'x', 'g'), "
-    "'[a-z]', 'x', 'g'), '[0-9]', 'x', 'g')"
-)
-_DUCK_SHOW_FIRST_4 = (
-    "concat(substring({c}, 1, 4), "
-    + _DUCK_MASK_ALL_X.format(c="substring({c}, 5)") + ")"
-)
 
 _REVENUE = "CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))"
 
@@ -132,20 +119,20 @@ _QUERIES: dict[str, tuple[str, str, str]] = {
     "mask_show_first": (
         USER_MASK,
         "SELECT c_custkey, c_name, c_mktsegment FROM customer",
-        "SELECT c_custkey, " + _DUCK_SHOW_FIRST_4.format(c="c_name")
+        "SELECT c_custkey, " + _masks.duckdb_mask_show_first_n_sql("c_name")
         + " AS c_name, c_mktsegment FROM customer",
     ),
     "mask_default_supplier": (
         USER_MASK,
         "SELECT s_suppkey, s_name, s_nationkey FROM supplier",
-        "SELECT s_suppkey, " + _DUCK_MASK_DEFAULT.format(c="s_name")
+        "SELECT s_suppkey, " + _masks.duckdb_mask_sql("s_name")
         + " AS s_name, s_nationkey FROM supplier",
     ),
     "mask_join": (
         USER_MASK,
         "SELECT o_orderkey, c_name FROM orders "
         "JOIN customer ON o_custkey = c_custkey WHERE o_totalprice > 250000",
-        "SELECT o_orderkey, " + _DUCK_SHOW_FIRST_4.format(c="c_name")
+        "SELECT o_orderkey, " + _masks.duckdb_mask_show_first_n_sql("c_name")
         + " AS c_name FROM orders JOIN customer ON o_custkey = c_custkey "
         "WHERE o_totalprice > 250000",
     ),
@@ -162,9 +149,8 @@ _QUERIES: dict[str, tuple[str, str, str]] = {
     "mask_show_last": (
         USER_MASK,
         "SELECT p_partkey, p_name FROM part",
-        "SELECT p_partkey, concat("
-        + _DUCK_MASK_ALL_X.format(c="substring(p_name, 1, length(p_name) - 4)")
-        + ", right(p_name, 4)) AS p_name FROM part",
+        "SELECT p_partkey, " + _masks.duckdb_mask_show_last_n_sql("p_name")
+        + " AS p_name FROM part",
     ),
     "mask_custom_template": (
         USER_CUSTOM,
@@ -186,9 +172,9 @@ _QUERIES: dict[str, tuple[str, str, str]] = {
         "WHERE c_mktsegment = 'BUILDING' "
         "UNION SELECT c_custkey, c_name FROM customer "
         "WHERE c_mktsegment = 'MACHINERY'",
-        "SELECT c_custkey, " + _DUCK_SHOW_FIRST_4.format(c="c_name")
+        "SELECT c_custkey, " + _masks.duckdb_mask_show_first_n_sql("c_name")
         + " AS c_name FROM customer WHERE c_mktsegment = 'BUILDING' "
-        "UNION SELECT c_custkey, " + _DUCK_SHOW_FIRST_4.format(c="c_name")
+        "UNION SELECT c_custkey, " + _masks.duckdb_mask_show_first_n_sql("c_name")
         + " AS c_name FROM customer WHERE c_mktsegment = 'MACHINERY'",
     ),
     # ---- security layer: mixed (filter-then-mask, SURVEY §2.A10) ----
@@ -198,7 +184,7 @@ _QUERIES: dict[str, tuple[str, str, str]] = {
         "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total "
         "FROM orders JOIN customer ON o_custkey = c_custkey "
         "GROUP BY c_name",
-        "SELECT " + _DUCK_SHOW_FIRST_4.format(c="c_name") + " AS c_name, "
+        "SELECT " + _masks.duckdb_mask_show_first_n_sql("c_name") + " AS c_name, "
         "count(*) AS cnt, sum(CAST(o_totalprice AS DECIMAL(18,2))) AS total "
         "FROM orders JOIN customer ON o_custkey = c_custkey "
         "WHERE o_orderpriority = '1-URGENT' AND c_mktsegment = 'BUILDING' "

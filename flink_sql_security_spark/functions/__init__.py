@@ -2,6 +2,5 @@
 
 from .masks import (  # noqa: F401
     instantiate_transformer, is_hive_mask_call, lower_hive_masks,
-    lower_mask_call, mask_col, mask_first_n_col, mask_hash_col,
-    mask_last_n_col, mask_show_first_n_col, mask_show_last_n_col,
+    lower_mask_call,
 )

@@ -14,17 +14,14 @@ Hive semantics replicated (golden-tested):
 - ``mask_show_first_n('Jack', 4, ...)`` → 'Jack' (short strings pass through)
 - ``mask_hash`` = sha256 hex (Hive ≥3)
 
-Both an AST-level lowering (SQL rewrite path) and Column-level builders
-(DataFrame fast path) are provided, plus DuckDB-SQL emitters used by the
-driver's oracle harness.
+The AST-level lowering serves the SQL rewrite and, through
+``instantiate_transformer(...).sql()`` in ``F.expr``, the DataFrame path;
+DuckDB-SQL emitters serve the oracle harness.
 """
 
 from __future__ import annotations
 
 from typing import Optional
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from ..plans.nodes import Cast, Expr, FuncCall, Literal, Node, UnaryOp
 
@@ -172,39 +169,6 @@ def instantiate_transformer(template: str, column_sql: str) -> Expr:
 
     expr = parse_expression(template.replace("{col}", column_sql))
     return lower_hive_masks(expr)
-
-
-# --------------------------------------------------------------------------
-# DataFrame fast path — Column builders (same semantics, no SQL string)
-# --------------------------------------------------------------------------
-
-def mask_col(col: Column, up: Optional[str] = _DEFAULT_UPPER,
-             low: Optional[str] = _DEFAULT_LOWER,
-             dig: Optional[str] = _DEFAULT_DIGIT) -> Column:
-    return F.mask(col, F.lit(up), F.lit(low), F.lit(dig), F.lit(None))
-
-
-def mask_first_n_col(col: Column, n: int = 4, **kw) -> Column:
-    return F.concat(mask_col(F.substring(col, 1, n), **kw), col.substr(F.lit(n + 1), F.length(col)))
-
-
-def mask_last_n_col(col: Column, n: int = 4, **kw) -> Column:
-    return F.concat(F.substring(col, 1, F.length(col) - F.lit(n)),
-                    mask_col(F.right(col, F.lit(n)), **kw))
-
-
-def mask_show_first_n_col(col: Column, n: int = 4, **kw) -> Column:
-    return F.concat(F.substring(col, 1, n),
-                    mask_col(col.substr(F.lit(n + 1), F.length(col)), **kw))
-
-
-def mask_show_last_n_col(col: Column, n: int = 4, **kw) -> Column:
-    return F.concat(mask_col(F.substring(col, 1, F.length(col) - F.lit(n)), **kw),
-                    F.right(col, F.lit(n)))
-
-
-def mask_hash_col(col: Column) -> Column:
-    return F.sha2(col, 256)
 
 
 # --------------------------------------------------------------------------

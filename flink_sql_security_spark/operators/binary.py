@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from flink_sql_security_spark.functions.text import floor_round
 
-from .similarity import _UNIT_DOT, unit_vectors
+from .similarity import BROADCAST_LIMIT_BYTES, _UNIT_DOT, unit_vectors
 
 WORD_BITS = 32
 
@@ -146,10 +146,11 @@ def _shortlist_cutoff(k: int, rerank) -> str:
     on clustered corpora; the sqrt term is what the near-random regime
     needs — measured on the sf0.1 corpus (n=2000, k=5): fixed 8·k=40
     recalls 0.50 while ceil(5·sqrt(n))=224 recalls ~0.87, and the
-    required fraction FALLS as n grows (tools/binary_probe.py: recall
-    rose 0.65→0.78 at a fixed 0.5 % fraction, 5k→160k vecs), so a
-    sqrt-sized shortlist keeps recall while the per-query rerank cost
-    grows only as √n against the O(n) scan that dominates.
+    required fraction FALLS as n grows (tools/binary_probe.py, retired,
+    see git history: recall rose 0.65→0.78 at a fixed 0.5 % fraction,
+    5k→160k vecs), so a sqrt-sized shortlist keeps recall while the
+    per-query rerank cost grows only as √n against the O(n) scan that
+    dominates.
     ``sqrt``/``ceil``/``greatest`` are IEEE-exact and identical in both
     engines, so shortlist membership — and therefore every reranked
     value — stays strictly oracle-checkable."""
@@ -421,34 +422,29 @@ def binary_codes_with_cell(df: DataFrame, coarse: list,
 
 
 def _gate_probe_broadcast(queries_df: DataFrame, id_col: str, vec_col: str,
-                          flag: bool | None, limit_bytes: int,
                           n_probe: int, n_words: int) -> bool:
     """Broadcast gate for the IVF probe table, sized on what actually
     ships: n_probe rows of (q_id, cell, W packed words) per query — the
     packed codes are ~32× smaller than the float vectors, but the
     ×n_probe replication can still blow a broadcast for a large query
     batch. Same contract as similarity._auto_broadcast / pq's LUT gate:
-    explicit flag wins; unknown input size → scale-safe (shuffle join
-    on cell), never a surprise broadcast."""
+    unknown input size → scale-safe (shuffle join on cell), never a
+    surprise broadcast."""
     from ..plan_stats import plan_size_bytes
 
-    if flag is not None:
-        return flag
     size = plan_size_bytes(queries_df.select(id_col, vec_col))
     if size is None:
         return False
     d = n_words * WORD_BITS
     per_row_in = max(1, d * 8 + 8)
     per_row_out = n_probe * (8 * n_words + 16)
-    return size * per_row_out // per_row_in <= limit_bytes
+    return size * per_row_out // per_row_in <= BROADCAST_LIMIT_BYTES
 
 
 def ivf_hamming_topk(df: DataFrame, queries_df: DataFrame, coarse: list,
                      vec_col: str = "embedding", id_col: str = "vec_id",
                      k: int = 5, n_probe: int = 4, rerank: int | str = 0,
                      round_to: int = 6, d: int | None = None,
-                     broadcast_probes: bool | None = None,
-                     broadcast_limit_bytes: int = 256 << 20,
                      codes_df: DataFrame | None = None) -> DataFrame:
     """Cell-pruned hamming top-k: the 100 TB binary search shape.
 
@@ -524,9 +520,7 @@ def ivf_hamming_topk(df: DataFrame, queries_df: DataFrame, coarse: list,
     # broadcast only when the optimizer proves the query side small
     # (accounting for the ×n_probe probe-row expansion); a large or
     # unknown query batch shuffle-joins on cell — the scale-safe default
-    if _gate_probe_broadcast(queries_df, id_col, vec_col,
-                             broadcast_probes, broadcast_limit_bytes,
-                             n_probe, W):
+    if _gate_probe_broadcast(queries_df, id_col, vec_col, n_probe, W):
         probes = F.broadcast(probes)
     ham = _hamming_expr([f"w{j}" for j in range(W)],
                         [f"qw{j}" for j in range(W)], "spark")

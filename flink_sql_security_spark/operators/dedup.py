@@ -30,6 +30,12 @@ from flink_sql_security_spark.operators.cache import attach, cached_deps
 
 _log = logging.getLogger(__name__)
 
+# prefix_jaccard_pairs(mode='auto') routes to LSH once one prefix token
+# is shared by more than this many documents: ≥10⁸ candidate rows from
+# that token alone re-create the quadratic stage prefix filtering exists
+# to avoid.
+HOT_POSTING_LIMIT = 10_000
+
 # ---------------------------------------------------------------------------
 # Exact dedup (hash-groupBy)
 # ---------------------------------------------------------------------------
@@ -773,7 +779,8 @@ def _star_contraction(pairs: DataFrame, a, b,
     small-star: every smaller neighbor and u itself hook there), which
     HALVES-or-better tree heights every alternation → O(log² n) rounds
     worst case, ~log n in practice, INDEPENDENT of chain length
-    (measured: tools/starcc_probe.py — 4× the chain, +≤2 rounds).
+    (measured: tools/starcc_probe.py, retired, see git history — 4× the
+    chain, +≤2 rounds).
 
     Determinism: each op is a per-neighborhood min (windowed, order-
     free) + distinct — partitioning-invariant by construction, same
@@ -1574,7 +1581,6 @@ def prefix_jaccard_pairs(df: DataFrame, text_col: str = "text",
                          id_col: str = "doc_id", n: int = 3,
                          threshold: float = 0.2, *,
                          mode: str = "auto",
-                         hot_posting_limit: int = 10_000,
                          num_hashes: int = 16,
                          bands: int = 4) -> DataFrame:
     """Exact Jaccard pairs via PREFIX FILTERING (SSJoin/PPJoin family —
@@ -1617,8 +1623,7 @@ def prefix_jaccard_pairs(df: DataFrame, text_col: str = "text",
     ``mode='auto'`` (default) therefore probes the longest prefix
     posting list (one count-agg over the persisted prefix table —
     paid once, and the persist also spares the candidate self-join a
-    recompute) and, past ``hot_posting_limit`` (default 10 000 ⇒
-    ≥10⁸ candidate rows from one token), routes to
+    recompute) and, past ``HOT_POSTING_LIMIT``, routes to
     :func:`lsh_verified_jaccard_pairs` at the same ``(n, threshold,
     num_hashes, bands)`` with a warning. The routed path bounds
     candidates by band-bucket collisions but prunes
@@ -1674,14 +1679,14 @@ def prefix_jaccard_pairs(df: DataFrame, text_col: str = "text",
     if mode == "auto":
         hot = prefix.groupBy("h").agg(
             F.count("*").alias("p")).agg(F.max("p")).collect()[0][0]
-        if hot is not None and hot > hot_posting_limit:
+        if hot is not None and hot > HOT_POSTING_LIMIT:
             _log.warning(
                 "prefix_jaccard_pairs: hottest prefix token appears in "
-                "%d documents (> hot_posting_limit=%d, ~%.0e candidate "
+                "%d documents (> HOT_POSTING_LIMIT=%d, ~%.0e candidate "
                 "rows from that token alone) — routing to "
                 "lsh_verified_jaccard_pairs(num_hashes=%d, bands=%d); "
                 "LSH prunes probabilistically, pass mode='prefix' to "
-                "force the exact path", hot, hot_posting_limit,
+                "force the exact path", hot, HOT_POSTING_LIMIT,
                 float(hot) ** 2, num_hashes, bands)
             prefix.unpersist()
             sh.unpersist()

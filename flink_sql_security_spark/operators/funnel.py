@@ -163,8 +163,8 @@ def funnel_attempts(events: DataFrame, steps, *,
     per-user candidate stage at ``max_attempts`` · |step-i events|
     rows — the same built-in-cap discipline as ``basket_rules``'
     ``max_basket_items`` (assoc.py), mirrored bit-for-bit in the
-    oracle CTE and measured by ``tools/hotuser_probe.py``. Pass
-    ``None`` to evaluate every attempt (only safe when the per-user
+    oracle CTE and measured by ``tools/hotuser_probe.py`` (retired; see
+    git history). Pass ``None`` to evaluate every attempt (only safe when the per-user
     entry distribution is known bounded). Earliest-N is the right
     truncation for re-anchored semantics: dropped attempts are the
     LATEST entries, and any completion reachable from a late entry is

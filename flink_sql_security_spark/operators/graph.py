@@ -19,9 +19,9 @@ Scale design (100 TB edge sets):
   so AQE typically broadcasts it into the edge join; the per-iteration
   cost is dominated by one pass over the edges.
 - Iterations are a fixed small count (power iteration converges
-  geometrically; 5–20 is the practical range).  For deep iteration
-  counts, checkpoint the rank table every few rounds to truncate
-  lineage; at 5 the single optimized DAG is preferable.
+  geometrically; 5–20 is the practical range), run as one optimized
+  DAG: an eager checkpoint every few rounds measured as a loss
+  (SCALING.md), so the lineage is not cut.
 
 Strict-oracle float parity (the hard part of distributed PageRank —
 floating-point addition is not associative, so a naive sum over
@@ -56,13 +56,37 @@ from .cache import attach
 
 _QUANTUM = 1.0e12
 
+# The |V|-row rank/score/label/frontier/survivor tables are derived
+# through joins and aggregates, so Catalyst has no size estimate and
+# plans SortMergeJoins that shuffle the |E|-row edge table every
+# iteration. Every op here counts |V| exactly anyway, so at or under
+# this many nodes it hints the broadcast (the measured win: one edge
+# pass per iteration instead of an edge shuffle). Past it the |V| table
+# is itself distributed state and keeps the scale-safe shuffle join.
+BROADCAST_NODES_LIMIT = 5_000_000
+
+# At or under this EXACT edge count (the cache-fill count each op runs
+# anyway) the op runs as one driver-side numpy kernel over the collected
+# edge table (~100 MB of edge triples) instead of a distributed loop,
+# the :func:`connected_components` driver-threshold convention: the
+# loop pays ~0.35 s of job/stage cadence per round while the per-round
+# compute is milliseconds. Each kernel is bit-exact with its loop
+# (int64-quantized sums, elementwise IEEE ops in the loop's operand
+# order), pinned by the driver-vs-distributed parity tests, which set
+# this to 0 to force the loop. Past it the loop runs unchanged.
+DRIVER_EDGES_LIMIT = 4_000_000
+
+# Edge count alone does not bound wedge volume: a near-clique at
+# DRIVER_EDGES_LIMIT holds ~1e9 wedges, too many for one driver. The
+# triangle kernel re-checks the oriented Σ c·(c−1)/2 and falls back to
+# the distributed join past this many.
+DRIVER_WEDGE_LIMIT = 200_000_000
+
 
 def pagerank(edges, *, src: str = "src", dst: str = "dst", iters: int = 5,
              damping: float = 0.85, n_nodes: int | None = None,
-             broadcast_ranks_limit: int = 5_000_000,
-             dangling: str = "leak", checkpoint_every: int = 0,
-             seeds: list | None = None, weight_col: str | None = None,
-             driver_edges_limit: int = 4_000_000):
+             dangling: str = "leak",
+             seeds: list | None = None, weight_col: str | None = None):
     """Ranks after ``iters`` synchronous PageRank iterations.
 
     ``edges`` is a DataFrame of DISTINCT directed (src, dst) pairs.
@@ -106,43 +130,17 @@ def pagerank(edges, *, src: str = "src", dst: str = "dst", iters: int = 5,
     the unweighted path to ~1e-12 (not bitwise: ``rank·(w/Σw)`` vs
     ``rank/outdeg`` round differently), pinned in pytest.
 
-    ``broadcast_ranks_limit``: the |V|-row rank/contribution tables are
-    derived through joins+aggregates, so Catalyst has no size estimate
-    and statically plans SortMergeJoins — shuffling the |E|-row edge
-    table once per iteration. Since N is counted exactly anyway, the
-    rank-side joins get an explicit broadcast hint whenever
-    ``n_nodes <= broadcast_ranks_limit`` (the measured win: one edge
-    pass per iteration instead of an edge shuffle). Graphs with more
-    nodes than the limit keep the scale-safe shuffle join — at billions
-    of vertices the rank table is itself distributed state.
-
-    ``driver_edges_limit``: when the EXACT edge count (the cache-fill
-    count the operator runs anyway) is at or under this bound, the
-    power iteration runs as ONE driver-side numpy kernel over the
-    collected (src, dst, outdeg|frac) table instead of ``iters``
-    distributed rounds — the :func:`connected_components`
-    driver-threshold convention. A broadcast-scale graph (the limit is
-    ~100 MB of edge triples) pays ~0.35 s of fixed job/stage cadence
-    PER ITERATION in the distributed loop while the actual per-round
-    compute is milliseconds; collecting once and iterating locally
-    removes every per-iteration job. Bit-exact by construction: the
-    per-source shares (including the weighted DECIMAL(18,6) fractions)
-    are computed by the SAME Spark expressions before collection, the
-    quantized contributions are int64 sums (order-independent), and
-    every remaining float op is an elementwise IEEE double with the
-    identical operand order — pinned by the driver-vs-distributed
-    parity pytest. 0 disables (tests use it to pin the distributed
-    loop); past the limit the scale-safe distributed iteration is
-    unchanged.
+    Size gates: the rank-side joins broadcast under
+    ``BROADCAST_NODES_LIMIT``, and the power iteration runs as the
+    driver kernel under ``DRIVER_EDGES_LIMIT``; its per-source shares
+    (including the weighted DECIMAL(18,6) fractions) come from the SAME
+    Spark expressions before collection.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     if dangling not in ("leak", "redistribute"):
         raise ValueError(
             f"dangling must be 'leak' or 'redistribute': {dangling!r}")
-    if checkpoint_every < 0:
-        raise ValueError(
-            f"checkpoint_every must be >= 0, got {checkpoint_every}")
     if seeds is not None:
         seeds = list(seeds)
         if not seeds:
@@ -172,7 +170,7 @@ def pagerank(edges, *, src: str = "src", dst: str = "dst", iters: int = 5,
     # driver-kernel gate on the EXACT edge count; the count doubles as
     # the edge-cache fill job (the distributed path's nodes.count()
     # then reads the warm cache)
-    if driver_edges_limit and edges.count() <= driver_edges_limit:
+    if DRIVER_EDGES_LIMIT and edges.count() <= DRIVER_EDGES_LIMIT:
         # the per-edge share operands (outdeg counts / decimal-exact
         # weight fractions) come from the SAME Spark expressions the
         # distributed loop consumes — collected once, iterated locally
@@ -200,7 +198,7 @@ def pagerank(edges, *, src: str = "src", dst: str = "dst", iters: int = 5,
         n_nodes = nodes.count()
     init = 1.0 / n_nodes                       # same IEEE divide as oracle
     base = (1.0 - damping) / n_nodes
-    small_v = n_nodes <= broadcast_ranks_limit
+    small_v = n_nodes <= BROADCAST_NODES_LIMIT
 
     def hint(df):
         return F.broadcast(df) if small_v else df
@@ -294,7 +292,7 @@ def pagerank(edges, *, src: str = "src", dst: str = "dst", iters: int = 5,
             j = j.crossJoin(F.broadcast(dq))
         return j
 
-    for it in range(iters):
+    for _ in range(iters):
         rank = rank_expr(F.col("e_src"))
         share = (rank * F.col("frac") if weight_col is not None
                  else rank / F.col("outdeg"))
@@ -316,21 +314,6 @@ def pagerank(edges, *, src: str = "src", dst: str = "dst", iters: int = 5,
                           F.sum(F.floor(rank_expr(F.col("node"))
                                         * F.lit(_QUANTUM))
                                 .cast("long")), F.lit(0)).alias("dq")))
-        # lineage truncation for DEEP iteration counts: localCheckpoint
-        # materializes the carried sum table and cuts the growing plan.
-        # Values are unchanged (a materialization boundary, not math).
-        # Measured sf0.1/local[32] (SCALING.md, pre-fusion shape): a 2×
-        # LOSS at iters=5 and 3.5× at iters=20 — each eager checkpoint
-        # is a full materialization job, while the fused DAG's
-        # broadcast joins stay cheap. 0 = off is the default; reach
-        # for it only when the growing plan itself becomes the
-        # bottleneck (analysis time / driver memory at 50+
-        # iterations), not for speed.
-        if checkpoint_every and (it + 1) % checkpoint_every == 0 \
-                and it + 1 < iters:
-            new_sums = new_sums.localCheckpoint(eager=True)
-            if new_dq is not None:
-                new_dq = new_dq.localCheckpoint(eager=True)
         sums = new_sums
         dq = new_dq
 
@@ -455,9 +438,7 @@ def _hits_driver(e, *, node_type, iters: int, n_nodes: int | None):
 
 
 def hits(edges, *, src: str = "src", dst: str = "dst", iters: int = 5,
-         n_nodes: int | None = None,
-         broadcast_scores_limit: int = 5_000_000,
-         driver_edges_limit: int = 4_000_000):
+         n_nodes: int | None = None):
     """(node, hub, auth, auth_pos) after ``iters`` HITS iterations
     (Kleinberg 1999, "Authoritative sources in a hyperlinked
     environment") — the two-score companion to :func:`pagerank` for
@@ -473,7 +454,7 @@ def hits(edges, *, src: str = "src", dst: str = "dst", iters: int = 5,
     / Σ``. Plan shape: the edge table is persisted once and traversed
     twice per iteration (join on src for the authority pass, on dst
     for the hub pass), the |V|-row score tables broadcast under
-    ``broadcast_scores_limit``, the per-iteration sum tables persist
+    ``BROADCAST_NODES_LIMIT``, the per-iteration sum tables persist
     once each, and the L1 totals ride as 1-row broadcast crossJoins
     over those persisted sums — zero driver round-trips per iteration
     (see the in-loop comment; the persist is what makes the in-plan
@@ -489,15 +470,9 @@ def hits(edges, *, src: str = "src", dst: str = "dst", iters: int = 5,
     positive (initial hub 1/N quantizes to ≥1 unit for N ≤ 1e12), so
     the divides never see zero.
 
-    ``driver_edges_limit``: the :func:`pagerank` driver-kernel gate —
-    at broadcast-scale EXACT edge counts the mutual recursion runs as
-    one numpy kernel over the collected edge list (HITS pays the
-    per-iteration job cadence TWICE per round, plus a checkpoint job,
-    so the fixed-cost saving is even larger than pagerank's);
-    bit-exact by the same int64-quantized-sum / elementwise-IEEE
-    argument, pinned by the driver-vs-distributed parity pytest. 0
-    disables; past the limit the distributed loop below (with its
-    load-bearing materialization discipline) is unchanged.
+    Under ``DRIVER_EDGES_LIMIT`` the mutual recursion runs as the driver
+    kernel (HITS pays the per-iteration job cadence TWICE per round,
+    plus a checkpoint job, so the saving is larger than pagerank's).
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
@@ -507,7 +482,7 @@ def hits(edges, *, src: str = "src", dst: str = "dst", iters: int = 5,
              .distinct().persist())
     # driver-kernel gate on the EXACT edge count (doubles as the
     # edge-cache fill; the distributed path's nodes.count() reads warm)
-    if driver_edges_limit and edges.count() <= driver_edges_limit:
+    if DRIVER_EDGES_LIMIT and edges.count() <= DRIVER_EDGES_LIMIT:
         out = _hits_driver(
             edges.select(F.col(src).alias("e_src"),
                          F.col(dst).alias("e_dst")),
@@ -519,7 +494,7 @@ def hits(edges, *, src: str = "src", dst: str = "dst", iters: int = 5,
     if n_nodes is None:
         n_nodes = nodes.count()
     init = 1.0 / n_nodes
-    small_v = n_nodes <= broadcast_scores_limit
+    small_v = n_nodes <= BROADCAST_NODES_LIMIT
 
     def hint(df):
         return F.broadcast(df) if small_v else df
@@ -785,7 +760,7 @@ def pagerank_sql(edges_sql: str, *, iters: int = 5,
     )
 
 
-def _triangles_driver(e, *, node_type, wedge_limit: int):
+def _triangles_driver(e, *, node_type):
     """Driver-side numpy twin of the degree-oriented wedge count —
     the :func:`_pagerank_driver` convention. Triangle counts are exact
     integers (order-independent), the clustering coefficient is the
@@ -794,11 +769,9 @@ def _triangles_driver(e, *, node_type, wedge_limit: int):
     ``test_triangles_driver_vs_distributed_parity``.
 
     Returns ``None`` when the ORIENTED wedge count exceeds
-    ``wedge_limit``: the edge-count gate alone cannot bound wedge
-    volume (a near-clique at the edge limit holds ~1e9 wedges, too
-    much for one driver), so the kernel re-checks the true Σ c·(c−1)/2
-    after orientation — O(m) to compute — and cleanly falls back to
-    the distributed join, which streams the same volume across tasks.
+    ``DRIVER_WEDGE_LIMIT`` (Σ c·(c−1)/2 is O(m) to compute after
+    orientation): the distributed join then streams that volume across
+    tasks.
     A NaN node value also returns ``None``: Spark groups NaN as one
     node, the factorize below cannot.
     Wedges are enumerated in bounded chunks either way, so peak driver
@@ -844,7 +817,7 @@ def _triangles_driver(e, *, node_type, wedge_limit: int):
             (np.flatnonzero(grp_start), [m]))))
     reps = c - 1 - pos
     total_wedges = int(reps.sum())
-    if total_wedges > wedge_limit:
+    if total_wedges > DRIVER_WEDGE_LIMIT:
         return None
     edge_keys = np.sort(u * n + v)
     tri_cnt = np.zeros(n, dtype=np.int64)
@@ -890,10 +863,7 @@ def _triangles_driver(e, *, node_type, wedge_limit: int):
 
 
 def triangle_count(edges, *, src: str = "src", dst: str = "dst",
-                   n_nodes: int | None = None,
-                   broadcast_degrees_limit: int = 5_000_000,
-                   driver_edges_limit: int = 4_000_000,
-                   driver_wedge_limit: int = 200_000_000):
+                   n_nodes: int | None = None):
     """(node, degree, triangles, clustering) — exact per-node triangle
     counts and local clustering coefficient over an UNDIRECTED simple
     graph (self-loops and duplicate/reverse edges collapsed).
@@ -919,7 +889,7 @@ def triangle_count(edges, *, src: str = "src", dst: str = "dst",
     ONCE — without that, the degree union re-derives the distinct
     twice and the three-corner union replays the (expensive) wedge
     join three times.  The |V|-row degree table broadcasts into the
-    orientation join under ``broadcast_degrees_limit`` (hits/pagerank
+    orientation join under ``BROADCAST_NODES_LIMIT`` (hits/pagerank
     convention), so the only shuffles left are the ones the algorithm
     owns: the edge distinct, the degree aggregation, the wedge
     self-join on the apex, the closure probe on the wedge pair, and
@@ -927,17 +897,10 @@ def triangle_count(edges, *, src: str = "src", dst: str = "dst",
     partitioning — and the only float is the final clustering divide,
     quantized with the package floor rule, so the oracle is strict.
 
-    ``driver_edges_limit`` / ``driver_wedge_limit``: the
-    :func:`pagerank` driver-kernel gate — at broadcast-scale EXACT
-    edge counts the whole orient/wedge/closure/count chain runs as one
-    numpy kernel over the collected canonical edge list (the
-    distributed form pays ~8 fixed job/stage cadences while the actual
-    compute is milliseconds). Because edge count alone does not bound
-    wedge volume, the kernel re-checks Σ c·(c−1)/2 after orientation
-    and falls back to the distributed join past ``driver_wedge_limit``.
-    Bit-exact: integer counts, and the clustering divide runs the same
-    IEEE ops in the same operand order — pinned by the
-    driver-vs-distributed parity pytest. 0 disables.
+    Under ``DRIVER_EDGES_LIMIT`` (and ``DRIVER_WEDGE_LIMIT`` wedges) the
+    whole orient/wedge/closure/count chain runs as the driver kernel
+    over the collected canonical edge list; the distributed form pays
+    ~8 fixed job/stage cadences for milliseconds of compute.
     """
     from ..functions.text import floor_round_col
 
@@ -951,9 +914,8 @@ def triangle_count(edges, *, src: str = "src", dst: str = "dst",
     # one ALSO re-checks the true oriented wedge count before
     # committing (see _triangles_driver) — a None return falls through
     # to the unchanged distributed join with e's cache warm.
-    if driver_edges_limit and e.count() <= driver_edges_limit:
-        out = _triangles_driver(e, node_type=edges.schema[src].dataType,
-                                wedge_limit=driver_wedge_limit)
+    if DRIVER_EDGES_LIMIT and e.count() <= DRIVER_EDGES_LIMIT:
+        out = _triangles_driver(e, node_type=edges.schema[src].dataType)
         if out is not None:
             return attach(out, e)
     deg = (e.select(F.col("a").alias("node"))
@@ -964,7 +926,7 @@ def triangle_count(edges, *, src: str = "src", dst: str = "dst",
     # |V| skip the broadcast-gate count job entirely
     if n_nodes is None:
         n_nodes = deg.count()
-    small_v = n_nodes <= broadcast_degrees_limit
+    small_v = n_nodes <= BROADCAST_NODES_LIMIT
 
     def hint(df):
         return F.broadcast(df) if small_v else df
@@ -993,7 +955,7 @@ def triangle_count(edges, *, src: str = "src", dst: str = "dst",
     # the spread rides the same small_v gate as every broadcast: an
     # explicit apex-keyed repartition AQE keeps (the e1⋈e2 self-join
     # then reads both sides co-partitioned by u straight from the
-    # cache), skipped entirely past broadcast_degrees_limit where the
+    # cache), skipped entirely past BROADCAST_NODES_LIMIT where the
     # oriented table is corpus-sized and owns its natural split.
     if small_v:
         o = o.repartition(
@@ -1132,9 +1094,7 @@ def _lpa_driver(und, *, node_type, iters: int):
 
 
 def label_propagation(edges, *, src: str = "src", dst: str = "dst",
-                      iters: int = 3, n_nodes: int | None = None,
-                      broadcast_labels_limit: int = 5_000_000,
-                      driver_edges_limit: int = 4_000_000):
+                      iters: int = 3, n_nodes: int | None = None):
     """(node, community) after ``iters`` synchronous label-propagation
     rounds over the UNDIRECTED graph (Raghavan et al. 2007) — the
     community-detection companion to :func:`triangle_count`:
@@ -1153,7 +1113,7 @@ def label_propagation(edges, *, src: str = "src", dst: str = "dst",
     so the unrolled DuckDB oracle is strict. Labels start as node ids.
 
     Scale: per round, one edge⋈labels join (labels broadcast under
-    ``broadcast_labels_limit`` — the |V|-row table, same gate as
+    ``BROADCAST_NODES_LIMIT`` — the |V|-row table, same gate as
     :func:`hits`), one (node, label) count aggregation, one per-node
     window pick. The symmetrized edge table persists once; each
     round's label table localCheckpoints to cut the growing lineage
@@ -1171,13 +1131,13 @@ def label_propagation(edges, *, src: str = "src", dst: str = "dst",
     # pagerank convention; doubles as the und cache fill) — integer
     # counts + the (cnt DESC, label ASC) total order are exactly
     # reproducible in numpy, pinned by the parity pytest
-    if driver_edges_limit and und.count() <= driver_edges_limit:
+    if DRIVER_EDGES_LIMIT and und.count() <= DRIVER_EDGES_LIMIT:
         out = _lpa_driver(und, node_type=edges.schema[src].dataType,
                           iters=iters)
         return attach(out, und, nodes)
     if n_nodes is None:
         n_nodes = nodes.count()
-    small_v = n_nodes <= broadcast_labels_limit
+    small_v = n_nodes <= BROADCAST_NODES_LIMIT
 
     def hint(df):
         return F.broadcast(df) if small_v else df
@@ -1277,9 +1237,7 @@ def _bfs_driver(e, seeds, *, node_type, max_hops: int):
 
 
 def bfs_levels(edges, seeds, *, src: str = "src", dst: str = "dst",
-               max_hops: int = 3,
-               broadcast_frontier_limit: int = 5_000_000,
-               driver_edges_limit: int = 4_000_000):
+               max_hops: int = 3):
     """(node, hops) — every node reachable from ``seeds`` within
     ``max_hops`` directed hops, labeled with its MINIMUM hop distance.
 
@@ -1295,7 +1253,7 @@ def bfs_levels(edges, seeds, *, src: str = "src", dst: str = "dst",
     the cumulative visited set) against the persisted edge table, one
     anti-join against the visited set to drop re-reached nodes, and a
     distinct. The visited set broadcasts under
-    ``broadcast_frontier_limit`` (the |V|-bounded gate the rest of the
+    ``BROADCAST_NODES_LIMIT`` (the |V|-bounded gate the rest of the
     family uses); the frontier itself is usually far smaller. Each
     hop's frontier localCheckpoints — the cumulative plan would
     otherwise re-derive every prior frontier per reference (the HITS
@@ -1315,7 +1273,7 @@ def bfs_levels(edges, seeds, *, src: str = "src", dst: str = "dst",
     # driver-kernel gate on the EXACT distinct edge count (the
     # pagerank convention; doubles as the e cache fill) — min-hop
     # levels are exact small integers, parity pinned in pytest
-    if driver_edges_limit and e.count() <= driver_edges_limit:
+    if DRIVER_EDGES_LIMIT and e.count() <= DRIVER_EDGES_LIMIT:
         out = _bfs_driver(e, seeds, node_type=edges.schema[dst].dataType,
                           max_hops=max_hops)
         return attach(out, e)
@@ -1328,7 +1286,7 @@ def bfs_levels(edges, seeds, *, src: str = "src", dst: str = "dst",
         # frontier is already materialized by its checkpoint — stays
         # under the gate, fall back to the scale-safe shuffle join past
         # it (billion-node frontiers are distributed state)
-        return (F.broadcast(df) if n_visited <= broadcast_frontier_limit
+        return (F.broadcast(df) if n_visited <= BROADCAST_NODES_LIMIT
                 else df)
 
     # the seed frame's node type derives from the edge dst column, so
@@ -1450,9 +1408,7 @@ def _k_core_driver(und, *, node_type, k: int, max_rounds: int):
 
 
 def k_core(edges, *, src: str = "src", dst: str = "dst", k: int,
-           max_rounds: int = 6,
-           broadcast_nodes_limit: int = 5_000_000,
-           driver_edges_limit: int = 4_000_000):
+           max_rounds: int = 6):
     """(node, degree) of the graph's k-CORE — the maximal subgraph in
     which every node keeps ≥ k neighbors (Seidman 1983) — by the
     classic iterative peel: drop all nodes of degree < k, recompute
@@ -1476,7 +1432,7 @@ def k_core(edges, *, src: str = "src", dst: str = "dst", k: int,
     Scale: the symmetrized edge table persists once; per round, ONE
     degree aggregation over the current edge set + two semi-joins
     against the |V|-bounded survivor table (broadcast under
-    ``broadcast_nodes_limit``, the family gate), localCheckpointed to
+    ``BROADCAST_NODES_LIMIT``, the family gate), localCheckpointed to
     cut the per-round lineage (the HITS discipline). Early exit costs
     one scalar count per round — the same driver probe as
     :func:`bfs_levels`.
@@ -1491,7 +1447,7 @@ def k_core(edges, *, src: str = "src", dst: str = "dst", k: int,
            .distinct().persist())
     # driver-kernel gate on the EXACT symmetrized edge count (the
     # pagerank convention; doubles as the und cache fill)
-    if driver_edges_limit and und.count() <= driver_edges_limit:
+    if DRIVER_EDGES_LIMIT and und.count() <= DRIVER_EDGES_LIMIT:
         out = _k_core_driver(und, node_type=edges.schema[src].dataType,
                              k=k, max_rounds=max_rounds)
         return attach(out, und)
@@ -1506,7 +1462,7 @@ def k_core(edges, *, src: str = "src", dst: str = "dst", k: int,
         if n_surv == n_nodes:
             break
         n_nodes = n_surv
-        hint = (F.broadcast(surv) if n_surv <= broadcast_nodes_limit
+        hint = (F.broadcast(surv) if n_surv <= BROADCAST_NODES_LIMIT
                 else surv)
         cur = (cur.join(hint, cur["a"] == surv["node"], "left_semi")
                .join(hint, cur["b"] == surv["node"], "left_semi")

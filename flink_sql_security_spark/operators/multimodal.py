@@ -52,16 +52,12 @@ def _fake_features(payload: bytes) -> list[float]:
     return [b / 255.0 for b in digest[:FEATURE_DIM]]
 
 
-def extract_features(df: DataFrame, fake: bool = False,
-                     batch_partitions: int | None = None) -> DataFrame:
+def extract_features(df: DataFrame, fake: bool = False) -> DataFrame:
     """media rows → (media_id, kind, n_bytes, features[16]).
 
     Real Arrow-batched pipeline; the decode kernel is the only stub. With
     ``fake=True`` features are md5-derived (deterministic for tests).
     """
-    if batch_partitions:
-        df = df.repartition(batch_partitions, "media_id")
-
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not fake:

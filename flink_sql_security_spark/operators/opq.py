@@ -45,7 +45,8 @@ from flink_sql_security_spark.functions.text import (
     floor_round, floor_round_py)
 
 from .clustering import _centroid_array_sql
-from .pq import _pq_train_np, _query_lut, _sample_matrix, pq_topk
+from .pq import (_gate_lut_broadcast, _ivfpq_topk, _pq_topk, _pq_train_np,
+                 _query_lut, _sample_matrix)
 
 
 def _pq_assign_np(Xr, books: list):
@@ -284,10 +285,7 @@ def opq_encode(df: DataFrame, R: list, codebooks: list,
 def opq_topk(df: DataFrame, queries_df: DataFrame, R: list,
              codebooks: list, vec_col: str = "embedding",
              id_col: str = "vec_id", k: int = 5, round_to: int = 6,
-             broadcast_queries: bool | None = None,
-             broadcast_limit_bytes: int = 256 << 20,
              mode: str = "auto",
-             flat_limit_rows: int = 500_000,
              corpus_rows: int | None = None,
              codes_df: DataFrame | None = None) -> DataFrame:
     """(q_id, n_id, adc_dist, rank): PQ ADC top-k in the rotated space.
@@ -297,7 +295,7 @@ def opq_topk(df: DataFrame, queries_df: DataFrame, R: list,
     subspaces are near-decorrelated, so the codebooks quantize finer.
     Everything after the rotation is :func:`pq.pq_topk` verbatim: LUT
     distribution, broadcast gating, the persist boundary, and the
-    flat→IVF row-count gate (``flat_limit_rows`` / ``corpus_rows`` —
+    flat→IVF row-count gate (``pq.FLAT_LIMIT_ROWS`` / ``corpus_rows`` —
     the rotation is a 1:1 projection, so the corpus row count is the
     input's) all operate on the rotated frames. ``codes_df``
     (a prebuilt :func:`opq_encode` output) skips the corpus rotate +
@@ -309,29 +307,15 @@ def opq_topk(df: DataFrame, queries_df: DataFrame, R: list,
     gating/counting the rotated frames would read "unknown → huge" and
     pay the whole rotation just to count rows. Rotation is 1:1, so the
     input frames carry the same row count and the honest size proxy."""
-    from .pq import _gate_lut_broadcast
-
-    if broadcast_queries is None:
-        broadcast_queries = _gate_lut_broadcast(
-            queries_df, id_col, vec_col, codebooks, None,
-            broadcast_limit_bytes)
+    small_q = _gate_lut_broadcast(queries_df, id_col, vec_col, codebooks)
     rot_q = opq_rotate(queries_df, R, vec_col, id_col, round_to,
                        spread=False)
-    if codes_df is not None:
-        return pq_topk(df, rot_q, codebooks, vec_col="rot",
-                       id_col=id_col, k=k, round_to=round_to,
-                       broadcast_queries=broadcast_queries,
-                       broadcast_limit_bytes=broadcast_limit_bytes,
-                       codes_df=codes_df)
-    if mode == "auto" and corpus_rows is None:
-        corpus_rows = df.select(id_col).count()
-    rot_corpus = opq_rotate(df, R, vec_col, id_col, round_to)
-    return pq_topk(rot_corpus, rot_q, codebooks, vec_col="rot",
-                   id_col=id_col, k=k, round_to=round_to,
-                   broadcast_queries=broadcast_queries,
-                   broadcast_limit_bytes=broadcast_limit_bytes,
-                   mode=mode, flat_limit_rows=flat_limit_rows,
-                   corpus_rows=corpus_rows)
+    if codes_df is None:
+        if mode == "auto" and corpus_rows is None:
+            corpus_rows = df.select(id_col).count()
+        df = opq_rotate(df, R, vec_col, id_col, round_to)
+    return _pq_topk(df, rot_q, codebooks, "rot", id_col, k, round_to,
+                    codes_df, mode, corpus_rows, small_q)
 
 
 def opq_topk_duckdb_sql(parquet_path: str, query_pred: str = "vec_id < 10",
@@ -467,8 +451,6 @@ def opq_ivf_topk(df: DataFrame, queries_df: DataFrame, R: list,
                  vec_col: str = "embedding", id_col: str = "vec_id",
                  k: int = 5, n_probe: int = 4, round_to: int = 6,
                  residual: bool = False,
-                 broadcast_queries: bool | None = None,
-                 broadcast_limit_bytes: int = 256 << 20,
                  codes_df: DataFrame | None = None) -> DataFrame:
     """(q_id, n_id, adc_dist, rank): cell-pruned ADC in the rotated
     space — the composition that makes OPQ a 100 TB plan (rotation is a
@@ -477,24 +459,16 @@ def opq_ivf_topk(df: DataFrame, queries_df: DataFrame, R: list,
     ~n_probe/n_cells of the rotated code table per query). ``codes_df``
     must be a CELL-KEYED index — ``opq_encode(..., coarse=coarse,
     residual=residual)`` with this call's settings."""
-    from .pq import _gate_lut_broadcast, ivfpq_topk
-
     # resolve the gate on the pre-rotation query frame — see opq_topk
     # (the Arrow rotate kernel hides plan stats; rotation is 1:1)
-    if broadcast_queries is None:
-        broadcast_queries = _gate_lut_broadcast(
-            queries_df, id_col, vec_col, codebooks, None,
-            broadcast_limit_bytes, n_probe=n_probe)
+    small_q = _gate_lut_broadcast(queries_df, id_col, vec_col, codebooks,
+                                  n_probe=n_probe)
     rot_q = opq_rotate(queries_df, R, vec_col, id_col, round_to,
                        spread=False)
     rot_c = (df if codes_df is not None
              else opq_rotate(df, R, vec_col, id_col, round_to))
-    return ivfpq_topk(rot_c, rot_q, coarse, codebooks, vec_col="rot",
-                      id_col=id_col, k=k, n_probe=n_probe,
-                      round_to=round_to, residual=residual,
-                      broadcast_queries=broadcast_queries,
-                      broadcast_limit_bytes=broadcast_limit_bytes,
-                      codes_df=codes_df)
+    return _ivfpq_topk(rot_c, rot_q, coarse, codebooks, "rot", id_col, k,
+                       n_probe, round_to, residual, codes_df, small_q)
 
 
 def opq_ivf_topk_duckdb_sql(parquet_path: str,

@@ -55,6 +55,14 @@ from flink_sql_security_spark.functions.text import (
 
 from flink_sql_security_spark.operators.clustering import (
     _centroid_array_sql, _dists_expr)
+from flink_sql_security_spark.operators.similarity import (
+    BROADCAST_LIMIT_BYTES)
+
+# pq_topk's mode='auto' routes a corpus of more than this many rows to
+# the cell-pruned IVF-PQ scan: the row-count equivalent of a 256 MiB
+# raw-vector plan at the d=64 reference shape, past which the
+# rows×queries flat scan dominates every other cost.
+FLAT_LIMIT_ROWS = 500_000
 
 
 def _l2_kmeans_np(X, k: int, iters: int):
@@ -750,8 +758,7 @@ def _lut_df(queries_df: DataFrame, codebooks: list, vec_col: str,
 
 
 def _gate_lut_broadcast(queries_df: DataFrame, id_col: str, vec_col: str,
-                        codebooks: list, flag: bool | None,
-                        limit_bytes: int, n_probe: int = 1) -> bool:
+                        codebooks: list, n_probe: int = 1) -> bool:
     """Broadcast gate sized on the table actually broadcast: the LUT /
     probe table, which is (m·k·8 [· n_probe]) bytes per query — 32–128×
     the raw query vectors at the repo's own configs. Gating on the input
@@ -761,8 +768,6 @@ def _gate_lut_broadcast(queries_df: DataFrame, id_col: str, vec_col: str,
     """
     from flink_sql_security_spark.plan_stats import plan_size_bytes
 
-    if flag is not None:
-        return flag
     size = plan_size_bytes(queries_df.select(id_col, vec_col))
     if size is None:
         return False
@@ -770,7 +775,7 @@ def _gate_lut_broadcast(queries_df: DataFrame, id_col: str, vec_col: str,
     lut_doubles = sum(len(book) for book in codebooks)  # m·k entries
     per_row_in = max(1, total * 8 + 8)
     per_row_out = lut_doubles * 8 * max(1, n_probe) + 16
-    return size * per_row_out // per_row_in <= limit_bytes
+    return size * per_row_out // per_row_in <= BROADCAST_LIMIT_BYTES
 
 
 def _adc_expr(m: int) -> str:
@@ -816,11 +821,8 @@ def _adc_search(codes, probe_side, join, codebooks: list, id_col: str,
 def pq_topk(df: DataFrame, queries_df: DataFrame, codebooks: list,
             vec_col: str = "embedding", id_col: str = "vec_id",
             k: int = 5, round_to: int = 6,
-            broadcast_queries: bool | None = None,
-            broadcast_limit_bytes: int = 256 << 20,
             codes_df: DataFrame | None = None,
             mode: str = "auto",
-            flat_limit_rows: int = 500_000,
             corpus_rows: int | None = None,
             coarse: list | None = None, n_cells: int = 64,
             n_probe: int = 8, coarse_sample: int = 2048) -> DataFrame:
@@ -829,21 +831,17 @@ def pq_topk(df: DataFrame, queries_df: DataFrame, codebooks: list,
     Per query the m×k_cb LUT of ``||q_sub − centroid||²`` is built
     EXECUTOR-side (:func:`_lut_df` — the query table never collects to
     the driver); the corpus codes score with an m-step fold of exact
-    element lookups. ``broadcast_queries=None`` auto-broadcasts the LUT
-    side only when the optimizer proves the query table small
-    (``similarity._auto_broadcast``); a large/unknown query side joins
-    without the hint. Approximate by design (quantization error) —
-    recall tuned by (m, k_cb); every distance is engine-exact, so the op
-    is strictly oracle-checkable.
+    element lookups. The LUT side broadcasts only when the optimizer
+    proves it under ``BROADCAST_LIMIT_BYTES`` (:func:`_gate_lut_broadcast`);
+    a large/unknown query side joins without the hint. Approximate by
+    design (quantization error) — recall tuned by (m, k_cb); every
+    distance is engine-exact, so the op is strictly oracle-checkable.
 
     Scale gate (``mode``): flat ADC scans the FULL code table per query
     — affordable only on a small corpus. ``mode='auto'`` (default)
     routes through :func:`ivfpq_topk` (cell-pruned scan, ~n_probe/
     n_cells of the code table per query) when the corpus EXCEEDS
-    ``flat_limit_rows`` rows (default 500k — the row-count equivalent
-    of the former 256 MiB raw-vector-plan threshold at the repo's
-    d=64 reference shape; past it the rows×queries scan dominates
-    every other cost). The routing key is the EXACT row count —
+    ``FLAT_LIMIT_ROWS`` rows. The routing key is the EXACT row count —
     ``corpus_rows`` if the caller passes it, else one ``df.count()``
     job — so the same logical corpus routes identically regardless of
     file layout, compression, or optimizer statistics (the former
@@ -864,6 +862,19 @@ def pq_topk(df: DataFrame, queries_df: DataFrame, codebooks: list,
     are IVF-PQ's: same schema, recall additionally shaped by
     (n_cells, n_probe).
     """
+    return _pq_topk(df, queries_df, codebooks, vec_col, id_col, k,
+                    round_to, codes_df, mode, corpus_rows, None, coarse,
+                    n_cells, n_probe, coarse_sample)
+
+
+def _pq_topk(df: DataFrame, queries_df: DataFrame, codebooks: list,
+             vec_col: str, id_col: str, k: int, round_to: int,
+             codes_df: DataFrame | None, mode: str,
+             corpus_rows: int | None, small_q: bool | None,
+             coarse: list | None = None, n_cells: int = 64,
+             n_probe: int = 8, coarse_sample: int = 2048) -> DataFrame:
+    """:func:`pq_topk` with the LUT broadcast decided by the caller;
+    ``small_q=None`` gates ``queries_df`` here."""
     if mode not in ("auto", "flat", "ivf"):
         raise ValueError(f"pq_topk mode must be auto|flat|ivf: {mode!r}")
     if codes_df is None and mode != "flat":
@@ -871,27 +882,29 @@ def pq_topk(df: DataFrame, queries_df: DataFrame, codebooks: list,
         if mode == "auto":
             rows = (corpus_rows if corpus_rows is not None
                     else df.select(id_col).count())
-            route = rows > flat_limit_rows
+            route = rows > FLAT_LIMIT_ROWS
             if route:
                 import logging
 
                 logging.getLogger(__name__).info(
                     "pq_topk mode='auto' routing to IVF-PQ: corpus "
-                    "rows %d > flat_limit_rows %d", rows,
-                    flat_limit_rows)
+                    "rows %d > FLAT_LIMIT_ROWS %d", rows,
+                    FLAT_LIMIT_ROWS)
         if route:
             if coarse is None:
                 coarse = coarse_train(df, vec_col, id_col,
                                       n_cells=n_cells,
                                       sample=coarse_sample)
-            return ivfpq_topk(df, queries_df, coarse, codebooks,
-                              vec_col=vec_col, id_col=id_col, k=k,
-                              n_probe=n_probe, round_to=round_to,
-                              broadcast_queries=broadcast_queries,
-                              broadcast_limit_bytes=broadcast_limit_bytes)
+            if small_q is None:
+                small_q = _gate_lut_broadcast(queries_df, id_col, vec_col,
+                                              codebooks, n_probe=n_probe)
+            return _ivfpq_topk(df, queries_df, coarse, codebooks, vec_col,
+                               id_col, k, n_probe, round_to, False, None,
+                               small_q)
     luts = _lut_df(queries_df, codebooks, vec_col, id_col)
-    if _gate_lut_broadcast(queries_df, id_col, vec_col, codebooks,
-                           broadcast_queries, broadcast_limit_bytes):
+    if small_q is None:
+        small_q = _gate_lut_broadcast(queries_df, id_col, vec_col, codebooks)
+    if small_q:
         luts = F.broadcast(luts)
 
     # persist the code table: without the materialization boundary
@@ -952,8 +965,6 @@ def ivfpq_topk(df: DataFrame, queries_df: DataFrame, coarse: list,
                codebooks: list, vec_col: str = "embedding",
                id_col: str = "vec_id", k: int = 5, n_probe: int = 4,
                round_to: int = 6, residual: bool = False,
-               broadcast_queries: bool | None = None,
-               broadcast_limit_bytes: int = 256 << 20,
                codes_df: DataFrame | None = None) -> DataFrame:
     """(q_id, n_id, adc_dist, rank): IVF-PQ — ADC pruned to probed cells.
 
@@ -982,16 +993,26 @@ def ivfpq_topk(df: DataFrame, queries_df: DataFrame, coarse: list,
     (0.60/0.74 vs 0.63/0.74 at n_probe 4/8). Each probed cell gets its
     own LUT, so query-side LUT work is ×n_probe.
     """
-    probes = _lut_df(queries_df, codebooks, vec_col, id_col,
-                     coarse=coarse, n_probe=n_probe, residual=residual)
     # the probes table carries one LUT per probed cell (deliberate for
     # residual mode where per-cell LUTs differ; for non-residual it
     # trades n_probe× LUT volume on the SMALL side for a single join —
     # re-joining LUTs by q_id would instead re-shuffle the big scored
     # table). The gate accounts for the ×n_probe expansion.
-    if _gate_lut_broadcast(queries_df, id_col, vec_col, codebooks,
-                           broadcast_queries, broadcast_limit_bytes,
-                           n_probe=n_probe):
+    return _ivfpq_topk(df, queries_df, coarse, codebooks, vec_col, id_col,
+                       k, n_probe, round_to, residual, codes_df,
+                       _gate_lut_broadcast(queries_df, id_col, vec_col,
+                                           codebooks, n_probe=n_probe))
+
+
+def _ivfpq_topk(df: DataFrame, queries_df: DataFrame, coarse: list,
+                codebooks: list, vec_col: str, id_col: str, k: int,
+                n_probe: int, round_to: int, residual: bool,
+                codes_df: DataFrame | None, small_q: bool) -> DataFrame:
+    """:func:`ivfpq_topk` with the probe-table broadcast decided by the
+    caller."""
+    probes = _lut_df(queries_df, codebooks, vec_col, id_col,
+                     coarse=coarse, n_probe=n_probe, residual=residual)
+    if small_q:
         probes = F.broadcast(probes)
 
     # persist: same materialization boundary as pq_topk — at scale the
@@ -1182,8 +1203,6 @@ def ivfpq_rerank(df: DataFrame, queries_df: DataFrame, coarse: list,
                  id_col: str = "vec_id", k: int = 5, n_probe: int = 4,
                  rerank: int = 4, round_to: int = 6,
                  residual: bool = False,
-                 broadcast_queries: bool | None = None,
-                 broadcast_limit_bytes: int = 256 << 20,
                  codes_df: DataFrame | None = None) -> DataFrame:
     """(q_id, n_id, exact_dist, rank): IVF-PQ shortlist + exact rerank.
 
@@ -1215,19 +1234,16 @@ def ivfpq_rerank(df: DataFrame, queries_df: DataFrame, coarse: list,
 
     from flink_sql_security_spark.operators.cache import attach, cached_deps
 
-    shortlist = ivfpq_topk(
-        df, queries_df, coarse, codebooks, vec_col, id_col,
-        k=k * rerank, n_probe=n_probe, round_to=round_to,
-        residual=residual, broadcast_queries=broadcast_queries,
-        broadcast_limit_bytes=broadcast_limit_bytes, codes_df=codes_df)
-    cand = shortlist.select("q_id", "n_id")
-    # stage-2 broadcast gate: the candidate table is per-query k·rerank
-    # (id, id) rows — proportional to the QUERY side, so reuse stage 1's
-    # decision logic (small-proof → broadcast against the big vector
-    # store; unknown → scale-safe shuffle join on id).
+    # one broadcast decision for both stages: the stage-2 candidate
+    # table is per-query k·rerank (id, id) rows — proportional to the
+    # QUERY side, like stage 1's probe table (small-proof → broadcast
+    # against the big vector store; unknown → scale-safe shuffle join)
     small_q = _gate_lut_broadcast(queries_df, id_col, vec_col, codebooks,
-                                  broadcast_queries, broadcast_limit_bytes,
                                   n_probe=n_probe)
+    shortlist = _ivfpq_topk(df, queries_df, coarse, codebooks, vec_col,
+                            id_col, k * rerank, n_probe, round_to,
+                            residual, codes_df, small_q)
+    cand = shortlist.select("q_id", "n_id")
     if small_q:
         cand = F.broadcast(cand)
     nvec = df.select(F.col(id_col).alias("n_id"),

@@ -145,9 +145,10 @@ def _gen_column(col: str, g: tuple) -> Column:
     Spark/DuckDB pair (SURVEY §2.9 — generalization via masking)."""
     kind = g[0]
     if kind == "mask_show_first":
-        from ..functions.masks import mask_show_first_n_col
-        return mask_show_first_n_col(F.col(col), int(g[1]),
-                                     up="x", low="x", dig="x")
+        from ..functions.masks import instantiate_transformer
+        return F.expr(instantiate_transformer(
+            f"mask_show_first_n({{col}}, {int(g[1])}, 'x', 'x', 'x')",
+            col).sql())
     if kind == "suppress":
         return F.expr(f"CAST(NULL AS {_SUPPRESS_TYPES[g[1]][0]})")
     return F.expr(_gen_duckdb(col, g))

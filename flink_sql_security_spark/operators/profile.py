@@ -112,13 +112,18 @@ def profile_numeric_duckdb_sql(table: str, cols: list[str]) -> str:
 
 QUANTILE_PS = (0.25, 0.5, 0.75, 0.95)
 
+# profile_quantiles(exact='auto'): an input the optimizer proves under
+# AUTO_SMALL_BYTES takes the exact path with no probe job; otherwise an
+# HLL probe switches to approx past AUTO_DISTINCT_LIMIT distinct values
+# in the worst column, a value histogram that still fits an executor.
+AUTO_SMALL_BYTES = 1 << 30
+AUTO_DISTINCT_LIMIT = 50_000_000
+
 
 def profile_quantiles(df: DataFrame, cols: list[str],
                       ps: tuple = QUANTILE_PS,
                       exact: bool | str = "auto",
-                      accuracy: int = 10000,
-                      auto_small_bytes: int = 1 << 30,
-                      auto_distinct_limit: int = 50_000_000) -> DataFrame:
+                      accuracy: int = 10000) -> DataFrame:
     """(column, p25, p50, p75, p95) per numeric column.
 
     **Exact path** (``exact=True``): Spark's sort-based exact
@@ -141,8 +146,7 @@ def profile_quantiles(df: DataFrame, cols: list[str],
     the optimizer's free size estimate proves a small input → exact (no
     probe job); otherwise ONE approx_count_distinct pass (HLL — tiny
     state, one scan) estimates the worst column's cardinality and
-    switches to approx when it exceeds ``auto_distinct_limit``
-    (defaulted to a histogram that comfortably fits an executor). The
+    switches to approx when it exceeds ``AUTO_DISTINCT_LIMIT``. The
     failure mode this removes: exact percentile's per-column
     distinct-value histogram OOMing an executor at 100 TB.
     """
@@ -150,12 +154,12 @@ def profile_quantiles(df: DataFrame, cols: list[str],
         from flink_sql_security_spark.plan_stats import plan_size_bytes
 
         size = plan_size_bytes(df.select(*cols))
-        if size is not None and size <= auto_small_bytes:
+        if size is not None and size <= AUTO_SMALL_BYTES:
             exact = True
         else:
             probe = df.agg(*[
                 F.approx_count_distinct(c).alias(c) for c in cols]).first()
-            exact = max(probe[c] for c in cols) <= auto_distinct_limit
+            exact = max(probe[c] for c in cols) <= AUTO_DISTINCT_LIMIT
     from .skew import spread_partitions
 
     plist = ", ".join(str(p) for p in ps)

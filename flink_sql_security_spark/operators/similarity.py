@@ -20,6 +20,17 @@ from flink_sql_security_spark.functions.text import floor_round, floor_round_py
 from flink_sql_security_spark.operators.cache import attach
 from flink_sql_security_spark.plan_stats import plan_size_bytes
 
+# Broadcast gates: a side is collected and broadcast only when the
+# optimizer PROVES its plan under the limit. An unknown size takes the
+# scale-safe (non-broadcast) path: at 100 TB a driver collect must never
+# be the failure mode of a missing statistic. Corpus-, LUT- and
+# probe-sized sides (the corpus unit matrix, the ADC LUTs, the IVF probe
+# tables) get the wide limit. The exact top-k query matrix gets the
+# narrow one: every corpus task holds all of it plus a |Q|×chunk score
+# matrix.
+BROADCAST_LIMIT_BYTES = 256 << 20
+QUERY_BROADCAST_LIMIT_BYTES = 64 << 20
+
 _DOT = "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v)"
 _NORM = "sqrt(aggregate({a}, 0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
 
@@ -120,17 +131,9 @@ def _corpus_rows(df: DataFrame) -> int:
     return df.count()
 
 
-def _auto_broadcast(df: DataFrame, flag: bool | None,
-                    limit_bytes: int) -> bool:
-    """Resolve a ``broadcast: bool | None`` strategy flag.
-
-    None = auto: broadcast only when the optimizer PROVES the corpus small
-    (size estimate under ``limit_bytes``). Unknown size → scale-safe
-    (non-broadcast) path — at 100 TB a driver collect must be opt-in,
-    never the failure mode of a missing statistic.
-    """
-    if flag is not None:
-        return flag
+def _auto_broadcast(df: DataFrame, limit_bytes: int) -> bool:
+    """True when the optimizer PROVES ``df`` at most ``limit_bytes``;
+    an unknown size reads as large."""
     size = plan_size_bytes(df)
     return size is not None and size <= limit_bytes
 
@@ -138,8 +141,6 @@ def _auto_broadcast(df: DataFrame, flag: bool | None,
 def cosine_pairs(df: DataFrame, vec_col: str = "embedding",
                  id_col: str = "vec_id", threshold: float = 0.4,
                  round_to: int = 6, prefilter: bool = True,
-                 broadcast_corpus: bool | None = None,
-                 broadcast_limit_bytes: int = 256 << 20,
                  n_blocks: int = 32) -> DataFrame:
     """All pairs with cosine ≥ threshold (brute force, id_a < id_b).
 
@@ -147,25 +148,23 @@ def cosine_pairs(df: DataFrame, vec_col: str = "embedding",
     arithmetic — exact sequential-fold dot + shared floor-rule rounding — is
     identical in all of them, pinned by the parity tests):
 
-    - ``prefilter=True, broadcast_corpus=True``: blocked-BLAS candidate
-      generation against a DRIVER-COLLECTED corpus matrix. ``mapInPandas``
-      tasks each take a chunk of rows and do a chunk×n matmul (vectorized,
-      ~GFLOP/s) keeping only pairs within ``margin`` of the threshold;
-      survivors are re-scored in-task with the exact sequential fold. The
-      fastest shape when the n×d matrix fits the driver/executors.
-    - ``prefilter=True, broadcast_corpus=False``: distributed block-pair
-      BLAS — no driver collect anywhere. Rows are hashed into ``n_blocks``
-      blocks, each row is replicated to the ``n_blocks`` unordered block
-      pairs containing its block, and one ``applyInPandas`` per block pair
-      does the same matmul + exact rescore on its two sub-matrices. Every
-      pair of rows meets in exactly one group, so output is identical.
-      Shuffle volume is n·n_blocks vector copies (tunable); group memory
-      is ~2(n/n_blocks)·d doubles. This is the 100 TB-safe brute-force
-      shape — though past ~10⁶ vectors `ann_candidate_pairs` (sub-
+    - ``prefilter=True``, corpus proven under ``BROADCAST_LIMIT_BYTES``:
+      blocked-BLAS candidate generation against a DRIVER-COLLECTED corpus
+      matrix. ``mapInPandas`` tasks each take a chunk of rows and do a
+      chunk×n matmul (vectorized, ~GFLOP/s) keeping only pairs within
+      ``margin`` of the threshold; survivors are re-scored in-task with the
+      exact sequential fold. The fastest shape when the n×d matrix fits the
+      driver/executors.
+    - ``prefilter=True``, corpus large or of unknown size: distributed
+      block-pair BLAS — no driver collect anywhere. Rows are hashed into
+      ``n_blocks`` blocks, each row is replicated to the ``n_blocks``
+      unordered block pairs containing its block, and one ``applyInPandas``
+      per block pair does the same matmul + exact rescore on its two sub-
+      matrices. Every pair of rows meets in exactly one group, so output is
+      identical. Shuffle volume is n·n_blocks vector copies (tunable); group
+      memory is ~2(n/n_blocks)·d doubles. This is the 100 TB-safe brute-
+      force shape — though past ~10⁶ vectors `ann_candidate_pairs` (sub-
       quadratic) is the better tool.
-    - ``broadcast_corpus=None`` (default): auto — broadcast only when the
-      optimizer's size estimate proves the corpus under
-      ``broadcast_limit_bytes``; unknown or large → block-pair path.
     - ``prefilter=False``: pure crossJoin + interpreted higher-order
       functions. Spark's HOFs are not codegen'd, so this is ~100× slower
       per pair; kept as the reference semantics / fallback.
@@ -189,7 +188,7 @@ def cosine_pairs(df: DataFrame, vec_col: str = "embedding",
     # threshold still rounds up to it); exact re-score decides the rest
     margin = 0.5 * 10.0 ** (-round_to) + 1e-9
     raw = df.select(id_col, vec_col)
-    if not _auto_broadcast(raw, broadcast_corpus, broadcast_limit_bytes):
+    if not _auto_broadcast(raw, BROADCAST_LIMIT_BYTES):
         return _blocked_cosine_pairs(raw, vec_col, id_col, threshold,
                                      round_to, margin, n_blocks)
     pdf = raw.toPandas()
@@ -298,13 +297,11 @@ def _blocked_cosine_pairs(raw: DataFrame, vec_col: str, id_col: str,
 def cosine_topk(df: DataFrame, queries_df: DataFrame,
                 vec_col: str = "embedding", id_col: str = "vec_id",
                 k: int = 5, round_to: int = 6,
-                broadcast_queries: bool | None = None,
-                broadcast_limit_bytes: int = 64 << 20,
                 n_blocks: int = 8, q_blocks: int = 8) -> DataFrame:
     """Top-k neighbors per query vector (brute force, exact).
 
-    Physical shape (``broadcast_queries=True``, or None-auto when the
-    optimizer proves the query table small): the query side broadcasts
+    Physical shape when the optimizer proves the query table under
+    ``QUERY_BROADCAST_LIMIT_BYTES``: the query side broadcasts
     as a unit matrix; corpus chunks stream through one ``mapInPandas``
     doing a Q×chunk BLAS matmul, keep each query's CHUNK-LOCAL top-k (±
     a float-drift margin — any global top-k element is a fortiori in its
@@ -326,7 +323,7 @@ def cosine_topk(df: DataFrame, queries_df: DataFrame,
     from pyspark.sql.window import Window
 
     q = queries_df.select(id_col, vec_col)
-    if not _auto_broadcast(q, broadcast_queries, broadcast_limit_bytes):
+    if not _auto_broadcast(q, QUERY_BROADCAST_LIMIT_BYTES):
         return _blocked_cosine_topk(df.select(id_col, vec_col), q, vec_col,
                                     id_col, k, round_to, n_blocks, q_blocks)
     qpdf = q.toPandas()
@@ -378,8 +375,6 @@ def cosine_topk(df: DataFrame, queries_df: DataFrame,
 def filtered_topk(df: DataFrame, queries_df: DataFrame, predicate: str,
                   vec_col: str = "embedding", id_col: str = "vec_id",
                   k: int = 5, round_to: int = 6,
-                  broadcast_queries: bool | None = None,
-                  broadcast_limit_bytes: int = 64 << 20,
                   n_blocks: int = 8, q_blocks: int = 8) -> DataFrame:
     """Filtered vector search: exact top-k among corpus rows satisfying
     a metadata ``predicate`` (SQL expression over the corpus columns).
@@ -408,8 +403,7 @@ def filtered_topk(df: DataFrame, queries_df: DataFrame, predicate: str,
             f"filtered_topk: predicate must be a non-empty SQL string, "
             f"got {predicate!r}")
     return cosine_topk(df.where(predicate), queries_df, vec_col, id_col,
-                       k, round_to, broadcast_queries,
-                       broadcast_limit_bytes, n_blocks, q_blocks)
+                       k, round_to, n_blocks, q_blocks)
 
 
 def _blocked_cosine_topk(raw: DataFrame, q: DataFrame, vec_col: str,
@@ -594,9 +588,7 @@ def ivf_topk(df: DataFrame, queries_df: DataFrame,
              vec_col: str = "embedding", id_col: str = "vec_id",
              k: int = 5, n_cells: int = 16, n_probe: int = 4,
              iters: int = 5, sample: int = 4096,
-             round_to: int = 6,
-             broadcast_queries: bool | None = None,
-             broadcast_limit_bytes: int = 64 << 20) -> DataFrame:
+             round_to: int = 6) -> DataFrame:
     """Approximate top-k via IVF: probe the ``n_probe`` nearest cells only.
 
     Same output schema as `cosine_topk` (q_id, n_id, cosine, rank); recall
@@ -606,9 +598,9 @@ def ivf_topk(df: DataFrame, queries_df: DataFrame,
     sequential-order cosine, so any pair this returns scores identically
     to the brute-force path.
 
-    ``broadcast_queries=None`` (auto): the fused single-pass shape below
-    collects the query side to the driver, so it runs only when the
-    optimizer proves the query table small; a large/unknown query side
+    The fused single-pass shape below collects the query side to the
+    driver, so it runs only when the optimizer proves the query table
+    under ``QUERY_BROADCAST_LIMIT_BYTES``; a large/unknown query side
     takes ``_joined_ivf_topk`` — probe assignment happens in a
     ``mapInPandas`` over the query table and the search is a cell-keyed
     join, with no driver collect anywhere.
@@ -617,7 +609,7 @@ def ivf_topk(df: DataFrame, queries_df: DataFrame,
     from pyspark.sql.window import Window
 
     q = queries_df.select(id_col, vec_col)
-    if not _auto_broadcast(q, broadcast_queries, broadcast_limit_bytes):
+    if not _auto_broadcast(q, QUERY_BROADCAST_LIMIT_BYTES):
         return _joined_ivf_topk(df, q, vec_col, id_col, k, n_cells,
                                 n_probe, iters, sample, round_to)
 
@@ -851,9 +843,7 @@ def lsh_buckets(df: DataFrame, vec_col: str = "embedding",
 def ann_candidate_pairs(df: DataFrame, vec_col: str = "embedding",
                         id_col: str = "vec_id", bits: int = 6,
                         dim: int = 64, threshold: float = 0.4,
-                        tables: int = 4,
-                        broadcast_vectors: bool | None = None,
-                        broadcast_limit_bytes: int = 256 << 20) -> DataFrame:
+                        tables: int = 4) -> DataFrame:
     """ANN near-dup pairs: cosine over candidates sharing any LSH bucket.
 
     The scale path for embedding dedup: shuffle on (table, bucket),
@@ -861,25 +851,21 @@ def ann_candidate_pairs(df: DataFrame, vec_col: str = "embedding",
     tables. Tune (bits, tables) to the target cosine: near-dups (≥0.9) work
     with bits=8/tables=4; looser thresholds need more tables.
 
-    ``broadcast_vectors`` picks the scoring strategy for IDENTICAL
-    results (per-pair arithmetic is the same either way — pinned by
+    Two scoring strategies give IDENTICAL results (per-pair arithmetic
+    is the same either way — pinned by
     ``test_ann_join_scoring_matches_broadcast``):
 
-    - None (default): auto — True only when the optimizer's size estimate
-      proves the corpus under ``broadcast_limit_bytes``; unknown or large
-      → the joined path. The scale-safe choice is the default outcome.
-    - True (explicit small-side optimization; right when the unit matrix
-      fits an executor, up to ~10⁷ vectors at d=64): collect + broadcast
-      the corpus matrix, score candidates with zero vector joins.
-    - False (the 100 TB path): never collects — unit vectors are joined
-      onto the candidate pairs (two id-keyed hash joins, the second
-      co-partitioned with the scorer's input) and each pair is scored
-      from its own row. Cost is two shuffles of (pair, d·8 bytes), which
+    - corpus proven under ``BROADCAST_LIMIT_BYTES`` (up to ~10⁷ vectors
+      at d=64): collect + broadcast the corpus matrix, score candidates
+      with zero vector joins.
+    - large or unknown size (the 100 TB path): never collects — unit
+      vectors are joined onto the candidate pairs (two id-keyed hash
+      joins, the second co-partitioned with the scorer's input) and each
+      pair is scored from its own row. Cost is two shuffles of (pair, d·8 bytes), which
       beats shipping an impossible broadcast; the per-batch numpy work is
       unchanged.
     """
-    broadcast_vectors = _auto_broadcast(
-        df, broadcast_vectors, broadcast_limit_bytes)
+    broadcast_vectors = _auto_broadcast(df, BROADCAST_LIMIT_BYTES)
     # both self-join sides read the bucket table — persist() runs the
     # (numpy hyperplane-projection) bucket assignment once, not twice
     b = lsh_buckets(df, vec_col, id_col, bits, dim, tables).persist()
@@ -1179,8 +1165,6 @@ def matryoshka_topk(df: DataFrame, queries_df: DataFrame, *,
                     prefix_dims: int, vec_col: str = "embedding",
                     id_col: str = "vec_id", k: int = 5,
                     shortlist: int | str = "auto", round_to: int = 6,
-                    broadcast_queries: bool | None = None,
-                    broadcast_limit_bytes: int = 64 << 20,
                     n_blocks: int = 8, q_blocks: int = 8) -> DataFrame:
     """Matryoshka two-stage search (Kusupati et al. 2022, "Matryoshka
     Representation Learning"): shortlist with the first ``prefix_dims``
@@ -1221,8 +1205,6 @@ def matryoshka_topk(df: DataFrame, queries_df: DataFrame, *,
     short = cosine_topk(
         truncate(df), truncate(queries_df), vec_col, id_col,
         k=short_k, round_to=round_to,
-        broadcast_queries=broadcast_queries,
-        broadcast_limit_bytes=broadcast_limit_bytes,
         n_blocks=n_blocks, q_blocks=q_blocks)
     return _exact_rerank(
         df.select(id_col, vec_col), queries_df.select(id_col, vec_col),

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 from concurrent.futures import ThreadPoolExecutor
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import SparkSession
 
@@ -70,11 +71,26 @@ def _schema_file(path: str) -> str:
     return data[0]
 
 
+def _local_dir(sf_dir: str) -> str:
+    """``sf_dir`` as a local path. A ``file:`` URI maps to its path. Any
+    other scheme raises ``ValueError``: the tables are listed and their
+    footers picked with local file calls."""
+    url = urlparse(sf_dir)
+    if not url.scheme:
+        return sf_dir
+    if url.scheme == "file" and url.netloc in ("", "localhost"):
+        return unquote(url.path)
+    raise ValueError(
+        f"sf_dir must be a local path or a file: URI, got {sf_dir!r}")
+
+
 def register_tables(spark: SparkSession, sf_dir: str,
                     tables: tuple[str, ...] = TPCH_TABLES) -> None:
     """Register each ``{sf_dir}/{t}.parquet`` as temp view ``t`` (idempotent).
 
-    Missing files are skipped. No Spark job runs. Each table's schema
+    ``sf_dir`` is a local path or a ``file:`` URI; another scheme, such as
+    ``hdfs://``, raises ``ValueError``. Missing files are skipped. No Spark
+    job runs. Each table's schema
     comes from one parquet footer read on the driver: the file Spark's
     inference would read (:func:`_schema_file`; for a directory,
     ``_common_metadata``, else ``_metadata``, else the first data file by
@@ -88,8 +104,9 @@ def register_tables(spark: SparkSession, sf_dir: str,
 
     The footers are read and the views registered on a pool, one thread
     per table; each worker is wrapped in ``inheritable_thread_target``, so
-    it runs with the caller's local properties (job group, scheduler pool)
-    and tags. The first failing table's error is raised from this call.
+    it runs with its own copy of the caller's local properties (job group,
+    scheduler pool) and tags. The first failing table's error is raised
+    from this call.
 
     ``events.parquet`` carries TIMESTAMP(NANOS) which Spark's parquet reader
     rejects; it is read with ``nanosAsLong`` and the column floor-converted
@@ -102,6 +119,7 @@ def register_tables(spark: SparkSession, sf_dir: str,
     from pyspark.sql.types import _parse_datatype_json_string
     from pyspark.util import inheritable_thread_target
 
+    sf_dir = _local_dir(sf_dir)
     present = [t for t in tables
                if os.path.exists(os.path.join(sf_dir, f"{t}.parquet"))]
     if not present:
@@ -125,7 +143,6 @@ def register_tables(spark: SparkSession, sf_dir: str,
             jvm.org.apache.parquet.hadoop.Footer(p, meta), converter)
         return _parse_datatype_json_string(schema.json())
 
-    @inheritable_thread_target(spark)
     def register(t: str) -> None:
         path = os.path.join(sf_dir, f"{t}.parquet")
         df = spark.read.schema(footer_schema(path)).parquet(path)
@@ -133,8 +150,13 @@ def register_tables(spark: SparkSession, sf_dir: str,
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         df.createOrReplaceTempView(t)
 
+    # one wrapper per table: each takes its own copy of the caller's local
+    # properties. Workers sharing one copy race, because each view's SQL
+    # execution writes its execution id into them ("NumberFormatException:
+    # Cannot parse null string" from createOrReplaceTempView).
+    jobs = [inheritable_thread_target(spark)(register) for _ in present]
     with ThreadPoolExecutor(max_workers=len(present)) as pool:
-        list(pool.map(register, present))
+        list(pool.map(lambda job, t: job(t), jobs, present))
 
 
 def register_jdbc_table(spark: SparkSession, name: str, url: str, table: str,

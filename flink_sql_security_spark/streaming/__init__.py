@@ -37,8 +37,14 @@ def secure_stream(ctx: SecurityContext, username: str, stream_df: DataFrame,
     return ctx.apply_policies(username, stream_df, table_name)
 
 
-def drain_state_partitions(df: DataFrame, floor_n: int,
-                           bytes_per_state_task: int = 64 << 20) -> int:
+# Stateful drains aim for this much input per state task (see
+# drain_state_partitions): enough that a test-sized drain stays on its
+# measured floor, small enough that a corpus-sized one spreads its state
+# store up to the cluster's parallelism.
+STATE_TASK_BYTES = 64 << 20
+
+
+def drain_state_partitions(df: DataFrame, floor_n: int) -> int:
     """State-task count for a bounded streaming drain over ``df``.
 
     Stateful operators allocate one state task per shuffle partition
@@ -50,7 +56,7 @@ def drain_state_partitions(df: DataFrame, floor_n: int,
     key count. Derivation::
 
         max(floor_n, min(defaultParallelism,
-                         ceil(plan_size_bytes / bytes_per_state_task)))
+                         ceil(plan_size_bytes / STATE_TASK_BYTES)))
 
     - ``floor_n`` is the measured per-drain floor (state volume at the
       local SFs never justifies more than a handful of tasks; the
@@ -74,7 +80,7 @@ def drain_state_partitions(df: DataFrame, floor_n: int,
     if est is None or est >= (1 << 50):
         est_tasks = cores
     else:
-        est_tasks = -(-est // bytes_per_state_task)
+        est_tasks = -(-est // STATE_TASK_BYTES)
     return max(floor_n, min(cores, est_tasks))
 
 

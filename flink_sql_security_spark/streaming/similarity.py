@@ -56,7 +56,7 @@ def ann_ingest_stream(stream: DataFrame, corpus_df: DataFrame, sink,
         )
         # exact rescoring via the batch scorer's join path: vectors are
         # joined per side, unit-normalized per row, sequential-fold dot —
-        # bit-identical to ann_candidate_pairs(broadcast_vectors=False)
+        # bit-identical to ann_candidate_pairs' joined path
         va = batch_df.select(F.col(id_col).alias("id_new"),
                              F.col(vec_col).alias("_va"))
         vb = corpus_df.select(F.col(id_col).alias("id_old"),

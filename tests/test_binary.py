@@ -239,41 +239,41 @@ def test_ivf_oracle_empty_query_set(con):
     assert got == []
 
 
-def test_ivf_probe_broadcast_gate_paths_identical(emb, coarse):
+def test_ivf_probe_broadcast_gate_paths_identical(emb, coarse, monkeypatch):
     """ADVICE fix: the probe table must not broadcast unconditionally.
-    Forcing the scale-safe shuffle join (broadcast_probes=False) must
-    produce the identical result, and the explicit-False plan must not
-    contain a broadcast exchange for the probe side."""
+    Forcing the scale-safe shuffle join (BROADCAST_LIMIT_BYTES=0) must
+    produce the identical result, and its plan must not contain a
+    broadcast exchange for the probe side."""
     kw = dict(k=4, n_probe=3)
-    auto = rows(B.ivf_hamming_topk(emb, emb.where("vec_id < 5"),
-                                   coarse, **kw))
-    off = B.ivf_hamming_topk(emb, emb.where("vec_id < 5"), coarse,
-                             broadcast_probes=False, **kw)
+    on = B.ivf_hamming_topk(emb, emb.where("vec_id < 5"), coarse, **kw)
+    auto = rows(on)
+    with monkeypatch.context() as m:
+        m.setattr(B, "BROADCAST_LIMIT_BYTES", 0)
+        off = B.ivf_hamming_topk(emb, emb.where("vec_id < 5"), coarse,
+                                 **kw)
     assert rows(off) == auto
     # no explicit broadcast HINT on the probe side (AQE may still pick a
     # runtime broadcast from actual sizes — that's fine and wanted; the
     # bug was the unconditional hint that fires even when stats say no)
     plan = off._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in plan, plan
-    on = B.ivf_hamming_topk(emb, emb.where("vec_id < 5"), coarse,
-                            broadcast_probes=True, **kw)
+    # the proven-small query side takes the broadcast hint
     assert "ResolvedHint" in \
         on._jdf.queryExecution().analyzed().toString()
 
 
-def test_ivf_probe_gate_unknown_size_is_scale_safe(emb, coarse):
+def test_ivf_probe_gate_unknown_size_is_scale_safe(emb, coarse, monkeypatch):
     """Unknown query-side size (here: forced via a tiny limit) must take
     the non-broadcast path — the _auto_broadcast contract."""
     from flink_sql_security_spark.operators.binary import (
         _gate_probe_broadcast)
 
     q = emb.where("vec_id < 5")
-    assert _gate_probe_broadcast(q, "vec_id", "embedding", None,
-                                 limit_bytes=1, n_probe=3,
-                                 n_words=2) is False
-    assert _gate_probe_broadcast(q, "vec_id", "embedding", True,
-                                 limit_bytes=1, n_probe=3,
+    assert _gate_probe_broadcast(q, "vec_id", "embedding", n_probe=3,
                                  n_words=2) is True
+    monkeypatch.setattr(B, "BROADCAST_LIMIT_BYTES", 1)
+    assert _gate_probe_broadcast(q, "vec_id", "embedding", n_probe=3,
+                                 n_words=2) is False
 
 
 def test_hamming_auto_rerank_cross_engine_exact(emb, con):

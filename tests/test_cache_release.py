@@ -78,17 +78,18 @@ def ann_broadcast(spark):
     from flink_sql_security_spark.operators.similarity import (
         ann_candidate_pairs)
 
-    return ann_candidate_pairs(spark.table("embeddings"), bits=4, tables=4,
-                               broadcast_vectors=True)
+    # the sf table is proven under BROADCAST_LIMIT_BYTES: broadcast path
+    return ann_candidate_pairs(spark.table("embeddings"), bits=4, tables=4)
 
 
 @_op
 def ann_joined(spark):
-    from flink_sql_security_spark.operators.similarity import (
-        ann_candidate_pairs)
+    from flink_sql_security_spark.operators import similarity
 
-    return ann_candidate_pairs(spark.table("embeddings"), bits=4, tables=4,
-                               broadcast_vectors=False)
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(similarity, "BROADCAST_LIMIT_BYTES", 0)  # joined path
+        return similarity.ann_candidate_pairs(spark.table("embeddings"),
+                                              bits=4, tables=4)
 
 
 @_op

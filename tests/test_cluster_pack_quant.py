@@ -547,7 +547,7 @@ def test_ivfpq_residual_ranks_within_clusters(spark):
     assert recall(rr) >= recall(nr) + 0.2, (recall(nr), recall(rr))
 
 
-def test_pq_topk_query_side_stays_distributed(spark):
+def test_pq_topk_query_side_stays_distributed(spark, monkeypatch):
     """No toPandas() of the query table on any path: forcing the
     non-broadcast gate (1-byte ceiling) must produce the identical
     result through a plain (non-hinted) join."""
@@ -556,20 +556,20 @@ def test_pq_topk_query_side_stays_distributed(spark):
     df = _clustered_vectors(spark, n_clusters=3, per=10, d=8)
     books = PQ.pq_train(df, m=4, k=8, iters=2)
     q = df.where("vec_id < 4")
-    want = sorted(map(tuple, PQ.pq_topk(
-        df, q, books, k=3, broadcast_queries=True).collect()))
-    got = sorted(map(tuple, PQ.pq_topk(
-        df, q, books, k=3, broadcast_limit_bytes=1).collect()))
-    assert got == want and len(got) == 12
-
     coarse = PQ.coarse_train(df, n_cells=4, iters=2)
-    want = sorted(map(tuple, PQ.ivfpq_topk(
-        df, q, coarse, books, k=3, n_probe=2,
-        broadcast_queries=True).collect()))
-    got = sorted(map(tuple, PQ.ivfpq_topk(
-        df, q, coarse, books, k=3, n_probe=2,
-        broadcast_limit_bytes=1).collect()))
+    # the query frame's size is unknown to the optimizer, so the
+    # broadcast side is forced through the gate itself
+    with monkeypatch.context() as m:
+        m.setattr(PQ, "_gate_lut_broadcast", lambda *a, **kw: True)
+        want = sorted(map(tuple, PQ.pq_topk(df, q, books, k=3).collect()))
+        want_ivf = sorted(map(tuple, PQ.ivfpq_topk(
+            df, q, coarse, books, k=3, n_probe=2).collect()))
+    monkeypatch.setattr(PQ, "BROADCAST_LIMIT_BYTES", 1)
+    got = sorted(map(tuple, PQ.pq_topk(df, q, books, k=3).collect()))
     assert got == want and len(got) == 12
+    got = sorted(map(tuple, PQ.ivfpq_topk(
+        df, q, coarse, books, k=3, n_probe=2).collect()))
+    assert got == want_ivf and len(got) == 12
 
 
 def test_pq_reconstruct_duckdb_parity_all_modes(spark):
@@ -886,10 +886,10 @@ def test_pq_encode_reconstruct_empty_input(spark):
     assert PQ.pq_reconstruct(empty, books).count() == 0
 
 
-def test_pq_topk_auto_gate_routes_large_corpus_to_ivf(spark):
+def test_pq_topk_auto_gate_routes_large_corpus_to_ivf(spark, monkeypatch):
     """The flat-ADC scale gate: mode='auto' must route through the
     cell-pruned IVF path once the corpus row count exceeds
-    flat_limit_rows, and the routed result must be ivfpq_topk's exact
+    FLAT_LIMIT_ROWS, and the routed result must be ivfpq_topk's exact
     output (same coarse quantizer, same config). The routing key is
     the EXACT row count (layout/compression-independent), supplied
     either by the gate's own count job or by the corpus_rows hint —
@@ -901,8 +901,9 @@ def test_pq_topk_auto_gate_routes_large_corpus_to_ivf(spark):
     coarse = PQ.coarse_train(df, n_cells=6, iters=3)
     q = df.where("vec_id < 5")
 
+    monkeypatch.setattr(PQ, "FLAT_LIMIT_ROWS", 1)
     routed = PQ.pq_topk(df, q, books, k=3, mode="auto",
-                        flat_limit_rows=1, coarse=coarse, n_probe=2)
+                        coarse=coarse, n_probe=2)
     plan = routed._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan
     assert "NestedLoop" not in plan, plan
@@ -912,21 +913,20 @@ def test_pq_topk_auto_gate_routes_large_corpus_to_ivf(spark):
 
     # corpus_rows hint: skips the count job, same route, same rows
     hinted = PQ.pq_topk(df, q, books, k=3, mode="auto",
-                        flat_limit_rows=1, corpus_rows=df.count(),
-                        coarse=coarse, n_probe=2)
+                        corpus_rows=df.count(), coarse=coarse, n_probe=2)
     assert sorted(map(tuple, hinted.collect())) == want
 
     # a small hint keeps the flat route even when the real corpus is
     # past the threshold — the hint IS the routing key
+    monkeypatch.setattr(PQ, "FLAT_LIMIT_ROWS", 1_000_000)
     flat_hint = PQ.pq_topk(df, q, books, k=3, mode="auto",
-                           flat_limit_rows=1_000_000, corpus_rows=10,
-                           coarse=coarse, n_probe=2)
+                           corpus_rows=10, coarse=coarse, n_probe=2)
     flat = sorted(map(tuple, PQ.pq_topk(
         df, q, books, k=3, mode="flat").collect()))
     assert sorted(map(tuple, flat_hint.collect())) == flat
 
 
-def test_pq_topk_auto_gate_small_corpus_stays_flat(spark):
+def test_pq_topk_auto_gate_small_corpus_stays_flat(spark, monkeypatch):
     """Below the threshold (default 500k rows) auto == flat: identical
     rows, and the plan still carries the exhaustive crossJoin — the
     strictly-oracle-checked shape the emb_pq_topk entry (mode='auto')
@@ -942,8 +942,8 @@ def test_pq_topk_auto_gate_small_corpus_stays_flat(spark):
     assert sorted(map(tuple, auto.collect())) == flat and len(flat) == 12
 
     # mode='flat' pins the exhaustive scan even past the size gate
-    pinned = PQ.pq_topk(df, q, books, k=3, mode="flat",
-                        flat_limit_rows=1)
+    monkeypatch.setattr(PQ, "FLAT_LIMIT_ROWS", 1)
+    pinned = PQ.pq_topk(df, q, books, k=3, mode="flat")
     assert sorted(map(tuple, pinned.collect())) == flat
 
     with __import__("pytest").raises(ValueError, match="mode"):

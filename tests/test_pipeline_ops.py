@@ -131,7 +131,7 @@ def test_prefix_jaccard_common_token_pair(spark):
     assert got == want and got[(1, 2)] == 1.0
 
 
-def test_prefix_jaccard_hot_token_autoroute(spark, caplog):
+def test_prefix_jaccard_hot_token_autoroute(spark, caplog, monkeypatch):
     """A planted hot-shingle corpus (an exact-duplicate cluster: every
     member's prefix holds the SAME tokens, each with posting length =
     cluster size) routes mode='auto' to LSH→verify with a warning, and
@@ -150,23 +150,23 @@ def test_prefix_jaccard_hot_token_autoroute(spark, caplog):
     exact = sorted(map(tuple, D.prefix_jaccard_pairs(
         df, threshold=0.5, mode="prefix").collect()))
     assert len(exact) == 40 * 39 // 2          # the cluster, J = 1.0
+    monkeypatch.setattr(D, "HOT_POSTING_LIMIT", 10)
     with caplog.at_level(
             logging.WARNING,
             logger="flink_sql_security_spark.operators.dedup"):
         routed = sorted(map(tuple, D.prefix_jaccard_pairs(
-            df, threshold=0.5, mode="auto",
-            hot_posting_limit=10).collect()))
+            df, threshold=0.5, mode="auto").collect()))
         assert any("routing to lsh_verified" in r.message
                    for r in caplog.records)
     assert routed == exact
     # under the limit, auto stays on the exact path (no warning)
     caplog.clear()
+    monkeypatch.setattr(D, "HOT_POSTING_LIMIT", 100)
     with caplog.at_level(
             logging.WARNING,
             logger="flink_sql_security_spark.operators.dedup"):
         stay = sorted(map(tuple, D.prefix_jaccard_pairs(
-            df, threshold=0.5, mode="auto",
-            hot_posting_limit=100).collect()))
+            df, threshold=0.5, mode="auto").collect()))
         assert not any("routing" in r.message for r in caplog.records)
     assert stay == exact
     with pytest.raises(ValueError, match="mode"):
@@ -628,30 +628,31 @@ def test_blas_prefilter_matches_crossjoin(vectors):
     assert fast == slow  # bit-identical: prefilter only prunes, exact rescoring
 
 
-def test_blocked_pairs_match_broadcast(spark):
+def test_blocked_pairs_match_broadcast(spark, monkeypatch):
     """The distributed block-pair scorer (the path that never collects the
     corpus) must emit the same pair set and bit-identical cosines as the
     broadcast-matrix scorer, for any block count (1 = one self group,
     7 = more blocks than some groups can fill)."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    # the corpus is proven small: the default takes the broadcast path
+    assert S._auto_broadcast(emb.select("vec_id", "embedding"),
+                             S.BROADCAST_LIMIT_BYTES)
     want = sorted(map(tuple, S.cosine_pairs(
-        emb, threshold=0.4, broadcast_corpus=True).collect()))
+        emb, threshold=0.4).collect()))
     assert len(want) > 0
+    monkeypatch.setattr(S, "BROADCAST_LIMIT_BYTES", 0)
     for nb in (1, 7):
         got = sorted(map(tuple, S.cosine_pairs(
-            emb, threshold=0.4, broadcast_corpus=False,
-            n_blocks=nb).collect()))
+            emb, threshold=0.4, n_blocks=nb).collect()))
         assert got == want, f"n_blocks={nb}"
 
 
 def test_auto_broadcast_resolution(spark):
-    """None = auto: broadcast only when the optimizer PROVES the corpus
-    under the limit; explicit flags pass through untouched."""
+    """Broadcast only when the optimizer PROVES the corpus under the
+    limit."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    assert S._auto_broadcast(emb, None, 10 ** 12) is True
-    assert S._auto_broadcast(emb, None, 1) is False      # too big → safe path
-    assert S._auto_broadcast(emb, True, 1) is True       # explicit wins
-    assert S._auto_broadcast(emb, False, 10 ** 12) is False
+    assert S._auto_broadcast(emb, 10 ** 12) is True
+    assert S._auto_broadcast(emb, 1) is False      # too big → safe path
 
 
 def test_uhash_family_not_monotone():
@@ -693,7 +694,7 @@ def test_ivf_topk_high_recall_on_fixture(spark):
             assert r["cosine"] == exact_cos[(r["q_id"], r["n_id"])]
 
 
-def test_cosine_topk_blocked_matches_broadcast(spark):
+def test_cosine_topk_blocked_matches_broadcast(spark, monkeypatch):
     """The large-Q block nested-loop path (no driver collect of either
     side) must return the EXACT rows of the broadcast path — same
     neighbors, same bit-identical cosines, same ranks."""
@@ -703,15 +704,15 @@ def test_cosine_topk_blocked_matches_broadcast(spark):
                 F.col("embedding").cast("array<float>").alias("embedding"))
     )
     queries = emb.where("vec_id < 15")
-    fast = sorted(map(tuple, S.cosine_topk(
-        emb, queries, k=5, broadcast_queries=True).collect()))
+    assert S._auto_broadcast(queries, S.QUERY_BROADCAST_LIMIT_BYTES)
+    fast = sorted(map(tuple, S.cosine_topk(emb, queries, k=5).collect()))
+    monkeypatch.setattr(S, "QUERY_BROADCAST_LIMIT_BYTES", 0)
     blocked = sorted(map(tuple, S.cosine_topk(
-        emb, queries, k=5, broadcast_queries=False,
-        n_blocks=3, q_blocks=2).collect()))
+        emb, queries, k=5, n_blocks=3, q_blocks=2).collect()))
     assert fast == blocked and len(fast) == 75
 
 
-def test_ivf_topk_joined_matches_fused(spark):
+def test_ivf_topk_joined_matches_fused(spark, monkeypatch):
     """The large-Q cell-join path must probe the same cells and score
     the same exact cosines as the fused driver-probe path."""
     emb = (
@@ -720,17 +721,18 @@ def test_ivf_topk_joined_matches_fused(spark):
                 F.col("embedding").cast("array<float>").alias("embedding"))
     )
     queries = emb.where("vec_id < 15")
+    assert S._auto_broadcast(queries.select("vec_id", "embedding"),
+                             S.QUERY_BROADCAST_LIMIT_BYTES)
     fused = sorted(map(tuple, S.ivf_topk(
-        emb, queries, k=5, n_cells=8, n_probe=3,
-        broadcast_queries=True).collect()))
+        emb, queries, k=5, n_cells=8, n_probe=3).collect()))
+    monkeypatch.setattr(S, "QUERY_BROADCAST_LIMIT_BYTES", 0)
     joined = sorted(map(tuple, S.ivf_topk(
-        emb, queries, k=5, n_cells=8, n_probe=3,
-        broadcast_queries=False).collect()))
+        emb, queries, k=5, n_cells=8, n_probe=3).collect()))
     assert fused == joined and len(fused) > 0
 
 
-def test_topk_auto_gate_defaults_to_scale_safe_path(spark):
-    """broadcast_queries=None must take the distributed path whenever the
+def test_topk_auto_gate_defaults_to_scale_safe_path(spark, monkeypatch):
+    """The query-side gate must take the distributed path whenever the
     optimizer cannot PROVE the query side small — a driver collect at
     100 TB must be opt-in, never the default failure mode."""
     emb = (
@@ -740,13 +742,13 @@ def test_topk_auto_gate_defaults_to_scale_safe_path(spark):
     )
     queries = emb.where("vec_id < 5")
     # tiny parquet side: the size estimate proves it small → broadcast on
-    assert S._auto_broadcast(queries, None, 64 << 20) is True
+    assert S._auto_broadcast(queries, S.QUERY_BROADCAST_LIMIT_BYTES) is True
     # a 1-byte ceiling makes "small" unprovable → the gate must say no
-    assert S._auto_broadcast(queries, None, 1) is False
+    assert S._auto_broadcast(queries, 1) is False
     # and the operator still returns the identical result through the gate
-    got = sorted(map(tuple, S.cosine_topk(
-        emb, queries, k=3, broadcast_limit_bytes=1).collect()))
     want = sorted(map(tuple, S.cosine_topk(emb, queries, k=3).collect()))
+    monkeypatch.setattr(S, "QUERY_BROADCAST_LIMIT_BYTES", 1)
+    got = sorted(map(tuple, S.cosine_topk(emb, queries, k=3).collect()))
     assert got == want
 
 
@@ -1082,11 +1084,12 @@ def test_profile_quantiles_exact_matches_builtin(spark):
             assert got[c][f"p{int(p * 100)}"] == exp, (c, p)
 
 
-def test_profile_quantiles_auto_switchover(spark):
+def test_profile_quantiles_auto_switchover(spark, monkeypatch):
     """exact='auto' pins the switch: a provably-small input plans the
     exact sort-based percentile with NO probe job; pushing both
     thresholds to zero forces the HLL probe and the approx_percentile
     plan. The approx path must stay rank-accurate on real data."""
+    from flink_sql_security_spark.operators import profile as P
     from flink_sql_security_spark.operators.profile import profile_quantiles
     from flink_sql_security_spark.sources import register_tables
 
@@ -1103,8 +1106,10 @@ def test_profile_quantiles_auto_switchover(spark):
     # partitioned histogram + broadcast selector rows), recognizable
     # by its selector column — not a percentile() aggregate
     assert "_p_idx" in plan(auto)
-    forced = profile_quantiles(li, cols, auto_small_bytes=0,
-                               auto_distinct_limit=0)    # → approx
+    with monkeypatch.context() as m:
+        m.setattr(P, "AUTO_SMALL_BYTES", 0)
+        m.setattr(P, "AUTO_DISTINCT_LIMIT", 0)
+        forced = profile_quantiles(li, cols)             # → approx
     assert "approx_percentile" in plan(forced)
 
     # auto==exact exactly; approx within GK rank error of exact
@@ -1343,16 +1348,17 @@ def test_span_stats_and_trim_agree(spark):
             assert trimmed[i]["n_removed"] > 0
 
 
-def test_ann_join_scoring_matches_broadcast(spark):
+def test_ann_join_scoring_matches_broadcast(spark, monkeypatch):
     """The partitioned (join-based) candidate scorer — the path that never
     collects the corpus — must emit the exact same pair set and cosines
     as the broadcast-matrix scorer."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    assert S._auto_broadcast(emb, S.BROADCAST_LIMIT_BYTES)
     a = sorted(map(tuple, S.ann_candidate_pairs(
         emb, bits=4, tables=8, threshold=0.4).collect()))
+    monkeypatch.setattr(S, "BROADCAST_LIMIT_BYTES", 0)
     b = sorted(map(tuple, S.ann_candidate_pairs(
-        emb, bits=4, tables=8, threshold=0.4,
-        broadcast_vectors=False).collect()))
+        emb, bits=4, tables=8, threshold=0.4).collect()))
     assert a == b and len(a) > 0
 
 

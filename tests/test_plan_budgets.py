@@ -136,7 +136,7 @@ BUDGETS = {
     # the oriented table (cached-plan coalescing materialized it at 2
     # partitions, serializing the O(m^{3/2}) wedge join; gated on the
     # EXACT |V| count like the broadcasts, so no exchange past
-    # broadcast_degrees_limit). The 3-branch corner union became one
+    # BROADCAST_NODES_LIMIT). The 3-branch corner union became one
     # explode (no exchange either way, one cache read instead of 3).
     "graph_triangles": 10,
 }

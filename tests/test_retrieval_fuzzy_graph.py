@@ -7,6 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from flink_sql_security_spark.operators import graph
 from flink_sql_security_spark.operators.cache import release
 from flink_sql_security_spark.operators.fuzzy import fuzzy_name_pairs
 from flink_sql_security_spark.operators.graph import pagerank, pagerank_sql
@@ -1393,10 +1394,18 @@ def test_fuzz_k_core_cross_engine(spark):
     con.close()
 
 
-def test_pagerank_driver_vs_distributed_parity(spark):
+def _distributed_loop(monkeypatch, op, *args, **kw):
+    """``op`` with the driver-kernel gate closed (``DRIVER_EDGES_LIMIT``
+    = 0), so its distributed loop runs."""
+    with monkeypatch.context() as m:
+        m.setattr(graph, "DRIVER_EDGES_LIMIT", 0)
+        return op(*args, **kw)
+
+
+def test_pagerank_driver_vs_distributed_parity(spark, monkeypatch):
     """The r12 driver-kernel gate must be invisible in the values: the
     numpy iteration (default at broadcast-scale edge counts) and the
-    distributed loop (forced via driver_edges_limit=0) produce
+    distributed loop (forced via DRIVER_EDGES_LIMIT=0) produce
     bit-identical (node, rank, rank_pos) across config space —
     unweighted/weighted, leak/redistribute, uniform/personalized."""
     import random
@@ -1426,17 +1435,17 @@ def test_pagerank_driver_vs_distributed_parity(spark):
                      dangling=dangling, seeds=seeds, **kw)
         got_drv = sorted(map(tuple, a.collect()))
         release(a)
-        b = pagerank(df, iters=iters, damping=damping,
-                     dangling=dangling, seeds=seeds,
-                     driver_edges_limit=0, **kw)
+        b = _distributed_loop(monkeypatch, pagerank, df, iters=iters,
+                              damping=damping, dangling=dangling,
+                              seeds=seeds, **kw)
         got_dist = sorted(map(tuple, b.collect()))
         release(b)
         assert got_drv == got_dist, cfg  # exact, float bits included
 
 
-def test_hits_driver_vs_distributed_parity(spark):
+def test_hits_driver_vs_distributed_parity(spark, monkeypatch):
     """HITS driver kernel (default at broadcast-scale edge counts) vs
-    the distributed loop (driver_edges_limit=0): bit-identical
+    the distributed loop (DRIVER_EDGES_LIMIT=0): bit-identical
     (node, hub, auth, auth_pos) across random graphs/depths."""
     import random
 
@@ -1453,15 +1462,15 @@ def test_hits_driver_vs_distributed_parity(spark):
         a = hits(df, iters=iters)
         got_drv = sorted(map(tuple, a.collect()))
         release(a)
-        b = hits(df, iters=iters, driver_edges_limit=0)
+        b = _distributed_loop(monkeypatch, hits, df, iters=iters)
         got_dist = sorted(map(tuple, b.collect()))
         release(b)
         assert got_drv == got_dist, (trial, len(raw), iters)
 
 
-def test_lpa_bfs_kcore_driver_vs_distributed_parity(spark):
+def test_lpa_bfs_kcore_driver_vs_distributed_parity(spark, monkeypatch):
     """LPA / BFS / k-core driver kernels vs their distributed loops
-    (forced via driver_edges_limit=0): identical result sets across
+    (forced via DRIVER_EDGES_LIMIT=0): identical result sets across
     random graphs — integer counts/levels/degrees, so equality is
     exact."""
     import random
@@ -1482,7 +1491,8 @@ def test_lpa_bfs_kcore_driver_vs_distributed_parity(spark):
         a = label_propagation(df, iters=iters)
         ga = sorted(map(tuple, a.collect()))
         release(a)
-        b = label_propagation(df, iters=iters, driver_edges_limit=0)
+        b = _distributed_loop(monkeypatch, label_propagation, df,
+                              iters=iters)
         gb = sorted(map(tuple, b.collect()))
         release(b)
         assert ga == gb, ("lpa", cfg, iters)
@@ -1492,7 +1502,8 @@ def test_lpa_bfs_kcore_driver_vs_distributed_parity(spark):
         a = bfs_levels(df, seeds, max_hops=hops)
         ga = sorted(map(tuple, a.collect()))
         release(a)
-        b = bfs_levels(df, seeds, max_hops=hops, driver_edges_limit=0)
+        b = _distributed_loop(monkeypatch, bfs_levels, df, seeds,
+                              max_hops=hops)
         gb = sorted(map(tuple, b.collect()))
         release(b)
         assert ga == gb, ("bfs", cfg, seeds, hops)
@@ -1502,19 +1513,20 @@ def test_lpa_bfs_kcore_driver_vs_distributed_parity(spark):
         a = k_core(df, k=kk, max_rounds=rounds)
         ga = sorted(map(tuple, a.collect()))
         release(a)
-        b = k_core(df, k=kk, max_rounds=rounds, driver_edges_limit=0)
+        b = _distributed_loop(monkeypatch, k_core, df, k=kk,
+                              max_rounds=rounds)
         gb = sorted(map(tuple, b.collect()))
         release(b)
         assert ga == gb, ("kcore", cfg, kk, rounds)
 
 
-def test_triangles_driver_vs_distributed_parity(spark):
+def test_triangles_driver_vs_distributed_parity(spark, monkeypatch):
     """Triangle-count driver kernel vs the distributed wedge join
-    (forced via driver_edges_limit=0): bit-identical (node, degree,
+    (forced via DRIVER_EDGES_LIMIT=0): bit-identical (node, degree,
     triangles, clustering) — integer counts plus one floor-rounded
     IEEE divide reproduced operand-for-operand. Includes a dense
     near-clique (many wedges per apex) and the chunked-enumeration
-    path (driver_wedge_limit small enough to force multiple chunks is
+    path (DRIVER_WEDGE_LIMIT small enough to force multiple chunks is
     exercised via a tiny budget fallback check)."""
     import random
 
@@ -1537,23 +1549,25 @@ def test_triangles_driver_vs_distributed_parity(spark):
         a = triangle_count(df)
         ga = sorted(map(tuple, a.collect()))
         release(a)
-        b = triangle_count(df, driver_edges_limit=0)
+        b = _distributed_loop(monkeypatch, triangle_count, df)
         gb = sorted(map(tuple, b.collect()))
         release(b)
         assert ga == gb, ("tri", gi, len(raw))
     # wedge-limit fallback: a limit of 0 wedges must route every
     # non-trivial graph to the distributed join and still answer
     df = spark.createDataFrame(graphs[-1], ["src", "dst"])
-    a = triangle_count(df, driver_wedge_limit=0)
+    with monkeypatch.context() as m:
+        m.setattr(graph, "DRIVER_WEDGE_LIMIT", 0)
+        a = triangle_count(df)
     ga = sorted(map(tuple, a.collect()))
     release(a)
-    b = triangle_count(df, driver_edges_limit=0)
+    b = _distributed_loop(monkeypatch, triangle_count, df)
     gb = sorted(map(tuple, b.collect()))
     release(b)
     assert ga == gb
 
 
-def test_triangles_nan_node_falls_back_to_distributed(spark):
+def test_triangles_nan_node_falls_back_to_distributed(spark, monkeypatch):
     """A NaN node value in a double-typed edge list: the driver kernel
     cannot code it (pandas factorizes NaN as -1), so triangle_count must
     return exactly what the distributed join returns, where NaN is one
@@ -1578,6 +1592,6 @@ def test_triangles_nan_node_falls_back_to_distributed(spark):
         return got
 
     ga = rows(triangle_count(df))
-    gb = rows(triangle_count(df, driver_edges_limit=0))
+    gb = rows(_distributed_loop(monkeypatch, triangle_count, df))
     assert ga == gb
     assert ga["nan"][:2] == (3, 1) and ga["1.0"][:2] == (3, 2), ga

@@ -63,6 +63,20 @@ def test_register_tables_idempotent(spark):
     n1 = spark.table("orders").count()
     register_tables(spark, SF_DIR)
     assert spark.table("orders").count() == n1 == 1500
+    # a file: URI names the same directory
+    for uri in ("file:" + SF_DIR, "file://" + SF_DIR):
+        spark.catalog.dropTempView("orders")
+        register_tables(spark, uri)
+        assert spark.table("orders").count() == n1, uri
+
+
+def test_register_tables_rejects_non_local_uri(spark):
+    """A scheme the local listing cannot read raises, naming sf_dir,
+    instead of registering nothing."""
+    for uri in ("hdfs://nn:8020/sf0.001", "s3a://bucket/sf0.001",
+                "file://otherhost/sf0.001"):
+        with pytest.raises(ValueError, match="sf_dir"):
+            register_tables(spark, uri)
 
 
 def _tpch_views(spark):
@@ -185,6 +199,39 @@ def test_register_tables_directory_picks_inference_file(spark, tmp_path):
     for t, cols in (("fss_both", ["a", "b"]), ("fss_meta", ["a", "c"]),
                     ("fss_first", ["a"])):
         assert _register_as_inferred(spark, str(tmp_path), t) == cols, t
+
+
+def test_register_tables_workers_do_not_share_local_properties(
+        spark, tmp_path, monkeypatch):
+    """Each worker gets its own copy of the caller's local properties: a
+    property one worker sets is not seen by another. Spark's SQL execution
+    writes its execution id there, so a shared copy races between the
+    concurrent view registrations."""
+    import threading
+
+    names = ("fss_la", "fss_lb", "fss_lc")
+    for t in names:
+        spark.range(2).write.parquet(str(tmp_path / f"{t}.parquet"))
+    sc = spark.sparkContext
+    barrier = threading.Barrier(len(names), timeout=60)
+    seen = {}
+    frame = type(spark.range(1))
+    create_view = frame.createOrReplaceTempView
+
+    def probing(df, name):
+        sc.setLocalProperty("fss.view", name)
+        barrier.wait()  # every worker has written before any reads
+        seen[name] = sc.getLocalProperty("fss.view")
+        create_view(df, name)
+
+    monkeypatch.setattr(frame, "createOrReplaceTempView", probing)
+    try:
+        register_tables(spark, str(tmp_path), tables=names)
+    finally:
+        monkeypatch.undo()
+        for t in names:
+            spark.catalog.dropTempView(t)
+    assert seen == {t: t for t in names}
 
 
 def test_register_tables_empty_directory_raises(spark, tmp_path):

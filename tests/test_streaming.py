@@ -1101,7 +1101,7 @@ def test_funnel_state_stream_string_user_ids(spark):
 
 def test_drain_state_partitions_derivation(spark, monkeypatch):
     """The drain state-task count is DERIVED, not a tuned literal:
-    max(floor, min(defaultParallelism, ceil(est_bytes/bytes_per_task)))
+    max(floor, min(defaultParallelism, ceil(est_bytes/STATE_TASK_BYTES)))
     — the measured local floors (4 JVM-native / 8 Python-state) hold
     for test-sized inputs, and a corpus-sized drain scales its state
     store up to the cluster parallelism (VERDICT-r11 task 3)."""
@@ -1125,7 +1125,7 @@ def test_drain_state_partitions_derivation(spark, monkeypatch):
     # mid regime: the estimate term itself sizes the store
     monkeypatch.setattr(
         "flink_sql_security_spark.plan_stats.plan_size_bytes",
-        lambda df: (64 << 20) * 2 + 1)  # just past 2 task-quanta
+        lambda df: st.STATE_TASK_BYTES * 2 + 1)  # just past 2 task-quanta
     assert st.drain_state_partitions(tiny, 1) == min(cores, 3)
     import pytest as _pytest
     with _pytest.raises(ValueError):
