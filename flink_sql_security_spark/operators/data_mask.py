@@ -81,7 +81,9 @@ def _mask_expr(policy_manager: PolicyManager, policy: DataMaskPolicy,
         template = mask_type.transformer
         if template is None:
             raise ValueError(f"mask type {mask_type.name} has no transformer")
-    return instantiate_transformer(template, column_name)
+    return policy_manager.compiled(
+        ("mask", template, column_name),
+        lambda: instantiate_transformer(template, column_name))
 
 
 class DataMaskVisitor:
@@ -93,6 +95,8 @@ class DataMaskVisitor:
 
     def visit(self, node: Node) -> Node:
         """Wrap every masked base table under ``node`` (in place)."""
+        if not self.policy_manager.holds_masks(self.username):
+            return node  # no table of the statement can match
         return rewrite_tables(node, self._wrap)
 
     def _wrap(self, select: Select, table: TableRef) -> Relation:

@@ -306,8 +306,13 @@ def opq_topk(df: DataFrame, queries_df: DataFrame, R: list,
     Catalyst (no size estimate, no column pruning through it), so
     gating/counting the rotated frames would read "unknown → huge" and
     pay the whole rotation just to count rows. Rotation is 1:1, so the
-    input frames carry the same row count and the honest size proxy."""
-    small_q = _gate_lut_broadcast(queries_df, id_col, vec_col, codebooks)
+    input frames carry the same row count and the honest size proxy.
+    The gate is sized for the route taken: one LUT per query on the
+    flat route, ``n_probe`` of them on the IVF route."""
+    def gate(n_probe: int) -> bool:
+        return _gate_lut_broadcast(queries_df, id_col, vec_col, codebooks,
+                                   n_probe=n_probe)
+
     rot_q = opq_rotate(queries_df, R, vec_col, id_col, round_to,
                        spread=False)
     if codes_df is None:
@@ -315,7 +320,7 @@ def opq_topk(df: DataFrame, queries_df: DataFrame, R: list,
             corpus_rows = df.select(id_col).count()
         df = opq_rotate(df, R, vec_col, id_col, round_to)
     return _pq_topk(df, rot_q, codebooks, "rot", id_col, k, round_to,
-                    codes_df, mode, corpus_rows, small_q)
+                    codes_df, mode, corpus_rows, gate)
 
 
 def opq_topk_duckdb_sql(parquet_path: str, query_pred: str = "vec_id < 10",

@@ -870,11 +870,17 @@ def pq_topk(df: DataFrame, queries_df: DataFrame, codebooks: list,
 def _pq_topk(df: DataFrame, queries_df: DataFrame, codebooks: list,
              vec_col: str, id_col: str, k: int, round_to: int,
              codes_df: DataFrame | None, mode: str,
-             corpus_rows: int | None, small_q: bool | None,
+             corpus_rows: int | None, gate=None,
              coarse: list | None = None, n_cells: int = 64,
              n_probe: int = 8, coarse_sample: int = 2048) -> DataFrame:
-    """:func:`pq_topk` with the LUT broadcast decided by the caller;
-    ``small_q=None`` gates ``queries_df`` here."""
+    """:func:`pq_topk` with the LUT broadcast decided by ``gate(n)``: may
+    a table of ``n`` LUTs per query broadcast? The flat route asks for
+    n = 1, the IVF route for ``n_probe``. ``gate=None`` sizes
+    ``queries_df`` with :func:`_gate_lut_broadcast`."""
+    if gate is None:
+        def gate(n: int) -> bool:
+            return _gate_lut_broadcast(queries_df, id_col, vec_col,
+                                       codebooks, n_probe=n)
     if mode not in ("auto", "flat", "ivf"):
         raise ValueError(f"pq_topk mode must be auto|flat|ivf: {mode!r}")
     if codes_df is None and mode != "flat":
@@ -895,16 +901,11 @@ def _pq_topk(df: DataFrame, queries_df: DataFrame, codebooks: list,
                 coarse = coarse_train(df, vec_col, id_col,
                                       n_cells=n_cells,
                                       sample=coarse_sample)
-            if small_q is None:
-                small_q = _gate_lut_broadcast(queries_df, id_col, vec_col,
-                                              codebooks, n_probe=n_probe)
             return _ivfpq_topk(df, queries_df, coarse, codebooks, vec_col,
                                id_col, k, n_probe, round_to, False, None,
-                               small_q)
+                               gate(n_probe))
     luts = _lut_df(queries_df, codebooks, vec_col, id_col)
-    if small_q is None:
-        small_q = _gate_lut_broadcast(queries_df, id_col, vec_col, codebooks)
-    if small_q:
+    if gate(1):
         luts = F.broadcast(luts)
 
     # persist the code table: without the materialization boundary

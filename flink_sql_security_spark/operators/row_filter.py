@@ -58,12 +58,15 @@ def qualify_condition(cond: Expr, alias: str) -> Expr:
 
 def row_filter_condition(policy_manager: PolicyManager, username: str,
                          parts: list[str], alias: str) -> Optional[Expr]:
-    """The user's row-filter condition on table ``parts``, parsed and
-    qualified with ``alias``; None when no policy applies."""
+    """The user's row-filter condition on table ``parts``, parsed (once
+    per policy manager) and qualified with ``alias``; None when no policy
+    applies. The caller owns the returned tree."""
     condition = policy_manager.get_row_filter_condition(username, parts)
     if condition is None:
         return None
-    return qualify_condition(parse_expression(condition), alias)
+    parsed = policy_manager.compiled(
+        ("row_filter", condition), lambda: parse_expression(condition))
+    return qualify_condition(parsed, alias)
 
 
 class RowFilterVisitor:
@@ -76,6 +79,8 @@ class RowFilterVisitor:
 
     def visit(self, node: Node) -> Node:
         """Apply row filters to every SELECT under ``node`` (in place)."""
+        if not self.policy_manager.holds_row_filters(self.username):
+            return node  # no table of the statement can match
         return rewrite_tables(node, self._filter)
 
     def _filter(self, select: Select, table: TableRef) -> Relation:

@@ -11,7 +11,7 @@ from __future__ import annotations
 import dataclasses
 import re
 from dataclasses import dataclass, field
-from typing import Callable, Iterator, Optional, Union
+from typing import Callable, Optional, Union
 
 _BARE_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
@@ -26,27 +26,51 @@ def quote_string(value: str) -> str:
     return "'" + value.replace("'", "''") + "'"
 
 
+# annotations of the fields that never hold a node
+_SCALAR_TYPES = frozenset({"str", "bool", "int", "list[str]", "Optional[str]",
+                           "Optional[int]"})
+
+
+_ATOMS = (str, int, float, type(None))  # immutable: shared by a copy
+
+
+def copy_tree(value):
+    """Structural copy of an AST (or of a list or tuple of nodes): every
+    node, list and tuple is new, so mutating the copy leaves ``value`` as
+    it was. A node's whole instance state is copied, attributes set in
+    ``__post_init__`` (``BinaryOp.precedence``) included."""
+    if isinstance(value, Node):
+        new = object.__new__(type(value))
+        new.__dict__ = {k: v if isinstance(v, _ATOMS) else copy_tree(v)
+                        for k, v in value.__dict__.items()}
+        return new
+    if isinstance(value, list):
+        return [v if isinstance(v, _ATOMS) else copy_tree(v) for v in value]
+    if isinstance(value, tuple):
+        return tuple(v if isinstance(v, _ATOMS) else copy_tree(v)
+                     for v in value)
+    return value
+
+
 class Node:
     """Base AST node: generic child iteration + deep SQL printing."""
 
-    def children(self) -> Iterator["Node"]:
-        for f in dataclasses.fields(self):  # type: ignore[arg-type]
-            v = getattr(self, f.name)
+    # names of the fields that can hold a child node, set per class below
+    _child_fields: tuple[str, ...] = ()
+
+    def children(self) -> list["Node"]:
+        out: list[Node] = []
+        for name in self._child_fields:
+            v = getattr(self, name)
             if isinstance(v, Node):
-                yield v
+                out.append(v)
             elif isinstance(v, (list, tuple)):
                 for item in v:
                     if isinstance(item, Node):
-                        yield item
+                        out.append(item)
                     elif isinstance(item, (list, tuple)):
-                        for sub in item:
-                            if isinstance(sub, Node):
-                                yield sub
-
-    def walk(self) -> Iterator["Node"]:
-        yield self
-        for c in self.children():
-            yield from c.walk()
+                        out.extend(s for s in item if isinstance(s, Node))
+        return out
 
     def sql(self) -> str:
         raise NotImplementedError
@@ -534,6 +558,18 @@ class Insert(Node):
         return s + " " + self.query.sql()
 
 
+def _set_child_fields(cls: type) -> None:
+    for sub in cls.__subclasses__():
+        if dataclasses.is_dataclass(sub):
+            sub._child_fields = tuple(
+                f.name for f in dataclasses.fields(sub)
+                if f.type not in _SCALAR_TYPES)
+        _set_child_fields(sub)
+
+
+_set_child_fields(Node)
+
+
 def and_(left: Optional[Expr], right: Expr) -> Expr:
     """``new_where = old_where AND filter`` with precedence-preserving print.
 
@@ -558,7 +594,8 @@ def rewrite_tables(node: Node,
     and gets its own step; what ``step`` builds is never walked.
     """
     for child in node.children():
-        rewrite_tables(child, step)
+        if child._child_fields:  # a leaf holds no query
+            rewrite_tables(child, step)
     if isinstance(node, Select) and node.from_ is not None:
         node.from_ = _rewrite_from(node.from_, node, step)
     return node

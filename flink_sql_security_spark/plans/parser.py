@@ -42,32 +42,44 @@ _RESERVED = {
 
 _JOIN_TYPES = {"INNER", "LEFT", "RIGHT", "FULL", "CROSS", "SEMI", "ANTI"}
 
+# tokens that continue a comparison after its left operand
+_COMPARISON_OPS = {"=", "==", "!=", "<>", "<", "<=", ">", ">=", "<=>"}
+_COMPARISON_WORDS = {"IS", "NOT", "IN", "BETWEEN", "LIKE", "RLIKE", "ILIKE"}
+# words parse_primary reads as more than a name or a function call
+_PRIMARY_WORDS = {"NULL", "TRUE", "FALSE", "CASE", "CAST", "TRY_CAST",
+                  "INTERVAL", "DATE", "TIMESTAMP"}
+
 
 class _Parser:
     def __init__(self, sql: str) -> None:
         self.sql = sql
         self.tokens = tokenize(sql)
-        self.i = 0
+        self.seek(0)
 
     # -- token helpers -----------------------------------------------------
-    @property
-    def cur(self) -> Token:
-        return self.tokens[self.i]
+    def seek(self, i: int) -> None:
+        self.i = i
+        self.cur: Token = self.tokens[i]
 
     def peek(self, k: int = 1) -> Token:
         j = min(self.i + k, len(self.tokens) - 1)
         return self.tokens[j]
 
     def advance(self) -> Token:
+        """Consume the current token; EOF is never passed."""
         t = self.cur
-        self.i += 1
+        if t.kind != EOF:
+            self.i += 1
+            self.cur = self.tokens[self.i]
         return t
 
     def at_word(self, *words: str) -> bool:
-        return self.cur.kind == WORD and self.cur.upper() in words
+        t = self.cur
+        return t.kind == WORD and t.upper in words
 
     def at_op(self, *ops: str) -> bool:
-        return self.cur.kind == OP and self.cur.value in ops
+        t = self.cur
+        return t.kind == OP and t.value in ops
 
     def accept_word(self, *words: str) -> Optional[Token]:
         if self.at_word(*words):
@@ -134,7 +146,7 @@ class _Parser:
         """Disambiguate ``INSERT INTO t (a, b) SELECT`` vs ``INSERT INTO t (SELECT ...)``."""
         j = self.i + 1
         t = self.tokens[j]
-        return not (t.kind == WORD and t.upper() in ("SELECT", "WITH", "VALUES"))
+        return not (t.kind == WORD and t.upper in ("SELECT", "WITH", "VALUES"))
 
     # -- queries -----------------------------------------------------------
     def parse_query(self) -> Query:
@@ -142,7 +154,7 @@ class _Parser:
             return self.parse_with()
         left = self.parse_query_term()
         while self.at_word("UNION", "INTERSECT", "EXCEPT"):
-            op = self.advance().upper()
+            op = self.advance().upper
             all_ = bool(self.accept_word("ALL"))
             self.accept_word("DISTINCT")
             right = self.parse_query_term()
@@ -211,7 +223,6 @@ class _Parser:
                 start = self.cur.pos
                 self.advance()
                 self.expect_word("SETS")
-                depth = 0
                 self.expect_op("(")
                 depth = 1
                 while depth > 0:
@@ -219,6 +230,8 @@ class _Parser:
                         depth += 1
                     elif self.at_op(")"):
                         depth -= 1
+                    elif self.cur.kind == EOF:
+                        raise SqlParseError("unterminated GROUPING SETS")
                     t = self.advance()
                 end = t.pos + len(t.value)
                 sel.group_modifier = self.sql[start:end]
@@ -246,7 +259,7 @@ class _Parser:
                 self.accept_word("ASC")
             nulls = None
             if self.accept_word("NULLS"):
-                nulls = self.expect_word("FIRST", "LAST").upper()
+                nulls = self.expect_word("FIRST", "LAST").upper
             items.append(OrderItem(this=e, desc=desc, nulls=nulls))
             if not self.accept_op(","):
                 break
@@ -260,7 +273,7 @@ class _Parser:
         if self.accept_word("AS"):
             return Alias(this=e, alias=self.parse_ident_token())
         if self.cur.kind == QIDENT or (
-            self.cur.kind == WORD and self.cur.upper() not in _RESERVED
+            self.cur.kind == WORD and self.cur.upper not in _RESERVED
         ):
             return Alias(this=e, alias=self.parse_ident_token())
         return e
@@ -273,7 +286,7 @@ class _Parser:
                 right = self.parse_table_ref()
                 rel = Join(left=rel, right=right, join_type="CROSS")
                 continue
-            if self.at_word("LATERAL") and self.peek().kind == WORD and self.peek().upper() == "VIEW":
+            if self.at_word("LATERAL") and self.peek().kind == WORD and self.peek().upper == "VIEW":
                 self.advance()
                 self.advance()
                 outer = bool(self.accept_word("OUTER"))
@@ -317,12 +330,12 @@ class _Parser:
             return "INNER"
         if not self.at_word(*_JOIN_TYPES):
             return None
-        first = self.advance().upper()
+        first = self.advance().upper
         if first in ("LEFT", "RIGHT", "FULL"):
             if self.accept_word("OUTER"):
                 pass
             elif first == "LEFT" and self.at_word("SEMI", "ANTI"):
-                first = f"LEFT {self.advance().upper()}"
+                first = f"LEFT {self.advance().upper}"
             self.expect_word("JOIN")
             return first
         if first in ("SEMI", "ANTI"):
@@ -346,7 +359,7 @@ class _Parser:
         if self.accept_word("AS"):
             return self.parse_ident_token()
         if self.cur.kind == QIDENT or (
-            self.cur.kind == WORD and self.cur.upper() not in _RESERVED
+            self.cur.kind == WORD and self.cur.upper not in _RESERVED
         ):
             return self.parse_ident_token()
         return None
@@ -373,9 +386,6 @@ class _Parser:
         return out
 
     def parse_expr(self) -> Expr:
-        return self.parse_or()
-
-    def parse_or(self) -> Expr:
         left = self.parse_and()
         while self.at_word("OR"):
             self.advance()
@@ -391,7 +401,7 @@ class _Parser:
 
     def parse_not(self) -> Expr:
         if self.at_word("NOT") and not (
-            self.peek().kind == WORD and self.peek().upper() in ("IN", "LIKE", "RLIKE", "ILIKE", "BETWEEN")
+            self.peek().kind == WORD and self.peek().upper in ("IN", "LIKE", "RLIKE", "ILIKE", "BETWEEN")
         ):
             self.advance()
             return UnaryOp("NOT", self.parse_not())
@@ -406,7 +416,11 @@ class _Parser:
     def parse_comparison(self) -> Expr:
         left = self.parse_additive()
         while True:
-            if self.at_op("=", "==", "!=", "<>", "<", "<=", ">", ">=", "<=>"):
+            t = self.cur
+            if not (t.kind == OP and t.value in _COMPARISON_OPS
+                    or t.kind == WORD and t.upper in _COMPARISON_WORDS):
+                break
+            if t.kind == OP:
                 op = self.advance().value
                 left = BinaryOp(op, left, self.parse_additive())
                 continue
@@ -452,11 +466,11 @@ class _Parser:
                 left = Between(this=left, low=low, high=high, negated=negated)
                 continue
             if self.at_word("LIKE", "RLIKE", "ILIKE"):
-                op = self.advance().upper()
+                op = self.advance().upper
                 left = Like(this=left, pattern=self.parse_additive(), negated=negated, op=op)
                 continue
             if negated:
-                self.i = save
+                self.seek(save)
             break
         return left
 
@@ -483,7 +497,10 @@ class _Parser:
     def parse_postfix(self) -> Expr:
         e = self.parse_primary()
         while True:
-            if self.at_op("["):
+            t = self.cur
+            if t.kind != OP or t.value not in ("[", "::", "."):
+                break
+            if t.value == "[":
                 self.advance()
                 idx = self.parse_expr()
                 self.expect_op("]")
@@ -538,46 +555,49 @@ class _Parser:
                 return Lambda(params=[first.name], body=self.parse_expr())
             return first
         if t.kind == WORD:
-            u = t.upper()
-            if u == "NULL":
-                self.advance()
-                return Literal.null()
-            if u in ("TRUE", "FALSE"):
-                self.advance()
-                return Literal.bool_(u == "TRUE")
-            if u == "CASE":
-                return self.parse_case()
-            if u in ("CAST", "TRY_CAST"):
-                self.advance()
-                self.expect_op("(")
-                inner = self.parse_expr()
-                self.expect_word("AS")
-                to_type = self.parse_type_text()
-                self.expect_op(")")
-                return Cast(this=inner, to_type=to_type, try_=(u == "TRY_CAST"))
-            if u == "INTERVAL":
-                start = t.pos
-                self.advance()
-                # INTERVAL '<v>' UNIT [TO UNIT] | INTERVAL 3 DAYS
-                if self.cur.kind in (STRING, NUMBER):
+            u = t.upper
+            if u in _PRIMARY_WORDS:
+                if u == "NULL":
                     self.advance()
-                end_tok = None
-                while self.cur.kind == WORD and self.cur.upper() in (
-                    "YEAR", "YEARS", "MONTH", "MONTHS", "DAY", "DAYS", "HOUR",
-                    "HOURS", "MINUTE", "MINUTES", "SECOND", "SECONDS", "WEEK",
-                    "WEEKS", "TO",
-                ):
-                    end_tok = self.advance()
-                end = (end_tok.pos + len(end_tok.value)) if end_tok else (
-                    self.tokens[self.i - 1].pos + len(self.tokens[self.i - 1].value)
-                )
-                return IntervalLiteral(self.sql[start:end])
-            if u in ("DATE", "TIMESTAMP") and self.peek().kind == STRING:
-                self.advance()
-                lit = self.advance()
-                return IntervalLiteral(f"{u} {Literal.string(lit.value).sql()}")
-            # function call?
-            if self.peek().kind == OP and self.peek().value == "(":
+                    return Literal.null()
+                if u in ("TRUE", "FALSE"):
+                    self.advance()
+                    return Literal.bool_(u == "TRUE")
+                if u == "CASE":
+                    return self.parse_case()
+                if u in ("CAST", "TRY_CAST"):
+                    self.advance()
+                    self.expect_op("(")
+                    inner = self.parse_expr()
+                    self.expect_word("AS")
+                    to_type = self.parse_type_text()
+                    self.expect_op(")")
+                    return Cast(this=inner, to_type=to_type,
+                                try_=(u == "TRY_CAST"))
+                if u == "INTERVAL":
+                    start = t.pos
+                    self.advance()
+                    # INTERVAL '<v>' UNIT [TO UNIT] | INTERVAL 3 DAYS
+                    if self.cur.kind in (STRING, NUMBER):
+                        self.advance()
+                    end_tok = None
+                    while self.cur.kind == WORD and self.cur.upper in (
+                        "YEAR", "YEARS", "MONTH", "MONTHS", "DAY", "DAYS",
+                        "HOUR", "HOURS", "MINUTE", "MINUTES", "SECOND",
+                        "SECONDS", "WEEK", "WEEKS", "TO",
+                    ):
+                        end_tok = self.advance()
+                    last = end_tok or self.tokens[self.i - 1]
+                    end = last.pos + len(last.value)
+                    return IntervalLiteral(self.sql[start:end])
+                if u in ("DATE", "TIMESTAMP") and self.peek().kind == STRING:
+                    self.advance()
+                    lit = self.advance()
+                    return IntervalLiteral(
+                        f"{u} {Literal.string(lit.value).sql()}")
+            # function call? (a WORD is never EOF: a next token exists)
+            nxt = self.tokens[self.i + 1]
+            if nxt.kind == OP and nxt.value == "(":
                 name = self.advance().value
                 self.expect_op("(")
                 distinct = bool(self.accept_word("DISTINCT"))

@@ -31,19 +31,24 @@ class _Scope:
         self.parent = parent
         # alias → ordered column names (None if schema unknown)
         self.sources: dict[str, Optional[list[str]]] = {}
+        # alias → lowercased column names, for resolve_column
+        self._lowered: dict[str, frozenset[str]] = {}
         self.cte_columns: dict[str, Optional[list[str]]] = dict(
             parent.cte_columns if parent else {}
         )
 
     def add(self, alias: str, columns: Optional[list[str]]) -> None:
-        self.sources[alias.lower()] = columns
+        alias = alias.lower()
+        self.sources[alias] = columns
+        if columns is None:
+            self._lowered.pop(alias, None)
+        else:
+            self._lowered[alias] = frozenset(c.lower() for c in columns)
 
     def resolve_column(self, name: str) -> Optional[str]:
         """Return the unique source alias owning ``name``, else None."""
-        owners = [
-            a for a, cols in self.sources.items()
-            if cols is not None and name.lower() in (c.lower() for c in cols)
-        ]
+        name = name.lower()
+        owners = [a for a, cols in self._lowered.items() if name in cols]
         if len(owners) == 1:
             return owners[0]
         return None

@@ -7,7 +7,11 @@ tokenizer feeding the recursive-descent parser in ``parser.py``.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import array
+import functools
+import re
+import sys
+from typing import NamedTuple
 
 # Token kinds
 WORD = "WORD"            # bare identifier or keyword (case-insensitive)
@@ -17,133 +21,106 @@ NUMBER = "NUMBER"        # numeric literal, kept verbatim as text
 OP = "OP"                # punctuation / operator
 EOF = "EOF"
 
-_MULTI_CHAR_OPS = ("<=>", "<>", "!=", ">=", "<=", "==", "||", "::", "->")
-_SINGLE_CHAR_OPS = set("(),.+-*/%<>=[]{}&|^~?:;")
-
 
 class SqlTokenizeError(ValueError):
     pass
 
 
-@dataclass(frozen=True)
-class Token:
+class Token(NamedTuple):
     kind: str
     value: str
     pos: int
+    upper: str  # value.upper(), computed once: keywords are matched on it
 
-    def upper(self) -> str:
-        return self.value.upper()
+
+def _char_class(chars: list[str]) -> str:
+    """Regex class body for ``chars`` (non-ASCII, so nothing to escape),
+    consecutive code points folded into ranges."""
+    out: list[str] = []
+    run: list[int] = []
+    for cp in sorted(map(ord, chars)) + [-1]:
+        if run and cp == run[-1] + 1:
+            run.append(cp)
+            continue
+        if run:
+            out.append(chr(run[0]) if len(run) == 1
+                       else f"{chr(run[0])}-{chr(run[-1])}")
+        run = [cp]
+    return "".join(out)
+
+
+@functools.cache
+def _token_re() -> re.Pattern:
+    """One pattern for every token, built on first use.
+
+    The token rules are ``str`` predicates: a word starts with
+    ``isalpha()``, ``_`` or ``$`` and goes on with ``isalnum()``, ``_`` or
+    ``$``; a number is made of ``isdigit()`` characters. ``\\s`` and
+    ``\\w`` match exactly ``isspace()`` and ``isalnum()`` or ``_``, but
+    ``\\d`` is ``isdecimal()`` and ``[^\\W\\d_]`` also admits numerals that
+    are not letters (``½``, ``Ⅷ``, ``²``). One pass over the code points
+    finds those numerals, the digits among them and the letters that
+    uppercase to a type-suffix letter (``ſ``), so the pattern answers as
+    the predicates do on any input.
+    """
+    code = "utf-32-le" if sys.byteorder == "little" else "utf-32-be"
+    every = array.array("I", range(0x80, sys.maxunicode + 1)).tobytes() \
+        .decode(code, "surrogatepass")
+    letters_or_numerals = re.findall(r"[^\W\d_]", every)
+    numerals = [c for c in letters_or_numerals if not c.isalpha()]
+    digits = _char_class([c for c in numerals if c.isdigit()])
+    suffix = _char_class([c for c in letters_or_numerals if c.isalpha()
+                          and c.upper() in ("L", "S", "Y", "D", "F")])
+    d = rf"[\d{digits}]"
+    # whitespace and comments before a token are part of its match
+    return re.compile(rf"""
+        (?:\s+|--[^\n]*|/\*.*?\*/)*
+        (?:
+          (?P<WORD>(?:[A-Za-z_$]|(?![{_char_class(numerals)}])[^\W\d])[\w$]*)
+        | (?P<NUMBER>(?:{d}+(?:\.{d}*)?|\.{d}+)(?:[eE][+-]?{d}+)?
+                     # Spark type suffix: 1L, 2.5D, 3S, 4Y, 10BD
+                     (?:(?:[lLsSyYdDfF{suffix}]|[bB][dD])(?!\w))?)
+        | (?P<open_comment>/\*)
+        | (?P<OP><=>|<>|!=|>=|<=|==|\|\||::|->|[(),.+\-*/%<>=\[\]{{}}&|^~?:;])
+        | (?P<STRING>'(?:[^']|'')*+')
+        | (?P<BACKTICK>`(?:[^`]|``)*+`)
+        | (?P<DQUOTE>"(?:[^"]|"")*+")
+        | (?P<EOF>\Z)
+        | (?P<bad>.)
+        )
+    """, re.VERBOSE | re.DOTALL)
+
+
+_new_token = tuple.__new__  # Token(...) without the Python-level __new__
 
 
 def tokenize(sql: str) -> list[Token]:
     out: list[Token] = []
-    i, n = 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c.isspace():
-            i += 1
+    append = out.append
+    for m in _token_re().finditer(sql):
+        kind = m.lastgroup
+        value = m.group(kind)
+        pos = m.end() - len(value)
+        if kind == WORD or kind == NUMBER:
+            append(_new_token(Token, (kind, value, pos, value.upper())))
             continue
-        # -- line comment
-        if c == "-" and i + 1 < n and sql[i + 1] == "-":
-            j = sql.find("\n", i)
-            i = n if j < 0 else j + 1
+        if kind == OP:  # ASCII punctuation: its own uppercase
+            append(_new_token(Token, (kind, value, pos, value)))
             continue
-        # /* block comment */
-        if c == "/" and i + 1 < n and sql[i + 1] == "*":
-            j = sql.find("*/", i + 2)
-            if j < 0:
-                raise SqlTokenizeError(f"unterminated block comment at {i}")
-            i = j + 2
-            continue
-        # string literal, '' escapes a quote
-        if c == "'":
-            j = i + 1
-            buf: list[str] = []
-            while True:
-                if j >= n:
-                    raise SqlTokenizeError(f"unterminated string literal at {i}")
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        buf.append("'")
-                        j += 2
-                        continue
-                    break
-                buf.append(sql[j])
-                j += 1
-            out.append(Token(STRING, "".join(buf), i))
-            i = j + 1
-            continue
-        # quoted identifiers: `a b` (`` escape) or "a b"
-        if c in ("`", '"'):
-            q = c
-            j = i + 1
-            buf = []
-            while True:
-                if j >= n:
-                    raise SqlTokenizeError(f"unterminated quoted identifier at {i}")
-                if sql[j] == q:
-                    if j + 1 < n and sql[j + 1] == q:
-                        buf.append(q)
-                        j += 2
-                        continue
-                    break
-                buf.append(sql[j])
-                j += 1
-            out.append(Token(QIDENT, "".join(buf), i))
-            i = j + 1
-            continue
-        # number: digits, optional fraction/exponent; also .5 style
-        if c.isdigit() or (c == "." and i + 1 < n and sql[i + 1].isdigit()):
-            j = i
-            while j < n and sql[j].isdigit():
-                j += 1
-            if j < n and sql[j] == ".":
-                j += 1
-                while j < n and sql[j].isdigit():
-                    j += 1
-            if j < n and sql[j] in "eE":
-                k = j + 1
-                if k < n and sql[k] in "+-":
-                    k += 1
-                if k < n and sql[k].isdigit():
-                    j = k
-                    while j < n and sql[j].isdigit():
-                        j += 1
-            # trailing type suffix (1L, 2.5D, 3S, 4Y, 10BD) — Spark literals
-            if j < n and sql[j].isalpha():
-                k = j
-                while k < n and sql[k].isalpha():
-                    k += 1
-                suffix = sql[j:k].upper()
-                if suffix in ("L", "S", "Y", "D", "F", "BD") and (
-                    k >= n or not (sql[k].isalnum() or sql[k] == "_")
-                ):
-                    j = k
-            out.append(Token(NUMBER, sql[i:j], i))
-            i = j
-            continue
-        # word: identifier or keyword
-        if c.isalpha() or c == "_" or c == "$":
-            j = i
-            while j < n and (sql[j].isalnum() or sql[j] in "_$"):
-                j += 1
-            out.append(Token(WORD, sql[i:j], i))
-            i = j
-            continue
-        # multi-char operators first
-        matched = False
-        for op in _MULTI_CHAR_OPS:
-            if sql.startswith(op, i):
-                out.append(Token(OP, op, i))
-                i += len(op)
-                matched = True
-                break
-        if matched:
-            continue
-        if c in _SINGLE_CHAR_OPS:
-            out.append(Token(OP, c, i))
-            i += 1
-            continue
-        raise SqlTokenizeError(f"unexpected character {c!r} at {i}")
-    out.append(Token(EOF, "", n))
+        if kind == EOF:
+            append(_new_token(Token, (EOF, "", pos, "")))
+            break
+        if kind == "open_comment":
+            raise SqlTokenizeError(f"unterminated block comment at {pos}")
+        if kind == "bad":
+            if value == "'":
+                raise SqlTokenizeError(f"unterminated string literal at {pos}")
+            if value in "`\"":
+                raise SqlTokenizeError(
+                    f"unterminated quoted identifier at {pos}")
+            raise SqlTokenizeError(f"unexpected character {value!r} at {pos}")
+        quote = value[0]  # STRING, BACKTICK or DQUOTE: a doubled quote escapes
+        value = value[1:-1].replace(quote + quote, quote)
+        append(_new_token(Token, (STRING if kind == STRING else QIDENT, value,
+                                  pos, value.upper())))
     return out

@@ -7,7 +7,7 @@ partition pruning on them, which is what makes the injected security
 constructs free at scale (SURVEY §4). :func:`register_tables` launches no
 Spark job: it reads each table's parquet footer on the driver and converts it
 with Spark's own parquet-to-Spark schema converter, the calls Spark's schema
-inference task makes, then hands the schema to ``spark.read.schema``.
+inference task makes, then hands the schema to the reader.
 """
 
 from __future__ import annotations
@@ -99,7 +99,8 @@ def register_tables(spark: SparkSession, sf_dir: str,
     a ``ParquetToSparkSchemaConverter`` built from the session conf — the
     embedded Spark schema when the file carries one, Spark's own parquet
     type mapping otherwise. The table is then read with that schema
-    (``spark.read.schema(...).parquet``), so partition columns of a
+    (the JVM ``read().schema(...).format("parquet").load``, which is what
+    ``spark.read.schema(...).parquet`` calls), so partition columns of a
     ``k=v`` directory are still discovered from the listing.
 
     The footers are read and the views registered on a pool, one thread
@@ -115,8 +116,8 @@ def register_tables(spark: SparkSession, sf_dir: str,
     the converter reads it once, at construction; it must stay set for the
     lifetime of the lazy scan.
     """
+    from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
-    from pyspark.sql.types import _parse_datatype_json_string
     from pyspark.util import inheritable_thread_target
 
     sf_dir = _local_dir(sf_dir)
@@ -127,25 +128,32 @@ def register_tables(spark: SparkSession, sf_dir: str,
     if "events" in present:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     jvm = spark._jvm
-    state = spark._jsparkSession.sessionState()
+    jspark = spark._jsparkSession
+    state = jspark.sessionState()
     hadoop_conf = state.newHadoopConf()
     pq = jvm.org.apache.spark.sql.execution.datasources.parquet
     converter = pq.ParquetToSparkSchemaConverter(state.conf())
     skip_row_groups = (jvm.org.apache.parquet.format.converter
                        .ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    # each step of a jvm.<package>.<Class>.<method> lookup is a py4j
+    # round trip: resolve the classes and static methods once per call
+    hadoop_path = jvm.org.apache.hadoop.fs.Path
+    input_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath
+    footer = jvm.org.apache.parquet.hadoop.Footer
+    read_footer = pq.ParquetFooterReader.readFooter
+    read_schema = pq.ParquetFileFormat.readSchemaFromFooter
 
     def footer_schema(path: str):
-        p = jvm.org.apache.hadoop.fs.Path(_schema_file(path))
-        meta = pq.ParquetFooterReader.readFooter(
-            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                p, hadoop_conf), skip_row_groups)
-        schema = pq.ParquetFileFormat.readSchemaFromFooter(
-            jvm.org.apache.parquet.hadoop.Footer(p, meta), converter)
-        return _parse_datatype_json_string(schema.json())
+        """The JVM ``StructType`` Spark's inference reads for ``path``."""
+        p = hadoop_path(_schema_file(path))
+        meta = read_footer(input_file(p, hadoop_conf), skip_row_groups)
+        return read_schema(footer(p, meta), converter)
 
     def register(t: str) -> None:
         path = os.path.join(sf_dir, f"{t}.parquet")
-        df = spark.read.schema(footer_schema(path)).parquet(path)
+        # the JVM reader takes the footer's StructType as it is
+        df = DataFrame(jspark.read().schema(footer_schema(path))
+                       .format("parquet").load(path), spark)
         if t == "events" and dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         df.createOrReplaceTempView(t)

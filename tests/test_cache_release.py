@@ -185,22 +185,31 @@ def test_connected_components_self_cleaning(spark):
 
     from flink_sql_security_spark.operators.dedup import connected_components
 
+    def collect_garbage(target=None) -> int:
+        """Python and JVM GC, polled until the block count is ``target``
+        or, with no target, until it stops changing."""
+        count = None
+        for _ in range(20):
+            gc.collect()
+            spark._jvm.System.gc()
+            previous, count = count, _storage_count(spark)
+            if count == target or (target is None and count == previous):
+                break
+            time.sleep(0.5)
+        return count
+
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], ["id_a", "id_b"])
-    before = _storage_count(spark)
+    # the same cycle first, so blocks earlier tests left to the cleaner
+    # are gone before the baseline rather than during the poll below
+    before = collect_garbage()
     assert connected_components(pairs).count() == 5           # driver path
     assert _storage_count(spark) == before  # persist released synchronously
 
     out = connected_components(pairs, driver_threshold=0)     # distributed
     assert out.count() == 5
     del out
-    for _ in range(20):
-        gc.collect()
-        spark._jvm.System.gc()
-        if _storage_count(spark) == before:
-            break
-        time.sleep(0.5)
-    assert _storage_count(spark) == before
+    assert collect_garbage(before) == before
 
 
 def test_attach_flattens_and_release_is_idempotent(spark):

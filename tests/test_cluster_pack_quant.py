@@ -1006,6 +1006,36 @@ def test_opq_topk_duckdb_parity(spark):
     assert got == want and len(got) == 5 * 4
 
 
+def test_opq_ivf_route_gates_broadcast_on_probe_table(spark, monkeypatch):
+    """opq_topk sizes its broadcast gate for the route it takes: with a
+    limit the flat LUT fits but the IVF probe table (n_probe LUTs per
+    query) does not, the IVF plan carries no broadcast hint and the flat
+    plan still does. Both are sized on the frames before rotation."""
+    from flink_sql_security_spark.operators import opq as O
+    from flink_sql_security_spark.operators import pq as PQ
+    from flink_sql_security_spark.plan_stats import plan_size_bytes
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    R, books = O.opq_train(emb, m=8, k=16, iters=2, opq_iters=2)
+    q = emb.where("vec_id < 5")
+    # the flat LUT's estimate, as _gate_lut_broadcast computes it
+    per_row_in = sum(len(b[0]) for b in books) * 8 + 8
+    per_row_out = sum(len(b) for b in books) * 8 + 16
+    lut_bytes = (plan_size_bytes(q.select("vec_id", "embedding"))
+                 * per_row_out // per_row_in)
+    monkeypatch.setattr(PQ, "BROADCAST_LIMIT_BYTES", lut_bytes)
+    assert PQ._gate_lut_broadcast(q, "vec_id", "embedding", books)
+    assert not PQ._gate_lut_broadcast(q, "vec_id", "embedding", books,
+                                      n_probe=8)
+
+    def hinted(df):
+        return "ResolvedHint" in df._jdf.queryExecution().analyzed() \
+            .toString()
+
+    assert not hinted(O.opq_topk(emb, q, R, books, k=3, mode="ivf"))
+    assert hinted(O.opq_topk(emb, q, R, books, k=3, mode="flat"))
+
+
 def test_opq_cuts_quantization_distortion():
     """The OPQ objective (Ge et al. 2013 eq. 6): total quantization
     distortion under the learned rotation is strictly lower than plain

@@ -188,3 +188,68 @@ def test_deep_subquery_nesting():
         sql = f"SELECT a FROM ({sql}) x"
     out = parse_statement(sql).sql()
     assert out.count("(") == 60
+
+
+# (input, tokens as (kind, value, pos) or the SqlTokenizeError message),
+# recorded from the character-loop tokenizer the regex one replaced
+TOKENIZER_CASES = [
+    ("SELECT 'abc", "unterminated string literal at 7"),
+    ("SELECT 'it''s", "unterminated string literal at 7"),
+    ("SELECT 'ok''", "unterminated string literal at 7"),
+    ("SELECT `col", "unterminated quoted identifier at 7"),
+    ('SELECT "col', "unterminated quoted identifier at 7"),
+    ("SELECT `a``b", "unterminated quoted identifier at 7"),
+    ("SELECT 1 /* never closed", "unterminated block comment at 9"),
+    ("SELECT 1 /*/", "unterminated block comment at 9"),
+    ("SELECT a # b", "unexpected character '#' at 9"),
+    ("SELECT ½ FROM t", "unexpected character '½' at 7"),
+    ("SELECT 😀", "unexpected character '😀' at 7"),
+    ("SELECT a FROM t WHERE b = '€'",
+     [("WORD", "SELECT", 0), ("WORD", "a", 7), ("WORD", "FROM", 9),
+      ("WORD", "t", 14), ("WORD", "WHERE", 16), ("WORD", "b", 22),
+      ("OP", "=", 24), ("STRING", "€", 26), ("EOF", "", 29)]),
+    ("SELECT 名前, café FROM données",
+     [("WORD", "SELECT", 0), ("WORD", "名前", 7), ("OP", ",", 9),
+      ("WORD", "café", 11), ("WORD", "FROM", 16), ("WORD", "données", 21),
+      ("EOF", "", 28)]),
+    # non-decimal digits are digits (str.isdigit), so they make numbers
+    ("SELECT ² + ①",
+     [("WORD", "SELECT", 0), ("NUMBER", "²", 7), ("OP", "+", 9),
+      ("NUMBER", "①", 11), ("EOF", "", 12)]),
+    ("SELECT 1² AS x",
+     [("WORD", "SELECT", 0), ("NUMBER", "1²", 7), ("WORD", "AS", 10),
+      ("WORD", "x", 13), ("EOF", "", 14)]),
+    # 'ſ'.upper() == 'S': a type suffix, like S
+    ("SELECT 10ſ, 10BD, 1e5L, .5D, 1.e3",
+     [("WORD", "SELECT", 0), ("NUMBER", "10ſ", 7), ("OP", ",", 10),
+      ("NUMBER", "10BD", 12), ("OP", ",", 16), ("NUMBER", "1e5L", 18),
+      ("OP", ",", 22), ("NUMBER", ".5D", 24), ("OP", ",", 27),
+      ("NUMBER", "1.e3", 29), ("EOF", "", 33)]),
+    ("SELECT x\xa0FROM t",
+     [("WORD", "SELECT", 0), ("WORD", "x", 7), ("WORD", "FROM", 9),
+      ("WORD", "t", 14), ("EOF", "", 15)]),
+    ("SELECT a--comment\n, b /* c */ FROM t",
+     [("WORD", "SELECT", 0), ("WORD", "a", 7), ("OP", ",", 18),
+      ("WORD", "b", 20), ("WORD", "FROM", 30), ("WORD", "t", 35),
+      ("EOF", "", 36)]),
+]
+
+
+@pytest.mark.parametrize("sql, want", TOKENIZER_CASES)
+def test_tokenizer_tokens_and_errors(sql, want):
+    from flink_sql_security_spark.plans.tokens import (
+        SqlTokenizeError, tokenize,
+    )
+
+    try:
+        got = [(t.kind, t.value, t.pos) for t in tokenize(sql)]
+    except SqlTokenizeError as e:
+        got = str(e)
+    assert got == want
+    if isinstance(want, list):
+        assert all(t.upper == t.value.upper() for t in tokenize(sql))
+
+
+def test_unterminated_grouping_sets_is_a_parse_error():
+    with pytest.raises(SqlParseError, match="GROUPING SETS"):
+        parse_statement("SELECT a FROM t GROUP BY GROUPING SETS ((a")

@@ -121,3 +121,83 @@ def test_load_policies_json_rejects_unknown_fields(tmp_path):
     p2.write_text(json.dumps({"row_fitlers": []}))
     with _pytest.raises(ValueError):
         load_policies_json(PolicyManager(), str(p2))
+
+
+def _reference_lookups(policies, user, parts, column):
+    """First-match-wins by linear scan over every policy in insertion
+    order: the lookups the per-user index must reproduce."""
+    written = [p.lower() for p in parts]
+
+    def matches(p):
+        path = [x.lower() for x in p.table_path()]
+        n = min(len(path), len(written))
+        return p.username == user and path[-n:] == written[-n:]
+
+    rows = [p for p in policies
+            if isinstance(p, RowFilterPolicy) and matches(p)]
+    masks = [p for p in policies
+             if isinstance(p, DataMaskPolicy) and matches(p)]
+    by_col = {}
+    for p in masks:
+        by_col.setdefault(p.column_name.lower(), p)
+    col = [p for p in masks if p.column_name.lower() == column.lower()]
+    return (rows[0].condition if rows else None,
+            col[0] if col else None, by_col)
+
+
+def test_user_index_fuzz_matches_linear_scan():
+    """Random add/remove sequences: every lookup equals a linear scan over
+    all policies. The pools are small, so policies shadow each other,
+    equal policies are added twice and one of two equal ones is removed."""
+    import dataclasses
+    import random
+
+    rng = random.Random(20261019)
+    users = ["u1", "u2", "U1"]
+    tables = [("orders", None, None), ("orders", "db", None),
+              ("ORDERS", "db", "cat"), ("items", None, None)]
+    refs = [["orders"], ["db", "orders"], ["cat", "db", "Orders"],
+            ["other", "orders"], ["items"], ["x", "db", "orders"]]
+
+    def random_policy():
+        user, (table, db, cat) = rng.choice(users), rng.choice(tables)
+        if rng.random() < 0.5:
+            return RowFilterPolicy(user, table, f"x = {rng.randint(0, 2)}",
+                                   catalog_name=cat, database=db)
+        return DataMaskPolicy(user, table, rng.choice(["a", "B"]),
+                              rng.choice(["MASK", "MASK_HASH"]),
+                              catalog_name=cat, database=db)
+
+    for _ in range(30):
+        m, added = PolicyManager(), []
+        for _ in range(60):
+            if added and rng.random() < 0.3:
+                p = rng.choice(added)
+                assert m.remove_policy(p) is True
+                added.remove(p)  # the first equal one, like the manager
+            else:
+                p = random_policy()
+                if added and rng.random() < 0.2:
+                    # an equal, distinct object: which one a remove takes
+                    # shows in the identity checks below
+                    p = dataclasses.replace(rng.choice(added))
+                m.add_policy(p)
+                added.append(p)
+            assert m.row_filter_policies + m.data_mask_policies == (
+                [p for p in added if isinstance(p, RowFilterPolicy)]
+                + [p for p in added if isinstance(p, DataMaskPolicy)])
+            for user in users + ["nobody"]:
+                for parts in refs:
+                    for column in ("a", "b"):
+                        cond, col, by_col = _reference_lookups(
+                            added, user, parts, column)
+                        assert m.get_row_filter_condition(user, parts) == cond
+                        assert m.get_data_mask_policy(
+                            user, parts, column) is col
+                        got = m.get_table_mask_policies(user, parts)
+                        assert got.keys() == by_col.keys()
+                        assert all(got[k] is by_col[k] for k in got)
+        for p in list(added):
+            assert m.remove_policy(p) is True
+        assert m.remove_policy(RowFilterPolicy("u1", "orders", "x = 0")) \
+            is False

@@ -125,3 +125,85 @@ def test_statement_round_trip_stable(sql):
     once = parse_statement(sql).sql()
     twice = parse_statement(once).sql()
     assert once == twice
+
+
+def _policy_ctx(ctx):
+    from flink_sql_security_spark import DataMaskPolicy, RowFilterPolicy
+
+    ctx.add_policy(RowFilterPolicy(
+        "u", "orders", "region = 'beijing' AND price > 10 OR order_id IN "
+        "(SELECT order_id FROM shipments WHERE is_arrived)"))
+    ctx.add_policy(DataMaskPolicy("u", "orders", "customer_name",
+                                  "MASK_SHOW_FIRST_4"))
+    ctx.add_policy(DataMaskPolicy("u", "orders", "region", "CUSTOM",
+                                  custom_transformer="concat({col}, '!')"))
+    return ctx
+
+
+_SECURED_SQL = ("SELECT o.order_id, o.customer_name, o.region FROM orders o "
+                "JOIN orders p ON o.order_id = p.order_id")
+
+
+def _objects(node):
+    """Every node of ``node`` and every list or tuple a node holds."""
+    out, todo = [], [node]
+    while todo:
+        v = todo.pop()
+        out.append(v)
+        if hasattr(v, "__dict__"):
+            todo.extend(x for x in vars(v).values()
+                        if isinstance(x, (list, tuple)) or hasattr(x, "sql"))
+        elif isinstance(v, (list, tuple)):
+            todo.extend(x for x in v
+                        if isinstance(x, (list, tuple)) or hasattr(x, "sql"))
+    return out
+
+
+def test_rewrites_share_no_ast_node(ctx):
+    """Compiled policy ASTs are copied into each rewrite: two rewrites of
+    one query share no node or list, and mutating the first changes
+    neither the second nor a later rewrite."""
+    from flink_sql_security_spark.plans import Identifier, Literal
+
+    ctx = _policy_ctx(ctx)
+    first = ctx._secure("u", ctx._parse_and_qualify(_SECURED_SQL))
+    second = ctx._secure("u", ctx._parse_and_qualify(_SECURED_SQL))
+    printed = second.sql()
+    assert first.sql() == printed
+    assert "price > 10" in printed and "concat(" in printed
+    assert not {id(o) for o in _objects(first)} & {
+        id(o) for o in _objects(second)}
+    for o in _objects(first):
+        if isinstance(o, Identifier):
+            o.parts.append("mutated")
+        elif isinstance(o, Literal):
+            o.value = "mutated"
+    assert first.sql() != printed
+    assert second.sql() == printed
+    assert ctx.mixed_rewrite("u", _SECURED_SQL) == printed
+
+
+def test_repeated_rewrite_parses_no_policy_text(ctx, monkeypatch):
+    """A policy condition or mask template is parsed on its first use by a
+    policy manager only; a fresh manager parses it again."""
+    from flink_sql_security_spark.operators import row_filter
+    from flink_sql_security_spark.plans import parser
+
+    ctx = _policy_ctx(ctx)
+    want = ctx.mixed_rewrite("u", _SECURED_SQL)
+    parsed = []
+    original = parser.parse_expression
+
+    def counting(sql):
+        parsed.append(sql)
+        return original(sql)
+
+    monkeypatch.setattr(parser, "parse_expression", counting)
+    monkeypatch.setattr(row_filter, "parse_expression", counting)
+    assert ctx.mixed_rewrite("u", _SECURED_SQL) == want
+    assert ctx.mixed_rewrite("u", _SECURED_SQL) == want
+    assert parsed == []
+
+    fresh = _policy_ctx(SecurityContext(ctx.spark, PolicyManager()))
+    assert fresh.mixed_rewrite("u", _SECURED_SQL) == want
+    assert len(parsed) == 3  # one condition, two (template, column) pairs
