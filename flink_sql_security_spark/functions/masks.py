@@ -139,22 +139,20 @@ def lower_mask_call(call: FuncCall) -> Expr:
 
 
 def lower_hive_masks(node: Node) -> Node:
-    """Recursively lower every Hive mask call inside an AST (in place)."""
-    import dataclasses
+    """Recursively lower every Hive mask call inside an AST (in place),
+    through every child a node holds, ``Case.whens`` pairs included."""
 
-    def _rewrite(e):
-        if isinstance(e, Node):
-            lowered = lower_mask_call(e) if is_hive_mask_call(e) else e
-            for f in dataclasses.fields(lowered):
-                v = getattr(lowered, f.name)
-                if isinstance(v, Node):
-                    setattr(lowered, f.name, _rewrite(v))
-                elif isinstance(v, list):
-                    setattr(lowered, f.name, [_rewrite(i) for i in v])
-                elif isinstance(v, tuple):
-                    setattr(lowered, f.name, tuple(_rewrite(i) for i in v))
+    def _rewrite(v):
+        if isinstance(v, Node):
+            lowered = lower_mask_call(v) if is_hive_mask_call(v) else v
+            for name in lowered._child_fields:
+                setattr(lowered, name, _rewrite(getattr(lowered, name)))
             return lowered
-        return e
+        if isinstance(v, list):
+            return [_rewrite(i) for i in v]
+        if isinstance(v, tuple):
+            return tuple(_rewrite(i) for i in v)
+        return v
 
     return _rewrite(node)
 

@@ -13,4 +13,4 @@ from .nodes import (  # noqa: F401
     UnaryOp, WindowSpec, With, and_,
 )
 from .parser import SqlParseError, parse_expression, parse_query, parse_statement  # noqa: F401
-from .qualify import SchemaProvider, output_columns, qualify  # noqa: F401
+from .qualify import SchemaProvider, qualify  # noqa: F401

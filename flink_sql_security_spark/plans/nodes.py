@@ -13,11 +13,11 @@ import re
 from dataclasses import dataclass, field
 from typing import Callable, Optional, Union
 
-_BARE_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
+_BARE_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
 def quote_ident(name: str) -> str:
-    if _BARE_IDENT.match(name):
+    if _BARE_IDENT.fullmatch(name):
         return name
     return "`" + name.replace("`", "``") + "`"
 
@@ -387,6 +387,9 @@ class Relation(Node):
 class TableRef(Relation):
     parts: list[str]
     alias: Optional[str] = None
+    # set by qualify when the name resolves to a CTE in scope: no policy
+    # applies to the ref itself (the CTE's own base reads carry them)
+    cte: bool = False
 
     def sql(self) -> str:
         s = ".".join(quote_ident(p) for p in self.parts)
@@ -515,6 +518,9 @@ class Select(Query):
         return " ".join(parts)
 
 
+SET_PRECEDENCE = {"UNION": 1, "EXCEPT": 1, "INTERSECT": 2}  # as in Spark
+
+
 @dataclass
 class SetOp(Query):
     op: str  # UNION | INTERSECT | EXCEPT
@@ -525,12 +531,23 @@ class SetOp(Query):
     limit: Optional[int] = None
 
     def sql(self) -> str:
-        s = f"{self.left.sql()} {self.op}{' ALL' if self.all else ''} {self.right.sql()}"
+        left = self._operand_sql(self.left, right=False)
+        right = self._operand_sql(self.right, right=True)
+        s = f"{left} {self.op}{' ALL' if self.all else ''} {right}"
         if self.order_by:
             s += " ORDER BY " + ", ".join(o.sql() for o in self.order_by)
         if self.limit is not None:
             s += f" LIMIT {self.limit}"
         return s
+
+    def _operand_sql(self, q: Query, right: bool) -> str:
+        """``q`` in parentheses where Spark would group it otherwise: one
+        level groups left to right, and a WITH, ORDER BY or LIMIT spans it."""
+        wrap = isinstance(q, With) or q.order_by or q.limit is not None
+        if isinstance(q, SetOp):
+            gap = SET_PRECEDENCE[q.op] - SET_PRECEDENCE[self.op]
+            wrap = wrap or gap < 0 or (right and gap == 0)
+        return f"({q.sql()})" if wrap else q.sql()
 
 
 @dataclass
@@ -591,7 +608,9 @@ def rewrite_tables(node: Node,
     operands, derived tables, IN/EXISTS/scalar subqueries) and, per SELECT,
     recurses the FROM tree through join operands and a lateral view's base
     (``RowFilterVisitor.java:64-86``). A derived table is a query of its own
-    and gets its own step; what ``step`` builds is never walked.
+    and gets its own step; what ``step`` builds is never walked. A ref that
+    qualify resolved to a CTE (``TableRef.cte``) is not a base table and is
+    left alone.
     """
     for child in node.children():
         if child._child_fields:  # a leaf holds no query
@@ -607,6 +626,6 @@ def _rewrite_from(rel: Relation, select: Select, step) -> Relation:
         rel.right = _rewrite_from(rel.right, select, step)
     elif isinstance(rel, LateralView):
         rel.base = _rewrite_from(rel.base, select, step)
-    elif isinstance(rel, TableRef):
+    elif isinstance(rel, TableRef) and not rel.cte:
         return step(select, rel)
     return rel

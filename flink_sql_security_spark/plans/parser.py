@@ -17,8 +17,8 @@ from .nodes import (
     Alias, Between, BinaryOp, Case, Cast, Exists, Expr, FuncCall, Identifier,
     InList, InSubquery, Insert, IntervalLiteral, IsNull, Join, Lambda,
     LateralView, Like, Literal, Node, OrderItem, Query, Relation, ScalarSubquery,
-    Select, SetOp, Star, SubqueryRef, Subscript, TableRef, UnaryOp, WindowSpec,
-    With,
+    SET_PRECEDENCE, Select, SetOp, Star, SubqueryRef, Subscript, TableRef,
+    UnaryOp, WindowSpec, With,
 )
 from .tokens import (EOF, NUMBER, OP, QIDENT, STRING, WORD, SqlTokenizeError,
                      Token, tokenize)
@@ -152,19 +152,32 @@ class _Parser:
     def parse_query(self) -> Query:
         if self.at_word("WITH"):
             return self.parse_with()
+        bare = not self.at_op("(")
+        q = self.parse_set_operation(1)
+        # ORDER BY / LIMIT bind to a bare SELECT or the set-op result, as
+        # in Spark: never to a set operand alone
+        if bare or isinstance(q, SetOp):
+            if self.at_word("ORDER"):
+                q.order_by = self.parse_order_by()
+            if self.accept_word("LIMIT"):
+                t = self.advance()
+                if t.kind != NUMBER or not (t.value.isascii() and t.value.isdigit()):
+                    raise SqlParseError(f"expected an integer LIMIT count "
+                                        f"at pos {t.pos}, got {t.value!r}")
+                q.limit = int(t.value)
+        return q
+
+    def parse_set_operation(self, min_precedence: int) -> Query:
+        """Operands joined by set operators of at least ``min_precedence``
+        (INTERSECT binds tighter than UNION/EXCEPT), grouped left to right."""
         left = self.parse_query_term()
-        while self.at_word("UNION", "INTERSECT", "EXCEPT"):
+        while self.cur.kind == WORD and \
+                SET_PRECEDENCE.get(self.cur.upper, 0) >= min_precedence:
             op = self.advance().upper
             all_ = bool(self.accept_word("ALL"))
             self.accept_word("DISTINCT")
-            right = self.parse_query_term()
+            right = self.parse_set_operation(SET_PRECEDENCE[op] + 1)
             left = SetOp(op=op, left=left, right=right, all=all_)
-        # trailing ORDER BY / LIMIT bind to the set-op result
-        if isinstance(left, SetOp):
-            if self.at_word("ORDER"):
-                left.order_by = self.parse_order_by()
-            if self.accept_word("LIMIT"):
-                left.limit = int(self.advance().value)
         return left
 
     def parse_with(self) -> With:
@@ -240,10 +253,6 @@ class _Parser:
                 sel.group_by = self.parse_expr_list()
         if self.accept_word("HAVING"):
             sel.having = self.parse_expr()
-        if self.at_word("ORDER"):
-            sel.order_by = self.parse_order_by()
-        if self.accept_word("LIMIT"):
-            sel.limit = int(self.advance().value)
         return sel
 
     def parse_order_by(self) -> list[OrderItem]:

@@ -6,6 +6,18 @@ table refs, and (3) qualifies column refs with their table alias (observable in
 every golden, e.g. ``RewriteRowFilterTest.java:485-501``). This pass reproduces
 those three behaviors against a pluggable schema provider.
 
+Names are resolved in one walk. Qualifying a query returns its output column
+names (None when one is unknown: an unnamed computed column, or a star over an
+unknown schema), and a FROM scope registers each derived table with the columns
+its own qualification returned. So each FROM tree is collected once and each
+base-table ref costs one schema lookup, however deep it is nested.
+
+CTE scoping: each ``WITH`` opens a child scope, so its names are visible only
+in its later CTEs, its body and their subqueries, never in a sibling set-op
+operand. A single-part table ref that resolves to a visible CTE is marked
+``TableRef.cte``; the policy walk (``nodes.rewrite_tables``) skips it, because
+the CTE's own base-table reads carry the policies.
+
 Deviation (documented): the reference also expands table paths to
 ``hive.default.orders``. We keep paths as written because Spark temp views do
 not live under ``spark_catalog.default`` — expanding would break view-backed
@@ -17,8 +29,8 @@ from __future__ import annotations
 from typing import Callable, Optional
 
 from .nodes import (
-    Alias, Expr, FuncCall, Identifier, Insert, Join, Lambda, LateralView, Node,
-    Query, Relation, Select, SetOp, Star, SubqueryRef, TableRef, With,
+    Alias, Expr, Identifier, Insert, Join, Lambda, LateralView, Node, Query,
+    Relation, Select, SetOp, Star, SubqueryRef, TableRef, With,
 )
 
 # Maps a table path (as written, e.g. ["orders"] or ["db", "t"]) to an ordered
@@ -28,11 +40,11 @@ SchemaProvider = Callable[[list[str]], Optional[list[tuple[str, str]]]]
 
 class _Scope:
     def __init__(self, parent: Optional["_Scope"] = None) -> None:
-        self.parent = parent
         # alias → ordered column names (None if schema unknown)
         self.sources: dict[str, Optional[list[str]]] = {}
         # alias → lowercased column names, for resolve_column
         self._lowered: dict[str, frozenset[str]] = {}
+        # visible CTE name (lowercased) → its output columns
         self.cte_columns: dict[str, Optional[list[str]]] = dict(
             parent.cte_columns if parent else {}
         )
@@ -53,74 +65,36 @@ class _Scope:
             return owners[0]
         return None
 
-    def has_alias(self, alias: str) -> bool:
-        return alias.lower() in self.sources
-
 
 def qualify(node: Node, schema_provider: SchemaProvider) -> Node:
     """Qualify a statement in place; returns the same node for chaining."""
-    if isinstance(node, Insert):
-        _qualify_query(node.query, schema_provider, _Scope())
-    elif isinstance(node, Query):
-        _qualify_query(node, schema_provider, _Scope())
+    query = node.query if isinstance(node, Insert) else node
+    if isinstance(query, Query):
+        _qualify_query(query, schema_provider, _Scope())
     return node
 
 
-def output_columns(q: Query, schema_provider: SchemaProvider,
-                   scope: Optional[_Scope] = None) -> Optional[list[str]]:
-    """Best-effort output column names of a query (for derived-table scopes)."""
-    if isinstance(q, With):
-        inner = _Scope(scope)
-        for name, cte in q.ctes:
-            inner.cte_columns[name.lower()] = output_columns(cte, schema_provider, inner)
-        return output_columns(q.body, schema_provider, inner)
-    if isinstance(q, SetOp):
-        return output_columns(q.left, schema_provider, scope)
-    if not isinstance(q, Select):
-        return None
-    cols: list[str] = []
-    local = _collect_scope(q.from_, schema_provider, _Scope(scope)) if q.from_ else _Scope(scope)
-    for p in q.projections:
-        if isinstance(p, Alias):
-            cols.append(p.alias)
-        elif isinstance(p, Identifier):
-            cols.append(p.name)
-        elif isinstance(p, Star):
-            expanded = _expand_star(p, local)
-            if expanded is None:
-                return None
-            cols.extend(i.parts[-1] for i in expanded)
-        else:
-            return None  # unnamed computed column → Spark generates a name
-    return cols
-
-
-def _collect_scope(rel: Optional[Relation], sp: SchemaProvider, scope: _Scope) -> _Scope:
-    """Register every source in a FROM tree into ``scope``, auto-aliasing tables."""
-    if rel is None:
-        return scope
+def _collect_scope(rel: Optional[Relation], sp: SchemaProvider, scope: _Scope) -> None:
+    """Register every source in a FROM tree into ``scope``: auto-alias and
+    look up each table, mark CTE refs, qualify each derived table."""
     if isinstance(rel, TableRef):
         if rel.alias is None:
             rel.alias = rel.parts[-1]
-        if len(rel.parts) == 1 and rel.parts[0].lower() in scope.cte_columns:
+        rel.cte = len(rel.parts) == 1 and rel.parts[0].lower() in scope.cte_columns
+        if rel.cte:
             scope.add(rel.alias, scope.cte_columns[rel.parts[0].lower()])
         else:
             schema = sp(rel.parts)
             scope.add(rel.alias, [c for c, _ in schema] if schema else None)
-        return scope
-    if isinstance(rel, SubqueryRef):
-        cols = output_columns(rel.query, sp, scope)
-        scope.add(rel.alias or "_subquery", cols)
-        return scope
-    if isinstance(rel, Join):
+    elif isinstance(rel, SubqueryRef):
+        # a derived table sees the CTEs in scope, not its sibling sources
+        scope.add(rel.alias or "_subquery", _qualify_query(rel.query, sp, scope))
+    elif isinstance(rel, Join):
         _collect_scope(rel.left, sp, scope)
         _collect_scope(rel.right, sp, scope)
-        return scope
-    if isinstance(rel, LateralView):
+    elif isinstance(rel, LateralView):
         _collect_scope(rel.base, sp, scope)
         scope.add(rel.table_alias, rel.column_aliases or None)
-        return scope
-    return scope
 
 
 def _expand_star(star: Star, scope: _Scope) -> Optional[list[Identifier]]:
@@ -138,23 +112,23 @@ def _expand_star(star: Star, scope: _Scope) -> Optional[list[Identifier]]:
     return out
 
 
-def _qualify_query(q: Query, sp: SchemaProvider, scope: _Scope) -> None:
+def _qualify_query(q: Query, sp: SchemaProvider,
+                   scope: _Scope) -> Optional[list[str]]:
+    """Qualify ``q`` in place and return its output column names, or None
+    when any is unknown. ``scope`` only lends its CTEs; it is not changed."""
     if isinstance(q, With):
+        inner = _Scope(scope)
         for name, cte in q.ctes:
-            _qualify_query(cte, sp, scope)
-            scope.cte_columns[name.lower()] = output_columns(cte, sp, scope)
-        _qualify_query(q.body, sp, scope)
-        return
+            inner.cte_columns[name.lower()] = _qualify_query(cte, sp, inner)
+        return _qualify_query(q.body, sp, inner)
     if isinstance(q, SetOp):
-        _qualify_query(q.left, sp, scope)
+        columns = _qualify_query(q.left, sp, scope)
         _qualify_query(q.right, sp, scope)
-        return
+        return columns
     if not isinstance(q, Select):
-        return
+        return None
 
     local = _Scope(scope)
-    # First qualify derived tables (inner scopes see outer CTEs, not our FROM)
-    _qualify_from_subqueries(q.from_, sp, scope)
     _collect_scope(q.from_, sp, local)
 
     # Expand stars in projections
@@ -182,17 +156,15 @@ def _qualify_query(q: Query, sp: SchemaProvider, scope: _Scope) -> None:
     # ON conditions of joins in our FROM
     _qualify_join_conditions(q.from_, local, sp)
 
-
-def _qualify_from_subqueries(rel: Optional[Relation], sp: SchemaProvider, scope: _Scope) -> None:
-    if rel is None:
-        return
-    if isinstance(rel, SubqueryRef):
-        _qualify_query(rel.query, sp, _Scope(scope))
-    elif isinstance(rel, Join):
-        _qualify_from_subqueries(rel.left, sp, scope)
-        _qualify_from_subqueries(rel.right, sp, scope)
-    elif isinstance(rel, LateralView):
-        _qualify_from_subqueries(rel.base, sp, scope)
+    columns: list[str] = []
+    for p in q.projections:
+        if isinstance(p, Alias):
+            columns.append(p.alias)
+        elif isinstance(p, Identifier):
+            columns.append(p.name)
+        else:  # an unexpanded star, or an unnamed computed column
+            return None
+    return columns
 
 
 def _qualify_join_conditions(rel: Optional[Relation], scope: _Scope, sp: SchemaProvider) -> None:
@@ -222,11 +194,8 @@ def _qualify_expr(e: Node, scope: _Scope, sp: SchemaProvider,
         _qualify_expr(e.body, scope, sp,
                       lambda_params | {p.lower() for p in e.params}, skip_names)
         return
-    if isinstance(e, (Select, SetOp, With)):
-        _qualify_query(e, sp, _Scope(scope))
+    if isinstance(e, Query):  # a nested query sees our CTEs, not our sources
+        _qualify_query(e, sp, scope)
         return
     for c in e.children():
-        if isinstance(c, Query):
-            _qualify_query(c, sp, _Scope(scope))
-        else:
-            _qualify_expr(c, scope, sp, lambda_params, skip_names)
+        _qualify_expr(c, scope, sp, lambda_params, skip_names)

@@ -253,3 +253,81 @@ def test_tokenizer_tokens_and_errors(sql, want):
 def test_unterminated_grouping_sets_is_a_parse_error():
     with pytest.raises(SqlParseError, match="GROUPING SETS"):
         parse_statement("SELECT a FROM t GROUP BY GROUPING SETS ((a")
+
+
+def test_backtick_identifier_with_trailing_newline_stays_quoted():
+    out = parse_statement("SELECT `abc\n` FROM t").sql()
+    assert out == "SELECT `abc\n` FROM t"
+    assert parse_statement(out).projections[0].parts == ["abc\n"]
+
+
+@pytest.mark.parametrize("sql", [
+    "SELECT a FROM t LIMIT",
+    "SELECT a FROM t LIMIT x",
+    "SELECT a FROM t UNION SELECT b FROM u LIMIT",
+    "SELECT a FROM t UNION SELECT b FROM u LIMIT 1.5",
+])
+def test_limit_needs_an_integer_count(sql):
+    with pytest.raises(SqlParseError, match="LIMIT count at pos"):
+        parse_statement(sql)
+
+
+# (input, printed): operands keep the grouping Spark gives the input
+SET_OP_PRINT_CASES = [
+    ("(SELECT 1 AS a UNION SELECT 2) INTERSECT SELECT 3", None),
+    ("SELECT 1 AS a UNION SELECT 2 INTERSECT SELECT 3", None),
+    ("SELECT 1 AS a INTERSECT SELECT 2 UNION SELECT 3", None),
+    ("SELECT 1 AS a EXCEPT (SELECT 1 UNION SELECT 2)", None),
+    ("(SELECT 1 AS a UNION SELECT 2) EXCEPT SELECT 3",
+     "SELECT 1 AS a UNION SELECT 2 EXCEPT SELECT 3"),
+    ("(SELECT a FROM t ORDER BY a LIMIT 1) UNION ALL SELECT b FROM u", None),
+    ("(WITH x AS (SELECT 1 AS a) SELECT a FROM x) UNION ALL SELECT a FROM x",
+     None),
+    ("SELECT a FROM t UNION ALL SELECT b FROM u ORDER BY a LIMIT 3", None),
+]
+
+
+def test_set_operation_keeps_grouping():
+    got = [parse_statement(sql).sql() for sql, _ in SET_OP_PRINT_CASES]
+    assert got == [printed or sql for sql, printed in SET_OP_PRINT_CASES]
+
+
+def test_set_operation_order_by_and_limit_bind_to_the_result():
+    ast = parse_statement(
+        "SELECT a FROM t UNION ALL SELECT b FROM u ORDER BY a LIMIT 3")
+    assert ast.limit == 3 and len(ast.order_by) == 1
+    assert ast.right.limit is None and not ast.right.order_by
+
+
+def test_qualify_looks_up_each_base_table_once():
+    schemas = dict(SCHEMAS, customer=[("c_custkey", "INT"), ("c_name", "STRING")])
+    calls = []
+
+    def counting(parts):
+        calls.append(parts)
+        return schemas.get(parts[-1])
+
+    nested = ("SELECT * FROM (SELECT * FROM (SELECT * FROM "
+              "(SELECT * FROM orders) a) b) c")
+    ast = qualify(parse_statement(nested), counting)
+    assert ast.sql().startswith("SELECT c.order_id, c.order_date, ")
+    assert calls == [["orders"]]
+    chain = ("WITH a AS (SELECT * FROM orders), b AS (SELECT * FROM a) "
+             "SELECT * FROM b JOIN customer ON b.order_id = customer.c_custkey")
+    ast = qualify(parse_statement(chain), counting)
+    assert "customer.c_name FROM b AS b JOIN customer AS customer" in ast.sql()
+    assert calls == [["orders"], ["orders"], ["customer"]]
+
+
+def test_cte_names_are_scoped_to_their_with():
+    ast = qualify(parse_statement(
+        "(WITH orders AS (SELECT * FROM orders) SELECT order_id FROM orders) "
+        "UNION ALL SELECT order_id FROM orders"), schema_provider)
+    cte_read, body_read = ast.left.ctes[0][1].from_, ast.left.body.from_
+    assert not cte_read.cte and body_read.cte
+    assert not ast.right.from_.cte  # the sibling operand reads the table
+    ast = qualify(parse_statement(
+        "WITH a AS (SELECT * FROM b), b AS (SELECT 1 AS x) "
+        "SELECT * FROM a WHERE x IN (SELECT x FROM b)"), schema_provider)
+    assert not ast.ctes[0][1].from_.cte  # b is not defined yet
+    assert ast.body.from_.cte and ast.body.where.query.from_.cte

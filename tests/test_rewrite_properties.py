@@ -207,3 +207,73 @@ def test_repeated_rewrite_parses_no_policy_text(ctx, monkeypatch):
     fresh = _policy_ctx(SecurityContext(ctx.spark, PolicyManager()))
     assert fresh.mixed_rewrite("u", _SECURED_SQL) == want
     assert len(parsed) == 3  # one condition, two (template, column) pairs
+
+
+def _cte_ctx(ctx):
+    from flink_sql_security_spark import DataMaskPolicy, RowFilterPolicy
+
+    ctx.add_policy(RowFilterPolicy("u", "orders", "region = 'beijing'"))
+    ctx.add_policy(DataMaskPolicy("u", "orders", "customer_name", "CUSTOM",
+                                  custom_transformer="concat({col}, '!')"))
+    return ctx
+
+
+_BEIJING_MASKED = [(10001, "Jack!"), (10002, "Sally!")]
+
+
+_CTE_CASES = [
+    # a CTE that shadows a table is not the table: no policy applies
+    ("WITH orders AS (SELECT 9 AS order_id, 'Zed' AS customer_name, "
+     "'moon' AS region) SELECT * FROM orders", [(9, "Zed", "moon")]),
+    ("WITH x AS (SELECT * FROM orders) SELECT order_id, customer_name FROM x",
+     _BEIJING_MASKED),
+    ("WITH orders AS (SELECT * FROM orders) "
+     "SELECT order_id, customer_name FROM orders", _BEIJING_MASKED),
+    # the CTE name must not leak into the sibling operand and open it up
+    ("(WITH orders AS (SELECT 9 AS order_id, 'Zed' AS customer_name) "
+     "SELECT order_id, customer_name FROM orders) "
+     "UNION ALL SELECT order_id, customer_name FROM orders",
+     [(9, "Zed")] + _BEIJING_MASKED),
+]
+
+
+def test_policies_apply_to_base_tables_not_ctes(ctx):
+    ctx = _cte_ctx(ctx)
+    got = [sorted(tuple(r) for r in ctx.sql("u", sql).collect())
+           for sql, _ in _CTE_CASES]
+    assert got == [want for _, want in _CTE_CASES]
+
+
+_SET_OP_CASES = [
+    "(SELECT 1 AS a UNION SELECT 2) INTERSECT SELECT 3",
+    "SELECT 1 AS a EXCEPT (SELECT 1 UNION SELECT 2)",
+    "SELECT 1 AS a UNION SELECT 2 INTERSECT SELECT 2",
+    "(SELECT order_id FROM orders ORDER BY order_id LIMIT 1) "
+    "UNION ALL SELECT order_id FROM orders WHERE order_id = 10006",
+    "(WITH orders AS (SELECT 1 AS order_id) SELECT order_id FROM orders) "
+    "UNION ALL SELECT order_id FROM orders WHERE order_id = 10006",
+    "SELECT order_id FROM orders UNION SELECT order_id FROM orders "
+    "ORDER BY order_id DESC LIMIT 2",
+]
+
+
+def test_set_operations_keep_their_grouping(ctx):
+    """A no-policy rewrite returns what Spark returns for the input."""
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    got = [rows(ctx.sql("nobody", sql)) for sql in _SET_OP_CASES]
+    assert got == [rows(ctx.spark.sql(sql)) for sql in _SET_OP_CASES]
+
+
+def test_custom_mask_lowers_hive_calls_inside_case(ctx):
+    from flink_sql_security_spark import DataMaskPolicy
+
+    ctx.add_policy(DataMaskPolicy(
+        "u", "orders", "customer_name", "CUSTOM",
+        custom_transformer="CASE WHEN length({col}) > 4 "
+                           "THEN mask_show_first_n({col}, 2) ELSE {col} END"))
+    rows = ctx.sql("u", "SELECT order_id, customer_name FROM orders "
+                        "WHERE order_id IN (10001, 10002)").collect()
+    assert sorted(tuple(r) for r in rows) == [(10001, "Jack"),
+                                              (10002, "Saxxx")]
