@@ -44,7 +44,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from flink_sql_security_spark.functions.text import floor_round
 
-from .similarity import BROADCAST_LIMIT_BYTES, _UNIT_DOT, unit_vectors
+from .similarity import (
+    BROADCAST_LIMIT_BYTES, _UNIT_DOT, _rank_top_k, unit_vectors)
 
 WORD_BITS = 32
 
@@ -106,8 +107,6 @@ def _exact_rerank(df: DataFrame, queries_df: DataFrame, shortlist,
     n_id) shortlist, final (q_id, n_id, cosine, rank) by cosine desc,
     n_id asc. One implementation for the flat and IVF scans — a tie
     rule or rounding fix lands in exactly one place."""
-    from pyspark.sql.window import Window
-
     from .skew import spread_partitions
 
     # the unit-normalization fold over the full corpus is narrow; off a
@@ -127,13 +126,7 @@ def _exact_rerank(df: DataFrame, queries_df: DataFrame, shortlist,
         .select("q_id", "n_id",
                 F.expr(floor_round(dot, round_to)).alias("cosine"))
     )
-    w_cos = Window.partitionBy("q_id").orderBy(F.desc("cosine"),
-                                               F.asc("n_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w_cos))
-        .where(F.col("rank") <= k)
-        .select("q_id", "n_id", "cosine", "rank")
-    )
+    return _rank_top_k(rescored, k)
 
 
 def _shortlist_cutoff(k: int, rerank) -> str:

@@ -873,8 +873,7 @@ def _star_contraction(pairs: DataFrame, a, b,
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
                          id_b: str = "id_b",
                          max_iter: int = 50,
-                         driver_threshold: int = 200_000,
-                         distributed_algorithm: str = "star") -> DataFrame:
+                         driver_threshold: int = 200_000) -> DataFrame:
     """(doc_id, component_id): min-id components over pair edges.
 
     The dedup clustering step: near-dup PAIRS (from jaccard / minhash /
@@ -893,16 +892,10 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
       per round over a few thousand edges is pure scheduler overhead —
       measured 7s → <1s at sf0.1.
     - larger graphs: alternating large-star/small-star contraction
-      (:func:`_star_contraction`, ``distributed_algorithm='star'``,
-      the default) — O(log² n) rounds worst case regardless of
-      diameter, so hub graphs AND long chains both converge.
-      ``distributed_algorithm='label'`` keeps the previous iterative
-      min-label propagation (one join + min per round; rounds = graph
-      DIAMETER, so a 200k-edge chain would exhaust ``max_iter`` — use
-      it only when the pair graph is known shallow, e.g. near-dup
-      clusters, where it saves one shuffle per round). Convergence on
-      both: a strictly decreasing integer monotone (label sum / edge
-      count+endpoint sum), no row-level diff join.
+      (:func:`_star_contraction`) — O(log² n) rounds worst case
+      regardless of diameter, so hub graphs AND long chains both
+      converge. Convergence: the (edge count, edge-set digest) pair
+      stops changing, no row-level diff join.
       `localCheckpoint` truncates lineage each round — without it the
       plan doubles per iteration and planning cost explodes at scale.
     """
@@ -961,72 +954,13 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         return F.broadcast(spark.createDataFrame(
             sorted((x, find(x)) for x in parent), out_schema))
 
-    if distributed_algorithm == "star":
-        labels, _ = _star_contraction(pairs, a, b, max_iter)
-        # nodes+edges are checkpointed inside — the pair pipeline and
-        # its attached super-stage caches have served their purpose
-        pairs.unpersist()
-        for d in upstream:
-            d.unpersist()
-        return labels
-    if distributed_algorithm != "label":
-        raise ValueError(
-            f"distributed_algorithm must be 'star' or 'label': "
-            f"{distributed_algorithm!r}")
-
-    base = (
-        pairs.select(a.alias("src"), b.alias("dst"))
-        .union(pairs.select(b.alias("src"), a.alias("dst")))
-        # self-loops: the per-round min over neighbors then includes the
-        # node's own label, so each round is ONE join + groupBy (no
-        # left-join repair step to merge old labels back in)
-        .union(pairs.select(a.alias("src"), a.alias("dst")))
-        .union(pairs.select(b.alias("src"), b.alias("dst")))
-        .distinct()
-    )
-    # pre-partition on the join key so the per-round join only shuffles
-    # the (smaller) label side
-    edges = base.repartition(F.col("dst")).localCheckpoint()
-    # the eager checkpoint above materialized everything derived from the
-    # pair pipeline — the caches have served their purpose (checkpointed-
-    # RDD blocks are released by the ContextCleaner when rounds drop them)
+    labels, _ = _star_contraction(pairs, a, b, max_iter)
+    # nodes+edges are checkpointed inside — the pair pipeline and its
+    # attached super-stage caches have served their purpose
     pairs.unpersist()
     for d in upstream:
         d.unpersist()
-    # init fuses the first propagation round: label0 = min(self, neighbors)
-    # Convergence probe: min-labels are monotonically non-increasing, so
-    # the exact BIGINT label sum is strictly decreasing until fixpoint —
-    # sum-stable ⟺ converged. The sum rides the eager localCheckpoint's
-    # own job via observe() (CollectMetrics fires on the checkpoint
-    # materialization — verified empirically), so each round pays ONE
-    # job and zero extra passes over labels; obs.get returns without
-    # blocking because the checkpoint action has already completed
-    # (VERDICT-r10 task 3's probe-fusion applied here).
-    from pyspark.sql import Observation
-
-    obs0 = Observation("lpa_sum_init")
-    labels = (
-        edges.groupBy("src").agg(F.min("dst").alias("label"))
-        .withColumnRenamed("src", "id")
-        .observe(obs0, F.sum("label").alias("s"))
-        .localCheckpoint()
-    )
-    prev_sum = obs0.get["s"]
-    for i in range(max_iter):
-        obs = Observation(f"lpa_sum_{i}")
-        labels = (
-            edges.join(labels.withColumnRenamed("id", "dst"), on="dst")
-            .groupBy("src").agg(F.min("label").alias("label"))
-            .withColumnRenamed("src", "id")
-            .observe(obs, F.sum("label").alias("s"))
-            .localCheckpoint()
-        )
-        cur_sum = obs.get["s"]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return labels.select(F.col("id").alias("doc_id"),
-                         F.col("label").alias("component_id"))
+    return labels
 
 
 def connected_components_duckdb_sql(pairs_sql: str) -> str:

@@ -45,8 +45,9 @@ from flink_sql_security_spark.functions.text import (
     floor_round, floor_round_py)
 
 from .clustering import _centroid_array_sql
-from .pq import (_gate_lut_broadcast, _ivfpq_topk, _pq_topk, _pq_train_np,
-                 _query_lut, _sample_matrix)
+from .pq import (_adc_topk_sql, _double_vectors_sql, _gate_lut_broadcast,
+                 _ivfpq_topk, _oracle_inputs, _pq_topk, _pq_train_np,
+                 _sample_matrix)
 
 
 def _pq_assign_np(Xr, books: list):
@@ -333,66 +334,30 @@ def opq_topk_duckdb_sql(parquet_path: str, query_pred: str = "vec_id < 10",
     """Oracle for :func:`opq_topk`: re-derives (R, codebooks) from the
     parquet with the same numpy, recomputes the rotation IN SQL with the
     identical fold + floor rule, rotates the query set in Python with
-    the bit-equal twin, and replays the flat-ADC scored/ranked tail of
-    ``pq_topk_duckdb_sql`` over the rotated codes."""
-    import duckdb
+    the bit-equal twin, and runs ``pq_topk_duckdb_sql``'s flat-ADC
+    search over the rotated vectors."""
+    X, queries = _oracle_inputs(parquet_path, vec_col, id_col, sample,
+                                query_pred)
+    R, books = _opq_train_np(X, m, k_cb, iters, opq_iters, round_to)
+    return _adc_topk_sql(
+        _rotated_vectors_sql(R, vec_col, id_col, table, round_to),
+        _query_rotation(R, round_to), queries, books, id_col, k, round_to)
+
+
+def _rotated_vectors_sql(R: list, vec_col: str, id_col: str, table: str,
+                         round_to: int) -> str:
+    """(id, xd): the table's vectors rotated in SQL — the oracle checks
+    :func:`opq_rotate` instead of reusing it."""
+    return (f"SELECT {id_col}, "
+            + _rotate_expr("xd", R, "duckdb", round_to)
+            + f" AS xd FROM ({_double_vectors_sql(vec_col, id_col, table)})")
+
+
+def _query_rotation(R: list, round_to: int):
+    """A query vector → its rotation, by the bit-equal Python twin."""
     import numpy as np
 
-    con = duckdb.connect()
-    pdf = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{parquet_path}') "
-        f"ORDER BY {id_col} LIMIT {sample}").df()
-    qdf = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{parquet_path}') "
-        f"WHERE {query_pred} ORDER BY {id_col}").df()
-    con.close()
-    X = np.array([np.asarray(v, dtype=np.float64)
-                  for v in pdf[vec_col].tolist()])
-    R, books = _opq_train_np(X, m, k_cb, iters, opq_iters, round_to)
-
-    # codes over the rotated vectors (the pq_encode oracle pattern)
-    code_exprs = []
-    start = 0
-    for book in books:
-        width = len(book[0])
-        cmat = _centroid_array_sql(book, "duckdb")
-        dists = (f"list_transform({cmat}, c -> list_sum(list_transform("
-                 f"list_zip(rot[{start + 1}:{start + width}], c), "
-                 "p -> (p[1] - p[2]) * (p[1] - p[2]))))")
-        code_exprs.append(
-            f"CAST(list_position({dists}, list_min({dists})) AS INT) - 1")
-        start += width
-    codes = "[" + ", ".join(code_exprs) + "]"
-
-    lut_values = []
-    for _, row in qdf.iterrows():
-        rq = _rotate_py(row[vec_col], R, round_to)
-        lut = ["[" + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in sub) + "]"
-               for sub in _query_lut(rq, books)]
-        lut_values.append(
-            f"({int(row[id_col])}, [" + ", ".join(lut) + "])")
-    if not lut_values:
-        # a bare "VALUES" is a parse error; express the (valid) empty
-        # query set so the oracle still returns the empty answer
-        lut_values = ["(CAST(NULL AS BIGINT), [[CAST(NULL AS DOUBLE)]])"]
-    return (
-        f"WITH x AS (SELECT {id_col}, "
-        f"list_transform({vec_col}, v -> CAST(v AS DOUBLE)) AS xd "
-        f"FROM {table}), "
-        f"r AS (SELECT {id_col}, "
-        + _rotate_expr("xd", R, "duckdb", round_to) + " AS rot FROM x), "
-        f"codes AS (SELECT {id_col}, {codes} AS codes FROM r), "
-        "luts(q_id, lut) AS (VALUES " + ", ".join(lut_values) + "), "
-        f"scored AS (SELECT l.q_id, c.{id_col} AS n_id, "
-        + floor_round("list_sum(list_transform(list_zip(c.codes, l.lut), "
-                      "p -> p[2][p[1] + 1]))", round_to, "duckdb")
-        + " AS adc_dist "
-        "FROM codes c CROSS JOIN luts l "
-        f"WHERE c.{id_col} <> l.q_id), "
-        "ranked AS (SELECT q_id, n_id, adc_dist, row_number() OVER "
-        "(PARTITION BY q_id ORDER BY adc_dist, n_id) AS rank FROM scored) "
-        f"SELECT q_id, n_id, adc_dist, rank FROM ranked WHERE rank <= {k}"
-    )
+    return lambda vec: np.asarray(_rotate_py(vec, R, round_to))
 
 
 def _rotate_rows_np(X, R: list, round_to: int = 6):
@@ -491,84 +456,11 @@ def opq_ivf_topk_duckdb_sql(parquet_path: str,
     (fold + floor rule), cell assignment / encode / the cell-keyed ADC
     join verify over the rotated vectors, and the per-query probe sets +
     LUTs come from the bit-equal Python rotation twin."""
-    import duckdb
-    import numpy as np
-
-    from .pq import _probe_cells, _query_lut
-
-    con = duckdb.connect()
-    pdf = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{parquet_path}') "
-        f"ORDER BY {id_col} LIMIT {sample}").df()
-    qdf = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{parquet_path}') "
-        f"WHERE {query_pred} ORDER BY {id_col}").df()
-    con.close()
-    X = np.array([np.asarray(v, dtype=np.float64)
-                  for v in pdf[vec_col].tolist()])
+    X, queries = _oracle_inputs(parquet_path, vec_col, id_col, sample,
+                                query_pred)
     R, coarse, books = _opq_ivf_train_np(
         X, m, k_cb, iters, opq_iters, n_cells, round_to, residual)
-    cmn = np.asarray(coarse, dtype=np.float64)
-
-    def _dists(vals: list, src: str, start: int, width: int) -> str:
-        cmat = _centroid_array_sql(vals, "duckdb")
-        return (f"list_transform({cmat}, c -> list_sum(list_transform("
-                f"list_zip({src}[{start}:{start + width - 1}], c), "
-                "p -> (p[1] - p[2]) * (p[1] - p[2]))))")
-
-    enc = "rd" if residual else "rot"
-    code_exprs = []
-    start = 1
-    for book in books:
-        width = len(book[0])
-        d = _dists(book, enc, start, width)
-        code_exprs.append(
-            f"CAST(list_position({d}, list_min({d})) AS INT) - 1")
-        start += width
-    codes = "[" + ", ".join(code_exprs) + "]"
-    dc = _dists(coarse, "rot", 1, len(coarse[0]))
-    cell = f"CAST(list_position({dc}, list_min({dc})) AS INT) - 1"
-    if residual:
-        cmat = _centroid_array_sql(coarse, "duckdb")
-        enc_src = (f"enc AS (SELECT {id_col}, cell, "
-                   f"list_transform(list_zip(rot, ({cmat})[cell + 1]), "
-                   "p -> p[1] - p[2]) AS rd FROM cells), ")
-    else:
-        enc_src = f"enc AS (SELECT {id_col}, cell, rot FROM cells), "
-
-    def _lut_sql(qvec) -> str:
-        return "[" + ", ".join(
-            "[" + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in sub) + "]"
-            for sub in _query_lut(qvec, books)) + "]"
-
-    probe_values = []
-    for _, row in qdf.iterrows():
-        rq = np.asarray(_rotate_py(row[vec_col], R, round_to))
-        qid = int(row[id_col])
-        for c in _probe_cells(rq, coarse, n_probe):
-            lut = _lut_sql(rq - cmn[c] if residual else rq)
-            probe_values.append(f"({qid}, {int(c)}, {lut})")
-    if not probe_values:
-        probe_values = ["(CAST(NULL AS BIGINT), CAST(NULL AS INT), "
-                        "[[CAST(NULL AS DOUBLE)]])"]
-    return (
-        f"WITH x AS (SELECT {id_col}, "
-        f"list_transform({vec_col}, v -> CAST(v AS DOUBLE)) AS xd "
-        f"FROM {table}), "
-        f"r AS (SELECT {id_col}, "
-        + _rotate_expr("xd", R, "duckdb", round_to) + " AS rot FROM x), "
-        f"cells AS (SELECT {id_col}, rot, {cell} AS cell FROM r), "
-        + enc_src +
-        f"codes AS (SELECT {id_col}, cell, {codes} AS codes FROM enc), "
-        "probes(q_id, cell, lut) AS (VALUES "
-        + ", ".join(probe_values) + "), "
-        f"scored AS (SELECT pr.q_id, c.{id_col} AS n_id, "
-        + floor_round("list_sum(list_transform(list_zip(c.codes, pr.lut), "
-                      "p -> p[2][p[1] + 1]))", round_to, "duckdb")
-        + " AS adc_dist "
-        "FROM codes c JOIN probes pr ON c.cell = pr.cell "
-        f"WHERE c.{id_col} <> pr.q_id), "
-        "ranked AS (SELECT q_id, n_id, adc_dist, row_number() OVER "
-        "(PARTITION BY q_id ORDER BY adc_dist, n_id) AS rank FROM scored) "
-        f"SELECT q_id, n_id, adc_dist, rank FROM ranked WHERE rank <= {k}"
-    )
+    return _adc_topk_sql(
+        _rotated_vectors_sql(R, vec_col, id_col, table, round_to),
+        _query_rotation(R, round_to), queries, books, id_col, k, round_to,
+        coarse, n_probe, residual)

@@ -56,7 +56,7 @@ from flink_sql_security_spark.functions.text import (
 from flink_sql_security_spark.operators.clustering import (
     _centroid_array_sql, _dists_expr)
 from flink_sql_security_spark.operators.similarity import (
-    BROADCAST_LIMIT_BYTES)
+    BROADCAST_LIMIT_BYTES, _rank_top_k)
 
 # pq_topk's mode='auto' routes a corpus of more than this many rows to
 # the cell-pruned IVF-PQ scan: the row-count equivalent of a 256 MiB
@@ -211,8 +211,6 @@ def _encode_arrow(df: DataFrame, codebooks: list, vec_col: str,
     (pytest-pinned). The win is constant-factor only: Spark interprets
     higher-order folds per row, numpy runs the same arithmetic as array
     ops (measured ~2.4 s -> ~0.3 s for the sf0.1 encode)."""
-    import json as _json
-
     total = sum(len(book[0]) for book in codebooks)
     if residual and coarse is None:
         raise ValueError("pq_encode: residual=True requires coarse")
@@ -514,6 +512,65 @@ def pq_reconstruct(df: DataFrame, codebooks: list,
     return out.select(*cols, F.expr(recon).alias("approx"))
 
 
+def _oracle_inputs(parquet_path: str, vec_col: str, id_col: str,
+                   sample: int, query_pred: str | None = None):
+    """(X, queries): what an oracle emitter reads from the parquet — the
+    training sample (the ``sample`` lowest-id vectors, the
+    :func:`_sample_matrix` rows) as a float64 matrix and, given
+    ``query_pred``, the (id, vector) query rows in id order."""
+    import duckdb
+    import numpy as np
+
+    src = f"SELECT {id_col}, {vec_col} FROM read_parquet('{parquet_path}')"
+    con = duckdb.connect()
+    pdf = con.execute(f"{src} ORDER BY {id_col} LIMIT {sample}").df()
+    queries = [] if query_pred is None else [
+        (int(i), v) for i, v in con.execute(
+            f"{src} WHERE {query_pred} ORDER BY {id_col}").df()[
+                [id_col, vec_col]].itertuples(index=False)]
+    con.close()
+    X = np.array([np.asarray(v, dtype=np.float64)
+                  for v in pdf[vec_col].tolist()])
+    return X, queries
+
+
+def _double_vectors_sql(vec_col: str, id_col: str,
+                        table: str = "embeddings") -> str:
+    """(id, xd): the table's vectors as DOUBLE lists."""
+    return (f"SELECT {id_col}, list_transform({vec_col}, "
+            f"v -> CAST(v AS DOUBLE)) AS xd FROM {table}")
+
+
+def _as_double(vec):
+    import numpy as np
+
+    return np.asarray(vec, dtype=np.float64)
+
+
+def _dists_sql(vals: list, src: str, start: int, width: int) -> str:
+    """DuckDB list of squared-L2 distances from the slice
+    ``src[start:start + width - 1]`` (1-based) to each centroid of
+    ``vals`` — the sequential fold of ``_dists_expr``."""
+    cmat = _centroid_array_sql(vals, "duckdb")
+    return (f"list_transform({cmat}, c -> list_sum(list_transform("
+            f"list_zip({src}[{start}:{start + width - 1}], c), "
+            "p -> (p[1] - p[2]) * (p[1] - p[2]))))")
+
+
+def _argmin_sql(dists: str) -> str:
+    """0-based first position of the minimum (np.argmin's tie rule)."""
+    return f"CAST(list_position({dists}, list_min({dists})) AS INT) - 1"
+
+
+def _subspace_dists_sql(books: list, src: str) -> list[str]:
+    """Per codebook, :func:`_dists_sql` over its subspace of ``src``."""
+    out, start = [], 1
+    for book in books:
+        out.append(_dists_sql(book, src, start, len(book[0])))
+        start += len(book[0])
+    return out
+
+
 def pq_reconstruct_duckdb_sql(parquet_path: str,
                               vec_col: str = "embedding",
                               id_col: str = "vec_id", m: int = 16,
@@ -526,16 +583,7 @@ def pq_reconstruct_duckdb_sql(parquet_path: str,
     """Oracle for :func:`pq_reconstruct` — codebooks (and coarse, when
     ``n_cells``) re-derive from the parquet; the SQL recomputes codes
     and concatenates the same centroid literals."""
-    import duckdb
-    import numpy as np
-
-    con = duckdb.connect()
-    pdf = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{parquet_path}') "
-        f"ORDER BY {id_col} LIMIT {sample}").df()
-    con.close()
-    X = np.array([np.asarray(v, dtype=np.float64)
-                  for v in pdf[vec_col].tolist()])
+    X, _ = _oracle_inputs(parquet_path, vec_col, id_col, sample)
     coarse = None
     if residual:
         coarse, books = _ivfpq_train_np(X, n_cells, m, k, iters)
@@ -546,19 +594,11 @@ def pq_reconstruct_duckdb_sql(parquet_path: str,
     else:
         books = _pq_train_np(X, m, k, iters)
 
-    def _dists(vals: list, src: str, start: int, width: int) -> str:
-        cmat = _centroid_array_sql(vals, "duckdb")
-        return (f"list_transform({cmat}, c -> list_sum(list_transform("
-                f"list_zip({src}[{start}:{start + width - 1}], c), "
-                "p -> (p[1] - p[2]) * (p[1] - p[2]))))")
-
     sel_cell = ""
-    src_cte = (f"x AS (SELECT {id_col}, list_transform({vec_col}, "
-               "v -> CAST(v AS DOUBLE)) AS xd FROM embeddings)")
+    src_cte = f"x AS ({_double_vectors_sql(vec_col, id_col)})"
     enc = "xd"
     if coarse is not None:
-        dc = _dists(coarse, "xd", 1, len(coarse[0]))
-        cell = f"CAST(list_position({dc}, list_min({dc})) AS INT) - 1"
+        cell = _argmin_sql(_dists_sql(coarse, "xd", 1, len(coarse[0])))
         src_cte += (f", cells AS (SELECT {id_col}, xd, {cell} AS cell "
                     "FROM x)")
         sel_cell = "cell, "
@@ -572,15 +612,10 @@ def pq_reconstruct_duckdb_sql(parquet_path: str,
             src_cte += (f", enc AS (SELECT {id_col}, cell, xd FROM cells)")
     else:
         src_cte += f", enc AS (SELECT {id_col}, xd FROM x)"
-    parts = []
-    start = 1
-    for book in books:
-        width = len(book[0])
-        d = _dists(book, enc, start, width)
-        parts.append(f"({_centroid_array_sql(book, 'duckdb')})"
-                     f"[list_position({d}, list_min({d}))]")
-        start += width
-    recon = " || ".join(parts)
+    recon = " || ".join(
+        f"({_centroid_array_sql(book, 'duckdb')})"
+        f"[list_position({d}, list_min({d}))]"
+        for book, d in zip(books, _subspace_dists_sql(books, enc)))
     if residual:
         cmat = _centroid_array_sql(coarse, "duckdb")
         recon = (f"list_transform(list_zip({recon}, ({cmat})[cell + 1]), "
@@ -612,37 +647,14 @@ def pq_encode_duckdb_sql(parquet_path: str, vec_col: str = "embedding",
     """Oracle: re-derives identical codebooks from the parquet (same
     numpy, same sample order), recomputes codes/err with list functions
     in the same fold order."""
-    import duckdb
-    import numpy as np
-
-    con = duckdb.connect()
-    pdf = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{parquet_path}') "
-        f"ORDER BY {id_col} LIMIT {sample}").df()
-    con.close()
-    X = np.array([np.asarray(v, dtype=np.float64)
-                  for v in pdf[vec_col].tolist()])
-    books = _pq_train_np(X, m, k, iters)
-    code_exprs, err_exprs = [], []
-    start = 0
-    for book in books:
-        width = len(book[0])
-        cmat = _centroid_array_sql(book, "duckdb")
-        dists = (f"list_transform({cmat}, c -> list_sum(list_transform("
-                 f"list_zip(xd[{start + 1}:{start + width}], c), "
-                 "p -> (p[1] - p[2]) * (p[1] - p[2]))))")
-        code_exprs.append(
-            f"CAST(list_position({dists}, list_min({dists})) AS INT) - 1")
-        err_exprs.append(f"list_min({dists})")
-        start += width
-    codes = "[" + ", ".join(code_exprs) + "]"
+    X, _ = _oracle_inputs(parquet_path, vec_col, id_col, sample)
+    dists = _subspace_dists_sql(_pq_train_np(X, m, k, iters), "xd")
+    codes = "[" + ", ".join(_argmin_sql(d) for d in dists) + "]"
     codes_out = (f"array_to_string({codes}, ',')" if stringify_codes
                  else codes)
-    err = " + ".join(f"({e})" for e in err_exprs)
+    err = " + ".join(f"(list_min({d}))" for d in dists)
     return (
-        f"WITH x AS (SELECT {id_col}, "
-        f"list_transform({vec_col}, v -> CAST(v AS DOUBLE)) AS xd "
-        "FROM embeddings) "
+        f"WITH x AS ({_double_vectors_sql(vec_col, id_col)}) "
         f"SELECT {id_col}, {codes_out} AS codes, "
         + floor_round(err, round_to, "duckdb") + " AS err FROM x"
     )
@@ -799,8 +811,6 @@ def _adc_search(codes, probe_side, join, codebooks: list, id_col: str,
     """Shared ADC search tail: join the probe/LUT side onto the code
     table, unrolled ADC score, global top-k window. ``join`` is the one
     thing flat PQ and IVF-PQ disagree on (crossJoin vs join-on-cell)."""
-    from pyspark.sql import Window
-
     from flink_sql_security_spark.operators.cache import attach
 
     scored = (
@@ -811,10 +821,7 @@ def _adc_search(codes, probe_side, join, codebooks: list, id_col: str,
             F.expr(floor_round(_adc_expr(len(codebooks)),
                                round_to)).alias("adc_dist"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.asc("adc_dist"), F.asc("n_id"))
-    out = (scored.withColumn("rank", F.row_number().over(w))
-           .where(F.col("rank") <= k)
-           .select("q_id", "n_id", "adc_dist", "rank"))
+    out = _rank_top_k(scored, k, "adc_dist", ascending=True)
     return attach(out, codes) if own_codes else out
 
 
@@ -1036,65 +1043,11 @@ def pq_topk_duckdb_sql(parquet_path: str, query_pred: str = "vec_id < 20",
     """Oracle for :func:`pq_topk` — codebooks AND per-query LUTs re-derive
     from the parquet with the same numpy/fold code and embed as literals;
     the SQL verifies encode + ADC scoring + deterministic ranking."""
-    import duckdb
-    import numpy as np
-
-    con = duckdb.connect()
-    pdf = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{parquet_path}') "
-        f"ORDER BY {id_col} LIMIT {sample}").df()
-    qdf = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{parquet_path}') "
-        f"WHERE {query_pred} ORDER BY {id_col}").df()
-    con.close()
-    X = np.array([np.asarray(v, dtype=np.float64)
-                  for v in pdf[vec_col].tolist()])
-    books = _pq_train_np(X, m, k_cb, iters)
-
-    code_exprs = []
-    start = 0
-    for book in books:
-        width = len(book[0])
-        cmat = _centroid_array_sql(book, "duckdb")
-        dists = (f"list_transform({cmat}, c -> list_sum(list_transform("
-                 f"list_zip(xd[{start + 1}:{start + width}], c), "
-                 "p -> (p[1] - p[2]) * (p[1] - p[2]))))")
-        code_exprs.append(
-            f"CAST(list_position({dists}, list_min({dists})) AS INT) - 1")
-        start += width
-    codes = "[" + ", ".join(code_exprs) + "]"
-
-    lut_values = []
-    for _, row in qdf.iterrows():
-        q = np.asarray(row[vec_col], dtype=np.float64)
-        # same _query_lut the Spark side runs executor-side. CAST each
-        # element: a bare literal parses as DECIMAL and the fold would run
-        # exact decimal math instead of the IEEE double sequence Spark's
-        # aggregate() produces
-        lut = ["[" + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in sub) + "]"
-               for sub in _query_lut(q, books)]
-        lut_values.append(
-            f"({int(row[id_col])}, [" + ", ".join(lut) + "])")
-    if not lut_values:
-        # a bare "VALUES" is a parse error; express the (valid) empty
-        # query set so the oracle still returns the empty answer
-        lut_values = ["(CAST(NULL AS BIGINT), [[CAST(NULL AS DOUBLE)]])"]
-    return (
-        f"WITH x AS (SELECT {id_col}, "
-        f"list_transform({vec_col}, v -> CAST(v AS DOUBLE)) AS xd "
-        "FROM embeddings), "
-        f"codes AS (SELECT {id_col}, {codes} AS codes FROM x), "
-        "luts(q_id, lut) AS (VALUES " + ", ".join(lut_values) + "), "
-        f"scored AS (SELECT l.q_id, c.{id_col} AS n_id, "
-        + floor_round("list_sum(list_transform(list_zip(c.codes, l.lut), "
-                      "p -> p[2][p[1] + 1]))", round_to, "duckdb")
-        + " AS adc_dist "
-        "FROM codes c CROSS JOIN luts l "
-        "WHERE c.{id} <> l.q_id)".format(id=id_col) + ", "
-        "ranked AS (SELECT q_id, n_id, adc_dist, row_number() OVER "
-        "(PARTITION BY q_id ORDER BY adc_dist, n_id) AS rank FROM scored) "
-        f"SELECT q_id, n_id, adc_dist, rank FROM ranked WHERE rank <= {k}"
-    )
+    X, queries = _oracle_inputs(parquet_path, vec_col, id_col, sample,
+                                query_pred)
+    return _adc_topk_sql(_double_vectors_sql(vec_col, id_col), _as_double,
+                         queries, _pq_train_np(X, m, k_cb, iters), id_col,
+                         k, round_to)
 
 
 def ivfpq_topk_duckdb_sql(parquet_path: str, query_pred: str = "vec_id < 20",
@@ -1110,83 +1063,82 @@ def ivfpq_topk_duckdb_sql(parquet_path: str, query_pred: str = "vec_id < 20",
     distributed work: cell assignment (argmin over sequential-fold L2),
     PQ encode (over the residual when ``residual``), the cell-keyed ADC
     join, and deterministic ranking."""
-    import duckdb
-    import numpy as np
-
-    con = duckdb.connect()
-    pdf = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{parquet_path}') "
-        f"ORDER BY {id_col} LIMIT {sample}").df()
-    qdf = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{parquet_path}') "
-        f"WHERE {query_pred} ORDER BY {id_col}").df()
-    con.close()
-    X = np.array([np.asarray(v, dtype=np.float64)
-                  for v in pdf[vec_col].tolist()])
+    X, queries = _oracle_inputs(parquet_path, vec_col, id_col, sample,
+                                query_pred)
     if residual:
         coarse, books = _ivfpq_train_np(X, n_cells, m, k_cb, iters)
     else:
         books = _pq_train_np(X, m, k_cb, iters)
         coarse = [[float(v) for v in c]
                   for c in _l2_kmeans_np(X, n_cells, iters)]
-    cmn = np.asarray(coarse, dtype=np.float64)
+    return _adc_topk_sql(_double_vectors_sql(vec_col, id_col), _as_double,
+                         queries, books, id_col, k, round_to, coarse,
+                         n_probe, residual)
 
-    def _dists(vals: list, src: str, start: int, width: int) -> str:
-        cmat = _centroid_array_sql(vals, "duckdb")
-        return (f"list_transform({cmat}, c -> list_sum(list_transform("
-                f"list_zip({src}[{start}:{start + width - 1}], c), "
-                "p -> (p[1] - p[2]) * (p[1] - p[2]))))")
 
-    enc = "rd" if residual else "xd"
-    code_exprs = []
-    start = 1
-    for book in books:
-        width = len(book[0])
-        d = _dists(book, enc, start, width)
-        code_exprs.append(
-            f"CAST(list_position({d}, list_min({d})) AS INT) - 1")
-        start += width
-    codes = "[" + ", ".join(code_exprs) + "]"
-    dc = _dists(coarse, "xd", 1, len(coarse[0]))
-    cell = f"CAST(list_position({dc}, list_min({dc})) AS INT) - 1"
-    if residual:
-        cmat = _centroid_array_sql(coarse, "duckdb")
-        enc_src = (f"enc AS (SELECT {id_col}, cell, "
-                   f"list_transform(list_zip(xd, ({cmat})[cell + 1]), "
-                   "p -> p[1] - p[2]) AS rd FROM cells), ")
-    else:
-        enc_src = f"enc AS (SELECT {id_col}, cell, xd FROM cells), "
+def _adc_topk_sql(vectors_sql: str, query_vector, queries: list,
+                  books: list, id_col: str, k: int, round_to: int,
+                  coarse: list | None = None, n_probe: int = 0,
+                  residual: bool = False) -> str:
+    """The one DuckDB twin of the ADC search (:func:`_adc_search`).
 
-    def _lut_sql(qvec) -> str:
+    ``vectors_sql`` selects (id, xd), the double vectors the corpus codes
+    encode; ``query_vector`` maps a query row's vector into that space
+    (a float64 array). Each query's LUTs come from the same
+    :func:`_query_lut` the Spark side runs and embed as literals. Flat
+    when ``coarse`` is None: every code row scores against every query.
+    Otherwise each code row gets its cell (first argmin over the coarse
+    L2), each query probes its ``n_probe`` cells, and the join keys on
+    cell; ``residual`` encodes and builds LUTs over x − centroid[cell]."""
+    import numpy as np
+
+    def lut_sql(q) -> str:
+        # CAST each element: a bare literal parses as DECIMAL and the
+        # fold would run exact decimal math instead of the IEEE double
+        # sequence Spark's aggregate() produces
         return "[" + ", ".join(
             "[" + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in sub) + "]"
-            for sub in _query_lut(qvec, books)) + "]"
+            for sub in _query_lut(q, books)) + "]"
 
-    probe_values = []
-    for _, row in qdf.iterrows():
-        q = np.asarray(row[vec_col], dtype=np.float64)
-        qid = int(row[id_col])
-        for c in _probe_cells(q, coarse, n_probe):
-            lut = _lut_sql(q - cmn[c] if residual else q)
-            probe_values.append(f"({qid}, {int(c)}, {lut})")
-    if not probe_values:
-        probe_values = ["(CAST(NULL AS BIGINT), CAST(NULL AS INT), "
-                        "[[CAST(NULL AS DOUBLE)]])"]
+    ctes = [f"x AS ({vectors_sql})"]
+    rows = []
+    if coarse is None:
+        src, enc, cell, null_cell = "x", "xd", "", ""
+        join = "CROSS JOIN probes l"
+        for qid, vec in queries:
+            rows.append(f"({qid}, {lut_sql(query_vector(vec))})")
+    else:
+        src, enc, cell, null_cell = ("enc", "rd" if residual else "xd",
+                                     "cell, ", "CAST(NULL AS INT), ")
+        join = "JOIN probes l ON c.cell = l.cell"
+        cmat = _centroid_array_sql(coarse, "duckdb")
+        rd = (f"list_transform(list_zip(xd, ({cmat})[cell + 1]), "
+              "p -> p[1] - p[2]) AS rd" if residual else "xd")
+        dc = _dists_sql(coarse, "xd", 1, len(coarse[0]))
+        ctes += [f"cells AS (SELECT {id_col}, xd, {_argmin_sql(dc)} AS cell "
+                 "FROM x)",
+                 f"enc AS (SELECT {id_col}, cell, {rd} FROM cells)"]
+        cm = np.asarray(coarse, dtype=np.float64)
+        for qid, vec in queries:
+            q = query_vector(vec)
+            for c in _probe_cells(q, coarse, n_probe):
+                lut = lut_sql(q - cm[c] if residual else q)
+                rows.append(f"({qid}, {int(c)}, {lut})")
+    if not rows:
+        # a bare "VALUES" is a parse error; express the (valid) empty
+        # query set so the oracle still returns the empty answer
+        rows = [f"(CAST(NULL AS BIGINT), {null_cell}"
+                "[[CAST(NULL AS DOUBLE)]])"]
+    codes = "[" + ", ".join(
+        _argmin_sql(d) for d in _subspace_dists_sql(books, enc)) + "]"
+    ctes += [f"codes AS (SELECT {id_col}, {cell}{codes} AS codes FROM {src})",
+             f"probes(q_id, {cell}lut) AS (VALUES " + ", ".join(rows) + ")"]
     return (
-        f"WITH x AS (SELECT {id_col}, "
-        f"list_transform({vec_col}, v -> CAST(v AS DOUBLE)) AS xd "
-        "FROM embeddings), "
-        f"cells AS (SELECT {id_col}, xd, {cell} AS cell FROM x), "
-        + enc_src +
-        f"codes AS (SELECT {id_col}, cell, {codes} AS codes FROM enc), "
-        "probes(q_id, cell, lut) AS (VALUES "
-        + ", ".join(probe_values) + "), "
-        f"scored AS (SELECT pr.q_id, c.{id_col} AS n_id, "
-        + floor_round("list_sum(list_transform(list_zip(c.codes, pr.lut), "
+        "WITH " + ", ".join(ctes) + ", "
+        f"scored AS (SELECT l.q_id, c.{id_col} AS n_id, "
+        + floor_round("list_sum(list_transform(list_zip(c.codes, l.lut), "
                       "p -> p[2][p[1] + 1]))", round_to, "duckdb")
-        + " AS adc_dist "
-        "FROM codes c JOIN probes pr ON c.cell = pr.cell "
-        "WHERE c.{id} <> pr.q_id)".format(id=id_col) + ", "
+        + f" AS adc_dist FROM codes c {join} WHERE c.{id_col} <> l.q_id), "
         "ranked AS (SELECT q_id, n_id, adc_dist, row_number() OVER "
         "(PARTITION BY q_id ORDER BY adc_dist, n_id) AS rank FROM scored) "
         f"SELECT q_id, n_id, adc_dist, rank FROM ranked WHERE rank <= {k}"
@@ -1231,8 +1183,6 @@ def ivfpq_rerank(df: DataFrame, queries_df: DataFrame, coarse: list,
     Reference scope note: no vector search exists in the reference repo;
     this extends the engine per the driver brief (see module docstring).
     """
-    from pyspark.sql import Window
-
     from flink_sql_security_spark.operators.cache import attach, cached_deps
 
     # one broadcast decision for both stages: the stage-2 candidate
@@ -1258,12 +1208,8 @@ def ivfpq_rerank(df: DataFrame, queries_df: DataFrame, coarse: list,
               .select("q_id", "n_id",
                       F.expr(floor_round(_SQ_L2.format(a="_qv", b="_nv"),
                                          round_to)).alias("exact_dist")))
-    w = Window.partitionBy("q_id").orderBy(F.asc("exact_dist"),
-                                           F.asc("n_id"))
-    out = (scored.withColumn("rank", F.row_number().over(w))
-           .where(F.col("rank") <= k)
-           .select("q_id", "n_id", "exact_dist", "rank"))
-    return attach(out, *cached_deps(shortlist))
+    return attach(_rank_top_k(scored, k, "exact_dist", ascending=True),
+                  *cached_deps(shortlist))
 
 
 def ivfpq_rerank_duckdb_sql(parquet_path: str,
@@ -1286,8 +1232,7 @@ def ivfpq_rerank_duckdb_sql(parquet_path: str,
         round_to=round_to, residual=residual)
     return (
         f"WITH shortlist AS ({inner}), "
-        f"v AS (SELECT {id_col}, list_transform({vec_col}, "
-        "x -> CAST(x AS DOUBLE)) AS xd FROM embeddings), "
+        f"v AS ({_double_vectors_sql(vec_col, id_col)}), "
         "rescored AS (SELECT s.q_id, s.n_id, "
         + floor_round("list_sum(list_transform(list_zip(qv.xd, nv.xd), "
                       "p -> (p[1] - p[2]) * (p[1] - p[2])))",

@@ -8,7 +8,8 @@ every table of an n-way join lands in the same WHERE
 (``RowFilterVisitor.java:64-86``) and a derived table gets its own filter
 (``:73-79``). A condition's own subquery is a query of its own: the visitor
 filters it too, and raises ``ValueError`` when that subquery reads, directly
-or through another table's condition, the table being filtered.
+or through another table's condition, the table being filtered, or a table
+whose name a CTE of the statement also bears (the CTE would capture it).
 ``SecurityContext`` then masks the statement, wrapping each table under its
 injected WHERE, so the filter compares the masked values; its DataFrame and
 streaming path applies the same condition the same way.
@@ -25,8 +26,8 @@ from __future__ import annotations
 from typing import Optional
 
 from ..plans.nodes import (
-    Expr, Identifier, Lambda, Node, Query, Relation, Select, TableRef, and_,
-    rewrite_tables,
+    Expr, Identifier, Lambda, Node, Query, Relation, Select, TableRef, With,
+    and_, rewrite_tables,
 )
 from ..plans.parser import parse_expression
 from ..policy.manager import PolicyManager
@@ -69,21 +70,38 @@ def row_filter_condition(policy_manager: PolicyManager, username: str,
     return qualify_condition(parsed, alias)
 
 
+def _cte_names(node: Node) -> set[str]:
+    """The lowercased names of every CTE defined under ``node``."""
+    names = {name.lower() for name, _ in node.ctes} \
+        if isinstance(node, With) else set()
+    for child in node.children():
+        if child._child_fields:
+            names |= _cte_names(child)
+    return names
+
+
 class RowFilterVisitor:
     def __init__(self, policy_manager: PolicyManager, username: str) -> None:
         self.policy_manager = policy_manager
         self.username = username
-        # tables whose condition is being filtered right now: meeting one
-        # again inside its own condition would expand it without end
-        self._expanding: set[tuple[str, ...]] = set()
+        # tables whose condition is being filtered right now, innermost
+        # last: meeting one again inside its own condition would expand
+        # it without end
+        self._expanding: list[tuple[str, ...]] = []
+        self._statement: Optional[Node] = None
+        self._ctes: Optional[set[str]] = None
 
     def visit(self, node: Node) -> Node:
         """Apply row filters to every SELECT under ``node`` (in place)."""
         if not self.policy_manager.holds_row_filters(self.username):
             return node  # no table of the statement can match
+        if not self._expanding:
+            self._statement, self._ctes = node, None
         return rewrite_tables(node, self._filter)
 
     def _filter(self, select: Select, table: TableRef) -> Relation:
+        if self._expanding and len(table.parts) == 1:
+            self._check_not_captured(table.parts[0])
         cond = row_filter_condition(self.policy_manager, self.username,
                                     table.parts, table.effective_alias())
         if cond is None:
@@ -96,9 +114,25 @@ class RowFilterVisitor:
                 f"row-filter condition of user {self.username!r} reads "
                 f"table {'.'.join(table.parts)!r} again while filtering "
                 f"it: {condition!r}")
-        self._expanding.add(key)
+        self._expanding.append(key)
         try:
             select.where = and_(select.where, self.visit(cond))
         finally:
-            self._expanding.discard(key)
+            self._expanding.pop()
         return table
+
+    def _check_not_captured(self, name: str) -> None:
+        """Raise when ``name``, a table that an injected condition reads,
+        is also a CTE name of the statement: printed as written, the
+        reference would resolve to the user's CTE, which could then
+        decide what the filter lets through. Only a condition with a
+        subquery reads a table, so no other condition pays for this.
+        The names are collected on first use, before the first such
+        condition is injected, so they are the user's own."""
+        if self._ctes is None:
+            self._ctes = _cte_names(self._statement)
+        if name.lower() in self._ctes:
+            raise ValueError(
+                f"row-filter condition of user {self.username!r} on table "
+                f"{'.'.join(self._expanding[-1])!r} reads table {name!r}, "
+                f"which the query defines as a CTE")

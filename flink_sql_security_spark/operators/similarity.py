@@ -138,6 +138,137 @@ def _auto_broadcast(df: DataFrame, limit_bytes: int) -> bool:
     return size is not None and size <= limit_bytes
 
 
+# -- exact prune-and-rescore kernels ----------------------------------------
+#
+# Every exact path below (broadcast, blocked, fused IVF, joined IVF, LSH
+# candidates, the ingest stream) scores the same way: a vectorized BLAS /
+# einsum pass prunes, and each survivor is re-scored with the sequential
+# fold and the shared floor rule, so a pair's cosine is the same double
+# whichever path, group or chunk scored it.
+
+_PAIRS_SCHEMA = "id_a long, id_b long, cosine double"
+_TOPK_SCHEMA = "q_id long, n_id long, cosine double"
+
+
+def _scored(id_names, out_a, out_b, out_c):
+    """The (id, id, cosine) frame a scoring kernel emits."""
+    import pandas as pd
+
+    return pd.DataFrame({
+        id_names[0]: pd.array(out_a, dtype="int64"),
+        id_names[1]: pd.array(out_b, dtype="int64"),
+        "cosine": pd.array(out_c, dtype="float64"),
+    })
+
+
+def _threshold_pairs(ids_a, A, ids_b, B, threshold: float, round_to: int,
+                     margin: float, ordered: bool):
+    """(min id, max id, cosine) for every row pair of ``A`` × ``B`` whose
+    exact cosine reaches ``threshold``. The BLAS product keeps pairs
+    within ``margin`` of it; ``ordered`` drops pairs with id_a ≥ id_b
+    (sides that share rows see each pair twice, and itself once)."""
+    import numpy as np
+
+    S = A @ B.T
+    ia, ib = np.nonzero(S >= threshold - margin)
+    if ordered:
+        keep = ids_a[ia] < ids_b[ib]
+        ia, ib = ia[keep], ib[keep]
+    out_a, out_b, out_c = [], [], []
+    for i, j in zip(ia, ib):
+        c = floor_round_py(_seq_dot(A[i], B[j]), round_to)
+        if c >= threshold:
+            x, y = sorted((int(ids_a[i]), int(ids_b[j])))
+            out_a.append(x); out_b.append(y); out_c.append(c)
+    return _scored(("id_a", "id_b"), out_a, out_b, out_c)
+
+
+def _rescore_rows(chunk, a: str, b: str, Ua, Ub, threshold: float):
+    """Row-paired exact rescore: (chunk[a], chunk[b], cosine) for the
+    rows t whose cosine of ``Ua[t]``·``Ub[t]`` reaches ``threshold``.
+    One row-wise einsum prunes (LSH candidates run ~10² per true pair);
+    survivors get the exact fold, rounded to 6 places."""
+    import numpy as np
+
+    s = np.einsum("ij,ij->i", Ua, Ub)
+    ids_a, ids_b = chunk[a].to_numpy(), chunk[b].to_numpy()
+    out_a, out_b, out_c = [], [], []
+    for t in np.nonzero(s >= threshold - (0.5e-6 + 1e-9))[0]:
+        cv = floor_round_py(_seq_dot(Ua[t], Ub[t]), 6)
+        if cv >= threshold:
+            out_a.append(ids_a[t]); out_b.append(ids_b[t]); out_c.append(cv)
+    return _scored((a, b), out_a, out_b, out_c)
+
+
+def _rescore_joined(cand: DataFrame, left: DataFrame, right: DataFrame,
+                    a: str, b: str, vec_col: str, id_col: str,
+                    threshold: float) -> DataFrame:
+    """Exact-rescore the (a, b) candidate pairs of ``cand`` with the
+    vectors of ``left`` (ids in ``a``) and ``right`` (ids in ``b``)
+    joined onto each pair: nothing collects to the driver. Unit
+    normalization is per row and batch-independent, so the doubles
+    match the broadcast path bit for bit."""
+    va = left.select(F.col(id_col).alias(a), F.col(vec_col).alias("_va"))
+    vb = right.select(F.col(id_col).alias(b), F.col(vec_col).alias("_vb"))
+
+    def score(batches):
+        for chunk in batches:
+            if len(chunk):
+                yield _rescore_rows(
+                    chunk, a, b, _exact_unit_matrix(chunk["_va"].tolist()),
+                    _exact_unit_matrix(chunk["_vb"].tolist()), threshold)
+
+    return cand.join(va, a).join(vb, b).mapInPandas(
+        score, f"{a} long, {b} long, cosine double")
+
+
+def _prune_topk(s, idx, k: int):
+    """``idx`` cut to the k highest ``s[idx]``, keeping every score within
+    a float-drift margin of the k-th: the exact rescore decides those."""
+    import numpy as np
+
+    if len(idx) > k:
+        kth = np.partition(s[idx], len(idx) - k)[len(idx) - k]
+        idx = idx[s[idx] >= kth - 1e-8]
+    return idx
+
+
+def _topk_candidates(ids_q, Q, ids_n, A, k: int, round_to: int,
+                     probed=None):
+    """Each query's chunk-local top-k (± margin) among the rows of ``A``
+    other than itself, exactly rescored; ``probed`` (a |Q|×rows bool
+    matrix) narrows each query to the rows it marks. A global top-k
+    neighbour is a fortiori in its chunk's top-k, so the union over
+    chunks is a superset that :func:`_rank_top_k` cuts."""
+    import numpy as np
+
+    S = Q @ A.T                                # |Q| × chunk
+    out_q, out_n, out_c = [], [], []
+    for qi in range(len(ids_q)):
+        eligible = ids_n != ids_q[qi]          # exclude self before the cut
+        if probed is not None:
+            eligible &= probed[qi]
+        for j in _prune_topk(S[qi], np.nonzero(eligible)[0], k):
+            out_q.append(ids_q[qi]); out_n.append(ids_n[j])
+            out_c.append(floor_round_py(_seq_dot(Q[qi], A[j]), round_to))
+    return _scored(("q_id", "n_id"), out_q, out_n, out_c)
+
+
+def _rank_top_k(cand: DataFrame, k: int, score: str = "cosine",
+                ascending: bool = False) -> DataFrame:
+    """The final window: per query the k best ``score`` rows, ties broken
+    by the lower n_id, numbered from 1 in ``rank``."""
+    from pyspark.sql.window import Window
+
+    order = F.asc(score) if ascending else F.desc(score)
+    w = Window.partitionBy("q_id").orderBy(order, F.asc("n_id"))
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("q_id", "n_id", score, "rank")
+    )
+
+
 def cosine_pairs(df: DataFrame, vec_col: str = "embedding",
                  id_col: str = "vec_id", threshold: float = 0.4,
                  round_to: int = 6, prefilter: bool = True,
@@ -181,8 +312,6 @@ def cosine_pairs(df: DataFrame, vec_col: str = "embedding",
             .where(F.col("cosine") >= threshold)
             .select("id_a", "id_b", "cosine")
         )
-    import numpy as np
-
     # the margin covers BLAS pairwise-sum drift vs the exact sequential
     # fold (~1e-15) plus the round step (a raw value 0.5·10^-r below the
     # threshold still rounds up to it); exact re-score decides the rest
@@ -197,30 +326,15 @@ def cosine_pairs(df: DataFrame, vec_col: str = "embedding",
     bc = df.sparkSession.sparkContext.broadcast((ids_all, U))
 
     def gen(batches):
-        import pandas as pd
-
         ids_b, B = bc.value
         for chunk in batches:
-            if not len(chunk):
-                continue
-            A = _exact_unit_matrix(chunk[vec_col].tolist())
-            ids_a = chunk[id_col].to_numpy()
-            S = A @ B.T
-            ia, ib = np.nonzero(S >= threshold - margin)
-            keep = ids_a[ia] < ids_b[ib]
-            out_a, out_b, out_c = [], [], []
-            for i, j in zip(ia[keep], ib[keep]):
-                c = floor_round_py(_seq_dot(A[i], B[j]), round_to)
-                if c >= threshold:
-                    out_a.append(ids_a[i]); out_b.append(ids_b[j])
-                    out_c.append(c)
-            yield pd.DataFrame({
-                "id_a": pd.array(out_a, dtype="int64"),
-                "id_b": pd.array(out_b, dtype="int64"),
-                "cosine": pd.array(out_c, dtype="float64"),
-            })
+            if len(chunk):
+                yield _threshold_pairs(
+                    chunk[id_col].to_numpy(),
+                    _exact_unit_matrix(chunk[vec_col].tolist()), ids_b, B,
+                    threshold, round_to, margin, ordered=True)
 
-    return raw.mapInPandas(gen, "id_a long, id_b long, cosine double")
+    return raw.mapInPandas(gen, _PAIRS_SCHEMA)
 
 
 def _blocked_cosine_pairs(raw: DataFrame, vec_col: str, id_col: str,
@@ -237,9 +351,6 @@ def _blocked_cosine_pairs(raw: DataFrame, vec_col: str, id_col: str,
     row-local, so values are bit-identical regardless of which group
     scored the pair.
     """
-    import numpy as np
-    import pandas as pd
-
     blk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int")
     base = raw.select(F.col(id_col), F.col(vec_col), blk.alias("_blk"))
     replicated = (
@@ -253,45 +364,20 @@ def _blocked_cosine_pairs(raw: DataFrame, vec_col: str, id_col: str,
     )
 
     def score_group(key, pdf):
+        # a (b, b) group holds block b's rows only: both sides are pdf
         gi, gj = int(key[0]), int(key[1])
-        out_a, out_b, out_c = [], [], []
-
-        def emit(ids_a, A, ids_b, B, self_pair):
-            S = A @ B.T
-            ia, ib = np.nonzero(S >= threshold - margin)
-            if self_pair:
-                keep = ids_a[ia] < ids_b[ib]
-                ia, ib = ia[keep], ib[keep]
-            for i, j in zip(ia, ib):
-                c = floor_round_py(_seq_dot(A[i], B[j]), round_to)
-                if c >= threshold:
-                    x, y = int(ids_a[i]), int(ids_b[j])
-                    if x > y:
-                        x, y = y, x
-                    out_a.append(x); out_b.append(y); out_c.append(c)
-
-        if gi == gj:
-            if len(pdf) > 1:
-                U = _exact_unit_matrix(pdf[vec_col].tolist())
-                ids = pdf[id_col].to_numpy()
-                emit(ids, U, ids, U, self_pair=True)
-        else:
-            left = pdf[pdf["_blk"] == gi]
-            right = pdf[pdf["_blk"] == gj]
-            if len(left) and len(right):
-                emit(left[id_col].to_numpy(),
-                     _exact_unit_matrix(left[vec_col].tolist()),
-                     right[id_col].to_numpy(),
-                     _exact_unit_matrix(right[vec_col].tolist()),
-                     self_pair=False)
-        return pd.DataFrame({
-            "id_a": pd.array(out_a, dtype="int64"),
-            "id_b": pd.array(out_b, dtype="int64"),
-            "cosine": pd.array(out_c, dtype="float64"),
-        })
+        left = pdf if gi == gj else pdf[pdf["_blk"] == gi]
+        right = pdf if gi == gj else pdf[pdf["_blk"] == gj]
+        if not (len(left) and len(right)):
+            return _scored(("id_a", "id_b"), [], [], [])
+        A = _exact_unit_matrix(left[vec_col].tolist())
+        B = A if gi == gj else _exact_unit_matrix(right[vec_col].tolist())
+        return _threshold_pairs(left[id_col].to_numpy(), A,
+                                right[id_col].to_numpy(), B, threshold,
+                                round_to, margin, ordered=gi == gj)
 
     return replicated.groupBy("_gi", "_gj").applyInPandas(
-        score_group, "id_a long, id_b long, cosine double")
+        score_group, _PAIRS_SCHEMA)
 
 
 def cosine_topk(df: DataFrame, queries_df: DataFrame,
@@ -319,9 +405,6 @@ def cosine_topk(df: DataFrame, queries_df: DataFrame,
     top-k candidates for the same final window. Per-pair values are
     bit-identical to the broadcast path (pinned by the parity test).
     """
-    import numpy as np
-    from pyspark.sql.window import Window
-
     q = queries_df.select(id_col, vec_col)
     if not _auto_broadcast(q, QUERY_BROADCAST_LIMIT_BYTES):
         return _blocked_cosine_topk(df.select(id_col, vec_col), q, vec_col,
@@ -330,46 +413,18 @@ def cosine_topk(df: DataFrame, queries_df: DataFrame,
     q_ids = qpdf[id_col].to_numpy()
     Q = _exact_unit_matrix(qpdf[vec_col].tolist())
     bc = df.sparkSession.sparkContext.broadcast((q_ids, Q))
-    margin = 1e-8
 
     def gen(batches):
-        import pandas as pd
-
         ids_q, Qm = bc.value
         for chunk in batches:
-            if not len(chunk):
-                continue
-            A = _exact_unit_matrix(chunk[vec_col].tolist())
-            ids_n = chunk[id_col].to_numpy()
-            S = Qm @ A.T                       # |Q| × chunk
-            out_q, out_n, out_c = [], [], []
-            for qi in range(len(ids_q)):
-                s = S[qi]
-                eligible = ids_n != ids_q[qi]  # exclude self before the cut
-                idx = np.nonzero(eligible)[0]
-                if not len(idx):
-                    continue
-                if len(idx) > k:
-                    kth = np.partition(s[idx], len(idx) - k)[len(idx) - k]
-                    idx = idx[s[idx] >= kth - margin]
-                for j in idx:
-                    out_q.append(ids_q[qi]); out_n.append(ids_n[j])
-                    out_c.append(floor_round_py(_seq_dot(Qm[qi], A[j]),
-                                                round_to))
-            yield pd.DataFrame({
-                "q_id": pd.array(out_q, dtype="int64"),
-                "n_id": pd.array(out_n, dtype="int64"),
-                "cosine": pd.array(out_c, dtype="float64"),
-            })
+            if len(chunk):
+                yield _topk_candidates(
+                    ids_q, Qm, chunk[id_col].to_numpy(),
+                    _exact_unit_matrix(chunk[vec_col].tolist()), k,
+                    round_to)
 
-    cand = df.select(id_col, vec_col).mapInPandas(
-        gen, "q_id long, n_id long, cosine double")
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "n_id", "cosine", "rank")
-    )
+    cand = df.select(id_col, vec_col).mapInPandas(gen, _TOPK_SCHEMA)
+    return _rank_top_k(cand, k)
 
 
 def filtered_topk(df: DataFrame, queries_df: DataFrame, predicate: str,
@@ -422,12 +477,6 @@ def _blocked_cosine_topk(raw: DataFrame, q: DataFrame, vec_col: str,
     |Q|·n_blocks + |C|·q_blocks vector copies (tunable); group memory is
     ~(|Q|/q_blocks + |C|/n_blocks)·d doubles.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.window import Window
-
-    margin = 1e-8
-
     def replicated(side: DataFrame, tag: int, own_blocks: int,
                    other_blocks: int, own_is_q: bool) -> DataFrame:
         own = F.pmod(F.xxhash64(F.col(id_col)), F.lit(own_blocks)).cast("int")
@@ -446,39 +495,16 @@ def _blocked_cosine_topk(raw: DataFrame, q: DataFrame, vec_col: str,
     def score_group(key, pdf):
         qs = pdf[pdf["_side"] == 0]
         cs = pdf[pdf["_side"] == 1]
-        out_q, out_n, out_c = [], [], []
-        if len(qs) and len(cs):
-            Qm = _exact_unit_matrix(qs["_v"].tolist())
-            A = _exact_unit_matrix(cs["_v"].tolist())
-            ids_q = qs["_id"].to_numpy()
-            ids_n = cs["_id"].to_numpy()
-            S = Qm @ A.T
-            for qi in range(len(ids_q)):
-                s = S[qi]
-                idx = np.nonzero(ids_n != ids_q[qi])[0]
-                if not len(idx):
-                    continue
-                if len(idx) > k:
-                    kth = np.partition(s[idx], len(idx) - k)[len(idx) - k]
-                    idx = idx[s[idx] >= kth - margin]
-                for j in idx:
-                    out_q.append(ids_q[qi]); out_n.append(ids_n[j])
-                    out_c.append(floor_round_py(_seq_dot(Qm[qi], A[j]),
-                                                round_to))
-        return pd.DataFrame({
-            "q_id": pd.array(out_q, dtype="int64"),
-            "n_id": pd.array(out_n, dtype="int64"),
-            "cosine": pd.array(out_c, dtype="float64"),
-        })
+        if not (len(qs) and len(cs)):
+            return _scored(("q_id", "n_id"), [], [], [])
+        return _topk_candidates(
+            qs["_id"].to_numpy(), _exact_unit_matrix(qs["_v"].tolist()),
+            cs["_id"].to_numpy(), _exact_unit_matrix(cs["_v"].tolist()),
+            k, round_to)
 
-    cand = both.groupBy("_qb", "_cb").applyInPandas(
-        score_group, "q_id long, n_id long, cosine double")
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "n_id", "cosine", "rank")
-    )
+    cand = both.groupBy("_qb", "_cb").applyInPandas(score_group,
+                                                    _TOPK_SCHEMA)
+    return _rank_top_k(cand, k)
 
 
 def _ivf_centroids(u: DataFrame, id_col: str, n_cells: int,
@@ -606,7 +632,6 @@ def ivf_topk(df: DataFrame, queries_df: DataFrame,
     join, with no driver collect anywhere.
     """
     import numpy as np
-    from pyspark.sql.window import Window
 
     q = queries_df.select(id_col, vec_col)
     if not _auto_broadcast(q, QUERY_BROADCAST_LIMIT_BYTES):
@@ -630,49 +655,20 @@ def ivf_topk(df: DataFrame, queries_df: DataFrame,
     p = min(n_probe, len(C))
     q_cells = np.argsort(-np.einsum("ij,kj->ik", Q, C), kind="stable", axis=1)[:, :p]
     bcq = df.sparkSession.sparkContext.broadcast((q_ids, Q, q_cells, C))
-    margin = 1e-8
 
     def score(batches):
-        import pandas as pd
-
         ids_q, Qm, probes, cm = bcq.value
         for chunk in batches:
             if not len(chunk):
                 continue
             A = _exact_unit_matrix(chunk[vec_col].tolist())
-            ids_n = chunk[id_col].to_numpy()
-            B = _recheck_near_tie_rows(A @ cm.T, A, cm)
-            cell = np.argmax(B, axis=1)
-            S = Qm @ A.T
-            out_q, out_n, out_c = [], [], []
-            for qi in range(len(ids_q)):
-                in_probe = np.isin(cell, probes[qi])
-                eligible = in_probe & (ids_n != ids_q[qi])
-                idx = np.nonzero(eligible)[0]
-                if not len(idx):
-                    continue
-                s = S[qi]
-                if len(idx) > k:
-                    kth = np.partition(s[idx], len(idx) - k)[len(idx) - k]
-                    idx = idx[s[idx] >= kth - margin]
-                for j in idx:
-                    out_q.append(ids_q[qi]); out_n.append(ids_n[j])
-                    out_c.append(floor_round_py(_seq_dot(Qm[qi], A[j]),
-                                                round_to))
-            yield pd.DataFrame({
-                "q_id": pd.array(out_q, dtype="int64"),
-                "n_id": pd.array(out_n, dtype="int64"),
-                "cosine": pd.array(out_c, dtype="float64"),
-            })
+            cell = np.argmax(_recheck_near_tie_rows(A @ cm.T, A, cm), axis=1)
+            probed = np.array([np.isin(cell, c) for c in probes])
+            yield _topk_candidates(ids_q, Qm, chunk[id_col].to_numpy(), A,
+                                   k, round_to, probed)
 
-    cand = df.select(id_col, vec_col).mapInPandas(
-        score, "q_id long, n_id long, cosine double")
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "n_id", "cosine", "rank")
-    )
+    cand = df.select(id_col, vec_col).mapInPandas(score, _TOPK_SCHEMA)
+    return _rank_top_k(cand, k)
 
 
 def _joined_ivf_topk(df: DataFrame, q: DataFrame, vec_col: str,
@@ -690,17 +686,12 @@ def _joined_ivf_topk(df: DataFrame, q: DataFrame, vec_col: str,
     sequential-fold rescore, and the final window picks the global
     top-k. Per-pair values are bit-identical to the fused path.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.window import Window
-
     C = _ivf_centroids(unit_vectors(df, vec_col, id_col), id_col,
                        n_cells, iters, sample)
     assigned = ivf_assign(df, vec_col, id_col, n_cells, iters, sample,
                           centroids=C)
     p = min(n_probe, len(C))
     bcc = df.sparkSession.sparkContext.broadcast(C)
-    margin = 1e-8
 
     def probes(batches):
         import numpy as np
@@ -743,27 +734,13 @@ def _joined_ivf_topk(df: DataFrame, q: DataFrame, vec_col: str,
             ids_n = chunk["n_id"].to_numpy()
             out_q, out_n, out_c = [], [], []
             for qid in pd.unique(ids_q):
-                idx = np.nonzero(ids_q == qid)[0]
-                if len(idx) > k:
-                    kth = np.partition(s[idx], len(idx) - k)[len(idx) - k]
-                    idx = idx[s[idx] >= kth - margin]
-                for j in idx:
+                for j in _prune_topk(s, np.nonzero(ids_q == qid)[0], k):
                     out_q.append(qid); out_n.append(ids_n[j])
                     out_c.append(floor_round_py(_seq_dot(Qm[j], A[j]),
                                                 round_to))
-            yield pd.DataFrame({
-                "q_id": pd.array(out_q, dtype="int64"),
-                "n_id": pd.array(out_n, dtype="int64"),
-                "cosine": pd.array(out_c, dtype="float64"),
-            })
+            yield _scored(("q_id", "n_id"), out_q, out_n, out_c)
 
-    cand = paired.mapInPandas(score, "q_id long, n_id long, cosine double")
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "n_id", "cosine", "rank")
-    )
+    return _rank_top_k(paired.mapInPandas(score, _TOPK_SCHEMA), k)
 
 
 def _hyperplane(table: int, plane: int, dim: int) -> list[float]:
@@ -882,52 +859,15 @@ def ann_candidate_pairs(df: DataFrame, vec_col: str = "embedding",
         .select("id_a", "id_b")
         .distinct()
     )
-    # exact scoring per candidate against the broadcast unit matrix, no
-    # vector joins. Coarse buckets can emit ~10² candidates per true pair,
-    # so the batch is first scored with one vectorized row-wise-dot pass
-    # and only near-threshold survivors get the exact sequential fold
-    # (bit-identical to the brute-force path).
-    import numpy as np
-    import pandas as pd
-
-    margin = 0.5e-6 + 1e-9
-
-    def _emit(chunk, Ua, Ub):
-        s = np.einsum("ij,ij->i", Ua, Ub)
-        near = np.nonzero(s >= threshold - margin)[0]
-        out_a, out_b, out_c = [], [], []
-        for t in near:
-            cv = floor_round_py(_seq_dot(Ua[t], Ub[t]), 6)
-            if cv >= threshold:
-                out_a.append(chunk["id_a"].iloc[t])
-                out_b.append(chunk["id_b"].iloc[t])
-                out_c.append(cv)
-        return pd.DataFrame({
-            "id_a": pd.array(out_a, dtype="int64"),
-            "id_b": pd.array(out_b, dtype="int64"),
-            "cosine": pd.array(out_c, dtype="float64"),
-        })
-
     if not broadcast_vectors:
         # 100 TB path: ship vectors to the pairs, never the corpus to the
-        # driver. Unit normalization is per-row and batch-independent, so
-        # the doubles match the broadcast path bit-for-bit.
-        va = df.select(F.col(id_col).alias("id_a"),
-                       F.col(vec_col).alias("_va"))
-        vb = df.select(F.col(id_col).alias("id_b"),
-                       F.col(vec_col).alias("_vb"))
-        paired = cand.join(va, "id_a").join(vb, "id_b")
-
-        def score_joined(batches):
-            for chunk in batches:
-                if not len(chunk):
-                    continue
-                yield _emit(chunk,
-                            _exact_unit_matrix(chunk["_va"].tolist()),
-                            _exact_unit_matrix(chunk["_vb"].tolist()))
-
-        return attach(paired.mapInPandas(
-            score_joined, "id_a long, id_b long, cosine double"), b)
+        # driver
+        return attach(_rescore_joined(cand, df, df, "id_a", "id_b",
+                                      vec_col, id_col, threshold), b)
+    # exact scoring per candidate against the broadcast unit matrix, no
+    # vector joins
+    import numpy as np
+    import pandas as pd
 
     pdf = df.select(id_col, vec_col).toPandas()
     U = _exact_unit_matrix(pdf[vec_col].tolist())
@@ -942,10 +882,10 @@ def ann_candidate_pairs(df: DataFrame, vec_col: str = "embedding",
                 continue
             ia = idx[chunk["id_a"].to_numpy()].to_numpy()
             ib = idx[chunk["id_b"].to_numpy()].to_numpy()
-            yield _emit(chunk, Um[ia], Um[ib])
+            yield _rescore_rows(chunk, "id_a", "id_b", Um[ia], Um[ib],
+                                threshold)
 
-    return attach(
-        cand.mapInPandas(score, "id_a long, id_b long, cosine double"), b)
+    return attach(cand.mapInPandas(score, _PAIRS_SCHEMA), b)
 
 
 def ann_candidate_pairs_duckdb_sql(table: str = "embeddings",

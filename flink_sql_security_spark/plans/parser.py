@@ -152,11 +152,14 @@ class _Parser:
     def parse_query(self) -> Query:
         if self.at_word("WITH"):
             return self.parse_with()
-        bare = not self.at_op("(")
         q = self.parse_set_operation(1)
-        # ORDER BY / LIMIT bind to a bare SELECT or the set-op result, as
-        # in Spark: never to a set operand alone
-        if bare or isinstance(q, SetOp):
+        # ORDER BY / LIMIT bind to the whole query before them, as in
+        # Spark: the set-op result, never a set operand alone. A
+        # parenthesized query that has its own clauses (or a WITH) keeps
+        # them inside a derived table, so no clause is dropped.
+        if self.at_word("ORDER") or self.at_word("LIMIT"):
+            if isinstance(q, With) or q.order_by or q.limit is not None:
+                q = Select(projections=[Star()], from_=SubqueryRef(q))
             if self.at_word("ORDER"):
                 q.order_by = self.parse_order_by()
             if self.accept_word("LIMIT"):

@@ -75,8 +75,9 @@ def qualify(node: Node, schema_provider: SchemaProvider) -> Node:
 
 
 def _collect_scope(rel: Optional[Relation], sp: SchemaProvider, scope: _Scope) -> None:
-    """Register every source in a FROM tree into ``scope``: auto-alias and
-    look up each table, mark CTE refs, qualify each derived table."""
+    """Register every source in a FROM tree into ``scope``: auto-alias
+    each table and derived table, look up each table, mark CTE refs,
+    qualify each derived table."""
     if isinstance(rel, TableRef):
         if rel.alias is None:
             rel.alias = rel.parts[-1]
@@ -87,8 +88,10 @@ def _collect_scope(rel: Optional[Relation], sp: SchemaProvider, scope: _Scope) -
             schema = sp(rel.parts)
             scope.add(rel.alias, [c for c, _ in schema] if schema else None)
     elif isinstance(rel, SubqueryRef):
+        if rel.alias is None:  # printed, so the qualified refs resolve
+            rel.alias = "_subquery"
         # a derived table sees the CTEs in scope, not its sibling sources
-        scope.add(rel.alias or "_subquery", _qualify_query(rel.query, sp, scope))
+        scope.add(rel.alias, _qualify_query(rel.query, sp, scope))
     elif isinstance(rel, Join):
         _collect_scope(rel.left, sp, scope)
         _collect_scope(rel.right, sp, scope)

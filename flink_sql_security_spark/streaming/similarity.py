@@ -35,7 +35,7 @@ def ann_ingest_stream(stream: DataFrame, corpus_df: DataFrame, sink,
     calls ``.start()``).
     """
     from flink_sql_security_spark.operators.similarity import (
-        ann_candidate_pairs, lsh_buckets,
+        _rescore_joined, lsh_buckets,
     )
 
     corpus_buckets = lsh_buckets(
@@ -54,48 +54,10 @@ def ann_ingest_stream(stream: DataFrame, corpus_df: DataFrame, sink,
             .select("id_new", "id_old")
             .distinct()
         )
-        # exact rescoring via the batch scorer's join path: vectors are
-        # joined per side, unit-normalized per row, sequential-fold dot —
-        # bit-identical to ann_candidate_pairs' joined path
-        va = batch_df.select(F.col(id_col).alias("id_new"),
-                             F.col(vec_col).alias("_va"))
-        vb = corpus_df.select(F.col(id_col).alias("id_old"),
-                              F.col(vec_col).alias("_vb"))
-        paired = cand.join(va, "id_new").join(vb, "id_old")
-
-        import pandas as pd
-
-        from flink_sql_security_spark.functions.text import floor_round_py
-        from flink_sql_security_spark.operators.similarity import (
-            _exact_unit_matrix, _seq_dot,
-        )
-        import numpy as np
-
-        margin = 0.5e-6 + 1e-9
-
-        def score(batches):
-            for chunk in batches:
-                if not len(chunk):
-                    continue
-                Ua = _exact_unit_matrix(chunk["_va"].tolist())
-                Ub = _exact_unit_matrix(chunk["_vb"].tolist())
-                s = np.einsum("ij,ij->i", Ua, Ub)
-                keep = np.nonzero(s >= threshold - margin)[0]
-                out_a, out_b, out_c = [], [], []
-                for t in keep:
-                    cv = floor_round_py(_seq_dot(Ua[t], Ub[t]), 6)
-                    if cv >= threshold:
-                        out_a.append(chunk["id_new"].iloc[t])
-                        out_b.append(chunk["id_old"].iloc[t])
-                        out_c.append(cv)
-                yield pd.DataFrame({
-                    "id_new": pd.array(out_a, dtype="int64"),
-                    "id_old": pd.array(out_b, dtype="int64"),
-                    "cosine": pd.array(out_c, dtype="float64"),
-                })
-
-        sink(paired.mapInPandas(
-            score, "id_new long, id_old long, cosine double"), batch_id)
+        # exact rescoring via the batch scorer's join path: bit-identical
+        # to ann_candidate_pairs' joined path
+        sink(_rescore_joined(cand, batch_df, corpus_df, "id_new", "id_old",
+                             vec_col, id_col, threshold), batch_id)
 
     # the persisted bucket table is the query's serving index — its
     # lifetime is the STREAM's, not one action's. Attach the handle to

@@ -254,7 +254,36 @@ _SET_OP_CASES = [
     "UNION ALL SELECT order_id FROM orders WHERE order_id = 10006",
     "SELECT order_id FROM orders UNION SELECT order_id FROM orders "
     "ORDER BY order_id DESC LIMIT 2",
+    "(SELECT order_id FROM orders) ORDER BY order_id DESC LIMIT 2",
+    "(SELECT order_id FROM orders ORDER BY order_id LIMIT 5) "
+    "ORDER BY order_id DESC LIMIT 2",
 ]
+
+
+_SHIPMENTS_FILTER = ("order_id IN "
+                     "(SELECT order_id FROM shipments WHERE is_arrived)")
+_FAKE_SHIPMENTS = ("WITH shipments AS (SELECT explode(array(10001, 10004, "
+                   "10006)) AS order_id, TRUE AS is_arrived) ")
+
+
+def test_cte_cannot_capture_a_condition_subquery(ctx):
+    """A user CTE named like a table that a policy condition reads, at any
+    depth of condition expansion, would decide what the filter lets
+    through: the rewrite refuses it."""
+    from flink_sql_security_spark import RowFilterPolicy
+
+    ctx.add_policy(RowFilterPolicy("u", "orders", _SHIPMENTS_FILTER))
+    sql = "SELECT order_id FROM orders"
+    assert ctx.sql("u", sql).collect() == []
+    with pytest.raises(ValueError, match="'u'.*'orders'.*'shipments'.*CTE"):
+        ctx.sql("u", _FAKE_SHIPMENTS + sql)
+    unrelated = _FAKE_SHIPMENTS.replace("WITH shipments", "WITH fake")
+    assert ctx.sql("u", unrelated + sql).collect() == []
+
+    ctx.add_policy(RowFilterPolicy(
+        "u", "shipments", "EXISTS (SELECT 1 FROM products)"))
+    with pytest.raises(ValueError, match="'shipments'.*'products'"):
+        ctx.mixed_rewrite("u", "WITH products AS (SELECT 1 AS id) " + sql)
 
 
 def test_set_operations_keep_their_grouping(ctx):

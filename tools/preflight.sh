@@ -8,7 +8,8 @@
 #   2. strict DuckDB-oracle parity for every entry at all three SFs
 #      (tools/check_oracles.py --sf all),
 #   3. the driver's own canonicalizer over the 50-entry window
-#      (tools/driver_sim.py).
+#      (tools/driver_sim.py),
+# then prints the package's .py line count.
 #
 # Usage:  bash tools/preflight.sh            # from the repo root
 # Exit:   0 only if all three stages pass; first failure aborts.
@@ -27,3 +28,5 @@ echo "=== preflight 3/3: tools/driver_sim.py (window, sf0.01) ==="
 python tools/driver_sim.py
 
 echo "=== PREFLIGHT PASS ==="
+# the ROADMAP tracks this number and wants it to fall
+echo "package size: $(find flink_sql_security_spark -name '*.py' -exec cat {} + | wc -l) lines of .py"
