@@ -9,6 +9,12 @@ string-in/string-out like the reference (``SecurityContext.java:126-167``):
 engine-agnostic and auditable; Catalyst re-plans it with predicate pushdown and
 column pruning doing the physical heavy lifting.
 
+Two printed forms come out of that one pipeline. ``mixed_rewrite`` prints the
+reference form, which the goldens pin. ``executed_sql`` prints the statement
+``sql`` and ``mixed_execute`` run: the same rewrite with each mask wrap cut to
+the columns the statement reads, so Spark plans no mask expression the query
+never touches.
+
 One enforcement path serves SQL, DataFrames and streams: the per-(user, table)
 resolvers ``row_filter_condition`` and ``masked_projection`` feed both the
 statement rewrite and :meth:`SecurityContext.apply_policies`. The mask wraps
@@ -25,7 +31,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from .catalog import CatalogAdapter, type_ddl_string
 from .operators.data_mask import DataMaskVisitor, masked_projection
 from .operators.row_filter import RowFilterVisitor, row_filter_condition
-from .plans.nodes import Node
+from .plans.nodes import Node, read_names
 from .plans.parser import parse_statement
 from .plans.qualify import qualify
 from .policy.manager import PolicyManager
@@ -68,10 +74,24 @@ class SecurityContext:
         """Row filter first, then mask (SecurityContext.java:154-167)."""
         return self._secure(username, self._parse_and_qualify(sql)).sql()
 
-    def _secure(self, username: str, node: Node) -> Node:
+    def executed_sql(self, username: str, sql: str) -> str:
+        """The statement :meth:`sql` runs: :meth:`mixed_rewrite` with each
+        mask wrap cut to the columns whose names the statement reads, and
+        a table whose masked columns it never reads left unwrapped.
+
+        The names are collected after the row filters are injected, so a
+        column a policy condition compares stays masked. A column left
+        out of a wrap has a name that occurs nowhere in the statement, so
+        nothing can resolve to it; a star left after qualify keeps every
+        wrap whole (``plans.nodes.read_names``)."""
+        return self._secure(username, self._parse_and_qualify(sql),
+                            lean=True).sql()
+
+    def _secure(self, username: str, node: Node, lean: bool = False) -> Node:
         RowFilterVisitor(self.policy_manager, username).visit(node)
+        reads = read_names(node) if lean else None
         return DataMaskVisitor(
-            self.policy_manager, username, self.catalog.schema_provider
+            self.policy_manager, username, self.catalog.schema_provider, reads
         ).visit(node)
 
     # -- execution (SecurityContext.java:190-242) --------------------------
@@ -92,12 +112,13 @@ class SecurityContext:
 
     def mixed_execute(self, username: str, sql: str,
                       size: int = DEFAULT_FETCH_SIZE) -> list[Row]:
-        return self.execute(self.mixed_rewrite(username, sql), size)
+        return self.execute(self.executed_sql(username, sql), size)
 
     # -- DataFrame-native surface (Spark-first additions) ------------------
     def sql(self, username: str, sql: str) -> DataFrame:
-        """Secured spark.sql: mixed rewrite, returns the (lazy) DataFrame."""
-        return self.spark.sql(self.mixed_rewrite(username, sql))
+        """Secured spark.sql: runs :meth:`executed_sql`, returns the (lazy)
+        DataFrame."""
+        return self.spark.sql(self.executed_sql(username, sql))
 
     def apply_policies(self, username: str, df: DataFrame,
                        table_name: str) -> DataFrame:

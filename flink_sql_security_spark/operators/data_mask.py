@@ -8,10 +8,17 @@ Parity target: ``visitor/DataMaskVisitor.java:54-157``.
 re-emitting *every* column in declared order (``DataMaskVisitor.java:116-141``;
 order is load-bearing, SURVEY §1.3). The visitor splices
 ``(SELECT <projection> FROM t) AS alias`` in place of each masked base-table
-ref (``:143-157``); the DataFrame path selects the same projection. Catalyst's
-ColumnPruning strips unused columns from the wide subquery, so this costs
-nothing physically. A WHERE over the wrapped table, the injected row filter
-included, therefore compares the masked values.
+ref (``:143-157``); the DataFrame path selects the same projection. A WHERE
+over the wrapped table, the injected row filter included, therefore compares
+the masked values.
+
+The wide wrap is free in execution, where Catalyst's ColumnPruning strips
+the unused columns, but not in planning: Spark first parses, resolves and
+type-checks every mask expression of it, read or not. So the statement
+``SecurityContext.sql`` executes (``executed_sql``) passes ``reads``, the
+names the statement can resolve (``plans.nodes.read_names``): each wrap keeps
+only those columns, and a table none of whose masked columns is read stays
+unwrapped. The printed reference form (``mixed_rewrite``) keeps every column.
 
 The reference prevents re-masking its own generated subqueries by
 bytecode-injecting a ``custom`` flag into Calcite's SqlSelect
@@ -35,15 +42,20 @@ from ..policy.models import DataMaskPolicy
 
 
 def masked_projection(policy_manager: PolicyManager, username: str,
-                      parts: list[str],
-                      schema_provider: SchemaProvider) -> Optional[list[Expr]]:
+                      parts: list[str], schema_provider: SchemaProvider,
+                      reads: Optional[frozenset[str]] = None,
+                      ) -> Optional[list[Expr]]:
     """The ordered projection that masks table ``parts`` for ``username``,
     or None when no mask applies. ``schema_provider`` gives the table's
-    (column, DDL type) list and is only called when a mask applies."""
+    (column, DDL type) list and is only called when a mask applies.
+
+    ``reads`` (lowercased names, see ``nodes.read_names``) keeps only the
+    columns it names, and None is returned when it names no masked
+    column: the table's own columns then read the same."""
     policies = {
         c: p
         for c, p in policy_manager.get_table_mask_policies(username, parts).items()
-        if p.condition != "MASK_NONE"
+        if p.condition != "MASK_NONE" and (reads is None or c in reads)
     }
     if not policies:
         return None
@@ -54,6 +66,8 @@ def masked_projection(policy_manager: PolicyManager, username: str,
         )
     projection: list[Expr] = []
     for name, ddl_type in columns:
+        if reads is not None and name.lower() not in reads:
+            continue
         policy = policies.get(name.lower())
         if policy is None:
             projection.append(Identifier([name]))
@@ -88,10 +102,12 @@ def _mask_expr(policy_manager: PolicyManager, policy: DataMaskPolicy,
 
 class DataMaskVisitor:
     def __init__(self, policy_manager: PolicyManager, username: str,
-                 schema_provider: SchemaProvider) -> None:
+                 schema_provider: SchemaProvider,
+                 reads: Optional[frozenset[str]] = None) -> None:
         self.policy_manager = policy_manager
         self.username = username
         self.schema_provider = schema_provider
+        self.reads = reads
 
     def visit(self, node: Node) -> Node:
         """Wrap every masked base table under ``node`` (in place)."""
@@ -101,7 +117,8 @@ class DataMaskVisitor:
 
     def _wrap(self, select: Select, table: TableRef) -> Relation:
         projection = masked_projection(self.policy_manager, self.username,
-                                       table.parts, self.schema_provider)
+                                       table.parts, self.schema_provider,
+                                       self.reads)
         if projection is None:
             return table
         inner = Select(projections=projection,

@@ -254,6 +254,11 @@ def _topk_candidates(ids_q, Q, ids_n, A, k: int, round_to: int,
     return _scored(("q_id", "n_id"), out_q, out_n, out_c)
 
 
+def _no_topk(spark, k: int) -> DataFrame:
+    """The empty answer of an empty query set, in the top-k schema."""
+    return _rank_top_k(spark.createDataFrame([], _TOPK_SCHEMA), k)
+
+
 def _rank_top_k(cand: DataFrame, k: int, score: str = "cosine",
                 ascending: bool = False) -> DataFrame:
     """The final window: per query the k best ``score`` rows, ties broken
@@ -410,6 +415,8 @@ def cosine_topk(df: DataFrame, queries_df: DataFrame,
         return _blocked_cosine_topk(df.select(id_col, vec_col), q, vec_col,
                                     id_col, k, round_to, n_blocks, q_blocks)
     qpdf = q.toPandas()
+    if qpdf.empty:
+        return _no_topk(df.sparkSession, k)
     q_ids = qpdf[id_col].to_numpy()
     Q = _exact_unit_matrix(qpdf[vec_col].tolist())
     bc = df.sparkSession.sparkContext.broadcast((q_ids, Q))
@@ -637,6 +644,9 @@ def ivf_topk(df: DataFrame, queries_df: DataFrame,
     if not _auto_broadcast(q, QUERY_BROADCAST_LIMIT_BYTES):
         return _joined_ivf_topk(df, q, vec_col, id_col, k, n_cells,
                                 n_probe, iters, sample, round_to)
+    qpdf = q.toPandas()
+    if qpdf.empty:
+        return _no_topk(df.sparkSession, k)
 
     C = _ivf_centroids(unit_vectors(df, vec_col, id_col), id_col,
                        n_cells, iters, sample)
@@ -649,7 +659,6 @@ def ivf_topk(df: DataFrame, queries_df: DataFrame,
     # (± margin) bounds the emitted candidates, the final window picks
     # the global top-k. The corpus is scanned once, no vector ever joins
     # or shuffles.
-    qpdf = q.toPandas()
     q_ids = qpdf[id_col].to_numpy()
     Q = _exact_unit_matrix(qpdf[vec_col].tolist())
     p = min(n_probe, len(C))

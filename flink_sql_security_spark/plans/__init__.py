@@ -10,7 +10,7 @@ from .nodes import (  # noqa: F401
     InList, InSubquery, Insert, IntervalLiteral, IsNull, Join, Lambda,
     LateralView, Like, Literal, Node, OrderItem, Query, Relation,
     ScalarSubquery, Select, SetOp, Star, SubqueryRef, Subscript, TableRef,
-    UnaryOp, WindowSpec, With, and_,
+    UnaryOp, WindowSpec, With, and_, read_names,
 )
 from .parser import SqlParseError, parse_expression, parse_query, parse_statement  # noqa: F401
 from .qualify import SchemaProvider, qualify  # noqa: F401

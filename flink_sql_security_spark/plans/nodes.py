@@ -405,6 +405,10 @@ class TableRef(Relation):
         return self.alias or self.parts[-1]
 
 
+# the alias qualify gives a derived table written without one
+SUBQUERY_ALIAS = "_subquery"
+
+
 @dataclass
 class SubqueryRef(Relation):
     query: "Query"
@@ -618,6 +622,57 @@ def rewrite_tables(node: Node,
     if isinstance(node, Select) and node.from_ is not None:
         node.from_ = _rewrite_from(node.from_, node, step)
     return node
+
+
+# a name in raw clause text: a backticked name (`` escapes `) or a word
+_RAW_NAME = re.compile(r"`((?:[^`]|``)*)`|(\w+)")
+
+
+def read_names(node: Node) -> Optional[frozenset[str]]:
+    """A lowercased superset of every column name the statement under
+    ``node`` can resolve, or None when a star is left in it.
+
+    The names are every part of every identifier (qualified, correlated,
+    struct paths, lambda bodies), every ``JOIN … USING`` name and every
+    word or backticked name of the raw-text fields (GROUPING SETS,
+    window frames, interval and typed literals). A star that qualify
+    could not expand (``struct(t.*)``, a star over an unknown table)
+    reads columns this walk cannot name; the sole ``*`` of ``count(*)``
+    reads none.
+    """
+    names: set[str] = set()
+    raw: list[str] = []
+    todo = [node]
+    while todo:
+        n = todo.pop()
+        if isinstance(n, Identifier):
+            names.update(p.lower() for p in n.parts)
+            continue
+        if isinstance(n, Star):
+            return None
+        if isinstance(n, FuncCall) and _is_count_star(n):
+            if n.over is not None:
+                todo.append(n.over)
+            continue
+        if isinstance(n, Join):
+            names.update(c.lower() for c in n.using)
+        elif isinstance(n, Select) and n.group_modifier:
+            raw.append(n.group_modifier)
+        elif isinstance(n, WindowSpec) and n.frame:
+            raw.append(n.frame)
+        elif isinstance(n, IntervalLiteral):
+            raw.append(n.text)
+        todo.extend(n.children())
+    for text in raw:
+        for quoted, word in _RAW_NAME.findall(text):
+            names.add((word or quoted.replace("``", "`")).lower())
+    return frozenset(names)
+
+
+def _is_count_star(call: FuncCall) -> bool:
+    return (call.name.lower() == "count" and not call.distinct
+            and len(call.args) == 1 and isinstance(call.args[0], Star)
+            and not call.args[0].qualifier)
 
 
 def _rewrite_from(rel: Relation, select: Select, step) -> Relation:

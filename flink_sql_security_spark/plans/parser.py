@@ -17,8 +17,8 @@ from .nodes import (
     Alias, Between, BinaryOp, Case, Cast, Exists, Expr, FuncCall, Identifier,
     InList, InSubquery, Insert, IntervalLiteral, IsNull, Join, Lambda,
     LateralView, Like, Literal, Node, OrderItem, Query, Relation, ScalarSubquery,
-    SET_PRECEDENCE, Select, SetOp, Star, SubqueryRef, Subscript, TableRef,
-    UnaryOp, WindowSpec, With,
+    SET_PRECEDENCE, SUBQUERY_ALIAS, Select, SetOp, Star, SubqueryRef,
+    Subscript, TableRef, UnaryOp, WindowSpec, With,
 )
 from .tokens import (EOF, NUMBER, OP, QIDENT, STRING, WORD, SqlTokenizeError,
                      Token, tokenize)
@@ -48,6 +48,40 @@ _COMPARISON_WORDS = {"IS", "NOT", "IN", "BETWEEN", "LIKE", "RLIKE", "ILIKE"}
 # words parse_primary reads as more than a name or a function call
 _PRIMARY_WORDS = {"NULL", "TRUE", "FALSE", "CASE", "CAST", "TRY_CAST",
                   "INTERVAL", "DATE", "TIMESTAMP"}
+
+
+def _source_names(q: Query) -> set[str]:
+    """Lowercased names that qualify the output columns of ``q``: the
+    sources of its (first) SELECT, as Spark keeps them on its output."""
+    while not isinstance(q, Select):
+        q = q.body if isinstance(q, With) else q.left
+    names: set[str] = set()
+    todo = [q.from_]
+    while todo:
+        rel = todo.pop()
+        if isinstance(rel, Join):
+            todo += [rel.left, rel.right]
+        elif isinstance(rel, LateralView):
+            todo.append(rel.base)
+            names.add(rel.table_alias.lower())
+        elif isinstance(rel, TableRef):
+            names.add(rel.effective_alias().lower())
+        elif isinstance(rel, SubqueryRef) and rel.alias:
+            names.add(rel.alias.lower())
+    return names
+
+
+def _repoint(items: list[OrderItem], names: set[str]) -> None:
+    """Point each ``<source>.column`` of ``items`` (outside nested queries)
+    whose source is in ``names`` at the wrapper's alias instead."""
+    todo: list[Node] = list(items)
+    while todo:
+        n = todo.pop()
+        if isinstance(n, Identifier):
+            if len(n.parts) > 1 and n.parts[0].lower() in names:
+                n.parts = [SUBQUERY_ALIAS] + n.parts[1:]
+        elif not isinstance(n, Query):
+            todo.extend(n.children())
 
 
 class _Parser:
@@ -156,12 +190,18 @@ class _Parser:
         # ORDER BY / LIMIT bind to the whole query before them, as in
         # Spark: the set-op result, never a set operand alone. A
         # parenthesized query that has its own clauses (or a WITH) keeps
-        # them inside a derived table, so no clause is dropped.
+        # them inside a derived table, so no clause is dropped; an outer
+        # ORDER BY that names one of its sources then names the wrapper.
         if self.at_word("ORDER") or self.at_word("LIMIT"):
+            inner = None
             if isinstance(q, With) or q.order_by or q.limit is not None:
-                q = Select(projections=[Star()], from_=SubqueryRef(q))
+                inner = q
+                q = Select(projections=[Star()],
+                           from_=SubqueryRef(q, alias=SUBQUERY_ALIAS))
             if self.at_word("ORDER"):
                 q.order_by = self.parse_order_by()
+                if inner is not None:
+                    _repoint(q.order_by, _source_names(inner))
             if self.accept_word("LIMIT"):
                 t = self.advance()
                 if t.kind != NUMBER or not (t.value.isascii() and t.value.isdigit()):

@@ -30,7 +30,8 @@ from typing import Callable, Optional
 
 from .nodes import (
     Alias, Expr, Identifier, Insert, Join, Lambda, LateralView, Node, Query,
-    Relation, Select, SetOp, Star, SubqueryRef, TableRef, With,
+    Relation, SUBQUERY_ALIAS, Select, SetOp, Star, SubqueryRef, TableRef,
+    With,
 )
 
 # Maps a table path (as written, e.g. ["orders"] or ["db", "t"]) to an ordered
@@ -89,7 +90,7 @@ def _collect_scope(rel: Optional[Relation], sp: SchemaProvider, scope: _Scope) -
             scope.add(rel.alias, [c for c, _ in schema] if schema else None)
     elif isinstance(rel, SubqueryRef):
         if rel.alias is None:  # printed, so the qualified refs resolve
-            rel.alias = "_subquery"
+            rel.alias = SUBQUERY_ALIAS
         # a derived table sees the CTEs in scope, not its sibling sources
         scope.add(rel.alias, _qualify_query(rel.query, sp, scope))
     elif isinstance(rel, Join):

@@ -34,6 +34,8 @@ def test_tracer_patches_and_restores_every_target(demo_tables):
                 owner, attr)
         assert "sql" in vars(spark) and "table" in vars(spark)
         ctx.sql("u", "SELECT order_id, customer_name FROM orders")
+        # ctx.sql runs the executed form, not the printed one
+        ctx.mixed_rewrite("u", "SELECT order_id, customer_name FROM orders")
         ctx.table("u", "orders")
     finally:
         tracer.remove()
@@ -52,4 +54,5 @@ def test_tracer_patches_and_restores_every_target(demo_tables):
         assert prof.count.get(name, 0) > 0, name
     # the per-layer metrics of run.py read these parent/child pairs
     assert prof.under_count("row_filter.visit", "plans.parse_expression") == 1
-    assert prof.under_count("data_mask.visit", "catalog.get_table") == 1
+    # one wrap each from ctx.sql and ctx.mixed_rewrite
+    assert prof.under_count("data_mask.visit", "catalog.get_table") == 2

@@ -752,6 +752,28 @@ def test_topk_auto_gate_defaults_to_scale_safe_path(spark, monkeypatch):
     assert got == want
 
 
+def test_topk_of_an_empty_query_set_is_empty(spark):
+    """An empty query set returns no rows in the top-k schema on the
+    broadcast paths, as it does on the blocked and joined ones."""
+    from tools.pin_rewrites import SF_DIR
+
+    emb = (
+        spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+        .select("vec_id",
+                F.col("embedding").cast("array<float>").alias("embedding"))
+    )
+    none = emb.where("vec_id < 0")
+    assert S._auto_broadcast(none, S.QUERY_BROADCAST_LIMIT_BYTES)
+    want = [(f.name, f.dataType) for f in
+            S.cosine_topk(emb, emb.where("vec_id < 2"), k=3).schema]
+    for out in (S.cosine_topk(emb, none, k=3),
+                S.filtered_topk(emb, none, "vec_id % 2 = 0", k=3),
+                S.matryoshka_topk(emb, none, prefix_dims=16, k=3),
+                S.ivf_topk(emb, none, k=3, n_cells=4, n_probe=2)):
+        assert out.collect() == []
+        assert [(f.name, f.dataType) for f in out.schema] == want
+
+
 def test_clean_corpus_drops_dups_and_low_quality(spark):
     from flink_sql_security_spark.operators.corpus import clean_corpus
     rows = [

@@ -1,7 +1,7 @@
 """Every corpus rewrite prints byte-identically to its pin.
 
 ``tests/data/corpus_rewrites.json`` holds the printed SQL of the 56
-``__spark_entry__._QUERIES`` texts × the 9 preset users × the three rewrite
+``__spark_entry__._QUERIES`` texts × the 9 preset users × the four rewrite
 entry points over the sf0.001 tables; ``tools/pin_rewrites.py`` writes it.
 """
 
@@ -14,7 +14,7 @@ def test_corpus_rewrites_match_pin(spark):
     with open(PIN) as f:
         want = json.load(f)
     got = corpus_rewrites(spark)
-    assert len(want) == 56 * 9 * 3
+    assert len(want) == 56 * 9 * 4
     assert got.keys() == want.keys()
     changed = [k for k in want if got[k] != want[k]]
     assert not changed, (len(changed), changed[:3],

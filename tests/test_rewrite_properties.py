@@ -6,12 +6,16 @@
 2. Round-trip stability under hypothesis-generated expression fuzz.
 """
 
+import re
+
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from flink_sql_security_spark import PolicyManager, SecurityContext
-from flink_sql_security_spark.plans import parse_expression, parse_statement
+from flink_sql_security_spark.plans import (
+    Alias, parse_expression, parse_statement,
+)
 
 IDENTITY_CORPUS = [
     "SELECT order_id, customer_name FROM orders",
@@ -257,6 +261,8 @@ _SET_OP_CASES = [
     "(SELECT order_id FROM orders) ORDER BY order_id DESC LIMIT 2",
     "(SELECT order_id FROM orders ORDER BY order_id LIMIT 5) "
     "ORDER BY order_id DESC LIMIT 2",
+    "(SELECT o.order_id FROM orders o ORDER BY o.order_id LIMIT 5) "
+    "ORDER BY o.order_id DESC LIMIT 2",
 ]
 
 
@@ -306,3 +312,148 @@ def test_custom_mask_lowers_hive_calls_inside_case(ctx):
                         "WHERE order_id IN (10001, 10002)").collect()
     assert sorted(tuple(r) for r in rows) == [(10001, "Jack"),
                                               (10002, "Saxxx")]
+
+
+# -- the executed form: mask wraps cut to the columns the statement reads --
+
+_WORD = re.compile(r"`((?:[^`]|``)*)`|(\w+)")
+_STRING = re.compile(r"'(?:[^']|'')*'")
+
+
+def _words(sql: str) -> set[str]:
+    """Lowercased words and backticked names of ``sql``, string literals
+    left out: every name the statement can resolve is among them."""
+    return {(w or q.replace("``", "`")).lower()
+            for q, w in _WORD.findall(_STRING.sub(" ", sql))}
+
+
+def _record_drops(monkeypatch) -> list[str]:
+    """Patch the mask resolver to record the columns each lean wrap drops:
+    those cut from a wrap, or the masked ones of a table left unwrapped."""
+    from flink_sql_security_spark.operators import data_mask
+
+    drops: list[str] = []
+    original = data_mask.masked_projection
+
+    def names(projection):
+        return [p.alias if isinstance(p, Alias) else p.name
+                for p in projection or []]
+
+    def recording(pm, user, parts, schema_provider, reads=None):
+        lean = original(pm, user, parts, schema_provider, reads)
+        if reads is not None:
+            full = original(pm, user, parts, schema_provider)
+            if lean is None:
+                drops.extend(p.alias for p in full or []
+                             if isinstance(p, Alias))
+            else:
+                drops.extend(set(names(full)) - set(names(lean)))
+        return lean
+
+    monkeypatch.setattr(data_mask, "masked_projection", recording)
+    return drops
+
+
+def _rows(df):
+    return sorted(map(repr, df.collect()))
+
+
+def test_executed_form_matches_the_printed_form_over_the_corpus(
+        spark, monkeypatch):
+    """For the 56 corpus queries × the 9 preset users and one user of each
+    perfbench role: ``ctx.sql`` returns the rows and schema of the printed
+    ``mixed_rewrite``, and every column a lean wrap drops has a name that
+    occurs nowhere in the row-filtered statement."""
+    import __spark_entry__ as corpus
+    from flink_sql_security_spark.presets import demo_context
+    from flink_sql_security_spark.sources import register_tables
+    from perfbench import policies
+    from tools.pin_rewrites import SF_DIR, preset_users
+
+    register_tables(spark, SF_DIR)
+    ctx = demo_context(spark)
+    role_users = [policies.role_users(r)[0] for r in policies.ROLES]
+    for p in policies.gateway_store(1):
+        if p.username in role_users:
+            ctx.add_policy(p)
+    drops = _record_drops(monkeypatch)
+    n_dropped = n_lean = 0
+    for name, (_, sql, _) in corpus._QUERIES.items():
+        for user in preset_users() + role_users:
+            try:
+                printed = ctx.mixed_rewrite(user, sql)
+            except ValueError as e:
+                with pytest.raises(type(e)):
+                    ctx.executed_sql(user, sql)
+                continue
+            drops.clear()
+            executed = ctx.executed_sql(user, sql)
+            filtered = _words(ctx.rewrite_row_filter(user, sql))
+            assert not {d.lower() for d in drops} & filtered, (
+                name, user, drops)
+            n_dropped += len(drops)
+            if executed == printed:
+                continue
+            n_lean += 1
+            got, want = ctx.sql(user, sql), spark.sql(printed)
+            assert got.schema == want.schema, (name, user)
+            assert _rows(got) == _rows(want), (name, user)
+    assert n_lean > 300 and n_dropped > n_lean
+
+
+def _lean_ctx(ctx):
+    from flink_sql_security_spark import DataMaskPolicy, RowFilterPolicy
+
+    ctx.add_policy(DataMaskPolicy("u", "orders", "customer_name", "CUSTOM",
+                                  custom_transformer="substring({col}, 1, 1)"))
+    ctx.add_policy(DataMaskPolicy("u", "orders", "region", "CUSTOM",
+                                  custom_transformer="concat({col}, '!')"))
+    # a row filter on the column it masks: the filter sees masked values
+    ctx.add_policy(RowFilterPolicy("v", "orders", "customer_name = 'Jack'"))
+    ctx.add_policy(DataMaskPolicy("v", "orders", "customer_name", "MASK"))
+    return ctx
+
+
+_LEAN_CASES = [
+    # a star qualify cannot expand reads every column: no pruning
+    ("u", "SELECT struct(orders.*) AS s FROM orders WHERE order_id < 10003",
+     None, None),
+    # a column named only in USING
+    ("u", "SELECT s.origin, o.region FROM orders o "
+          "JOIN shipments s USING (order_id)",
+     [("Beijing", "beijing!"), ("Hangzhou", "beijing!"),
+      ("Shanghai", "hangzhou!")], "AS region FROM orders) AS o"),
+    # a masked column named only in GROUPING SETS
+    ("u", "SELECT count(*) AS n FROM orders "
+          "GROUP BY GROUPING SETS ((customer_name), ())",
+     [(1,), (2,), (3,), (6,)], "AS customer_name FROM orders) AS orders"),
+    # an unqualified correlated reference inside EXISTS
+    ("u", "SELECT order_id FROM orders WHERE EXISTS (SELECT 1 FROM "
+          "shipments s WHERE s.order_id = orders.order_id "
+          "AND region = 'beijing!')",
+     [(10001,), (10002,)], "AS region FROM orders) AS orders"),
+    # the filter's column stays masked: no masked name equals 'Jack'
+    ("v", "SELECT order_id FROM orders", [],
+     "CAST(mask(customer_name) AS STRING) AS customer_name FROM orders)"),
+    # no masked column read: the table is read unwrapped
+    ("u", "SELECT count(*) AS n FROM orders", [(6,)],
+     "SELECT count(*) AS n FROM orders AS orders"),
+]
+
+
+@pytest.mark.parametrize("user,sql,want,fragment", _LEAN_CASES)
+def test_executed_form_reads_what_the_printed_form_reads(
+        ctx, user, sql, want, fragment):
+    """``ctx.sql`` returns the rows and schema of the printed form; the
+    executed form keeps a wrap wherever a name reaches its masked column."""
+    ctx = _lean_ctx(ctx)
+    printed = ctx.mixed_rewrite(user, sql)
+    executed = ctx.executed_sql(user, sql)
+    got, reference = ctx.sql(user, sql), ctx.spark.sql(printed)
+    assert got.schema == reference.schema
+    assert _rows(got) == _rows(reference)
+    if want is None:
+        assert executed == printed
+    else:
+        assert sorted(tuple(r) for r in got.collect()) == want
+        assert fragment in executed and executed != printed

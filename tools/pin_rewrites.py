@@ -4,8 +4,9 @@ Usage: python tools/pin_rewrites.py   (from the repository root)
 
 Rewrites every ``__spark_entry__._QUERIES`` text as each of the nine preset
 users of ``presets.demo_context`` through ``rewrite_row_filter``,
-``rewrite_data_mask`` and ``mixed_rewrite``, over the sf0.001 test tables,
-and writes the printed SQL to ``tests/data/corpus_rewrites.json``.
+``rewrite_data_mask``, ``mixed_rewrite`` and ``executed_sql``, over the
+sf0.001 test tables, and writes the printed SQL to
+``tests/data/corpus_rewrites.json``.
 ``tests/test_rewrite_pin.py`` checks that every rewrite still prints
 byte-identically. Regenerate the pin only for a change that means to alter
 the printed SQL, and say so with the change.
@@ -20,7 +21,8 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PIN = os.path.join(ROOT, "tests", "data", "corpus_rewrites.json")
 SF_DIR = "/root/testdata/sf0.001"
-METHODS = ("rewrite_row_filter", "rewrite_data_mask", "mixed_rewrite")
+METHODS = ("rewrite_row_filter", "rewrite_data_mask", "mixed_rewrite",
+           "executed_sql")
 
 
 def preset_users() -> list[str]:
