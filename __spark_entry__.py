@@ -11,6 +11,9 @@ Oracle notes:
   the sums engine-independent.
 - masks are emulated in DuckDB with regexp_replace chains
   (functions/masks.py duckdb_* emitters document the equivalence).
+- every other oracle emitter lives in the top-level ``oracles/`` package,
+  one module per operator family; ``oracles/common.py`` holds the DuckDB
+  idioms they share (the floor rounding rule, unit vectors, dot folds).
 """
 
 from __future__ import annotations
@@ -24,10 +27,8 @@ from flink_sql_security_spark.presets import (
     USER_NULL, demo_context,
 )
 from flink_sql_security_spark.functions import masks as _masks
-from flink_sql_security_spark.functions.text import (
-    floor_round as _floor_round,
-)
 from flink_sql_security_spark.sources import register_tables
+from oracles.common import dot as _dot, floor_round as _floor_round, unit_cte
 
 _NOBODY = "user_nobody"  # no policies: SecurityContext passes queries through
 
@@ -840,29 +841,26 @@ _DUCK_SHINGLES = (
 )
 # unit-vector CTE matching operators/similarity.unit_vectors: normalize once,
 # cosine = plain dot of unit vectors (identical op order → identical doubles)
-_DUCK_UNIT = (
-    "u AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE) / n) AS unit"
-    " FROM (SELECT vec_id, embedding,"
-    " sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS n"
-    " FROM embeddings))"
-)
+_DUCK_UNIT = unit_cte()
 # cosine finals quantize with the shared floor rule (floor_round in
 # functions/text.py) — native round() disagrees across engines when the
 # double sits within an ulp of a 6-decimal midpoint. Built FROM the
 # helper so a quantum/tie-rule change lands in one place; the {a}/{b}
 # placeholders survive the format intact.
-_DUCK_UNIT_DOT = _floor_round(
-    "list_sum(list_transform(list_zip({a}, {b}), x -> x[1] * x[2]))",
-    6, "duckdb")
+_DUCK_UNIT_DOT = _floor_round(_dot("{a}", "{b}"))
 
 
 def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]:
     from pyspark.sql import functions as F
 
     from flink_sql_security_spark.functions import text as T
+    import oracles.text
     from flink_sql_security_spark.operators import dedup as D
+    import oracles.dedup
     from flink_sql_security_spark.operators import sampling as SM
+    import oracles.sampling
     from flink_sql_security_spark.operators import similarity as S
+    import oracles.similarity
 
     def with_tables(builder):
         def call(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -888,7 +886,7 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     out["dedup_minhash_pairs"] = (
         with_tables(lambda s: D.minhash_lsh_candidate_pairs(
             docs(s), num_hashes=16, bands=4)),
-        D.minhash_lsh_duckdb_sql(_DUCK_SHINGLES, num_hashes=16, bands=4),
+        oracles.dedup.minhash_lsh_duckdb_sql(_DUCK_SHINGLES, num_hashes=16, bands=4),
     )
     # prefix-filtering exact jaccard (operators/dedup.py
     # prefix_jaccard_pairs): the SSJoin/PPJoin candidate strategy —
@@ -915,12 +913,12 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
         "          FROM hs a JOIN hs b ON a.h = b.h WHERE a.doc_id < b.doc_id"
         "          GROUP BY 1, 2) "
         "SELECT id_a, id_b, "
-        + _floor_round("n_inter / (sa.n_sh + sb.n_sh - n_inter)",
-                       6, "duckdb") + " AS jaccard "
+        + _floor_round("n_inter / (sa.n_sh + sb.n_sh - n_inter)")
+        + " AS jaccard "
         "FROM inter JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b "
         "WHERE "
-        + _floor_round("n_inter / (sa.n_sh + sb.n_sh - n_inter)",
-                       6, "duckdb") + " >= 0.05",
+        + _floor_round("n_inter / (sa.n_sh + sb.n_sh - n_inter)")
+        + " >= 0.05",
     )
     # the prefix-filtered twin answers to the same oracle verbatim
     out["dedup_jaccard_prefix"] = (out["dedup_jaccard_prefix"][0],
@@ -931,15 +929,15 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     # because the union is dominated by the big doc
     out["dedup_containment"] = (
         with_tables(lambda s: D.containment_pairs(docs(s), threshold=0.5)),
-        D.containment_pairs_duckdb_sql(_DUCK_SHINGLES, threshold=0.5),
+        oracles.dedup.containment_pairs_duckdb_sql(_DUCK_SHINGLES, threshold=0.5),
     )
     # the scale path: LSH candidate pruning then exact-Jaccard verification
     # restricted to candidates (prune-then-verify, not all co-shingled pairs)
     out["dedup_lsh_verified"] = (
         with_tables(lambda s: D.lsh_verified_jaccard_pairs(
             docs(s), num_hashes=16, bands=4, threshold=0.05)),
-        D.lsh_verified_jaccard_duckdb_sql(_DUCK_SHINGLES, num_hashes=16,
-                                          bands=4, threshold=0.05),
+        oracles.dedup.lsh_verified_jaccard_duckdb_sql(_DUCK_SHINGLES, num_hashes=16,
+                                                      bands=4, threshold=0.05),
     )
     # ingest-time dedup: the new batch (doc_id >= 250) probes the existing
     # corpus (doc_id < 250) — exact hash semi-join + asymmetric LSH→verify
@@ -947,15 +945,15 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
         with_tables(lambda s: D.incremental_dedup(
             docs(s).where("doc_id >= 250"), docs(s).where("doc_id < 250"),
             num_hashes=16, bands=4, threshold=0.05)),
-        D.incremental_dedup_duckdb_sql(250, num_hashes=16, bands=4,
-                                       threshold=0.05),
+        oracles.dedup.incremental_dedup_duckdb_sql(250, num_hashes=16, bands=4,
+                                                   threshold=0.05),
     )
     # near-dup clustering: components over the jaccard pair graph; the
     # oracle nests the pairs query inside a recursive transitive closure
     out["dedup_components"] = (
         with_tables(lambda s: D.connected_components(
             D.ngram_jaccard_pairs(docs(s), threshold=0.05))),
-        D.connected_components_duckdb_sql(out["dedup_jaccard_pairs"][1]),
+        oracles.dedup.connected_components_duckdb_sql(out["dedup_jaccard_pairs"][1]),
     )
     # the DISTRIBUTED star-contraction path forced (driver_threshold=0):
     # at test SFs the pair graph sits under the driver threshold, so
@@ -965,7 +963,7 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
         with_tables(lambda s: D.connected_components(
             D.ngram_jaccard_pairs(docs(s), threshold=0.05),
             driver_threshold=0)),
-        D.connected_components_duckdb_sql(out["dedup_jaccard_pairs"][1]),
+        oracles.dedup.connected_components_duckdb_sql(out["dedup_jaccard_pairs"][1]),
     )
     # canonical-doc selection (operators/dedup.py keep_best_per_component):
     # the step after clustering — keep the highest-quality copy per
@@ -975,8 +973,8 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
         with_tables(lambda s: D.keep_best_per_component(
             docs(s), D.ngram_jaccard_pairs(docs(s), threshold=0.05),
             T.quality_score(F.col("text")))),
-        D.keep_best_duckdb_sql(out["dedup_jaccard_pairs"][1],
-                               T.quality_score_sql("text")),
+        oracles.dedup.keep_best_duckdb_sql(out["dedup_jaccard_pairs"][1],
+                                           oracles.text.quality_score_sql("text")),
     )
 
     # eval-set decontamination: docs with doc_id % 50 == 0 stand in for the
@@ -985,20 +983,20 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
         with_tables(lambda s: D.decontaminate(
             docs(s).where("doc_id % 50 <> 0"),
             docs(s).where("doc_id % 50 = 0"), n=4)),
-        D.decontaminate_duckdb_sql("doc_id % 50 = 0", n=4),
+        oracles.dedup.decontaminate_duckdb_sql("doc_id % 50 = 0", n=4),
     )
     # Gopher-style repetition gates, computed shuffle-free per row
     out["text_repetition"] = (
         with_tables(lambda s: T.repetition_select(docs(s))),
         "SELECT doc_id, "
-        + T.repetition_sql("text")["dup_word_frac"] + " AS dup_word_frac, "
-        + T.repetition_sql("text")["dup_gram_frac"] + " AS dup_gram_frac, "
-        + T.repetition_sql("text")["top_word_frac"] + " AS top_word_frac "
+        + oracles.text.repetition_sql("text")["dup_word_frac"] + " AS dup_word_frac, "
+        + oracles.text.repetition_sql("text")["dup_gram_frac"] + " AS dup_gram_frac, "
+        + oracles.text.repetition_sql("text")["top_word_frac"] + " AS top_word_frac "
         "FROM documents",
     )
     out["dedup_simhash"] = (
         with_tables(lambda s: D.simhash(docs(s))),
-        D.simhash_duckdb_sql(),
+        oracles.dedup.simhash_duckdb_sql(),
     )
     # banded-LSH hamming pairs (Spark side); brute-force self-join oracle.
     # k=4 on 48 bits is the realistic near-dup threshold: at sf0.01 it
@@ -1007,11 +1005,11 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     # narrow ones (pigeonhole width = 48/(k+1) bits).
     out["dedup_simhash_pairs"] = (
         with_tables(lambda s: D.simhash_hamming_pairs(docs(s), max_hamming=4)),
-        D.simhash_hamming_pairs_duckdb_sql(max_hamming=4),
+        oracles.dedup.simhash_hamming_pairs_duckdb_sql(max_hamming=4),
     )
     out["split_hash_assign"] = (
         with_tables(lambda s: SM.hash_split(docs(s).select("doc_id"))),
-        SM.hash_split_duckdb_sql(select="doc_id"),
+        oracles.sampling.hash_split_duckdb_sql(select="doc_id"),
     )
     # leakage-safe split (operators/sampling.py component_safe_split):
     # assignment keys on the NEAR-DUP COMPONENT, so no dup cluster
@@ -1021,12 +1019,12 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     out["split_component_safe"] = (
         with_tables(lambda s: SM.component_safe_split(
             docs(s), D.ngram_jaccard_pairs(docs(s), threshold=0.05))),
-        SM.component_safe_split_duckdb_sql(out["dedup_jaccard_pairs"][1]),
+        oracles.sampling.component_safe_split_duckdb_sql(out["dedup_jaccard_pairs"][1]),
     )
     out["sample_hash_fraction"] = (
         with_tables(lambda s: SM.stratified_hash_sample(
             docs(s).select("doc_id", "source"), 0.25)),
-        SM.stratified_hash_sample_duckdb_sql(0.25, select="doc_id, source"),
+        oracles.sampling.stratified_hash_sample_duckdb_sql(0.25, select="doc_id, source"),
     )
     # deterministic global training shuffle: content-hash shard + in-shard
     # rank — the reproducible "shuffle the corpus into ordered shards"
@@ -1034,7 +1032,7 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     out["corpus_shard_shuffle"] = (
         with_tables(lambda s: SM.shard_shuffle(
             docs(s).select("doc_id"), n_shards=8)),
-        SM.shard_shuffle_duckdb_sql(n_shards=8),
+        oracles.sampling.shard_shuffle_duckdb_sql(n_shards=8),
     )
     # multimodal plumbing through the driver: a deterministic media table
     # derived from documents (text bytes as the opaque payload) runs the
@@ -1111,7 +1109,7 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
         with_tables(lambda s: SM.cross_split_contamination(
             docs(s), threshold=0.05)),
         "WITH pairs AS (" + out["dedup_jaccard_pairs"][1] + "), "
-        "assign AS (" + SM.hash_split_duckdb_sql(select="doc_id") + ") "
+        "assign AS (" + oracles.sampling.hash_split_duckdb_sql(select="doc_id") + ") "
         "SELECT p.id_a, a.split AS split_a, p.id_b, b.split AS split_b, "
         "p.jaccard "
         "FROM pairs p JOIN assign a ON p.id_a = a.doc_id "
@@ -1120,8 +1118,8 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     out["quota_per_source"] = (
         with_tables(lambda s: SM.per_key_quota(
             docs(s).select("doc_id", "source"), "source", n=20)),
-        SM.per_key_quota_duckdb_sql("documents", "source", n=20,
-                                    select="doc_id, source"),
+        oracles.sampling.per_key_quota_duckdb_sql("documents", "source", n=20,
+                                                  select="doc_id, source"),
     )
     # temperature-scaled domain mixing (operators/sampling.py
     # temperature_mix): per-source rate ∝ count^α — the mT5/XLM-R
@@ -1134,14 +1132,14 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     out["sample_temperature_mix"] = (
         with_tables(lambda s: SM.temperature_mix(
             docs(s), alpha=0.5, target_rows=200)),
-        SM.temperature_mix_duckdb_sql(_doc_path_t, alpha=0.5,
-                                      target_rows=200),
+        oracles.sampling.temperature_mix_duckdb_sql(_doc_path_t, alpha=0.5,
+                                                    target_rows=200),
     )
     # data mixing: fill each source's token budget in deterministic
     # content-hash order (training-recipe mixture weights, in tokens)
     out["sample_token_budget"] = (
         with_tables(lambda s: SM.token_budget_sample(docs(s), 800)),
-        SM.token_budget_sample_duckdb_sql(800),
+        oracles.sampling.token_budget_sample_duckdb_sql(800),
     )
     # mixture repeat factors: per-source fractional epochs, content-hash
     # deterministic extra-copy draw (operators/sampling.py)
@@ -1153,7 +1151,7 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
             docs(s).select("doc_id", "source",
                            F.expr(_FACTOR).alias("factor")),
             "factor")),
-        SM.epoch_upsample_duckdb_sql(
+        oracles.sampling.epoch_upsample_duckdb_sql(
             "factor",
             table=f"(SELECT doc_id, source, {_FACTOR} AS factor "
                   f"FROM documents)",
@@ -1165,19 +1163,19 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
         with_tables(lambda s: SM.weighted_sample(
             docs(s), n=200, weight_col="n_chars")
             .select("doc_id", "source", "n_chars")),
-        SM.weighted_sample_duckdb_sql(
+        oracles.sampling.weighted_sample_duckdb_sql(
             200, "n_chars", select="doc_id, source, n_chars"),
     )
     # exact-substring-dedup signal: per-doc fraction of word 6-gram spans
     # appearing in >= 2 documents (Lee et al. 2022 boilerplate detection)
     out["dedup_span_stats"] = (
         with_tables(lambda s: D.duplicate_span_stats(docs(s), n=6, min_df=2)),
-        D.duplicate_span_stats_duckdb_sql(n=6, min_df=2),
+        oracles.dedup.duplicate_span_stats_duckdb_sql(n=6, min_df=2),
     )
     # ...and the transform itself: strip the duplicated spans from the text
     out["dedup_span_trim"] = (
         with_tables(lambda s: D.trim_duplicate_spans(docs(s), n=6, min_df=2)),
-        D.trim_duplicate_spans_duckdb_sql(n=6, min_df=2),
+        oracles.dedup.trim_duplicate_spans_duckdb_sql(n=6, min_df=2),
     )
     out["emb_cosine_pairs"] = (
         with_tables(lambda s: S.cosine_pairs(emb(s), threshold=0.4)),
@@ -1200,7 +1198,7 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
         "SELECT e.vec_id, coalesce(c.component_id, e.vec_id) AS component_id,"
         " (coalesce(c.component_id, e.vec_id) = e.vec_id) AS is_kept"
         " FROM embeddings e LEFT JOIN ("
-        + D.connected_components_duckdb_sql(_dup_pairs_sql)
+        + oracles.dedup.connected_components_duckdb_sql(_dup_pairs_sql)
         + ") c ON e.vec_id = c.doc_id",
     )
     out["emb_cosine_topk"] = (
@@ -1252,7 +1250,7 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
         with_tables(lambda s: S.matryoshka_topk(
             emb(s), emb(s).where("vec_id < 12"),
             prefix_dims=32, shortlist="auto", k=5)),
-        S.matryoshka_topk_duckdb_sql(
+        oracles.similarity.matryoshka_topk_duckdb_sql(
             "embeddings", "vec_id < 12", prefix_dims=32,
             shortlist="auto", k=5),
     )
@@ -1264,7 +1262,7 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     out["emb_ann_pairs"] = (
         with_tables(lambda s: S.ann_candidate_pairs(
             emb(s), bits=4, tables=24, threshold=0.4)),
-        S.ann_candidate_pairs_duckdb_sql(bits=4, tables=24, threshold=0.4),
+        oracles.similarity.ann_candidate_pairs_duckdb_sql(bits=4, tables=24, threshold=0.4),
     )
     # IVF (centroid-probe) ANN, fully hash-checked: centroids + probe sets
     # are deterministic driver-side artifacts, so the oracle re-derives
@@ -1279,17 +1277,18 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
         with_tables(lambda s: S.ivf_topk(
             emb(s), emb(s).where("vec_id < 20"), k=5,
             n_cells=16, n_probe=12)),
-        S.ivf_topk_duckdb_sql(_emb_path, query_pred="vec_id < 20", k=5,
-                              n_cells=16, n_probe=12),
+        oracles.similarity.ivf_topk_duckdb_sql(_emb_path, query_pred="vec_id < 20", k=5,
+                                               n_cells=16, n_probe=12),
     )
     # full-corpus distributed k-means (operators/clustering.py): decimal-
     # exact centroid updates make the fit partitioning-independent, so the
     # oracle re-derives bit-identical centroids with the Python replica
     from flink_sql_security_spark.operators import clustering as CL
+    import oracles.clustering
 
     out["emb_kmeans_cells"] = (
         with_tables(lambda s: CL.kmeans_cells(emb(s), k=8, iters=3)),
-        CL.kmeans_duckdb_sql(_emb_path, k=8, iters=3),
+        oracles.clustering.kmeans_duckdb_sql(_emb_path, k=8, iters=3),
     )
     # topic-balanced subsample (operators/clustering.py
     # cluster_balanced_sample): k-means cells + the md5-ordered per-cell
@@ -1298,19 +1297,20 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     out["sample_cluster_balanced"] = (
         with_tables(lambda s: CL.cluster_balanced_sample(
             emb(s), k=8, iters=3, n_per_cell=20)),
-        CL.cluster_balanced_sample_duckdb_sql(_emb_path, k=8, iters=3,
-                                              n_per_cell=20),
+        oracles.clustering.cluster_balanced_sample_duckdb_sql(_emb_path, k=8, iters=3,
+                                                              n_per_cell=20),
     )
     # int8 scalar quantization (operators/quantize.py): exact min/max
     # codebook + fixed-op-order affine codes — engine-identical ints
     from flink_sql_security_spark.operators import quantize as QZ
+    import oracles.quantize
 
     # stringify_codes=True: the driver's pandas canonicalizer sorts columns
     # with sort_values, which raises on list-valued cells — CSV-joined codes
     # are hash-identical information and sortable on both engines.
     out["emb_quantize_int8"] = (
         with_tables(lambda s: QZ.quantize_int8(emb(s), stringify_codes=True)),
-        QZ.quantize_int8_duckdb_sql(_emb_path, stringify_codes=True),
+        oracles.quantize.quantize_int8_duckdb_sql(_emb_path, stringify_codes=True),
     )
     # product quantization (operators/pq.py): subspace codebooks train
     # deterministically on the lowest-id sample (driver numpy — the oracle
@@ -1319,6 +1319,7 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     # is the measured recall point for this corpus (0.87 @10 on random
     # vectors, the hard case — clustered spaces do far better).
     from flink_sql_security_spark.operators import pq as PQm
+    import oracles.pq
 
     _pq_books = None
 
@@ -1331,8 +1332,8 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     out["emb_pq_codes"] = (
         with_tables(lambda s: PQm.pq_encode(
             emb(s), _books(s), stringify_codes=True)),
-        PQm.pq_encode_duckdb_sql(_emb_path, m=32, k=64, iters=3,
-                                 stringify_codes=True),
+        oracles.pq.pq_encode_duckdb_sql(_emb_path, m=32, k=64, iters=3,
+                                        stringify_codes=True),
     )
     out["emb_pq_topk"] = (
         # mode='auto' is safe to drive since r9: the flat→IVF gate keys
@@ -1343,8 +1344,8 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
         with_tables(lambda s: PQm.pq_topk(
             emb(s), emb(s).where("vec_id < 10"), _books(s), k=5,
             mode="auto")),
-        PQm.pq_topk_duckdb_sql(_emb_path, query_pred="vec_id < 10",
-                               m=32, k_cb=64, iters=3, k=5),
+        oracles.pq.pq_topk_duckdb_sql(_emb_path, query_pred="vec_id < 10",
+                                      m=32, k_cb=64, iters=3, k=5),
     )
     # IVF-PQ (operators/pq.py ivfpq_topk): the coarse quantizer routes
     # code rows to cells and queries to their n_probe nearest cells, so
@@ -1370,16 +1371,16 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     out["emb_pq_reconstruct"] = (
         with_tables(lambda s: PQm.pq_reconstruct(emb(s), _books(s),
                                                  explode=True)),
-        PQm.pq_reconstruct_duckdb_sql(_emb_path, m=32, k=64, iters=3,
-                                      explode=True),
+        oracles.pq.pq_reconstruct_duckdb_sql(_emb_path, m=32, k=64, iters=3,
+                                             explode=True),
     )
     out["emb_ivfpq_topk"] = (
         with_tables(lambda s: PQm.ivfpq_topk(
             emb(s), emb(s).where("vec_id < 10"), _coarse(s), _books(s),
             k=5, n_probe=4)),
-        PQm.ivfpq_topk_duckdb_sql(_emb_path, query_pred="vec_id < 10",
-                                  m=32, k_cb=64, iters=3,
-                                  n_cells=16, n_probe=4, k=5),
+        oracles.pq.ivfpq_topk_duckdb_sql(_emb_path, query_pred="vec_id < 10",
+                                         m=32, k_cb=64, iters=3,
+                                         n_cells=16, n_probe=4, k=5),
     )
     # OPQ (operators/opq.py): Ge et al. 2013 learned rotation before
     # PQ — the rotation decorrelates the subspaces so the same code
@@ -1389,6 +1390,7 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     # (R, codebooks) with the same numpy and recomputes the rotation
     # in SQL with the identical fold + floor rule.
     from flink_sql_security_spark.operators import opq as OPQ
+    import oracles.pq
 
     _opq_art = None
 
@@ -1403,9 +1405,9 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
         with_tables(lambda s: OPQ.opq_topk(
             emb(s), emb(s).where("vec_id < 10"), _opq(s)[0], _opq(s)[1],
             k=5)),
-        OPQ.opq_topk_duckdb_sql(_emb_path, query_pred="vec_id < 10",
-                                m=8, k_cb=16, iters=2, opq_iters=2,
-                                k=5),
+        oracles.pq.opq_topk_duckdb_sql(_emb_path, query_pred="vec_id < 10",
+                                       m=8, k_cb=16, iters=2, opq_iters=2,
+                                       k=5),
     )
     # OPQ → IVF-PQ (opq_ivf_topk): the faiss "OPQ,IVF,PQ" recipe —
     # rotation fused into the one-pass encode, then the cell-keyed ADC
@@ -1423,22 +1425,23 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
         with_tables(lambda s: OPQ.opq_ivf_topk(
             emb(s), emb(s).where("vec_id < 10"), *_opq_ivf(s),
             k=5, n_probe=4)),
-        OPQ.opq_ivf_topk_duckdb_sql(_emb_path, query_pred="vec_id < 10",
-                                    m=8, k_cb=16, iters=2, opq_iters=2,
-                                    n_cells=8, n_probe=4, k=5),
+        oracles.pq.opq_ivf_topk_duckdb_sql(_emb_path, query_pred="vec_id < 10",
+                                           m=8, k_cb=16, iters=2, opq_iters=2,
+                                           n_cells=8, n_probe=4, k=5),
     )
     # JL sign projection (operators/projection.py): 64→16-dim
     # database-friendly random projection — md5-derived ±1 matrix,
     # unrolled codegen-able ± chains, zero shuffle; the pre-ANN cost
     # lever (LSH/IVF/rerank all get a 4× work cut on reduced vectors)
     from flink_sql_security_spark.operators import projection as RPJ
+    import oracles.projection
 
     # explode=True ahead of this entry's r10 windowing — see the
     # emb_pca_project note (list cells break the driver canonicalizer)
     out["emb_rp_project"] = (
         with_tables(lambda s: RPJ.rp_project(emb(s), in_dim=64,
                                              out_dim=16, explode=True)),
-        RPJ.rp_project_duckdb_sql(in_dim=64, out_dim=16, explode=True),
+        oracles.projection.rp_project_duckdb_sql(in_dim=64, out_dim=16, explode=True),
     )
     # PCA (trained, data-aware) beside the oblivious JL projection:
     # artifacts re-derived by the oracle emitter with the same numpy on
@@ -1459,8 +1462,8 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     out["emb_pca_project"] = (
         with_tables(lambda s: RPJ.pca_project(emb(s), _pca(s)[0],
                                               _pca(s)[1], explode=True)),
-        RPJ.pca_project_duckdb_sql(_emb_path, out_dim=8, sample=512,
-                                   explode=True),
+        oracles.projection.pca_project_duckdb_sql(_emb_path, out_dim=8, sample=512,
+                                                  explode=True),
     )
     # binary (sign-bit) quantization + hamming prefilter → exact rerank
     # (operators/binary.py): 32× compression, xor+bit_count scan with
@@ -1470,13 +1473,14 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     # rerank 0/2/4/8 — the expected 1-bit/dim curve; clustered
     # embedding spaces do far better.
     from flink_sql_security_spark.operators import binary as BIN
+    import oracles.binary
 
     out["emb_binary_topk"] = (
         with_tables(lambda s: BIN.hamming_topk(
             emb(s), emb(s).where("vec_id < 20"), k=5, rerank="auto",
             d=64)),
-        BIN.hamming_topk_duckdb_sql(query_pred="vec_id < 20", k=5,
-                                    rerank="auto", d=64),
+        oracles.binary.hamming_topk_duckdb_sql(query_pred="vec_id < 20", k=5,
+                                               rerank="auto", d=64),
     )
     # IVF-pruned binary search (operators/binary.py ivf_hamming_topk):
     # the coarse quantizer routes code rows to cells and queries to
@@ -1490,7 +1494,7 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
         with_tables(lambda s: BIN.ivf_hamming_topk(
             emb(s), emb(s).where("vec_id < 10"), _coarse(s), k=5,
             n_probe=4, rerank=4, d=64)),
-        BIN.ivf_hamming_topk_duckdb_sql(
+        oracles.binary.ivf_hamming_topk_duckdb_sql(
             _emb_path, query_pred="vec_id < 10", k=5, n_cells=16,
             n_probe=4, rerank=4, iters=3, d=64),
     )
@@ -1504,11 +1508,12 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     # corpus (class 0 vs rest, train): AUC 0.82, acc 0.80 @ thr 0.2 —
     # the labels genuinely correlate with the vectors.
     from flink_sql_security_spark.operators import classifier as CLF
+    import oracles.classifier
 
     out["classifier_probe_score"] = (
         with_tables(lambda s: CLF.linear_probe(emb(s), positive=0,
                                                threshold=0.2)),
-        CLF.linear_probe_duckdb_sql(_emb_path, positive=0, threshold=0.2),
+        oracles.classifier.linear_probe_duckdb_sql(_emb_path, positive=0, threshold=0.2),
     )
     # MMR diversity re-ranking (operators/retrieval.py mmr_rerank):
     # greedy maximal-marginal-relevance over the distributed exact
@@ -1516,8 +1521,8 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     # already-selected set. One applyInPandas greedy per query group
     # (shortlist cost, not corpus cost); the oracle unrolls the k
     # greedy stages as CTEs (PageRank's fixed-iteration pattern).
-    from flink_sql_security_spark.operators.retrieval import (
-        mmr_rerank, mmr_rerank_duckdb_sql)
+    from flink_sql_security_spark.operators.retrieval import mmr_rerank
+    from oracles.retrieval import mmr_rerank_duckdb_sql
 
     out["retrieval_mmr_topk"] = (
         with_tables(lambda s: mmr_rerank(
@@ -1534,23 +1539,24 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
         with_tables(lambda s: PQm.ivfpq_rerank(
             emb(s), emb(s).where("vec_id < 10"), _coarse(s), _books(s),
             k=5, n_probe=4, rerank=4)),
-        PQm.ivfpq_rerank_duckdb_sql(_emb_path, query_pred="vec_id < 10",
-                                    m=32, k_cb=64, iters=3,
-                                    n_cells=16, n_probe=4, k=5, rerank=4),
+        oracles.pq.ivfpq_rerank_duckdb_sql(_emb_path, query_pred="vec_id < 10",
+                                           m=32, k_cb=64, iters=3,
+                                           n_cells=16, n_probe=4, k=5, rerank=4),
     )
     # concat-then-chunk sequence packing (operators/packing.py): two-phase
     # integer prefix sum — no single-partition window anywhere
     from flink_sql_security_spark.operators import packing as PKG
+    import oracles.packing
 
     out["pack_sequences"] = (
         with_tables(lambda s: PKG.pack_sequences(
             docs(s), T.bpe_token_count(F.col("text")), budget=512)),
-        PKG.pack_sequences_duckdb_sql(
-            T.bpe_token_count_sql("text"), budget=512),
+        oracles.packing.pack_sequences_duckdb_sql(
+            oracles.text.bpe_token_count_sql("text"), budget=512),
     )
     # the inverse op: fixed-size overlapping context-window chunks
-    from flink_sql_security_spark.operators.corpus import (
-        chunk_tokens, chunk_tokens_duckdb_sql)
+    from flink_sql_security_spark.operators.corpus import chunk_tokens
+    from oracles.corpus import chunk_tokens_duckdb_sql
 
     out["chunk_fixed_tokens"] = (
         with_tables(lambda s: chunk_tokens(docs(s), size=32, stride=24)),
@@ -1565,8 +1571,8 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     # assignment → order-fixed re-concat) on the ' a ' token boundary,
     # where the chunk structure is non-degenerate (255/500 docs
     # multi-chunk at sf0.01); production calls pass the real delimiter.
-    from flink_sql_security_spark.operators.corpus import (
-        chunk_sentences, chunk_sentences_duckdb_sql)
+    from flink_sql_security_spark.operators.corpus import chunk_sentences
+    from oracles.corpus import chunk_sentences_duckdb_sql
 
     out["chunk_sentence_budget"] = (
         with_tables(lambda s: chunk_sentences(
@@ -1579,8 +1585,8 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     # token level; boundaries are local, so edits don't re-shift the
     # tail chunks (the edit-stability pytest pins it). Expected chunk
     # length 2^4 = 16 tokens on the ~60-token synthetic docs.
-    from flink_sql_security_spark.operators.corpus import (
-        chunk_content_defined, chunk_content_defined_duckdb_sql)
+    from flink_sql_security_spark.operators.corpus import chunk_content_defined
+    from oracles.corpus import chunk_content_defined_duckdb_sql
 
     out["chunk_content_defined"] = (
         with_tables(lambda s: chunk_content_defined(
@@ -1598,14 +1604,14 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
 
     out["text_stats"] = (
         with_tables(text_stats),
-        f"SELECT doc_id, {T.word_count_sql('text')} AS n_words, "
-        f"{T.bpe_token_count_sql('text')} AS n_bpe, "
-        f"{T.quality_score_sql('text')} AS quality FROM documents",
+        f"SELECT doc_id, {oracles.text.word_count_sql('text')} AS n_words, "
+        f"{oracles.text.bpe_token_count_sql('text')} AS n_bpe, "
+        f"{oracles.text.quality_score_sql('text')} AS quality FROM documents",
     )
     out["text_langid"] = (
         with_tables(lambda s: docs(s).select(
             "doc_id", T.lang_id(F.col("text")).alias("lang_pred"))),
-        f"SELECT doc_id, {T.lang_id_sql('text')} AS lang_pred FROM documents",
+        f"SELECT doc_id, {oracles.text.lang_id_sql('text')} AS lang_pred FROM documents",
     )
 
     # Gopher quality rules (functions/text.py gopher_flags): the
@@ -1617,7 +1623,7 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
         from flink_sql_security_spark.functions.text import gopher_select
         return gopher_select(docs(s))
 
-    from flink_sql_security_spark.functions.text import gopher_select_sql
+    from oracles.text import gopher_select_sql
     out["text_gopher_quality"] = (
         with_tables(gopher),
         gopher_select_sql("documents"),
@@ -1645,7 +1651,7 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
                      F.lit(".")).alias("text"))
         return c4_select(lined)
 
-    from flink_sql_security_spark.functions.text import c4_select_sql
+    from oracles.text import c4_select_sql
     out["text_c4_clean"] = (
         with_tables(c4),
         c4_select_sql(
@@ -1670,8 +1676,7 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
             F.regexp_replace("text", _LINE_BREAK_RE, "\n").alias("text"))
         return dedup_lines(lined)
 
-    from flink_sql_security_spark.operators.corpus import (
-        dedup_lines_duckdb_sql)
+    from oracles.corpus import dedup_lines_duckdb_sql
     out["text_line_dedup"] = (
         with_tables(line_dedup),
         dedup_lines_duckdb_sql(
@@ -1681,7 +1686,7 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     out["text_fingerprint"] = (
         with_tables(lambda s: docs(s).select(
             "doc_id", T.fingerprint(F.col("text")).alias("fp"))),
-        f"SELECT doc_id, {T.fingerprint_sql('text')} AS fp FROM documents",
+        f"SELECT doc_id, {oracles.text.fingerprint_sql('text')} AS fp FROM documents",
     )
 
     def salted(s):
@@ -1713,11 +1718,12 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     )
 
     from flink_sql_security_spark.operators import profile as P
+    import oracles.profile
     _PROF_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
     out["profile_lineitem"] = (
         with_tables(lambda s: P.profile_numeric(
             s.table("lineitem"), _PROF_COLS)),
-        P.profile_numeric_duckdb_sql("lineitem", _PROF_COLS),
+        oracles.profile.profile_numeric_duckdb_sql("lineitem", _PROF_COLS),
     )
     # exact=True pinned (not the 'auto' default): the driver row must
     # hash-match the exact quantile_cont oracle regardless of how the
@@ -1726,19 +1732,19 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     out["profile_quantiles"] = (
         with_tables(lambda s: P.profile_quantiles(
             s.table("lineitem"), _PROF_COLS, exact=True)),
-        P.profile_quantiles_duckdb_sql("lineitem", _PROF_COLS),
+        oracles.profile.profile_quantiles_duckdb_sql("lineitem", _PROF_COLS),
     )
     out["vocab_top_tokens"] = (
         with_tables(lambda s: T.top_tokens(docs(s), k=50)),
-        T.top_tokens_sql(k=50),
+        oracles.text.top_tokens_sql(k=50),
     )
     out["text_tfidf_terms"] = (
         with_tables(lambda s: T.tfidf_top_terms(docs(s), k=3)),
-        T.tfidf_top_terms_sql(k=3),
+        oracles.text.tfidf_top_terms_sql(k=3),
     )
     out["text_lm_score"] = (
         with_tables(lambda s: T.lm_score(docs(s))),
-        T.lm_score_sql(),
+        oracles.text.lm_score_sql(),
     )
 
     # ---- quality-curriculum deciles: lm scores → exact rank buckets
@@ -1746,15 +1752,15 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
     out["sample_quality_curriculum"] = (
         with_tables(lambda s: SM.rank_buckets(
             T.lm_score(docs(s)), "avg_logprob", 10, "decile")),
-        SM.rank_buckets_duckdb_sql(T.lm_score_sql(), "avg_logprob",
-                                   10, "decile"),
+        oracles.sampling.rank_buckets_duckdb_sql(oracles.text.lm_score_sql(), "avg_logprob",
+                                                 10, "decile"),
     )
 
     def cleaned(s):
         from flink_sql_security_spark.operators.corpus import clean_corpus
         return clean_corpus(docs(s))
 
-    from flink_sql_security_spark.operators.corpus import clean_corpus_duckdb_sql
+    from oracles.corpus import clean_corpus_duckdb_sql
     out["pipeline_clean_corpus"] = (
         with_tables(cleaned),
         clean_corpus_duckdb_sql(),
@@ -1785,7 +1791,7 @@ def _pipeline_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFra
         from flink_sql_security_spark.presets import USER_DOCS
         return clean_corpus(demo_context(s).table(USER_DOCS, "documents"))
 
-    from flink_sql_security_spark.operators.corpus import clean_corpus_duckdb_sql
+    from oracles.corpus import clean_corpus_duckdb_sql
     out["secured_clean_corpus"] = (
         with_tables(secured_cleaned),
         clean_corpus_duckdb_sql(
@@ -1835,8 +1841,7 @@ FROM s GROUP BY user_id, session_id
                             basket_col="l_orderkey",
                             item_col="l_partkey", min_support=2)
 
-    from flink_sql_security_spark.operators.assoc import (
-        basket_rules_duckdb_sql)
+    from oracles.assoc import basket_rules_duckdb_sql
     out["basket_rules"] = (
         with_tables(rules),
         basket_rules_duckdb_sql(
@@ -1855,8 +1860,7 @@ FROM s GROUP BY user_id, session_id
                                  basket_col="l_orderkey",
                                  item_col="l_suppkey", min_support=3)
 
-    from flink_sql_security_spark.operators.assoc import (
-        basket_rules_2to1_duckdb_sql)
+    from oracles.assoc import basket_rules_2to1_duckdb_sql
     out["basket_rules_2to1"] = (
         with_tables(rules_2to1),
         basket_rules_2to1_duckdb_sql(
@@ -1876,8 +1880,7 @@ FROM s GROUP BY user_id, session_id
                                  basket_col="l_orderkey",
                                  item_col="l_suppkey", min_support=2)
 
-    from flink_sql_security_spark.operators.assoc import (
-        basket_rules_3to1_duckdb_sql)
+    from oracles.assoc import basket_rules_3to1_duckdb_sql
     out["basket_rules_3to1"] = (
         with_tables(rules_3to1),
         basket_rules_3to1_duckdb_sql(
@@ -1891,13 +1894,14 @@ FROM s GROUP BY user_id, session_id
     # joins; deletes close intervals and emit no version. Carried
     # values only → strict.
     from flink_sql_security_spark.operators import cdc as C
+    import oracles.cdc
 
     out["cdc_scd2"] = (
         with_tables(lambda s: C.scd2_history(
             s.table("events"), ["user_id"], "ts", ["value"],
             op_col="event_type", delete_op="error",
             tiebreak_cols=["event_id"])),
-        C.scd2_history_duckdb_sql(
+        oracles.cdc.scd2_history_duckdb_sql(
             "events", ["user_id"], "ts", ["value"],
             op_col="event_type", delete_op="error",
             tiebreak_cols=["event_id"]),
@@ -1960,8 +1964,7 @@ FROM orders WHERE o_orderkey % 100 = 0
                               key_cols=["o_orderkey"],
                               tiebreak_field="pos")
 
-    from flink_sql_security_spark.sources.debezium import (
-        debezium_state_duckdb_sql)
+    from oracles.cdc import debezium_state_duckdb_sql
     out["cdc_debezium_state"] = (
         with_tables(deb_state),
         debezium_state_duckdb_sql(
@@ -1982,8 +1985,7 @@ FROM orders WHERE o_orderkey % 100 = 0
             s.table("events")
             .where("event_type = 'purchase' AND value > 100"))
 
-    from flink_sql_security_spark.operators.timeseries import (
-        retention_cohorts_sql)
+    from oracles.timeseries import retention_cohorts_sql
     out["events_retention"] = (
         with_tables(retained),
         retention_cohorts_sql(
@@ -2000,7 +2002,7 @@ FROM orders WHERE o_orderkey % 100 = 0
         return funnel(s.table("events"), ["view", "click", "purchase"],
                       within_hours=72)
 
-    from flink_sql_security_spark.operators.funnel import funnel_duckdb_sql
+    from oracles.funnel import funnel_duckdb_sql
     out["events_funnel"] = (
         with_tables(funneled),
         funnel_duckdb_sql("events", ["view", "click", "purchase"],
@@ -2019,8 +2021,7 @@ FROM orders WHERE o_orderkey % 100 = 0
                                ["view", "click", "purchase"],
                                within_hours=24)
 
-    from flink_sql_security_spark.operators.funnel import (
-        funnel_attempts_duckdb_sql)
+    from oracles.funnel import funnel_attempts_duckdb_sql
     out["events_funnel_attempts"] = (
         with_tables(funnel_per_attempt),
         funnel_attempts_duckdb_sql("events",
@@ -2042,8 +2043,7 @@ FROM orders WHERE o_orderkey % 100 = 0
                               ["view", "click", "purchase"],
                               within_hours=72)
 
-    from flink_sql_security_spark.operators.funnel import (
-        funnel_summary_duckdb_sql)
+    from oracles.funnel import funnel_summary_duckdb_sql
     out["events_funnel_summary"] = (
         with_tables(funnel_report),
         funnel_summary_duckdb_sql("events",
@@ -2263,7 +2263,7 @@ FROM orders WHERE o_orderkey % 100 = 0
             spark.conf.set("spark.sql.shuffle.partitions", sp_before)
         return spark.table(name).select("dup_key")
 
-    from flink_sql_security_spark.functions.text import fingerprint_sql
+    from oracles.text import fingerprint_sql
     out["streaming_dedup_state"] = (
         with_tables(stream_dedup_end_state),
         f"SELECT DISTINCT {fingerprint_sql('text')} AS dup_key "
@@ -2286,8 +2286,7 @@ FROM orders WHERE o_orderkey % 100 = 0
         return k_anonymize(s.table("customer"),
                            ["c_nationkey", "c_mktsegment"], k=6)
 
-    from flink_sql_security_spark.operators.privacy import (
-        anonymity_report_duckdb_sql, k_anonymize_duckdb_sql)
+    from oracles.privacy import anonymity_report_duckdb_sql, k_anonymize_duckdb_sql
     out["privacy_k_anonymize"] = (
         with_tables(k_release),
         k_anonymize_duckdb_sql("customer",
@@ -2335,8 +2334,7 @@ FROM orders WHERE o_orderkey % 100 = 0
                        _GEN_SPEC),
             _GEN_QUASI, k=3)
 
-    from flink_sql_security_spark.operators.privacy import (
-        generalization_report_duckdb_sql, generalize_duckdb_select)
+    from oracles.privacy import generalization_report_duckdb_sql, generalize_duckdb_select
     out["privacy_generalize"] = (
         with_tables(gen_release),
         k_anonymize_duckdb_sql(
@@ -2386,8 +2384,7 @@ FROM orders WHERE o_orderkey % 100 = 0
         return t_closeness_report(s.table("customer"),
                                   ["c_nationkey"], "c_mktsegment")
 
-    from flink_sql_security_spark.operators.privacy import (
-        t_closeness_report_duckdb_sql)
+    from oracles.privacy import t_closeness_report_duckdb_sql
     out["privacy_t_closeness"] = (
         with_tables(t_audit),
         t_closeness_report_duckdb_sql("customer", ["c_nationkey"],
@@ -2416,8 +2413,7 @@ FROM orders WHERE o_orderkey % 100 = 0
                       seed="r11-release-sum")
         return counts.join(sums, ["o_orderstatus", "o_orderpriority"])
 
-    from flink_sql_security_spark.operators.privacy import (
-        dp_count_duckdb_sql, dp_sum_duckdb_sql)
+    from oracles.privacy import dp_count_duckdb_sql, dp_sum_duckdb_sql
     _DP_GRP = ["o_orderstatus", "o_orderpriority"]
     out["privacy_dp_release"] = (
         with_tables(dp_release),
@@ -2437,8 +2433,7 @@ FROM orders WHERE o_orderkey % 100 = 0
             s.table("events"), value_col="value",
             group_cols=["event_type"], id_cols=["event_id"], k=3.0)
 
-    from flink_sql_security_spark.operators.profile import (
-        robust_outliers_duckdb_sql)
+    from oracles.profile import robust_outliers_duckdb_sql
     out["profile_outliers"] = (
         with_tables(outliers),
         robust_outliers_duckdb_sql(
@@ -2458,7 +2453,7 @@ FROM orders WHERE o_orderkey % 100 = 0
         ev = demo_context(s).table(USER_EVENTS, "events")
         return funnel(ev, ["view", "click", "purchase"], within_hours=72)
 
-    from flink_sql_security_spark.operators.funnel import funnel_duckdb_sql
+    from oracles.funnel import funnel_duckdb_sql
 
     out["secured_funnel"] = (
         with_tables(secured_funneled),
@@ -2625,8 +2620,7 @@ FROM orders WHERE o_orderkey % 100 = 0
             s.table("lineitem"),
             ["l_quantity", "l_extendedprice", "l_discount", "l_tax"])
 
-    from flink_sql_security_spark.operators.profile import (
-        profile_correlations_duckdb_sql)
+    from oracles.profile import profile_correlations_duckdb_sql
     out["profile_correlations"] = (
         with_tables(correlated),
         profile_correlations_duckdb_sql(
@@ -2647,8 +2641,7 @@ FROM orders WHERE o_orderkey % 100 = 0
             profile_embeddings)
         return profile_embeddings(emb(s))
 
-    from flink_sql_security_spark.operators.profile import (
-        profile_embeddings_duckdb_sql)
+    from oracles.profile import profile_embeddings_duckdb_sql
     out["emb_profile_stats"] = (
         with_tables(emb_profile),
         profile_embeddings_duckdb_sql(dim=64),
@@ -2666,8 +2659,7 @@ FROM orders WHERE o_orderkey % 100 = 0
             group_cols=["event_type"], id_cols=["event_id"],
             method="zscore")
 
-    from flink_sql_security_spark.operators.profile import (
-        feature_scale_duckdb_sql)
+    from oracles.profile import feature_scale_duckdb_sql
     out["profile_zscore"] = (
         with_tables(zscored),
         feature_scale_duckdb_sql(
@@ -2684,7 +2676,7 @@ FROM orders WHERE o_orderkey % 100 = 0
         return resample_ffill(
             s.table("events").where(F.col("event_type") == "purchase"))
 
-    from flink_sql_security_spark.operators.timeseries import resample_ffill_sql
+    from oracles.timeseries import resample_ffill_sql
     out["events_gapfill"] = (
         with_tables(gapfilled),
         resample_ffill_sql(
@@ -2702,8 +2694,7 @@ FROM orders WHERE o_orderkey % 100 = 0
             rolling_daily_stats)
         return rolling_daily_stats(s.table("events"), window_days=7)
 
-    from flink_sql_security_spark.operators.timeseries import (
-        rolling_daily_stats_sql)
+    from oracles.timeseries import rolling_daily_stats_sql
     out["events_rolling_7d"] = (
         with_tables(rolling),
         rolling_daily_stats_sql("events", window_days=7),
@@ -2758,7 +2749,7 @@ FROM orders WHERE o_orderkey % 100 = 0
     )
     out["text_pii_redact"] = (
         with_tables(pii_redacted),
-        "SELECT c_custkey, " + T.redact_pii_sql(_DUCK_BLOB)
+        "SELECT c_custkey, " + oracles.text.redact_pii_sql(_DUCK_BLOB)
         + " AS contact FROM customer",
     )
 
@@ -2778,12 +2769,13 @@ FROM orders WHERE o_orderkey % 100 = 0
     # ---- contrastive triplet mining: near-dup pairs → training triplets
     # with deterministic hash-bucketed negatives (operators/contrastive.py)
     from flink_sql_security_spark.operators import contrastive as CT
+    import oracles.contrastive
 
     out["contrastive_triplets"] = (
         with_tables(lambda s: CT.contrastive_triplets(
             D.ngram_jaccard_pairs(docs(s), threshold=0.05),
             docs(s).select("doc_id"), n_neg=2, buckets=50)),
-        CT.contrastive_triplets_duckdb_sql(
+        oracles.contrastive.contrastive_triplets_duckdb_sql(
             out["dedup_jaccard_pairs"][1],
             "SELECT doc_id FROM documents", n_neg=2, buckets=50),
     )
@@ -2792,6 +2784,7 @@ FROM orders WHERE o_orderkey % 100 = 0
     # bpe.py). Oracle re-derives the merge list from the parquet with the
     # shared driver-side loop (kmeans/IVF literal-embedding pattern).
     from flink_sql_security_spark.operators import bpe as BP
+    import oracles.bpe
 
     def bpe_tokens(s):
         d = docs(s)
@@ -2803,29 +2796,31 @@ FROM orders WHERE o_orderkey % 100 = 0
         "documents.parquet")
     out["bpe_tokens"] = (
         with_tables(bpe_tokens),
-        BP.bpe_encode_duckdb_sql(
-            BP.bpe_train_replica(_doc_path, n_merges=24)),
+        oracles.bpe.bpe_encode_duckdb_sql(
+            oracles.bpe.bpe_train_replica(_doc_path, n_merges=24)),
     )
 
     # ---- padding-efficient bucketed batching (operators/packing.py) ----
     from flink_sql_security_spark.operators import packing as PK
+    import oracles.packing
 
     out["pack_length_batches"] = (
         with_tables(lambda s: PK.length_bucketed_batches(
             docs(s).select("doc_id", "n_chars"), "n_chars", batch_docs=8)),
-        PK.length_bucketed_batches_duckdb_sql(
+        oracles.packing.length_bucketed_batches_duckdb_sql(
             "SELECT doc_id, n_chars AS n_tokens FROM documents",
             batch_docs=8),
     )
 
     # ---- cardinality sketch: deterministic HLL (operators/sketch.py) ----
     from flink_sql_security_spark.operators import sketch as SK
+    import oracles.sketch
 
     _HLL_COLS = ["l_orderkey", "l_partkey", "l_suppkey"]
     out["sketch_distinct_hll"] = (
         with_tables(lambda s: SK.approx_distinct_hll(
             s.table("lineitem"), _HLL_COLS)),
-        SK.approx_distinct_hll_duckdb_sql("lineitem", _HLL_COLS),
+        oracles.sketch.approx_distinct_hll_duckdb_sql("lineitem", _HLL_COLS),
     )
     # per-key cardinality profile (sketch.py grouped_distinct_hll):
     # mergeable registers keyed by (key, bucket) — a skewed key costs m
@@ -2833,8 +2828,8 @@ FROM orders WHERE o_orderkey % 100 = 0
     out["sketch_hll_by_key"] = (
         with_tables(lambda s: SK.grouped_distinct_hll(
             s.table("events"), "event_type", "user_id")),
-        SK.grouped_distinct_hll_duckdb_sql("events", "event_type",
-                                           "user_id"),
+        oracles.sketch.grouped_distinct_hll_duckdb_sql("events", "event_type",
+                                                       "user_id"),
     )
 
     # ---- histogram quantile sketch (operators/sketch.py): the mergeable
@@ -2843,11 +2838,12 @@ FROM orders WHERE o_orderkey % 100 = 0
     out["sketch_hist_quantiles"] = (
         with_tables(lambda s: SK.histogram_quantiles(
             s.table("lineitem"), "l_extendedprice")),
-        SK.histogram_quantiles_duckdb_sql("lineitem", "l_extendedprice"),
+        oracles.sketch.histogram_quantiles_duckdb_sql("lineitem", "l_extendedprice"),
     )
 
     # ---- Z-order layout key (operators/zorder.py) ----
     from flink_sql_security_spark.operators import zorder as Z
+    import oracles.zorder
 
     def zorder_orders(s):
         o = s.table("orders").select(
@@ -2859,7 +2855,7 @@ FROM orders WHERE o_orderkey % 100 = 0
 
     out["zorder_orders"] = (
         with_tables(zorder_orders),
-        Z.zorder_key_duckdb_sql(
+        oracles.zorder.zorder_key_duckdb_sql(
             "(SELECT o_orderkey, o_custkey, "
             "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents "
             "FROM orders)",
@@ -2876,7 +2872,7 @@ FROM orders WHERE o_orderkey % 100 = 0
             op_col="event_type", delete_op="error",
             tiebreak_cols=["event_id"])
             .select("user_id", "event_id", "ts", "event_type", "value")),
-        C.upsert_latest_duckdb_sql(
+        oracles.cdc.upsert_latest_duckdb_sql(
             "events", ["user_id"], "ts",
             select_cols=["user_id", "event_id", "ts", "event_type", "value"],
             op_col="event_type", delete_op="error",
@@ -2890,7 +2886,7 @@ FROM orders WHERE o_orderkey % 100 = 0
         with_tables(lambda s: D.source_overlap_matrix(
             D.ngram_jaccard_pairs(docs(s), threshold=0.05),
             docs(s))),
-        D.source_overlap_matrix_duckdb_sql(out["dedup_jaccard_pairs"][1]),
+        oracles.dedup.source_overlap_matrix_duckdb_sql(out["dedup_jaccard_pairs"][1]),
     )
 
     # ---- corpus snapshot diff (operators/cdc.py): version audit between
@@ -2916,7 +2912,7 @@ FROM orders WHERE o_orderkey % 100 = 0
         with_tables(lambda s: C.snapshot_diff(
             docs(s).select("doc_id", "text"), _new_version(s),
             ["doc_id"], "text")),
-        C.snapshot_diff_duckdb_sql(
+        oracles.cdc.snapshot_diff_duckdb_sql(
             "SELECT doc_id, text FROM documents", _NEW_SQL,
             ["doc_id"], "text"),
     )
@@ -2946,10 +2942,11 @@ FROM orders WHERE o_orderkey % 100 = 0
     # training-sample rewrite, PSM format, hash-gated rate + hash-drawn
     # split points (Bavarian et al. 2022) ----
     from flink_sql_security_spark.operators import corpus as CP
+    import oracles.corpus
 
     out["fim_psm_transform"] = (
         with_tables(lambda s: CP.fim_transform(docs(s), rate=0.5)),
-        CP.fim_transform_duckdb_sql("documents", rate=0.5),
+        oracles.corpus.fim_transform_duckdb_sql("documents", rate=0.5),
     )
 
     # ---- Bloom-filter decontamination (operators/sketch.py): the
@@ -2959,7 +2956,7 @@ FROM orders WHERE o_orderkey % 100 = 0
     out["sketch_bloom_decon"] = (
         with_tables(lambda s: SK.bloom_decontaminate(
             docs(s), docs(s).where(F.col("source").isin("src0", "src1")))),
-        SK.bloom_decontaminate_duckdb_sql(
+        oracles.sketch.bloom_decontaminate_duckdb_sql(
             "SELECT * FROM documents",
             "SELECT * FROM documents WHERE source IN ('src0', 'src1')"),
     )
@@ -2969,18 +2966,19 @@ FROM orders WHERE o_orderkey % 100 = 0
     # frequency ≥ 100 (one-sided error: n_est ≥ n_exact always) ----
     out["sketch_cms_tokens"] = (
         with_tables(lambda s: SK.cms_token_counts(docs(s), min_count=100)),
-        SK.cms_token_counts_duckdb_sql("documents", min_count=100),
+        oracles.sketch.cms_token_counts_duckdb_sql("documents", min_count=100),
     )
 
     # ---- DSIR importance weights (operators/dsir.py): score every doc by
     # hashed-unigram target-likeness against the English slice as the
     # target domain (Xie et al. 2023) ----
     from flink_sql_security_spark.operators import dsir as DSR
+    import oracles.dsir
 
     out["sample_dsir_weights"] = (
         with_tables(lambda s: DSR.dsir_weights(
             docs(s), docs(s).where(F.col("lang") == "en"))),
-        DSR.dsir_weights_duckdb_sql(
+        oracles.dsir.dsir_weights_duckdb_sql(
             "SELECT * FROM documents",
             "SELECT * FROM documents WHERE lang = 'en'"),
     )
@@ -2989,11 +2987,12 @@ FROM orders WHERE o_orderkey % 100 = 0
     # for a fixed probe-term bag — targeted decontamination / topic-slice
     # mining; term filter lands pre-shuffle, one exchange end-to-end ----
     from flink_sql_security_spark.operators import retrieval as RT
+    import oracles.retrieval
 
     _BM25_TERMS = ["vector", "stream", "hash"]
     out["text_bm25_topk"] = (
         with_tables(lambda s: RT.bm25_topk(docs(s), _BM25_TERMS, k=20)),
-        RT.bm25_topk_sql(_BM25_TERMS, k=20),
+        oracles.retrieval.bm25_topk_sql(_BM25_TERMS, k=20),
     )
     # BM25 from a prebuilt inverted index (build-once / probe-many — the
     # serving shape at corpus scale: tokenize once, each probe reads only
@@ -3008,7 +3007,7 @@ FROM orders WHERE o_orderkey % 100 = 0
 
     out["text_bm25_indexed"] = (
         with_tables(_bm25_indexed),
-        RT.bm25_topk_sql(_BM25_IDX_TERMS, k=20),
+        oracles.retrieval.bm25_topk_sql(_BM25_IDX_TERMS, k=20),
     )
 
     # ---- reciprocal-rank fusion (operators/retrieval.py rrf_fuse):
@@ -3033,9 +3032,9 @@ FROM orders WHERE o_orderkey % 100 = 0
         "SELECT n_id AS doc_id, rank FROM rk WHERE rank <= 50")
     out["retrieval_rrf_hybrid"] = (
         with_tables(_rrf_hybrid),
-        RT.rrf_fuse_sql(
+        oracles.retrieval.rrf_fuse_sql(
             [("lex", "SELECT doc_id, rank FROM ("
-              + RT.bm25_topk_sql(_BM25_TERMS, k=50) + ") b"),
+              + oracles.retrieval.bm25_topk_sql(_BM25_TERMS, k=50) + ") b"),
              ("sem", _rrf_sem_sql)], k0=60, k=20),
     )
 
@@ -3065,11 +3064,11 @@ FROM orders WHERE o_orderkey % 100 = 0
         "WHERE rank <= 20")
     _rrf_ham_g_sql = (
         "SELECT q_id, n_id AS vec_id, rank FROM ("
-        + BIN.hamming_topk_duckdb_sql(query_pred="vec_id < 5", k=20,
-                                      rerank=0, d=64) + ") h")
+        + oracles.binary.hamming_topk_duckdb_sql(query_pred="vec_id < 5", k=20,
+                                                 rerank=0, d=64) + ") h")
     out["retrieval_rrf_grouped"] = (
         with_tables(_rrf_grouped),
-        RT.rrf_fuse_sql(
+        oracles.retrieval.rrf_fuse_sql(
             [("cos", _rrf_cos_g_sql), ("ham", _rrf_ham_g_sql)],
             id_col="vec_id", group_col="q_id", k0=60, k=5,
             weights=[2.0, 1.0]),
@@ -3081,6 +3080,7 @@ FROM orders WHERE o_orderkey % 100 = 0
     # 18 sits in the measured gap between true near-dups (d ≤ 18) and
     # the unrelated-pair noise floor (d ≥ 19) on this corpus ----
     from flink_sql_security_spark.operators import fuzzy as FZ
+    import oracles.fuzzy
 
     def fuzzy_titles(s):
         titled = docs(s).select(
@@ -3090,7 +3090,7 @@ FROM orders WHERE o_orderkey % 100 = 0
 
     out["fuzzy_title_pairs"] = (
         with_tables(fuzzy_titles),
-        FZ.fuzzy_name_pairs_sql(
+        oracles.fuzzy.fuzzy_name_pairs_sql(
             table="(SELECT doc_id, substring(text, 1, 40) AS title "
                   "FROM documents) t",
             id_col="doc_id", name_col="title", max_dist=18),
@@ -3101,6 +3101,7 @@ FROM orders WHERE o_orderkey % 100 = 0
     # 1e6); quantized integer contributions make the distributed sums
     # order-independent, so the oracle is strict despite floats ----
     from flink_sql_security_spark.operators import graph as G
+    import oracles.graph
 
     _EDGES_SQL = (
         "WITH pairs AS (SELECT DISTINCT o.o_custkey AS c, "
@@ -3124,7 +3125,7 @@ FROM orders WHERE o_orderkey % 100 = 0
 
     out["graph_pagerank"] = (
         with_tables(trade_pagerank),
-        G.pagerank_sql(_EDGES_SQL, iters=5),
+        oracles.graph.pagerank_sql(_EDGES_SQL, iters=5),
     )
 
     # HITS on the DIRECTED bipartite trade graph (customer → supplier):
@@ -3153,7 +3154,7 @@ FROM orders WHERE o_orderkey % 100 = 0
 
     out["graph_hits"] = (
         with_tables(trade_hits),
-        G.hits_sql(_DIRECTED_EDGES_SQL, iters=3),
+        oracles.graph.hits_sql(_DIRECTED_EDGES_SQL, iters=3),
     )
 
     # Personalized PageRank: teleport to a 3-customer seed set over the
@@ -3176,7 +3177,7 @@ FROM orders WHERE o_orderkey % 100 = 0
 
     out["graph_ppr"] = (
         with_tables(trade_ppr),
-        G.pagerank_sql(_DIRECTED_EDGES_SQL, iters=4, seeds=_PPR_SEEDS),
+        oracles.graph.pagerank_sql(_DIRECTED_EDGES_SQL, iters=4, seeds=_PPR_SEEDS),
     )
 
     # Weighted PageRank: trade volume (lineitem count per customer→
@@ -3203,7 +3204,7 @@ FROM orders WHERE o_orderkey % 100 = 0
 
     out["graph_pagerank_weighted"] = (
         with_tables(trade_pagerank_weighted),
-        G.pagerank_sql(_WEIGHTED_EDGES_SQL, iters=4, weight="w"),
+        oracles.graph.pagerank_sql(_WEIGHTED_EDGES_SQL, iters=4, weight="w"),
     )
 
     # k-core of the trade graph (operators/graph.py k_core): the
@@ -3226,7 +3227,7 @@ FROM orders WHERE o_orderkey % 100 = 0
 
     out["graph_kcore"] = (
         with_tables(trade_kcore),
-        G.k_core_sql(_DIRECTED_EDGES_SQL, k=10, max_rounds=4),
+        oracles.graph.k_core_sql(_DIRECTED_EDGES_SQL, k=10, max_rounds=4),
     )
 
     # Triangle counting + local clustering coefficient over the part
@@ -3259,7 +3260,7 @@ FROM orders WHERE o_orderkey % 100 = 0
 
     out["graph_triangles"] = (
         with_tables(part_triangles),
-        G.triangle_sql(_COPURCHASE_EDGES_SQL),
+        oracles.graph.triangle_sql(_COPURCHASE_EDGES_SQL),
     )
 
     # Label-propagation communities (Raghavan et al. 2007, the
@@ -3284,7 +3285,7 @@ FROM orders WHERE o_orderkey % 100 = 0
 
     out["graph_lpa"] = (
         with_tables(part_lpa),
-        G.label_propagation_sql(_COPURCHASE_EDGES_SQL, iters=3),
+        oracles.graph.label_propagation_sql(_COPURCHASE_EDGES_SQL, iters=3),
     )
 
     # BFS hop-distance from a 3-customer seed set over the directed
@@ -3314,7 +3315,7 @@ FROM orders WHERE o_orderkey % 100 = 0
 
     out["graph_bfs"] = (
         with_tables(trade_bfs),
-        G.bfs_levels_sql(_BFS_EDGES_SQL, _BFS_SEEDS, max_hops=3),
+        oracles.graph.bfs_levels_sql(_BFS_EDGES_SQL, _BFS_SEEDS, max_hops=3),
     )
     return out
 

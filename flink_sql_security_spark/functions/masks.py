@@ -15,8 +15,11 @@ Hive semantics replicated (golden-tested):
 - ``mask_hash`` = sha256 hex (Hive ≥3)
 
 The AST-level lowering serves the SQL rewrite and, through
-``instantiate_transformer(...).sql()`` in ``F.expr``, the DataFrame path;
-DuckDB-SQL emitters serve the oracle harness.
+``instantiate_transformer(...).sql()`` in ``F.expr``, the DataFrame path.
+The ``duckdb_*`` emitters at the end are the one piece of oracle SQL left
+in the package (every other oracle lives in the top-level ``oracles/``):
+the benchmark's ``secured_scan`` check (perfbench/workloads.py) imports
+them from here to verify the masked rows.
 """
 
 from __future__ import annotations
@@ -170,7 +173,7 @@ def instantiate_transformer(template: str, column_sql: str) -> Expr:
 
 
 # --------------------------------------------------------------------------
-# DuckDB oracle emitters — same semantics in portable ANSI SQL
+# DuckDB emitters — same semantics in portable ANSI SQL (see module doc)
 # --------------------------------------------------------------------------
 
 def duckdb_mask_sql(col: str, up: Optional[str] = _DEFAULT_UPPER,

@@ -1,8 +1,8 @@
 """Text-analysis functions for training-data pipelines: language ID, quality
 scoring, token counting, document fingerprinting.
 
-Each function has a Spark Column form and a paired DuckDB SQL emitter with
-identical semantics (the oracle harness runs both). All expressions are
+Each function has a DuckDB twin with identical semantics in
+``oracles/text.py`` (the oracle harness runs both). All expressions are
 built-in string/regex functions — JVM-side, no UDFs.
 """
 
@@ -20,7 +20,7 @@ LANG_MARKERS: dict[str, list[str]] = {
     "zh": ["的", "是", "了", "在", "我"],
 }
 
-_WS = r"\s+"
+WS = r"\s+"
 _WS_SQL = r"\\s+"  # the same pattern as a SQL-string literal (escaped \)
 # BPE-ish tokenization: letter runs, digit runs, single punctuation marks
 BPE_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -28,7 +28,7 @@ BPE_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 # -- token counting --------------------------------------------------------
 
-def floor_round(expr: str, nd: int = 6, dialect: str = "spark") -> str:
+def floor_round(expr: str, nd: int = 6) -> str:
     """Engine-exact ``nd``-decimal rounding of a DOUBLE expression.
 
     ``floor(x*10^nd + 0.5)/10^nd`` instead of ``round(x, nd)``: Spark
@@ -51,11 +51,15 @@ def floor_round(expr: str, nd: int = 6, dialect: str = "spark") -> str:
     parse — and doubles only have ~15.95 significant decimal digits,
     so a finer quantum is no-op noise anyway.
     """
+    scale = floor_round_scale(nd)
+    return f"(floor(({expr}) * {scale}D + 0.5D) / {scale}D)"
+
+
+def floor_round_scale(nd: int) -> str:
+    """The ``10^nd`` quantum as a SQL numeric literal, shared with the
+    oracle form so both engines scale by the identical double."""
     _check_nd(nd)
-    scale = repr(10.0 ** nd)
-    if dialect == "spark":
-        return f"(floor(({expr}) * {scale}D + 0.5D) / {scale}D)"
-    return f"(floor(({expr}) * {scale} + 0.5) / {scale})"
+    return repr(10.0 ** nd)
 
 
 def _check_nd(nd: int) -> None:
@@ -74,11 +78,6 @@ def floor_round_py(x: float, nd: int = 6) -> float:
     _check_nd(nd)
     scale = 10.0 ** nd
     return math.floor(x * scale + 0.5) / scale
-
-
-def floor_round6(expr: str, dialect: str = "spark") -> str:
-    """6-decimal specialization of :func:`floor_round` (the common case)."""
-    return floor_round(expr, 6, dialect)
 
 
 def floor_round_col(col: Column, nd: int = 6) -> Column:
@@ -114,19 +113,11 @@ def floor_round_col(col: Column, nd: int = 6) -> Column:
 
 
 def word_count(text: Column) -> Column:
-    return F.size(F.split(F.lower(F.trim(text)), _WS))
-
-
-def word_count_sql(c: str) -> str:
-    return f"len(string_split_regex(lower(trim({c})), '{_WS}'))"
+    return F.size(F.split(F.lower(F.trim(text)), WS))
 
 
 def bpe_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(BPE_TOKEN_PATTERN), F.lit(0)))
-
-
-def bpe_token_count_sql(c: str) -> str:
-    return f"len(regexp_extract_all({c}, '{BPE_TOKEN_PATTERN}'))"
 
 
 # -- quality scoring -------------------------------------------------------
@@ -144,7 +135,7 @@ def quality_features(text: Column) -> dict[str, Column]:
     n_punct = n_chars - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
     n_stop = F.size(
         F.filter(
-            F.split(F.lower(F.trim(text)), _WS),
+            F.split(F.lower(F.trim(text)), WS),
             lambda w: w.isin(*LANG_MARKERS["en"]),
         )
     )
@@ -152,31 +143,10 @@ def quality_features(text: Column) -> dict[str, Column]:
         "n_chars": n_chars,
         "n_words": n_words,
         "mean_word_len": _ratio(
-            F.length(F.regexp_replace(F.lower(F.trim(text)), _WS, "")), n_words),
+            F.length(F.regexp_replace(F.lower(F.trim(text)), WS, "")), n_words),
         "digit_ratio": _ratio(n_digits, n_chars),
         "punct_ratio": _ratio(n_punct, n_chars),
         "stopword_ratio": _ratio(n_stop, n_words),
-    }
-
-
-def quality_features_sql(c: str) -> dict[str, str]:
-    stop_list = ", ".join(f"'{w}'" for w in LANG_MARKERS["en"])
-    n_words = word_count_sql(c)
-    return {
-        "n_chars": f"length({c})",
-        "n_words": n_words,
-        "mean_word_len": floor_round6(
-            f"length(regexp_replace(lower(trim({c})), '{_WS}', '', 'g'))"
-            f" / greatest({n_words}, 1)", "duckdb"),
-        "digit_ratio": floor_round6(
-            f"(length({c}) - length(regexp_replace({c}, '[0-9]', '', 'g')))"
-            f" / greatest(length({c}), 1)", "duckdb"),
-        "punct_ratio": floor_round6(
-            f"(length({c}) - length(regexp_replace({c}, '[^\\w\\s]', '', 'g')))"
-            f" / greatest(length({c}), 1)", "duckdb"),
-        "stopword_ratio": floor_round6(
-            f"len(list_filter(string_split_regex(lower(trim({c})), '{_WS}'),"
-            f" w -> w IN ({stop_list}))) / greatest({n_words}, 1)", "duckdb"),
     }
 
 
@@ -198,24 +168,23 @@ def quality_score(text: Column) -> Column:
     return F.expr(
         # NB: Spark SQL string literals process backslash escapes, so the
         # regex \s+ must be written \\s+ in the expression text
-        # outer rounding is floor_round6, not round(x, 6) — see the
+        # outer rounding is floor_round, not round(x, 6) — see the
         # helper's docstring for the engine-boundary rationale
         f"transform(array(split(lower(trim({sql})), '\\\\s+')), ws -> "
-        + floor_round6(
-            "0.4 * least(" + floor_round6(
+        + floor_round(
+            "0.4 * least(" + floor_round(
                 f"size(filter(ws, w -> w IN ({stops})))"
-                " / greatest(size(ws), 1)", "spark") + " * 4, 1.0d)"
-            " + 0.3 * least(" + floor_round6(
+                " / greatest(size(ws), 1)") + " * 4, 1.0d)"
+            " + 0.3 * least(" + floor_round(
                 f"length(regexp_replace(lower(trim({sql})), '\\\\s+', ''))"
-                " / greatest(size(ws), 1)", "spark") + " / 8, 1.0d)"
-            " + 0.3 * (1 - least((" + floor_round6(
+                " / greatest(size(ws), 1)") + " / 8, 1.0d)"
+            " + 0.3 * (1 - least((" + floor_round(
                 f"(length({sql}) - length(regexp_replace({sql}, '[0-9]', '')))"
-                f" / greatest(length({sql}), 1)", "spark") + " + "
-            + floor_round6(
+                f" / greatest(length({sql}), 1)") + " + "
+            + floor_round(
                 f"(length({sql}) - length(regexp_replace({sql}, '[^\\\\w\\\\s]', '')))"
-                f" / greatest(length({sql}), 1)", "spark")
-            + ") * 2, 1.0d))",
-            "spark")
+                f" / greatest(length({sql}), 1)")
+            + ") * 2, 1.0d))")
         + ")[0]"
     )
 
@@ -233,15 +202,6 @@ def _single_text_sql(text: Column) -> str:
         raise ValueError(
             f"quality_score/lang_id need a plain column reference, got {name!r}")
     return name
-
-
-def quality_score_sql(c: str) -> str:
-    f = quality_features_sql(c)
-    return floor_round6(
-        "0.4 * least(" + f["stopword_ratio"] + " * 4, 1.0)"
-        " + 0.3 * least(" + f["mean_word_len"] + " / 8, 1.0)"
-        " + 0.3 * (1 - least((" + f["digit_ratio"] + " + "
-        + f["punct_ratio"] + ") * 2, 1.0))", "duckdb")
 
 
 # -- Gopher quality rules ---------------------------------------------------
@@ -269,10 +229,10 @@ def quality_score_sql(c: str) -> str:
 # independently usable); if a profiled hot path ever needs the arrays
 # bound once, apply the `quality_score` transform-bind recipe.
 
-_GOPHER_STOPS = ("the", "be", "to", "of", "and", "that", "have", "with")
-_BULLET_RE = r"^\s*[-*•]"
-_ELLIPSIS_LINE_RE = r"(\.\.\.|…)\s*$"
-_ELLIPSIS_RE = r"\.\.\.|…"
+GOPHER_STOPS = ("the", "be", "to", "of", "and", "that", "have", "with")
+BULLET_RE = r"^\s*[-*•]"
+ELLIPSIS_LINE_RE = r"(\.\.\.|…)\s*$"
+ELLIPSIS_RE = r"\.\.\.|…"
 
 
 def gopher_flags(text: Column) -> dict[str, Column]:
@@ -283,24 +243,24 @@ def gopher_flags(text: Column) -> dict[str, Column]:
     (package rule), so the threshold comparisons — and therefore
     ``keep`` — are bit-identical on both engines.
     """
-    words = F.split(F.lower(F.trim(text)), _WS)
+    words = F.split(F.lower(F.trim(text)), WS)
     lines = F.split(text, "\n")
     n_words = F.size(words)
     n_lines = F.size(lines)
     hashes = F.length(text) - F.length(F.replace(text, F.lit("#")))
     ellipses = F.size(
-        F.regexp_extract_all(text, F.lit(_ELLIPSIS_RE), F.lit(0)))
-    bullet_lines = F.size(F.filter(lines, lambda l: l.rlike(_BULLET_RE)))
+        F.regexp_extract_all(text, F.lit(ELLIPSIS_RE), F.lit(0)))
+    bullet_lines = F.size(F.filter(lines, lambda l: l.rlike(BULLET_RE)))
     ell_lines = F.size(
-        F.filter(lines, lambda l: l.rlike(_ELLIPSIS_LINE_RE)))
+        F.filter(lines, lambda l: l.rlike(ELLIPSIS_LINE_RE)))
     alpha_words = F.size(F.filter(words, lambda w: w.rlike("[a-z]")))
     stop_hits = F.when(text.isNull(), F.lit(None).cast("int")).otherwise(
         sum(F.when(F.array_contains(words, s), 1).otherwise(0)
-            for s in _GOPHER_STOPS))
+            for s in GOPHER_STOPS))
     m = {
         "n_words": n_words,
         "mean_word_len": _ratio(
-            F.length(F.regexp_replace(F.lower(F.trim(text)), _WS, "")),
+            F.length(F.regexp_replace(F.lower(F.trim(text)), WS, "")),
             n_words),
         "symbol_word_ratio": _ratio(hashes + ellipses, n_words),
         "bullet_line_frac": _ratio(bullet_lines, n_lines),
@@ -329,53 +289,6 @@ def gopher_flags(text: Column) -> dict[str, Column]:
     return m
 
 
-def gopher_flags_sql(c: str) -> dict[str, str]:
-    """DuckDB twins of :func:`gopher_flags` (oracle emitters)."""
-    ws = f"string_split_regex(lower(trim({c})), '{_WS}')"
-    ls = f"string_split({c}, chr(10))"
-    n_words = f"len({ws})"
-    n_lines = f"len({ls})"
-    symbols = (f"(length({c}) - length(replace({c}, '#', ''))"
-               f" + len(regexp_extract_all({c}, '{_ELLIPSIS_RE}')))")
-    stop_sum = " + ".join(
-        f"(CASE WHEN list_contains({ws}, '{s}') THEN 1 ELSE 0 END)"
-        for s in _GOPHER_STOPS)
-    m = {
-        "n_words": n_words,
-        "mean_word_len": floor_round6(
-            f"length(regexp_replace(lower(trim({c})), '{_WS}', '', 'g'))"
-            f" / greatest({n_words}, 1)", "duckdb"),
-        "symbol_word_ratio": floor_round6(
-            f"{symbols} / greatest({n_words}, 1)", "duckdb"),
-        "bullet_line_frac": floor_round6(
-            f"len(list_filter({ls}, l -> regexp_matches(l, "
-            f"'{_BULLET_RE}'))) / greatest({n_lines}, 1)", "duckdb"),
-        "ellipsis_line_frac": floor_round6(
-            f"len(list_filter({ls}, l -> regexp_matches(l, "
-            f"'{_ELLIPSIS_LINE_RE}'))) / greatest({n_lines}, 1)",
-            "duckdb"),
-        "alpha_word_frac": floor_round6(
-            f"len(list_filter({ws}, w -> regexp_matches(w, '[a-z]')))"
-            f" / greatest({n_words}, 1)", "duckdb"),
-        "stop_hits": (f"CASE WHEN {c} IS NULL THEN NULL "
-                      f"ELSE ({stop_sum}) END"),
-    }
-    rules = [
-        f"{m['n_words']} >= 50 AND {m['n_words']} <= 100000",
-        f"{m['mean_word_len']} >= 3.0 AND {m['mean_word_len']} <= 10.0",
-        f"{m['symbol_word_ratio']} <= 0.1",
-        f"{m['bullet_line_frac']} <= 0.9",
-        f"{m['ellipsis_line_frac']} <= 0.3",
-        f"{m['alpha_word_frac']} >= 0.8",
-        f"({m['stop_hits']}) >= 2",
-    ]
-    m["rules_passed"] = " + ".join(
-        f"(CASE WHEN {r} THEN 1 ELSE 0 END)" for r in rules)
-    m["keep"] = ("coalesce(" + " AND ".join(f"({r})" for r in rules)
-                 + ", false)")
-    return m
-
-
 def gopher_select(df, text_col: str = "text", id_col: str = "doc_id"):
     """(id, metrics…, keep) — the per-document Gopher quality report;
     ``df.where(gopher_flags(col)['keep'])`` is the filtering form."""
@@ -387,14 +300,6 @@ def gopher_select(df, text_col: str = "text", id_col: str = "doc_id"):
     # on a corpus-sized scan, preserving the zero-exchange shape)
     return spread_partitions(df, key_col=id_col).select(
         F.col(id_col), *[v.alias(k) for k, v in flags.items()])
-
-
-def gopher_select_sql(table: str = "documents", text_col: str = "text",
-                      id_col: str = "doc_id") -> str:
-    """DuckDB SQL twin of :func:`gopher_select` (oracle)."""
-    flags = gopher_flags_sql(text_col)
-    cols = ", ".join(f"{v} AS {k}" for k, v in flags.items())
-    return f"SELECT {id_col}, {cols} FROM {table}"
 
 
 # -- C4 line-level cleaning ---------------------------------------------------
@@ -414,27 +319,18 @@ def gopher_select_sql(table: str = "documents", text_col: str = "text",
 # projection like the Gopher gate — the transform rewrites the text
 # column in place, so at 100 TB it fuses into the scan.
 
-_C4_LINE_KEEP_RE = r'[.!?"]\s*$'
-_C4_MIN_LINE_WORDS = 5
-_C4_MIN_LINES = 3
+C4_LINE_KEEP_RE = r'[.!?"]\s*$'
+C4_MIN_LINE_WORDS = 5
+C4_MIN_LINES = 3
 
 
 def _c4_kept_lines(text: Column) -> Column:
     return F.filter(
         F.split(text, "\n"),
-        lambda l: l.rlike(_C4_LINE_KEEP_RE)
-        & (F.size(F.split(F.lower(F.trim(l)), _WS))
-           >= _C4_MIN_LINE_WORDS)
+        lambda l: l.rlike(C4_LINE_KEEP_RE)
+        & (F.size(F.split(F.lower(F.trim(l)), WS))
+           >= C4_MIN_LINE_WORDS)
         & ~F.lower(l).contains("javascript"))
-
-
-def _c4_kept_lines_sql(c: str) -> str:
-    return (
-        f"list_filter(string_split({c}, chr(10)), l -> "
-        f"regexp_matches(l, '{_C4_LINE_KEEP_RE}') "
-        f"AND len(string_split_regex(lower(trim(l)), '{_WS}')) "
-        f">= {_C4_MIN_LINE_WORDS} "
-        f"AND NOT contains(lower(l), 'javascript'))")
 
 
 def c4_clean(text: Column) -> dict[str, Column]:
@@ -444,7 +340,7 @@ def c4_clean(text: Column) -> dict[str, Column]:
     gate."""
     kept = _c4_kept_lines(text)
     n_kept = F.size(kept)
-    page = (F.coalesce(n_kept >= _C4_MIN_LINES, F.lit(False))
+    page = (F.coalesce(n_kept >= C4_MIN_LINES, F.lit(False))
             & ~F.coalesce(F.lower(text).contains("lorem ipsum"),
                           F.lit(True))
             & ~F.coalesce(text.contains("{"), F.lit(True)))
@@ -456,21 +352,6 @@ def c4_clean(text: Column) -> dict[str, Column]:
     }
 
 
-def c4_clean_sql(c: str) -> dict[str, str]:
-    """DuckDB twins of :func:`c4_clean` (oracle emitters)."""
-    kept = _c4_kept_lines_sql(c)
-    page = (f"(coalesce(len({kept}) >= {_C4_MIN_LINES}, false) "
-            f"AND NOT coalesce(contains(lower({c}), 'lorem ipsum'), true) "
-            f"AND NOT coalesce(contains({c}, '{{'), true))")
-    return {
-        "clean_text": (f"CASE WHEN {page} "
-                       f"THEN array_to_string({kept}, chr(10)) END"),
-        "n_lines_kept": (f"CASE WHEN {c} IS NULL THEN NULL "
-                         f"ELSE len({kept}) END"),
-        "keep": page,
-    }
-
-
 def c4_select(df, text_col: str = "text", id_col: str = "doc_id"):
     """(id, clean_text, n_lines_kept, keep) — the C4 cleaning report;
     the corpus-transform form is
@@ -478,14 +359,6 @@ def c4_select(df, text_col: str = "text", id_col: str = "doc_id"):
     m = c4_clean(F.col(text_col))
     return df.select(F.col(id_col),
                      *[v.alias(k) for k, v in m.items()])
-
-
-def c4_select_sql(table: str = "documents", text_col: str = "text",
-                  id_col: str = "doc_id") -> str:
-    """DuckDB SQL twin of :func:`c4_select` (oracle)."""
-    m = c4_clean_sql(text_col)
-    cols = ", ".join(f"{v} AS {k}" for k, v in m.items())
-    return f"SELECT {id_col}, {cols} FROM {table}"
 
 
 # -- language identification ----------------------------------------------
@@ -506,9 +379,9 @@ def lang_id(text: Column) -> Column:
         lst = ", ".join(f"'{w}'" for w in LANG_MARKERS[lang])
         entries.append(
             f"named_struct('l', '{lang}', 's', "
-            + floor_round6(
+            + floor_round(
                 f"size(filter(ws, w -> w IN ({lst})))"
-                " / greatest(size(ws), 1)", "spark") + ")")
+                " / greatest(size(ws), 1)") + ")")
     return F.expr(
         f"transform(array(split(lower(trim({sql})), '\\\\s+')), ws -> "
         f"aggregate(array({', '.join(entries)}), "
@@ -517,33 +390,11 @@ def lang_id(text: Column) -> Column:
     )
 
 
-def lang_id_sql(c: str) -> str:
-    parts = []
-    for lang, markers in LANG_MARKERS.items():
-        lst = ", ".join(f"'{w}'" for w in markers)
-        ws = f"string_split_regex(lower(trim({c})), '{_WS}')"
-        parts.append(
-            (lang,
-             floor_round6(
-                 f"len(list_filter({ws}, w -> w IN ({lst})))"
-                 f" / greatest(len({ws}), 1)", "duckdb"))
-        )
-    best = "greatest(" + ", ".join(s for _, s in parts) + ")"
-    expr = "'und'"
-    for lang, s in sorted(parts, key=lambda x: x[0], reverse=True):
-        expr = f"CASE WHEN {s} = {best} THEN '{lang}' ELSE {expr} END"
-    return f"CASE WHEN {best} > 0 THEN {expr} ELSE 'und' END"
-
-
 # -- fingerprinting --------------------------------------------------------
 
 def fingerprint(text: Column) -> Column:
     """Content fingerprint: md5 of case/whitespace-normalized text."""
-    return F.md5(F.lower(F.regexp_replace(F.trim(text), _WS, " ")))
-
-
-def fingerprint_sql(c: str) -> str:
-    return f"md5(lower(regexp_replace(trim({c}), '{_WS}', ' ', 'g')))"
+    return F.md5(F.lower(F.regexp_replace(F.trim(text), WS, " ")))
 
 
 # -- PII redaction ---------------------------------------------------------
@@ -557,7 +408,7 @@ def fingerprint_sql(c: str) -> str:
 # IP/phone patterns could otherwise bite), CARD before PHONE (4-4-4-4
 # contains 3-3-4 substrings), IP last.
 
-_PII_PATTERNS: list[tuple[str, str]] = [
+PII_PATTERNS: list[tuple[str, str]] = [
     (r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "[EMAIL]"),
     (r"[0-9]{4}([- ][0-9]{4}){3}", "[CARD]"),
     (r"[0-9]{3}-[0-9]{2}-[0-9]{4}", "[SSN]"),
@@ -569,16 +420,8 @@ _PII_PATTERNS: list[tuple[str, str]] = [
 def redact_pii(text: Column) -> Column:
     """Replace emails / card numbers / SSNs / phones / IPv4s with tags."""
     out = text
-    for pat, tag in _PII_PATTERNS:
+    for pat, tag in PII_PATTERNS:
         out = F.regexp_replace(out, pat, tag)
-    return out
-
-
-def redact_pii_sql(c: str) -> str:
-    """DuckDB emitter producing identical redaction (oracle)."""
-    out = c
-    for pat, tag in _PII_PATTERNS:
-        out = f"regexp_replace({out}, '{pat}', '{tag}', 'g')"
     return out
 
 
@@ -607,7 +450,7 @@ def top_tokens(df, text_col: str = "text", k: int = 100,
     toks = (
         df.repartition(F.col(id_col))
         .select(F.col(id_col),
-                F.explode(F.split(F.lower(F.trim(F.col(text_col))), _WS))
+                F.explode(F.split(F.lower(F.trim(F.col(text_col))), WS))
                 .alias("token"))
         .where(F.col("token") != "")
     )
@@ -618,21 +461,6 @@ def top_tokens(df, text_col: str = "text", k: int = 100,
     return (
         counts.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-    )
-
-
-def top_tokens_sql(table: str = "documents", text_col: str = "text",
-                   k: int = 100, id_col: str = "doc_id") -> str:
-    """DuckDB SQL producing the identical vocabulary (oracle emitter)."""
-    return (
-        f"WITH toks AS (SELECT {id_col}, t.token FROM {table}, "
-        f"UNNEST(string_split_regex(lower(trim({text_col})), '{_WS}')) AS t(token) "
-        f"WHERE t.token <> ''), "
-        f"counts AS (SELECT token, count(*) AS n_total, "
-        f"count(DISTINCT {id_col}) AS n_docs FROM toks GROUP BY token), "
-        f"ranked AS (SELECT *, row_number() OVER "
-        f"(ORDER BY n_total DESC, token) AS rank FROM counts) "
-        f"SELECT token, n_total, n_docs, rank FROM ranked WHERE rank <= {k}"
     )
 
 
@@ -669,7 +497,7 @@ def tfidf_top_terms(df, text_col: str = "text", k: int = 3,
     toks = (
         spread_partitions(df, key_col=id_col, always=True)
         .select(F.col(id_col),
-                F.explode(F.split(F.lower(F.trim(F.col(text_col))), _WS))
+                F.explode(F.split(F.lower(F.trim(F.col(text_col))), WS))
                 .alias("token"))
         .where(F.col("token") != "")
     )
@@ -686,28 +514,6 @@ def tfidf_top_terms(df, text_col: str = "text", k: int = 3,
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(id_col, "token", "tf", "df", "tfidf", "rank")
-    )
-
-
-def tfidf_top_terms_sql(table: str = "documents", text_col: str = "text",
-                        k: int = 3, id_col: str = "doc_id") -> str:
-    """DuckDB SQL producing the identical per-doc tf·idf terms (oracle)."""
-    return (
-        f"WITH toks AS (SELECT {id_col}, t.token FROM {table}, "
-        f"UNNEST(string_split_regex(lower(trim({text_col})), '{_WS}')) AS t(token) "
-        f"WHERE t.token <> ''), "
-        f"tf AS (SELECT {id_col}, token, count(*) AS tf FROM toks "
-        f"GROUP BY {id_col}, token), "
-        f"dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY token), "
-        f"n AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM {table}), "
-        f"scored AS (SELECT {id_col}, tf.token, tf, df, "
-        + floor_round("tf * ln(n_docs / df)", 6, "duckdb")
-        + " AS tfidf FROM tf "
-        f"JOIN dfreq ON tf.token = dfreq.token CROSS JOIN n), "
-        f"ranked AS (SELECT *, row_number() OVER (PARTITION BY {id_col} "
-        f"ORDER BY tfidf DESC, token) AS rank FROM scored) "
-        f"SELECT {id_col}, token, tf, df, tfidf, rank FROM ranked "
-        f"WHERE rank <= {k}"
     )
 
 
@@ -750,7 +556,7 @@ def lm_score(df, text_col: str = "text", id_col: str = "doc_id"):
     # below is the expensive narrow kernel, so spread it across cores
     # (conditional: a corpus-sized scan skips the exchange entirely)
     df = spread_partitions(df, key_col=id_col)
-    words = F.split(F.lower(F.trim(F.col(text_col))), _WS)
+    words = F.split(F.lower(F.trim(F.col(text_col))), WS)
     toks = (
         df.where(F.size(words) >= 2)
         .select(F.col(id_col), F.expr(
@@ -785,33 +591,8 @@ def lm_score(df, text_col: str = "text", id_col: str = "doc_id"):
         .agg(F.count("*").alias("n_bigrams"),
              F.sum("_lp").alias("_sum"))
         .select(F.col(id_col), "n_bigrams",
-                F.expr(floor_round6("CAST(_sum AS DOUBLE) / n_bigrams",
-                                    "spark"))
+                F.expr(floor_round("CAST(_sum AS DOUBLE) / n_bigrams"))
                 .alias("avg_logprob"))
-    )
-
-
-def lm_score_sql(table: str = "documents", text_col: str = "text",
-                 id_col: str = "doc_id") -> str:
-    """DuckDB SQL producing the identical bigram-LM scores (oracle)."""
-    ws = f"string_split_regex(lower(trim({text_col})), '{_WS}')"
-    return (
-        f"WITH w AS (SELECT {id_col}, {ws} AS ws FROM {table}), "
-        f"toks AS (SELECT {id_col}, ws[i+1] AS w1, "
-        f"concat_ws(' ', ws[i+1], ws[i+2]) AS bg "
-        f"FROM w, UNNEST(range(greatest(len(ws) - 1, 0))) AS t(i)), "
-        "c2 AS (SELECT bg, count(*) AS c2 FROM toks GROUP BY bg), "
-        "c1 AS (SELECT w1, count(*) AS c1 FROM toks GROUP BY w1), "
-        f"uni AS (SELECT count(DISTINCT t.token) AS v FROM {table}, "
-        f"UNNEST({ws}) AS t(token) WHERE t.token <> ''), "
-        "lp AS (SELECT toks.{id}, CAST(".format(id=id_col)
-        + floor_round("ln((c2.c2 + 1) / CAST(c1.c1 + uni.v AS DOUBLE))",
-                      6, "duckdb")
-        + " AS DECIMAL(18,6)) AS lp "
-        "FROM toks JOIN c2 USING (bg) JOIN c1 USING (w1) CROSS JOIN uni) "
-        f"SELECT {id_col}, count(*) AS n_bigrams, "
-        + floor_round6("CAST(sum(lp) AS DOUBLE) / count(*)", "duckdb")
-        + f" AS avg_logprob FROM lp GROUP BY {id_col}"
     )
 
 
@@ -874,7 +655,7 @@ def repetition_select(df, text_col: str = "text", id_col: str = "doc_id",
     """(id, dup_word_frac, dup_gram_frac, top_word_frac) per document."""
     staged = df.select(
         F.col(id_col),
-        F.split(F.lower(F.trim(F.col(text_col))), _WS).alias("_rw"),
+        F.split(F.lower(F.trim(F.col(text_col))), WS).alias("_rw"),
     ).select(
         F.col(id_col), F.col("_rw"),
         _word_grams(F.col("_rw"), n).alias("_rg"))
@@ -885,32 +666,3 @@ def repetition_select(df, text_col: str = "text", id_col: str = "doc_id",
         m["dup_gram_frac"].alias("dup_gram_frac"),
         m["top_word_frac"].alias("top_word_frac"),
     )
-
-
-def repetition_sql(c: str, n: int = 2) -> dict[str, str]:
-    """DuckDB emitters with identical semantics (list-native, no unnest).
-
-    The most-frequent-word share is computed as a per-distinct-word count
-    scan — mathematically identical to the Spark sorted-run formulation.
-    """
-    ws = f"string_split_regex(lower(trim({c})), '{_WS}')"
-    grams = (
-        f"list_transform(range(greatest(len({ws}) - {n - 1}, 0)), "
-        f"i -> array_to_string(({ws})[i+1:i+{n}], ' '))"
-    )
-    best = (
-        f"list_max(list_transform(list_distinct({ws}), "
-        f"x -> len(list_filter({ws}, y -> y = x))))"
-    )
-    return {
-        "dup_word_frac": floor_round6(
-            f"(len({ws}) - len(list_distinct({ws})))"
-            f" / greatest(len({ws}), 1)", "duckdb"),
-        "dup_gram_frac": (
-            f"CASE WHEN len({grams}) = 0 THEN 0.0 ELSE "
-            + floor_round6(
-                f"(len({grams}) - len(list_distinct({grams})))"
-                f" / greatest(len({grams}), 1)", "duckdb") + " END"),
-        "top_word_frac": floor_round6(
-            f"{best} / greatest(len({ws}), 1)", "duckdb"),
-    }

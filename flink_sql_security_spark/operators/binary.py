@@ -50,7 +50,7 @@ from .similarity import (
 WORD_BITS = 32
 
 
-def _word_expr(vec: str, j: int, d: int, dialect: str) -> str:
+def _word_expr(vec: str, j: int, d: int) -> str:
     """Unrolled integer sum packing bits [32j, 32j+32) of ``vec``.
 
     Bit b of word j is set iff ``vec[32j+b] > 0.0`` (strict sign rule:
@@ -66,28 +66,19 @@ def _word_expr(vec: str, j: int, d: int, dialect: str) -> str:
         if i >= d:
             break
         pos = i + 1                    # both engines index arrays from 1
-        elem = (f"CAST(element_at({vec}, {pos}) AS DOUBLE)"
-                if dialect == "spark"
-                else f"CAST({vec}[{pos}] AS DOUBLE)")
-        one = f"{1 << b}L" if dialect == "spark" else \
-            f"CAST({1 << b} AS BIGINT)"
-        zero = "0L" if dialect == "spark" else "CAST(0 AS BIGINT)"
-        lit = "0.0D" if dialect == "spark" else "0.0"
-        terms.append(f"CASE WHEN {elem} > {lit} THEN {one} ELSE {zero} END")
+        terms.append(f"CASE WHEN CAST(element_at({vec}, {pos}) AS DOUBLE) "
+                     f"> 0.0D THEN {1 << b}L ELSE 0L END")
     return "(" + " + ".join(terms) + ")"
 
 
-def _n_words(d: int) -> int:
+def words_per_code(d: int) -> int:
     return (d + WORD_BITS - 1) // WORD_BITS
 
 
-def _hamming_expr(a_words: list[str], b_words: list[str],
-                  dialect: str) -> str:
+def _hamming_expr(a_words: list[str], b_words: list[str]) -> str:
     """Integer hamming distance over packed word column pairs."""
-    xor = (lambda a, b: f"({a} ^ {b})") if dialect == "spark" else \
-        (lambda a, b: f"xor({a}, {b})")
     body = " + ".join(
-        f"bit_count({xor(a, b)})" for a, b in zip(a_words, b_words))
+        f"bit_count(({a} ^ {b}))" for a, b in zip(a_words, b_words))
     return f"CAST(({body}) AS INT)"
 
 
@@ -129,7 +120,7 @@ def _exact_rerank(df: DataFrame, queries_df: DataFrame, shortlist,
     return _rank_top_k(rescored, k)
 
 
-def _shortlist_cutoff(k: int, rerank) -> str:
+def shortlist_cutoff(k: int, rerank) -> str:
     """ONE definition of the hamming-shortlist cutoff, as an
     engine-portable SQL expression (Spark and DuckDB both parse it —
     the floor_round single-definition rule). ``rerank='auto'`` sizes
@@ -147,18 +138,18 @@ def _shortlist_cutoff(k: int, rerank) -> str:
     ``sqrt``/``ceil``/``greatest`` are IEEE-exact and identical in both
     engines, so shortlist membership — and therefore every reranked
     value — stays strictly oracle-checkable."""
-    rerank = _check_rerank(rerank)  # single validation rule
+    rerank = check_rerank(rerank)  # single validation rule
     if rerank == "auto":
         return (f"greatest({8 * k}, "
                 "CAST(ceil(5.0 * sqrt(cand)) AS BIGINT))")
     return str(k * rerank)
 
 
-def _check_rerank(rerank):
+def check_rerank(rerank):
     """Validate ``rerank`` ONCE at operator entry: an int multiplier
     (``<= 0`` = no rerank) or the literal ``'auto'``. Any other string
     — including numeric strings like ``"4"`` — raises the same clear
-    message as :func:`_shortlist_cutoff` instead of being silently
+    message as :func:`shortlist_cutoff` instead of being silently
     coerced by a downstream ``int()`` (or crashing with a bare
     ``ValueError`` on non-numeric strings)."""
     if rerank == "auto":
@@ -166,38 +157,6 @@ def _check_rerank(rerank):
     if isinstance(rerank, str):
         raise ValueError(f"rerank must be an int or 'auto': {rerank!r}")
     return int(rerank)
-
-
-def _rerank_sql_parts(table: str, vec_col: str, id_col: str, k: int,
-                      rerank, round_to: int) -> list[str]:
-    """The oracle-side twin of :func:`_exact_rerank`: CTE fragments
-    appended after a ``ranked`` CTE of (q_id, n_id, hamming, rank).
-    ``rerank`` is an int multiplier or ``'auto'``
-    (:func:`_shortlist_cutoff`)."""
-    if rerank == "auto":
-        short = ("short AS (SELECT q_id, n_id FROM (SELECT q_id, n_id, "
-                 "rank, count(*) OVER (PARTITION BY q_id) AS cand "
-                 f"FROM ranked) WHERE rank <= {_shortlist_cutoff(k, rerank)})")
-    else:
-        short = (f"short AS (SELECT q_id, n_id FROM ranked "
-                 f"WHERE rank <= {_shortlist_cutoff(k, rerank)})")
-    return [
-        f"u AS (SELECT {id_col}, list_transform({vec_col}, "
-        "v -> CAST(v AS DOUBLE) / n) AS unit FROM "
-        f"(SELECT {id_col}, {vec_col}, "
-        f"sqrt(list_sum(list_transform({vec_col}, "
-        f"v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))) AS n FROM {table}))",
-        short,
-        "rescored AS (SELECT s.q_id, s.n_id, "
-        + floor_round("list_sum(list_transform(list_zip(uq.unit, un.unit), "
-                      "x -> x[1] * x[2]))", round_to, "duckdb")
-        + " AS cosine FROM short s "
-        f"JOIN u un ON un.{id_col} = s.n_id "
-        f"JOIN u uq ON uq.{id_col} = s.q_id)",
-        "final AS (SELECT q_id, n_id, cosine, row_number() OVER "
-        "(PARTITION BY q_id ORDER BY cosine DESC, n_id) AS rank "
-        "FROM rescored)",
-    ]
 
 
 def binary_codes(df: DataFrame, vec_col: str = "embedding",
@@ -223,8 +182,8 @@ def binary_codes(df: DataFrame, vec_col: str = "embedding",
     if d is None:
         d = _dim(df, vec_col)
     cols = [F.col(id_col)] + [
-        F.expr(_word_expr(vec_col, j, d, "spark")).alias(f"{prefix}{j}")
-        for j in range(_n_words(d))
+        F.expr(_word_expr(vec_col, j, d)).alias(f"{prefix}{j}")
+        for j in range(words_per_code(d))
     ]
     # the d-element CASE fold per word is heavy narrow compute; a
     # single-row-group scan runs it in ONE task (measured: the whole
@@ -238,17 +197,6 @@ def binary_codes(df: DataFrame, vec_col: str = "embedding",
     return df.select(*cols)
 
 
-def binary_codes_duckdb_sql(vec_col: str = "embedding",
-                            id_col: str = "vec_id", d: int = 64,
-                            prefix: str = "w",
-                            table: str = "embeddings") -> str:
-    """Oracle: identical packing with DuckDB list indexing."""
-    words = ", ".join(
-        f"{_word_expr(vec_col, j, d, 'duckdb')} AS {prefix}{j}"
-        for j in range(_n_words(d)))
-    return f"SELECT {id_col}, {words} FROM {table}"
-
-
 def _shortlist(ranked: DataFrame, k: int, rerank) -> DataFrame:
     """Spark-side twin of the oracle's ``short`` CTE: cut the ranked
     hamming scan to the rerank shortlist. ``'auto'`` adds the per-query
@@ -260,9 +208,9 @@ def _shortlist(ranked: DataFrame, k: int, rerank) -> DataFrame:
         return (ranked
                 .withColumn("cand",
                             F.count("*").over(Window.partitionBy("q_id")))
-                .where(F.col("rank") <= F.expr(_shortlist_cutoff(k, rerank)))
+                .where(F.col("rank") <= F.expr(shortlist_cutoff(k, rerank)))
                 .select("q_id", "n_id"))
-    return (ranked.where(F.col("rank") <= k * _check_rerank(rerank))
+    return (ranked.where(F.col("rank") <= k * check_rerank(rerank))
             .select("q_id", "n_id"))
 
 
@@ -280,7 +228,7 @@ def hamming_topk(df: DataFrame, queries_df: DataFrame,
     rank) ranks by cosine desc, n_id asc — the binary-prefilter /
     exact-refine production shape. Self-pairs are excluded.
     ``rerank='auto'`` sizes the shortlist to the per-query candidate
-    count — ``max(8·k, ceil(5·sqrt(n)))`` (:func:`_shortlist_cutoff`)
+    count — ``max(8·k, ceil(5·sqrt(n)))`` (:func:`shortlist_cutoff`)
     — so recall holds as the corpus grows instead of silently decaying
     at a fixed multiplier; the rule is computed in-plan on both
     engines, so the op stays strictly oracle-checkable.
@@ -293,17 +241,17 @@ def hamming_topk(df: DataFrame, queries_df: DataFrame,
     """
     from pyspark.sql.window import Window
 
-    rerank = _check_rerank(rerank)  # before any Spark job (_dim)
+    rerank = check_rerank(rerank)  # before any Spark job (_dim)
     if d is None:
         d = _dim(df, vec_col)
-    W = _n_words(d)
+    W = words_per_code(d)
     codes = codes_df if codes_df is not None \
         else binary_codes(df, vec_col, id_col, d=d)
     qcodes = binary_codes(queries_df, vec_col, id_col, d=d, prefix="qw",
                           spread=False) \
         .withColumnRenamed(id_col, "q_id")
     ham = _hamming_expr([f"w{j}" for j in range(W)],
-                        [f"qw{j}" for j in range(W)], "spark")
+                        [f"qw{j}" for j in range(W)])
     scan = (
         codes.crossJoin(F.broadcast(qcodes))
         .where(F.col(id_col) != F.col("q_id"))
@@ -319,44 +267,6 @@ def hamming_topk(df: DataFrame, queries_df: DataFrame,
     shortlist = _shortlist(ranked, k, rerank)
     return _exact_rerank(df, queries_df, shortlist, vec_col, id_col,
                          k, round_to)
-
-
-def hamming_topk_duckdb_sql(query_pred: str = "vec_id < 20",
-                            vec_col: str = "embedding",
-                            id_col: str = "vec_id", k: int = 5,
-                            rerank: int | str = 0, round_to: int = 6,
-                            d: int = 64,
-                            table: str = "embeddings") -> str:
-    """Pure-SQL oracle for ``hamming_topk`` — no driver-side artifacts.
-
-    Same packing, same integer hamming, same tie rules; the rerank
-    branch recomputes unit vectors and the sequential-fold dot with
-    the ``list_sum(list_transform(list_zip(...)))`` shape whose
-    engine equivalence the IVF oracle already pins.
-    """
-    W = _n_words(d)
-    words = ", ".join(
-        f"{_word_expr(vec_col, j, d, 'duckdb')} AS w{j}" for j in range(W))
-    ham = _hamming_expr([f"c.w{j}" for j in range(W)],
-                        [f"q.w{j}" for j in range(W)], "duckdb")
-    parts = [
-        f"WITH c AS (SELECT {id_col}, {words} FROM {table})",
-        f"q AS (SELECT * FROM c WHERE {query_pred})",
-        f"scan AS (SELECT q.{id_col} AS q_id, c.{id_col} AS n_id, "
-        f"{ham} AS hamming FROM c CROSS JOIN q "
-        f"WHERE c.{id_col} <> q.{id_col})",
-        "ranked AS (SELECT q_id, n_id, hamming, row_number() OVER "
-        "(PARTITION BY q_id ORDER BY hamming, n_id) AS rank FROM scan)",
-    ]
-    rerank = _check_rerank(rerank)
-    if rerank != "auto" and rerank <= 0:
-        return (", ".join(parts) +
-                f" SELECT q_id, n_id, hamming, rank FROM ranked "
-                f"WHERE rank <= {k}")
-    parts += _rerank_sql_parts(table, vec_col, id_col, k, rerank,
-                               round_to)
-    return (", ".join(parts) +
-            f" SELECT q_id, n_id, cosine, rank FROM final WHERE rank <= {k}")
 
 
 # ---------------------------------------------------------------------------
@@ -400,8 +310,8 @@ def binary_codes_with_cell(df: DataFrame, coarse: list,
     bad = (f"{vec_col} IS NULL OR size({vec_col}) != {d} OR "
            f"exists({vec_col}, v -> v IS NULL OR "
            "isnan(CAST(v AS DOUBLE)))")
-    words = [F.expr(_word_expr(vec_col, j, d, "spark")).alias(f"w{j}")
-             for j in range(_n_words(d))]
+    words = [F.expr(_word_expr(vec_col, j, d)).alias(f"w{j}")
+             for j in range(words_per_code(d))]
     cell = ("CASE WHEN " + bad + " THEN CAST(raise_error("
             "'binary_codes_with_cell: NULL/NaN elements or wrong dim — "
             "an IVF index row must exist or fail, never silently drop') "
@@ -458,14 +368,14 @@ def ivf_hamming_topk(df: DataFrame, queries_df: DataFrame, coarse: list,
     """
     from pyspark.sql.window import Window
 
-    rerank = _check_rerank(rerank)  # before any Spark job (_dim)
+    rerank = check_rerank(rerank)  # before any Spark job (_dim)
     if d is None:
         d = _dim(df, vec_col)
-    W = _n_words(d)
+    W = words_per_code(d)
     codes = codes_df if codes_df is not None else \
         binary_codes_with_cell(df, coarse, vec_col, id_col, d=d)
 
-    from .pq import _probe_cells
+    from .pq import probe_cells
 
     bc = queries_df.sparkSession.sparkContext.broadcast(
         (coarse, n_probe, d))
@@ -489,20 +399,20 @@ def ivf_hamming_topk(df: DataFrame, queries_df: DataFrame, coarse: list,
                         f"ivf_hamming_topk: NaN query elements for "
                         f"{id_col}={row[id_col]}")
                 ws = []
-                for j in range(_n_words(dd)):
+                for j in range(words_per_code(dd)):
                     w = 0
                     for b in range(WORD_BITS):
                         i = j * WORD_BITS + b
                         if i < dd and float(q[i]) > 0.0:
                             w += 1 << b
                     ws.append(w)
-                for c in _probe_cells(q, crs, p):
+                for c in probe_cells(q, crs, p):
                     q_ids.append(int(row[id_col]))
                     cells.append(int(c))
                     words.append(ws)
             out = {"q_id": pd.array(q_ids, dtype="int64"),
                    "cell": pd.array(cells, dtype="int32")}
-            for j in range(_n_words(dd)):
+            for j in range(words_per_code(dd)):
                 out[f"qw{j}"] = pd.array([w[j] for w in words],
                                          dtype="int64")
             yield pd.DataFrame(out)
@@ -516,7 +426,7 @@ def ivf_hamming_topk(df: DataFrame, queries_df: DataFrame, coarse: list,
     if _gate_probe_broadcast(queries_df, id_col, vec_col, n_probe, W):
         probes = F.broadcast(probes)
     ham = _hamming_expr([f"w{j}" for j in range(W)],
-                        [f"qw{j}" for j in range(W)], "spark")
+                        [f"qw{j}" for j in range(W)])
     scan = (
         codes.join(probes, "cell")
         .where(F.col(id_col) != F.col("q_id"))
@@ -532,91 +442,3 @@ def ivf_hamming_topk(df: DataFrame, queries_df: DataFrame, coarse: list,
     shortlist = _shortlist(ranked, k, rerank)
     return _exact_rerank(df, queries_df, shortlist, vec_col, id_col,
                          k, round_to)
-
-
-def ivf_hamming_topk_duckdb_sql(parquet_path: str,
-                                query_pred: str = "vec_id < 10",
-                                vec_col: str = "embedding",
-                                id_col: str = "vec_id", k: int = 5,
-                                n_cells: int = 16, n_probe: int = 4,
-                                rerank: int | str = 0, iters: int = 3,
-                                sample: int = 2048, round_to: int = 6,
-                                d: int = 64,
-                                table: str = "embeddings") -> str:
-    """Oracle: coarse centroids and probe sets re-derived from the
-    parquet with the SAME numpy/python code (the IVF-PQ emitter
-    pattern), cell assignment verified in SQL (first-min argmin over
-    the identical sequential-fold L2), then the cell-keyed hamming
-    scan and ranking — and the exact-cosine rerank when asked."""
-    import duckdb
-    import numpy as np
-
-    from .pq import _l2_kmeans_np, _probe_cells
-
-    con = duckdb.connect()
-    pdf = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{parquet_path}') "
-        f"ORDER BY {id_col}").df()
-    qdf = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{parquet_path}') "
-        f"WHERE {query_pred} ORDER BY {id_col}").df()
-    con.close()
-    X = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-    coarse = [[float(v) for v in c]
-              for c in _l2_kmeans_np(X[:sample], n_cells, iters)]
-    probe_rows = ", ".join(
-        f"({int(r[id_col])}, {int(c)})"
-        for _, r in qdf.iterrows()
-        for c in _probe_cells(np.asarray(r[vec_col], dtype=np.float64),
-                              coarse, n_probe))
-    if not probe_rows:
-        # a bare "VALUES" is a parse error; express the (valid) empty
-        # probe set so the oracle can still return the empty answer
-        probe_rows = "(CAST(NULL AS BIGINT), CAST(NULL AS INT))"
-
-    W = _n_words(d)
-    words = ", ".join(
-        f"{_word_expr(vec_col, j, d, 'duckdb')} AS w{j}" for j in range(W))
-    # squared-L2 to each centroid, sequential fold (list_sum == the
-    # JVM fold — the established equivalence)
-    def l2(center):
-        lits = ", ".join(repr(float(h)) for h in center)
-        return (f"list_sum(list_transform(list_zip(xd, [{lits}]), "
-                "x -> (x[1] - x[2]) * (x[1] - x[2])))")
-
-    d_aliases = ", ".join(f"{l2(c)} AS d_{i}" for i, c in enumerate(coarse))
-    argmin = "CASE "
-    for i in range(len(coarse)):
-        others = ", ".join(f"d_{j}" for j in range(len(coarse)) if j != i)
-        argmin += f"WHEN d_{i} <= least({others}) THEN {i} "
-    argmin += "END"
-    ham = _hamming_expr([f"c.w{j}" for j in range(W)],
-                        [f"p.qw{j}" for j in range(W)], "duckdb")
-    qwords = ", ".join(
-        f"{_word_expr(vec_col, j, d, 'duckdb')} AS qw{j}"
-        for j in range(W))
-    parts = [
-        f"WITH x AS (SELECT {id_col}, {vec_col}, "
-        f"list_transform({vec_col}, v -> CAST(v AS DOUBLE)) AS xd "
-        f"FROM {table})",
-        f"dists AS (SELECT {id_col}, {vec_col}, {d_aliases} FROM x)",
-        f"c AS (SELECT {id_col}, {argmin} AS cell, {words} FROM dists)",
-        f"qw AS (SELECT {id_col} AS q_id, {qwords} FROM {table} "
-        f"WHERE {query_pred})",
-        f"probes(q_id, cell) AS (VALUES {probe_rows})",
-        "p AS (SELECT probes.q_id, probes.cell, qw.* EXCLUDE (q_id) "
-        "FROM probes JOIN qw ON qw.q_id = probes.q_id)",
-        f"scan AS (SELECT p.q_id, c.{id_col} AS n_id, {ham} AS hamming "
-        f"FROM c JOIN p ON c.cell = p.cell WHERE c.{id_col} <> p.q_id)",
-        "ranked AS (SELECT q_id, n_id, hamming, row_number() OVER "
-        "(PARTITION BY q_id ORDER BY hamming, n_id) AS rank FROM scan)",
-    ]
-    rerank = _check_rerank(rerank)
-    if rerank != "auto" and rerank <= 0:
-        return (", ".join(parts) +
-                f" SELECT q_id, n_id, hamming, rank FROM ranked "
-                f"WHERE rank <= {k}")
-    parts += _rerank_sql_parts(table, vec_col, id_col, k, rerank,
-                               round_to)
-    return (", ".join(parts) +
-            f" SELECT q_id, n_id, cosine, rank FROM final WHERE rank <= {k}")

@@ -25,7 +25,7 @@ vocabulary actually TRAINED on the corpus. Classic byte-pair encoding
 
 Determinism: ties in pair frequency break lexicographically; the merge
 list is therefore a pure function of the corpus, and the DuckDB oracle
-re-derives it with :func:`bpe_train_replica` (same algorithm over the
+re-derives it with ``oracles.bpe.bpe_train_replica`` (same algorithm over the
 same parquet) and embeds the merges as literals — the kmeans/IVF
 oracle pattern.
 """
@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from collections import Counter
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 END = "</w>"
 
@@ -47,7 +47,7 @@ def _pair_counts(vocab: dict[tuple[str, ...], int]) -> Counter:
     return pc
 
 
-def _train_from_word_freqs(word_freqs: list[tuple[str, int]],
+def train_from_word_freqs(word_freqs: list[tuple[str, int]],
                            n_merges: int) -> list[tuple[str, str]]:
     """The shared driver-side merge loop (Spark path and oracle replica
     both call this — parity by construction)."""
@@ -94,24 +94,7 @@ def bpe_train(df: DataFrame, text_col: str = "text", n_merges: int = 32,
         .limit(max_vocab)
         .collect()
     )
-    return _train_from_word_freqs([(r["w"], r["f"]) for r in wf], n_merges)
-
-
-def bpe_train_replica(parquet_path: str, text_col: str = "text",
-                      n_merges: int = 32, min_freq: int = 2,
-                      max_vocab: int = 200_000) -> list[tuple[str, str]]:
-    """Oracle-side re-derivation: identical merges from the same parquet
-    via DuckDB word counts + the shared merge loop."""
-    import duckdb
-
-    rows = duckdb.sql(
-        f"SELECT w, count(*) AS f FROM ("
-        f"SELECT unnest(string_split_regex(lower(trim({text_col})), '\\s+')) AS w "
-        f"FROM read_parquet('{parquet_path}')) t "
-        f"WHERE w <> '' GROUP BY w HAVING count(*) >= {min_freq} "
-        f"ORDER BY f DESC, w LIMIT {max_vocab}"
-    ).fetchall()
-    return _train_from_word_freqs([(w, f) for w, f in rows], n_merges)
+    return train_from_word_freqs([(r["w"], r["f"]) for r in wf], n_merges)
 
 
 def _sq(s: str) -> str:
@@ -127,16 +110,7 @@ def _stream_expr_spark(text_col: str) -> str:
             f"w -> CASE WHEN w = '' THEN '' ELSE {enc} END))")
 
 
-def _stream_expr_duck(text_col: str) -> str:
-    enc = ("concat(list_aggregate(list_transform(string_split(w, ''), "
-           "c -> concat(c, '  ')), 'string_agg', ''), '</w>  ')")
-    return (f"list_aggregate(list_transform("
-            f"string_split_regex(lower(trim({text_col})), '\\s+'), "
-            f"w -> CASE WHEN w = '' THEN '' ELSE {enc} END), "
-            f"'string_agg', '')")
-
-
-def _apply_merges(stream_expr: str, merges: list[tuple[str, str]]) -> str:
+def apply_merges(stream_expr: str, merges: list[tuple[str, str]]) -> str:
     s = stream_expr
     for a, b in merges:
         s = (f"replace({s}, '{_sq(a)}  {_sq(b)}  ', "
@@ -152,7 +126,7 @@ def bpe_encode(df: DataFrame, merges: list[tuple[str, str]],
     chain is builtin ``replace`` calls, fully codegen, no shuffle."""
     from .skew import spread_partitions
 
-    s = _apply_merges(_stream_expr_spark(text_col), merges)
+    s = apply_merges(_stream_expr_spark(text_col), merges)
     # the unrolled replace chain is the heavy narrow kernel over a
     # 1-task single-row-group scan — spread small inputs (no-op at
     # corpus scale)
@@ -161,18 +135,4 @@ def bpe_encode(df: DataFrame, merges: list[tuple[str, str]],
         F.expr(f"CAST((length({s}) - length(replace({s}, '  ', ''))) / 2 "
                f"AS BIGINT)").alias("n_tokens"),
         F.expr(f"md5({s})").alias("token_fp"),
-    )
-
-
-def bpe_encode_duckdb_sql(merges: list[tuple[str, str]],
-                          table: str = "documents",
-                          text_col: str = "text",
-                          id_col: str = "doc_id") -> str:
-    """DuckDB oracle: identical stream, merges, count, and fingerprint."""
-    s = _apply_merges(_stream_expr_duck(text_col), merges)
-    return (
-        f"SELECT {id_col}, "
-        f"CAST((length({s}) - length(replace({s}, '  ', ''))) / 2 "
-        f"AS BIGINT) AS n_tokens, "
-        f"md5({s}) AS token_fp FROM {table}"
     )

@@ -52,7 +52,7 @@ from flink_sql_security_spark.functions.text import (
 _QUANT = 1.0e12
 
 
-def _quantized_gram_np(X, y):
+def quantized_gram_np(X, y):
     """(G_int, b_int): exact integer normal-equation sums of the
     AUGMENTED design matrix (bias column appended). Per-row terms are
     ``floor((x_j * x_k) * 1e12)`` / ``floor((x_j * y) * 1e12)`` in IEEE
@@ -123,7 +123,7 @@ def _solve(G, b):
     return w
 
 
-def _weights_from_sums(G_int, b_int, l2: float):
+def weights_from_sums(G_int, b_int, l2: float):
     """Integer sums → ridge weights. One canonical float path shared by
     the distributed fit and the oracle emitter: int → float64 division
     by the quantum, l2 added to every non-bias diagonal."""
@@ -173,7 +173,7 @@ def gram_partials(df: DataFrame, vec_col: str = "embedding",
             if X.size and np.isnan(X).any():
                 raise ValueError("gram_partials: NaN vector elements")
             y = (chunk[label_col].to_numpy() == positive).astype(np.float64)
-            G, b = _quantized_gram_np(X, y)
+            G, b = quantized_gram_np(X, y)
             D = d + 1
             js, ks, qs = [], [], []
 
@@ -204,30 +204,6 @@ def gram_partials(df: DataFrame, vec_col: str = "embedding",
             .agg(F.sum(F.col("qsum").cast("decimal(38,0)")).alias("qsum")))
 
 
-def gram_duckdb_sql(vec_col: str = "embedding", label_col: str = "label",
-                    positive: int = 0, d: int = 64,
-                    table: str = "embeddings") -> str:
-    """Pure-SQL oracle for ``gram_partials``: the same per-row quantized
-    terms via a double unnest-with-ordinality pair join, HUGEINT-exact
-    sums. Verifies the distributed Gram itself, not a re-derivation."""
-    return (
-        "WITH xa AS (SELECT list_append(list_transform("
-        f"{vec_col}, v -> CAST(v AS DOUBLE)), 1.0) AS xd, "
-        f"CASE WHEN {label_col} = {positive} THEN 1.0 ELSE 0.0 END AS y "
-        f"FROM {table}), "
-        f"idx AS (SELECT unnest(range(1, {d + 2})) AS i), "
-        "terms AS (SELECT ji.i - 1 AS j, ki.i - 1 AS k, "
-        "CAST(floor((xa.xd[ji.i] * xa.xd[ki.i]) * 1e12) AS BIGINT) AS q "
-        "FROM xa, idx ji, idx ki WHERE ki.i >= ji.i), "
-        "yterms AS (SELECT ji.i - 1 AS j, -1 AS k, "
-        "CAST(floor((xa.xd[ji.i] * xa.y) * 1e12) AS BIGINT) AS q "
-        "FROM xa, idx ji) "
-        "SELECT j, k, CAST(sum(q) AS DECIMAL(38,0)) AS qsum FROM "
-        "(SELECT * FROM terms UNION ALL SELECT * FROM yterms) "
-        "GROUP BY j, k"
-    )
-
-
 def ridge_fit(df: DataFrame, vec_col: str = "embedding",
               label_col: str = "label", positive: int = 0,
               l2: float = 1e-3, d: int | None = None) -> list[float]:
@@ -244,18 +220,17 @@ def ridge_fit(df: DataFrame, vec_col: str = "embedding",
         else:
             G[r["j"]][r["k"]] = int(r["qsum"])
             G[r["k"]][r["j"]] = int(r["qsum"])
-    return _weights_from_sums(G, b, l2)
+    return weights_from_sums(G, b, l2)
 
 
-def _score_expr(w: list[float], vec: str, dialect: str) -> str:
+def _score_expr(w: list[float], vec: str) -> str:
     """Unrolled left-assoc ``w·x + bias`` — identical op order on both
     engines, whole-stage-codegen friendly (no HOF fold)."""
     d = len(w) - 1
     terms = []
     for j in range(d):
-        elem = (f"CAST(element_at({vec}, {j + 1}) AS DOUBLE)"
-                if dialect == "spark" else f"CAST({vec}[{j + 1}] AS DOUBLE)")
-        terms.append(f"({repr(float(w[j]))} * {elem})")
+        terms.append(f"({repr(float(w[j]))} * "
+                     f"CAST(element_at({vec}, {j + 1}) AS DOUBLE))")
     expr = terms[0]
     for t in terms[1:]:
         expr = f"({expr} + {t})"
@@ -271,7 +246,7 @@ def linear_score(df: DataFrame, w: list[float],
     publishes — so a consumer re-deriving the gate from the visible
     score can never disagree with the emitted pred.
     """
-    s = _floor_round(_score_expr(w, vec_col, "spark"), round_to, "spark")
+    s = _floor_round(_score_expr(w, vec_col), round_to)
     return df.select(
         F.col(id_col),
         F.expr(s).alias("score"),
@@ -289,46 +264,3 @@ def linear_probe(df: DataFrame, vec_col: str = "embedding",
     if w is None:
         w = ridge_fit(df, vec_col, label_col, positive, l2)
     return linear_score(df, w, vec_col, id_col, threshold, round_to)
-
-
-def probe_weights_from_parquet(parquet_path: str,
-                               vec_col: str = "embedding",
-                               label_col: str = "label",
-                               positive: int = 0,
-                               l2: float = 1e-3) -> list[float]:
-    """Oracle-emitter replica of ``ridge_fit``: identical quantized
-    integer sums from the parquet, identical float path, identical
-    pure-Python solve → bit-identical weights."""
-    import duckdb
-    import numpy as np
-
-    con = duckdb.connect()
-    pdf = con.execute(
-        f"SELECT {vec_col}, {label_col} "
-        f"FROM read_parquet('{parquet_path}')").df()
-    con.close()
-    X = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-    y = (pdf[label_col].to_numpy() == positive).astype(np.float64)
-    G, b = _quantized_gram_np(X, y)
-    return _weights_from_sums(G, b, l2)
-
-
-def linear_probe_duckdb_sql(parquet_path: str,
-                            vec_col: str = "embedding",
-                            label_col: str = "label",
-                            id_col: str = "vec_id", positive: int = 0,
-                            l2: float = 1e-3, threshold: float = 0.5,
-                            round_to: int = 6,
-                            table: str = "embeddings") -> str:
-    """Oracle: re-derives the identical weights (see
-    ``probe_weights_from_parquet``) and verifies the distributed
-    scoring pass value-exactly against embedded literals."""
-    w = probe_weights_from_parquet(parquet_path, vec_col, label_col,
-                                   positive, l2)
-    s = _floor_round(_score_expr(w, vec_col, "duckdb"), round_to,
-                     "duckdb")
-    return (
-        f"SELECT {id_col}, {s} AS score, "
-        f"CASE WHEN {s} >= {repr(float(threshold))} THEN 1 ELSE 0 END "
-        f"AS pred FROM {table}"
-    )

@@ -38,18 +38,12 @@ from decimal import ROUND_HALF_UP, Decimal
 from pyspark.sql import DataFrame, functions as F
 
 from flink_sql_security_spark.functions.text import (
-    floor_round as _floor_round,
     floor_round_col as _floor_round_col)
 
-_SCALE = Decimal("1e-12")  # matches DECIMAL(38,12)
+SCALE = Decimal("1e-12")  # matches DECIMAL(38,12)
 
 
-def _dec(x: float) -> Decimal:
-    """Python replica of Spark's CAST(double AS DECIMAL(38,12))."""
-    return Decimal(repr(float(x))).quantize(_SCALE, rounding=ROUND_HALF_UP)
-
-
-def _centroid_array_sql(centroids: list[list[float]], dialect: str) -> str:
+def _centroid_array_sql(centroids: list[list[float]]) -> str:
     """Array-of-arrays literal for the centroid matrix.
 
     ``repr(float)`` is the shortest round-tripping decimal form, so the
@@ -57,10 +51,8 @@ def _centroid_array_sql(centroids: list[list[float]], dialect: str) -> str:
     """
     rows = ", ".join(
         "[" + ", ".join(repr(float(v)) for v in c) + "]" for c in centroids)
-    if dialect == "spark":
-        return "array" + ("(" + rows.replace("[", "array(")
-                          .replace("]", ")") + ")")
-    return "[" + rows + "]"
+    return "array" + ("(" + rows.replace("[", "array(")
+                      .replace("]", ")") + ")")
 
 
 def _dists_expr(xd_col: str, centroids: list[list[float]]) -> str:
@@ -70,7 +62,7 @@ def _dists_expr(xd_col: str, centroids: list[list[float]]) -> str:
     fold is sequential left-to-right — the exact op order the Python
     replica and the DuckDB oracle reproduce.
     """
-    cmat = _centroid_array_sql(centroids, "spark")
+    cmat = _centroid_array_sql(centroids)
     return (
         f"transform({cmat}, c -> aggregate(zip_with({xd_col}, c, "
         "(a, b) -> (a - b) * (a - b)), 0D, (s, v) -> s + v))"
@@ -148,48 +140,11 @@ def kmeans_fit(df: DataFrame, k: int = 8, iters: int = 3,
             slot[0][r["dim"]] = r["s"]
         for cell, (vec, n) in acc.items():
             nxt[cell] = [
-                float((v / n).quantize(_SCALE, rounding=ROUND_HALF_UP))
+                float((v / n).quantize(SCALE, rounding=ROUND_HALF_UP))
                 for v in vec
             ]
         centroids = nxt
     base.unpersist()
-    return centroids
-
-
-def kmeans_fit_replica(rows: list[tuple[int, list[float]]], k: int,
-                       iters: int) -> list[list[float]]:
-    """Pure-Python replica of :func:`kmeans_fit` (oracle derivation).
-
-    Same init, same sequential-fold distances, same decimal sums/means —
-    produces bit-identical centroids from the same parquet rows.
-    """
-    rows = sorted(rows, key=lambda r: r[0])
-    X = [[float(v) for v in vec] for _, vec in rows]
-    centroids = [list(x) for x in X[:k]]
-    d = len(centroids[0])
-
-    def dist(x: list[float], c: list[float]) -> float:
-        s = 0.0
-        for a, b in zip(x, c):
-            s = s + (a - b) * (a - b)
-        return s
-
-    for _ in range(iters):
-        sums: dict[int, tuple[list[Decimal], int]] = {}
-        for x in X:
-            ds = [dist(x, c) for c in centroids]
-            cell = ds.index(min(ds))
-            slot = sums.setdefault(cell, ([Decimal(0)] * d, 0))
-            for i, v in enumerate(x):
-                slot[0][i] += _dec(v)
-            sums[cell] = (slot[0], slot[1] + 1)
-        nxt = [list(c) for c in centroids]
-        for cell, (vec, n) in sums.items():
-            nxt[cell] = [
-                float((v / n).quantize(_SCALE, rounding=ROUND_HALF_UP))
-                for v in vec
-            ]
-        centroids = nxt
     return centroids
 
 
@@ -209,35 +164,6 @@ def kmeans_cells(df: DataFrame, k: int = 8, iters: int = 3,
     return kmeans_assign(df, centroids, vec_col, id_col).select(
         id_col, "cell",
         _floor_round_col(F.col("dist"), round_to).alias("dist"))
-
-
-def kmeans_duckdb_sql(parquet_path: str, k: int = 8, iters: int = 3,
-                      vec_col: str = "embedding", id_col: str = "vec_id",
-                      round_to: int = 6) -> str:
-    """DuckDB oracle: re-derives the centroids with the pure-Python replica
-    from the same parquet file, embeds them as literals, and recomputes the
-    assignment with ``list``-function arithmetic in the same op order."""
-    import duckdb
-
-    con = duckdb.connect()
-    rows = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{parquet_path}') "
-        f"ORDER BY {id_col}").fetchall()
-    con.close()
-    centroids = kmeans_fit_replica(rows, k, iters)
-    cmat = _centroid_array_sql(centroids, "duckdb")
-    return (
-        f"WITH x AS (SELECT {id_col}, "
-        f"list_transform({vec_col}, v -> CAST(v AS DOUBLE)) AS xd "
-        f"FROM embeddings), "
-        f"d AS (SELECT {id_col}, list_transform({cmat}, "
-        "c -> list_sum(list_transform(list_zip(xd, c), "
-        "p -> (p[1] - p[2]) * (p[1] - p[2])))) AS dists FROM x) "
-        f"SELECT {id_col}, "
-        "CAST(list_position(dists, list_min(dists)) AS INT) - 1 AS cell, "
-        + _floor_round("list_min(dists)", round_to, "duckdb")
-        + " AS dist FROM d"
-    )
 
 
 def cluster_balanced_sample(df: DataFrame, vec_col: str = "embedding",
@@ -263,41 +189,3 @@ def cluster_balanced_sample(df: DataFrame, vec_col: str = "embedding",
     cells = kmeans_assign(df, centroids, vec_col, id_col) \
         .select(id_col, "cell")
     return per_key_quota(cells, "cell", id_col, n_per_cell, salt)
-
-
-def cluster_balanced_sample_duckdb_sql(parquet_path: str, k: int = 8,
-                                       iters: int = 3,
-                                       n_per_cell: int = 10,
-                                       vec_col: str = "embedding",
-                                       id_col: str = "vec_id",
-                                       salt: str = "balance",
-                                       table: str = "embeddings") -> str:
-    """Oracle: centroids re-derive with the pure-Python replica, cell
-    assignment verifies in SQL (first-min argmin over the identical
-    sequential-fold L2), then the identical md5-ordered quota window."""
-    import duckdb
-
-    con = duckdb.connect()
-    rows = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{parquet_path}') "
-        f"ORDER BY {id_col}").fetchall()
-    con.close()
-    centroids = kmeans_fit_replica(rows, k, iters)
-    cmat = _centroid_array_sql(centroids, "duckdb")
-    return (
-        f"WITH x AS (SELECT {id_col}, "
-        f"list_transform({vec_col}, v -> CAST(v AS DOUBLE)) AS xd "
-        f"FROM {table}), "
-        f"d AS (SELECT {id_col}, list_transform({cmat}, "
-        "c -> list_sum(list_transform(list_zip(xd, c), "
-        "p -> (p[1] - p[2]) * (p[1] - p[2])))) AS dists FROM x), "
-        f"cells AS (SELECT {id_col}, "
-        "CAST(list_position(dists, list_min(dists)) AS INT) - 1 AS cell "
-        "FROM d) "
-        f"SELECT {id_col}, cell FROM ("
-        f" SELECT {id_col}, cell, row_number() OVER ("
-        f"  PARTITION BY cell"
-        f"  ORDER BY md5(CAST({id_col} AS VARCHAR) || ':{salt}') ASC,"
-        f"  {id_col} ASC) AS rn"
-        f" FROM cells) q WHERE rn <= {n_per_cell}"
-    )

@@ -36,7 +36,7 @@ from flink_sql_security_spark.functions.text import (
 
 from flink_sql_security_spark.operators.cache import attach, cached_deps
 
-__all__ = ["dsir_weights", "dsir_select", "dsir_weights_duckdb_sql"]
+__all__ = ["dsir_weights", "dsir_select"]
 
 DSIR_BUCKETS = 1 << 13
 
@@ -109,7 +109,7 @@ def dsir_weights(corpus: DataFrame, target: DataFrame,
                     f"CAST((coalesce(ct, 0) + 1) * (q_total + {buckets})"
                     f" AS DOUBLE)"
                     f" / CAST((cq + 1) * (t_total + {buckets}) AS DOUBLE)"
-                    f")", 6, "spark")
+                    f")", 6)
                 + " AS DECIMAL(18,6))").alias("lr"))
     )
     return attach(
@@ -121,7 +121,7 @@ def dsir_weights(corpus: DataFrame, target: DataFrame,
              F.expr("round(CAST(sum(n * lr) AS DOUBLE), 6)")  # native-round-ok
              .alias("weight"))
         .withColumn("per_tok",
-                    F.expr(_floor_round("weight / n_feats", 6, "spark"))),
+                    F.expr(_floor_round("weight / n_feats", 6))),
         db)
 
 
@@ -137,38 +137,3 @@ def dsir_select(corpus: DataFrame, target: DataFrame, n: int,
         .orderBy(F.col("per_tok").desc(), F.col(id_col).asc())
         .limit(n),
         *cached_deps(w))
-
-
-def dsir_weights_duckdb_sql(corpus_sql: str, target_sql: str,
-                            id_col: str = "doc_id", text_col: str = "text",
-                            buckets: int = DSIR_BUCKETS) -> str:
-    """DuckDB SQL computing identical (id, n_feats, weight) rows."""
-    tok = (f"unnest(string_split_regex(lower(trim({text_col})), '\\s+'))"
-           f" AS _tok")
-    b = (f"CAST(concat('0x', substring(md5(_tok), 1, 15)) AS BIGINT)"
-         f" % {buckets}")
-    lr_floor = _floor_round(
-        "ln("
-        f"CAST((coalesce(ct, 0) + 1) * (q_total + {buckets}) AS DOUBLE)"
-        f" / CAST((cq + 1) * (t_total + {buckets}) AS DOUBLE)"
-        ")", 6, "duckdb")
-    per_tok_floor = _floor_round("weight / n_feats", 6, "duckdb")
-    # the weight round below stays native-round-ok: sum(lr) is exact
-    # DECIMAL(18,6) arithmetic (== Spark's sum(n*lr) over buckets), so
-    # round-6 of its double cast is idempotent re-quantization
-    return f"""
-WITH cw AS (SELECT {id_col}, {b} AS bucket FROM
-            (SELECT {id_col}, {tok} FROM ({corpus_sql}))),
-tw AS (SELECT {b} AS bucket FROM (SELECT {tok} FROM ({target_sql}))),
-ct AS (SELECT bucket, count(*) AS ct FROM tw GROUP BY 1),
-cq AS (SELECT bucket, count(*) AS cq FROM cw GROUP BY 1),
-tt AS (SELECT sum(ct) AS t_total FROM ct),
-qt AS (SELECT sum(cq) AS q_total FROM cq),
-lr AS (SELECT bucket,
-              CAST({lr_floor} AS DECIMAL(18,6)) AS lr
-       FROM cq LEFT JOIN ct USING (bucket), tt, qt)
-SELECT {id_col}, n_feats, weight, {per_tok_floor} AS per_tok
-FROM (SELECT cw.{id_col}, CAST(count(*) AS BIGINT) AS n_feats,
-             round(CAST(sum(lr) AS DOUBLE), 6) AS weight -- native-round-ok
-      FROM cw JOIN lr USING (bucket) GROUP BY 1)
-"""

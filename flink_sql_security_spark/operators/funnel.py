@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def _check_steps(steps) -> list[str]:
+def check_steps(steps) -> list[str]:
     steps = list(steps)
     if len(steps) < 2:
         raise ValueError(f"funnel needs >= 2 steps: {steps!r}")
@@ -68,7 +68,7 @@ def funnel(events: DataFrame, steps, *, user_col: str = "user_id",
            within_hours: int | None = None) -> DataFrame:
     """(user, step_1_ts … step_k_ts, depth) per entity that entered the
     funnel (has ≥1 step-1 event)."""
-    steps = _check_steps(steps)
+    steps = check_steps(steps)
     ev = events.select(F.col(user_col).alias("user_id"),
                        F.col(ts_col).alias("ts"),
                        F.col(type_col).alias("et"))
@@ -95,41 +95,6 @@ def funnel(events: DataFrame, steps, *, user_col: str = "user_id",
         (F.col(c).isNotNull().cast("int") for c in ts_cols),
         F.lit(0))
     return cur.select("user_id", *ts_cols, depth.alias("depth"))
-
-
-def funnel_duckdb_sql(table: str, steps, *, user_col: str = "user_id",
-                      ts_col: str = "ts", type_col: str = "event_type",
-                      within_hours: int | None = None) -> str:
-    """DuckDB SQL twin of :func:`funnel` (oracle): the identical
-    per-step earliest-after-previous min chain."""
-    steps = _check_steps(steps)
-    parts = [
-        f"WITH ev AS (SELECT {user_col} AS user_id, {ts_col} AS ts, "
-        f"{type_col} AS et FROM {table})",
-        f"s1 AS (SELECT user_id, min(ts) AS step_1_ts FROM ev "
-        f"WHERE et = '{steps[0]}' GROUP BY user_id)",
-    ]
-    prev = "s1"
-    prev_col = "step_1_ts"
-    for i, step in enumerate(steps[1:], start=2):
-        horizon = ""
-        if within_hours is not None:
-            horizon = (f" AND e.ts <= p.step_1_ts "
-                       f"+ INTERVAL {int(within_hours)} HOUR")
-        parts.append(
-            f"s{i} AS (SELECT p.*, m.step_{i}_ts FROM {prev} p "
-            f"LEFT JOIN (SELECT p.user_id, min(e.ts) AS step_{i}_ts "
-            f"FROM {prev} p JOIN ev e ON e.user_id = p.user_id "
-            f"AND e.et = '{step}' AND e.ts > p.{prev_col}{horizon} "
-            f"GROUP BY p.user_id) m ON m.user_id = p.user_id)")
-        prev = f"s{i}"
-        prev_col = f"step_{i}_ts"
-    ts_cols = [f"step_{i}_ts" for i in range(1, len(steps) + 1)]
-    depth = " + ".join(
-        f"(CASE WHEN {c} IS NOT NULL THEN 1 ELSE 0 END)" for c in ts_cols)
-    return (", ".join(parts)
-            + f" SELECT user_id, {', '.join(ts_cols)}, "
-            f"CAST({depth} AS INTEGER) AS depth FROM {prev}")
 
 
 def funnel_attempts(events: DataFrame, steps, *,
@@ -171,7 +136,7 @@ def funnel_attempts(events: DataFrame, steps, *,
     also reachable from depth-1 of the funnel itself (first-touch
     conversion is unaffected — s1's earliest row always survives).
     """
-    steps = _check_steps(steps)
+    steps = check_steps(steps)
     ev = events.select(F.col(user_col).alias("user_id"),
                        F.col(ts_col).alias("ts"),
                        F.col(type_col).alias("et"))
@@ -210,56 +175,6 @@ def funnel_attempts(events: DataFrame, steps, *,
     return cur.select("user_id", *ts_cols, depth.alias("depth"))
 
 
-def funnel_attempts_duckdb_sql(table: str, steps, *,
-                               user_col: str = "user_id",
-                               ts_col: str = "ts",
-                               type_col: str = "event_type",
-                               within_hours: int | None = None,
-                               max_attempts: int | None = 1000) -> str:
-    """DuckDB SQL twin of :func:`funnel_attempts` (oracle): the
-    identical per-(user, entry) earliest-after-previous min chain,
-    including the identical earliest-``max_attempts`` entry cap."""
-    steps = _check_steps(steps)
-    s1 = (f"SELECT DISTINCT user_id, ts AS step_1_ts FROM ev "
-          f"WHERE et = '{steps[0]}'")
-    if max_attempts is not None:
-        if max_attempts < 1:
-            raise ValueError(
-                f"max_attempts must be >= 1 or None: {max_attempts}")
-        s1 = (f"SELECT user_id, step_1_ts FROM (SELECT user_id, "
-              f"step_1_ts, row_number() OVER (PARTITION BY user_id "
-              f"ORDER BY step_1_ts) AS rn FROM ({s1})) "
-              f"WHERE rn <= {max_attempts}")
-    parts = [
-        f"WITH ev AS (SELECT {user_col} AS user_id, {ts_col} AS ts, "
-        f"{type_col} AS et FROM {table})",
-        f"s1 AS ({s1})",
-    ]
-    prev = "s1"
-    prev_col = "step_1_ts"
-    for i, step in enumerate(steps[1:], start=2):
-        horizon = ""
-        if within_hours is not None:
-            horizon = (f" AND e.ts <= p.step_1_ts "
-                       f"+ INTERVAL {int(within_hours)} HOUR")
-        parts.append(
-            f"s{i} AS (SELECT p.*, m.step_{i}_ts FROM {prev} p "
-            f"LEFT JOIN (SELECT p.user_id, p.step_1_ts, "
-            f"min(e.ts) AS step_{i}_ts "
-            f"FROM {prev} p JOIN ev e ON e.user_id = p.user_id "
-            f"AND e.et = '{step}' AND e.ts > p.{prev_col}{horizon} "
-            f"GROUP BY p.user_id, p.step_1_ts) m "
-            f"ON m.user_id = p.user_id AND m.step_1_ts = p.step_1_ts)")
-        prev = f"s{i}"
-        prev_col = f"step_{i}_ts"
-    ts_cols = [f"step_{i}_ts" for i in range(1, len(steps) + 1)]
-    depth = " + ".join(
-        f"(CASE WHEN {c} IS NOT NULL THEN 1 ELSE 0 END)" for c in ts_cols)
-    return (", ".join(parts)
-            + f" SELECT user_id, {', '.join(ts_cols)}, "
-            f"CAST({depth} AS INTEGER) AS depth FROM {prev}")
-
-
 def funnel_summary(events: DataFrame, steps, *,
                    user_col: str = "user_id", ts_col: str = "ts",
                    type_col: str = "event_type",
@@ -283,7 +198,7 @@ def funnel_summary(events: DataFrame, steps, *,
     """
     from ..functions.text import floor_round_col
 
-    steps = _check_steps(steps)
+    steps = check_steps(steps)
     k = len(steps)
     fun = funnel(events, steps, user_col=user_col, ts_col=ts_col,
                  type_col=type_col, within_hours=within_hours)
@@ -311,37 +226,3 @@ def funnel_summary(events: DataFrame, steps, *,
         out = row if out is None else out.unionAll(row)
     from .cache import attach
     return attach(out, agg)
-
-
-def funnel_summary_duckdb_sql(table: str, steps, *,
-                              user_col: str = "user_id",
-                              ts_col: str = "ts",
-                              type_col: str = "event_type",
-                              within_hours: int | None = None) -> str:
-    """DuckDB SQL twin of :func:`funnel_summary` (oracle)."""
-    from ..functions.text import floor_round
-
-    steps = _check_steps(steps)
-    k = len(steps)
-    inner = funnel_duckdb_sql(table, steps, user_col=user_col,
-                              ts_col=ts_col, type_col=type_col,
-                              within_hours=within_hours)
-    counts = ", ".join(
-        f"CAST(sum(CASE WHEN step_{i}_ts IS NOT NULL THEN 1 ELSE 0 END) "
-        f"AS BIGINT) AS n{i}" for i in range(1, k + 1))
-
-    def rate(num, den):
-        return (f"CASE WHEN {den} > 0 THEN "
-                + floor_round(f"CAST({num} AS DOUBLE) "
-                              f"/ CAST({den} AS DOUBLE)", 6, "duckdb")
-                + " END")
-
-    rows = " UNION ALL ".join(
-        f"SELECT {i} AS step_index, '{name}' AS step_name, "
-        f"n{i} AS n_reached, "
-        + ("CAST(1.0 AS DOUBLE)" if i == 1
-           else rate(f"n{i}", f"n{i - 1}")) + " AS rate_vs_prev, "
-        + ("CAST(1.0 AS DOUBLE)" if i == 1
-           else rate(f"n{i}", "n1")) + " AS rate_vs_entry FROM a"
-        for i, name in enumerate(steps, start=1))
-    return f"WITH f AS ({inner}), a AS (SELECT {counts} FROM f) {rows}"

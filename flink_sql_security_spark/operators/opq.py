@@ -30,7 +30,7 @@ decimals AFTER training and the final codebooks retrain against the
 quantized rotation, so the artifact pair is self-consistent; the
 oracle emitter re-derives both with the same numpy from the parquet
 and recomputes the rotation in SQL with the same sequential fold +
-floor rule (the ``_query_lut`` bit-parity recipe, pq.py:606).
+floor rule (the ``query_lut`` bit-parity recipe, pq.py:606).
 
 Reference scope note: no vector search exists in the reference repo;
 this extends the engine per the driver brief (similarity-search scale
@@ -45,8 +45,7 @@ from flink_sql_security_spark.functions.text import (
     floor_round, floor_round_py)
 
 from .clustering import _centroid_array_sql
-from .pq import (_adc_topk_sql, _double_vectors_sql, _gate_lut_broadcast,
-                 _ivfpq_topk, _oracle_inputs, _pq_topk, _pq_train_np,
+from .pq import (_gate_lut_broadcast, _ivfpq_topk, _pq_topk, pq_train_np,
                  _sample_matrix)
 
 
@@ -68,7 +67,7 @@ def _pq_assign_np(Xr, books: list):
     return np.hstack(parts)
 
 
-def _opq_train_np(X, m: int, k: int, iters: int, opq_iters: int,
+def opq_train_np(X, m: int, k: int, iters: int, opq_iters: int,
                   round_to: int) -> tuple:
     Rq, books, _ = _opq_train_np_full(X, m, k, iters, opq_iters,
                                       round_to)
@@ -77,7 +76,7 @@ def _opq_train_np(X, m: int, k: int, iters: int, opq_iters: int,
 
 def _opq_train_np_full(X, m: int, k: int, iters: int, opq_iters: int,
                        round_to: int, train_books: bool = True) -> tuple:
-    """(Rq, books, Xr): like :func:`_opq_train_np` but also returns the
+    """(Rq, books, Xr): like :func:`opq_train_np` but also returns the
     exactly-rotated sample, so composing trainers (OPQ-IVF) reuse it
     instead of re-running the d×d engine-replica rotation and the m
     subspace k-means trainings for bit-identical results.
@@ -89,7 +88,7 @@ def _opq_train_np_full(X, m: int, k: int, iters: int, opq_iters: int,
     d = X.shape[1]
     R = np.eye(d)
     for _ in range(opq_iters):
-        books = _pq_train_np(X @ R, m, k, iters)
+        books = pq_train_np(X @ R, m, k, iters)
         Xhat = _pq_assign_np(X @ R, books)
         # orthogonal Procrustes: argmin_R ||X R − X̂||_F = U Vᵀ of the
         # cross-covariance SVD (Ge et al. 2013 §4, the non-parametric
@@ -99,13 +98,13 @@ def _opq_train_np_full(X, m: int, k: int, iters: int, opq_iters: int,
     # quantize the rotation to the shared floor rule, then retrain the
     # codebooks against the vectors the ENGINES will actually encode:
     # _rotate_rows_np replays the engines' sequential fold + floor rule
-    # exactly (same recipe as _opq_ivf_train_np), so the published
+    # exactly (same recipe as opq_ivf_train_np), so the published
     # artifact pair is self-consistent — the books are fit to the very
     # doubles opq_rotate emits, not to a BLAS matmul's close-but-
     # different accumulation order
     Rq = [[floor_round_py(float(v), round_to) for v in row] for row in R]
     Xr = _rotate_rows_np(X, Rq, round_to)
-    books = _pq_train_np(Xr, m, k, iters) if train_books else None
+    books = pq_train_np(Xr, m, k, iters) if train_books else None
     return Rq, books, Xr
 
 
@@ -117,41 +116,22 @@ def opq_train(df: DataFrame, vec_col: str = "embedding",
     per-subspace codebooks trained on the rotated sample. Deterministic
     end to end (lowest-id sample, fixed iteration counts, deterministic
     SVD) — the oracle emitter re-derives both from the parquet."""
-    return _opq_train_np(_sample_matrix(df, vec_col, id_col, sample),
+    return opq_train_np(_sample_matrix(df, vec_col, id_col, sample),
                          m, k, iters, opq_iters, round_to)
 
 
-def _r_cols(R: list) -> list:
+def r_cols(R: list) -> list:
     """Columns of R (= rows of Rᵀ): output component j is the fold of
     column j against the input vector."""
     d = len(R)
     return [[R[i][j] for i in range(d)] for j in range(d)]
 
 
-def _rotate_py(q, R: list, round_to: int = 6) -> list:
-    """Python twin of the engine rotation: sequential left fold per
-    component + the shared floor rule — bit-identical to the Spark
-    ``aggregate`` fold and the DuckDB ``list_sum`` fold."""
-    out = []
-    for col in _r_cols(R):
-        acc = 0.0
-        for c, x in zip(col, q):
-            acc += c * float(x)
-        out.append(floor_round_py(acc, round_to))
-    return out
-
-
-def _rotate_expr(xd: str, R: list, dialect: str, round_to: int) -> str:
-    cols = _centroid_array_sql(_r_cols(R), dialect)
-    if dialect == "spark":
-        return (f"transform({cols}, c -> "
-                + floor_round(
-                    f"aggregate(zip_with(c, {xd}, (a, b) -> a * b), 0D, "
-                    "(acc, v) -> acc + v)", round_to, "spark") + ")")
-    return (f"list_transform({cols}, c -> "
+def _rotate_expr(xd: str, R: list, round_to: int) -> str:
+    return (f"transform({_centroid_array_sql(r_cols(R))}, c -> "
             + floor_round(
-                f"list_sum(list_transform(list_zip(c, {xd}), "
-                "p -> p[1] * p[2]))", round_to, "duckdb") + ")")
+                f"aggregate(zip_with(c, {xd}, (a, b) -> a * b), 0D, "
+                "(acc, v) -> acc + v)", round_to) + ")")
 
 
 def _rotate_arrow(df: DataFrame, R: list, vec_col: str,
@@ -169,7 +149,7 @@ def _rotate_arrow(df: DataFrame, R: list, vec_col: str,
     import numpy as np
 
     d = len(R)
-    bc = df.sparkSession.sparkContext.broadcast(_r_cols(R))
+    bc = df.sparkSession.sparkContext.broadcast(r_cols(R))
     id_type = [f.dataType.simpleString() for f in df.schema.fields
                if f.name == id_col][0]
     scale = 10.0 ** round_to
@@ -263,7 +243,7 @@ def opq_rotate(df: DataFrame, R: list, vec_col: str = "embedding",
         f"CAST(size({vec_col}) AS STRING), ', expected {d}, or "
         f"NULL/NaN element)')) END")
     bound = (f"transform(array({guarded}), xd -> "
-             + _rotate_expr("xd", R, "spark", round_to) + ")[0]")
+             + _rotate_expr("xd", R, round_to) + ")[0]")
     return df.select(F.col(id_col), F.expr(bound).alias("rot"))
 
 
@@ -324,42 +304,6 @@ def opq_topk(df: DataFrame, queries_df: DataFrame, R: list,
                     codes_df, mode, corpus_rows, gate)
 
 
-def opq_topk_duckdb_sql(parquet_path: str, query_pred: str = "vec_id < 10",
-                        vec_col: str = "embedding",
-                        id_col: str = "vec_id", m: int = 16,
-                        k_cb: int = 16, iters: int = 3,
-                        opq_iters: int = 3, sample: int = 2048,
-                        k: int = 5, round_to: int = 6,
-                        table: str = "embeddings") -> str:
-    """Oracle for :func:`opq_topk`: re-derives (R, codebooks) from the
-    parquet with the same numpy, recomputes the rotation IN SQL with the
-    identical fold + floor rule, rotates the query set in Python with
-    the bit-equal twin, and runs ``pq_topk_duckdb_sql``'s flat-ADC
-    search over the rotated vectors."""
-    X, queries = _oracle_inputs(parquet_path, vec_col, id_col, sample,
-                                query_pred)
-    R, books = _opq_train_np(X, m, k_cb, iters, opq_iters, round_to)
-    return _adc_topk_sql(
-        _rotated_vectors_sql(R, vec_col, id_col, table, round_to),
-        _query_rotation(R, round_to), queries, books, id_col, k, round_to)
-
-
-def _rotated_vectors_sql(R: list, vec_col: str, id_col: str, table: str,
-                         round_to: int) -> str:
-    """(id, xd): the table's vectors rotated in SQL — the oracle checks
-    :func:`opq_rotate` instead of reusing it."""
-    return (f"SELECT {id_col}, "
-            + _rotate_expr("xd", R, "duckdb", round_to)
-            + f" AS xd FROM ({_double_vectors_sql(vec_col, id_col, table)})")
-
-
-def _query_rotation(R: list, round_to: int):
-    """A query vector → its rotation, by the bit-equal Python twin."""
-    import numpy as np
-
-    return lambda vec: np.asarray(_rotate_py(vec, R, round_to))
-
-
 def _rotate_rows_np(X, R: list, round_to: int = 6):
     """Vectorized-but-exact replica of the engine rotation for a sample
     matrix: per output component the accumulation runs dimension by
@@ -381,10 +325,10 @@ def _rotate_rows_np(X, R: list, round_to: int = 6):
     return out
 
 
-def _opq_ivf_train_np(X, m: int, k: int, iters: int, opq_iters: int,
+def opq_ivf_train_np(X, m: int, k: int, iters: int, opq_iters: int,
                       n_cells: int, round_to: int,
                       residual: bool) -> tuple:
-    from .pq import _ivfpq_train_np, _l2_kmeans_np
+    from .pq import ivfpq_train_np, l2_kmeans_np
 
     # reuse the flat trainer's rotated sample AND (non-residual) its
     # codebooks — both bit-identical to recomputing them here; the
@@ -393,11 +337,11 @@ def _opq_ivf_train_np(X, m: int, k: int, iters: int, opq_iters: int,
     R, books_flat, Xr = _opq_train_np_full(
         X, m, k, iters, opq_iters, round_to, train_books=not residual)
     if residual:
-        coarse, books = _ivfpq_train_np(Xr, n_cells, m, k, iters)
+        coarse, books = ivfpq_train_np(Xr, n_cells, m, k, iters)
     else:
         books = books_flat
         coarse = [[float(v) for v in c]
-                  for c in _l2_kmeans_np(Xr, n_cells, iters)]
+                  for c in l2_kmeans_np(Xr, n_cells, iters)]
     return R, coarse, books
 
 
@@ -411,7 +355,7 @@ def opq_ivf_train(df: DataFrame, vec_col: str = "embedding",
     on the EXACTLY-rotated sample (:func:`_rotate_rows_np` — the same
     doubles the engines compute), so cell assignment and encode agree
     bit-for-bit with the oracle's re-derivation."""
-    return _opq_ivf_train_np(
+    return opq_ivf_train_np(
         _sample_matrix(df, vec_col, id_col, sample), m, k, iters,
         opq_iters, n_cells, round_to, residual)
 
@@ -439,28 +383,3 @@ def opq_ivf_topk(df: DataFrame, queries_df: DataFrame, R: list,
              else opq_rotate(df, R, vec_col, id_col, round_to))
     return _ivfpq_topk(rot_c, rot_q, coarse, codebooks, "rot", id_col, k,
                        n_probe, round_to, residual, codes_df, small_q)
-
-
-def opq_ivf_topk_duckdb_sql(parquet_path: str,
-                            query_pred: str = "vec_id < 10",
-                            vec_col: str = "embedding",
-                            id_col: str = "vec_id", m: int = 16,
-                            k_cb: int = 16, iters: int = 3,
-                            opq_iters: int = 3, n_cells: int = 16,
-                            n_probe: int = 4, sample: int = 2048,
-                            k: int = 5, round_to: int = 6,
-                            residual: bool = False,
-                            table: str = "embeddings") -> str:
-    """Oracle for :func:`opq_ivf_topk`: (R, coarse, codebooks) re-derive
-    from the parquet with the same numpy; the rotation recomputes IN SQL
-    (fold + floor rule), cell assignment / encode / the cell-keyed ADC
-    join verify over the rotated vectors, and the per-query probe sets +
-    LUTs come from the bit-equal Python rotation twin."""
-    X, queries = _oracle_inputs(parquet_path, vec_col, id_col, sample,
-                                query_pred)
-    R, coarse, books = _opq_ivf_train_np(
-        X, m, k_cb, iters, opq_iters, n_cells, round_to, residual)
-    return _adc_topk_sql(
-        _rotated_vectors_sql(R, vec_col, id_col, table, round_to),
-        _query_rotation(R, round_to), queries, books, id_col, k, round_to,
-        coarse, n_probe, residual)

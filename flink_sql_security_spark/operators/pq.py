@@ -65,7 +65,7 @@ from flink_sql_security_spark.operators.similarity import (
 FLAT_LIMIT_ROWS = 500_000
 
 
-def _l2_kmeans_np(X, k: int, iters: int):
+def l2_kmeans_np(X, k: int, iters: int):
     """Deterministic L2 Lloyd on a fixed-order sample (driver-side).
 
     Farthest-point init from row 0 (first-index tie-wins), ``iters``
@@ -120,11 +120,11 @@ def pq_train(df: DataFrame, vec_col: str = "embedding",
              id_col: str = "vec_id", m: int = 16, k: int = 16,
              iters: int = 3, sample: int = 2048) -> list:
     """Per-subspace codebooks: m lists of k centroids (python floats)."""
-    return _pq_train_np(_sample_matrix(df, vec_col, id_col, sample),
+    return pq_train_np(_sample_matrix(df, vec_col, id_col, sample),
                         m, k, iters)
 
 
-def _pq_train_np(X, m: int, k: int, iters: int) -> list:
+def pq_train_np(X, m: int, k: int, iters: int) -> list:
     if m < 1 or k < 1:
         raise ValueError("pq: m and k must be >= 1")
     if X.shape[1] < m:
@@ -133,7 +133,7 @@ def _pq_train_np(X, m: int, k: int, iters: int) -> list:
             f"{X.shape[1]} (zero-width subspaces are impossible)")
     books = []
     for start, width in _subspace_bounds(X.shape[1], m):
-        C = _l2_kmeans_np(X[:, start:start + width].copy(), k, iters)
+        C = l2_kmeans_np(X[:, start:start + width].copy(), k, iters)
         books.append([[float(v) for v in c] for c in C])
     return books
 
@@ -357,7 +357,7 @@ def _encoded_frame(df: DataFrame, codebooks: list, vec_col: str,
             "CAST(array_position(_dc, array_min(_dc)) AS INT) - 1"))
         cols.append(F.col("cell"))
         if residual:
-            cmat = _centroid_array_sql(coarse, "spark")
+            cmat = _centroid_array_sql(coarse)
             out = out.withColumn("_rd", F.expr(
                 f"zip_with(_xd, element_at({cmat}, cell + 1), "
                 "(a, b) -> a - b)"))
@@ -491,12 +491,12 @@ def pq_reconstruct(df: DataFrame, codebooks: list,
                                coarse, residual)
     # array_position is already the 1-based index element_at wants
     parts = ", ".join(
-        f"element_at({_centroid_array_sql(book, 'spark')}, "
+        f"element_at({_centroid_array_sql(book)}, "
         f"CAST(array_position(_d{s}, array_min(_d{s})) AS INT))"
         for s, book in enumerate(codebooks))
     recon = f"flatten(array({parts}))"
     if residual:
-        cmat = _centroid_array_sql(coarse, "spark")
+        cmat = _centroid_array_sql(coarse)
         recon = (f"zip_with({recon}, element_at({cmat}, cell + 1), "
                  "(a, b) -> a + b)")
     # CAST first: the centroid literals parse as DECIMAL, and a
@@ -512,155 +512,7 @@ def pq_reconstruct(df: DataFrame, codebooks: list,
     return out.select(*cols, F.expr(recon).alias("approx"))
 
 
-def _oracle_inputs(parquet_path: str, vec_col: str, id_col: str,
-                   sample: int, query_pred: str | None = None):
-    """(X, queries): what an oracle emitter reads from the parquet — the
-    training sample (the ``sample`` lowest-id vectors, the
-    :func:`_sample_matrix` rows) as a float64 matrix and, given
-    ``query_pred``, the (id, vector) query rows in id order."""
-    import duckdb
-    import numpy as np
-
-    src = f"SELECT {id_col}, {vec_col} FROM read_parquet('{parquet_path}')"
-    con = duckdb.connect()
-    pdf = con.execute(f"{src} ORDER BY {id_col} LIMIT {sample}").df()
-    queries = [] if query_pred is None else [
-        (int(i), v) for i, v in con.execute(
-            f"{src} WHERE {query_pred} ORDER BY {id_col}").df()[
-                [id_col, vec_col]].itertuples(index=False)]
-    con.close()
-    X = np.array([np.asarray(v, dtype=np.float64)
-                  for v in pdf[vec_col].tolist()])
-    return X, queries
-
-
-def _double_vectors_sql(vec_col: str, id_col: str,
-                        table: str = "embeddings") -> str:
-    """(id, xd): the table's vectors as DOUBLE lists."""
-    return (f"SELECT {id_col}, list_transform({vec_col}, "
-            f"v -> CAST(v AS DOUBLE)) AS xd FROM {table}")
-
-
-def _as_double(vec):
-    import numpy as np
-
-    return np.asarray(vec, dtype=np.float64)
-
-
-def _dists_sql(vals: list, src: str, start: int, width: int) -> str:
-    """DuckDB list of squared-L2 distances from the slice
-    ``src[start:start + width - 1]`` (1-based) to each centroid of
-    ``vals`` — the sequential fold of ``_dists_expr``."""
-    cmat = _centroid_array_sql(vals, "duckdb")
-    return (f"list_transform({cmat}, c -> list_sum(list_transform("
-            f"list_zip({src}[{start}:{start + width - 1}], c), "
-            "p -> (p[1] - p[2]) * (p[1] - p[2]))))")
-
-
-def _argmin_sql(dists: str) -> str:
-    """0-based first position of the minimum (np.argmin's tie rule)."""
-    return f"CAST(list_position({dists}, list_min({dists})) AS INT) - 1"
-
-
-def _subspace_dists_sql(books: list, src: str) -> list[str]:
-    """Per codebook, :func:`_dists_sql` over its subspace of ``src``."""
-    out, start = [], 1
-    for book in books:
-        out.append(_dists_sql(book, src, start, len(book[0])))
-        start += len(book[0])
-    return out
-
-
-def pq_reconstruct_duckdb_sql(parquet_path: str,
-                              vec_col: str = "embedding",
-                              id_col: str = "vec_id", m: int = 16,
-                              k: int = 16, iters: int = 3,
-                              sample: int = 2048, round_to: int = 6,
-                              n_cells: int | None = None,
-                              residual: bool = False,
-                              stringify: bool = False,
-                              explode: bool = False) -> str:
-    """Oracle for :func:`pq_reconstruct` — codebooks (and coarse, when
-    ``n_cells``) re-derive from the parquet; the SQL recomputes codes
-    and concatenates the same centroid literals."""
-    X, _ = _oracle_inputs(parquet_path, vec_col, id_col, sample)
-    coarse = None
-    if residual:
-        coarse, books = _ivfpq_train_np(X, n_cells, m, k, iters)
-    elif n_cells is not None:
-        books = _pq_train_np(X, m, k, iters)
-        coarse = [[float(v) for v in c]
-                  for c in _l2_kmeans_np(X, n_cells, iters)]
-    else:
-        books = _pq_train_np(X, m, k, iters)
-
-    sel_cell = ""
-    src_cte = f"x AS ({_double_vectors_sql(vec_col, id_col)})"
-    enc = "xd"
-    if coarse is not None:
-        cell = _argmin_sql(_dists_sql(coarse, "xd", 1, len(coarse[0])))
-        src_cte += (f", cells AS (SELECT {id_col}, xd, {cell} AS cell "
-                    "FROM x)")
-        sel_cell = "cell, "
-        if residual:
-            cmat = _centroid_array_sql(coarse, "duckdb")
-            src_cte += (f", enc AS (SELECT {id_col}, cell, "
-                        f"list_transform(list_zip(xd, ({cmat})[cell + 1]), "
-                        "p -> p[1] - p[2]) AS rd FROM cells)")
-            enc = "rd"
-        else:
-            src_cte += (f", enc AS (SELECT {id_col}, cell, xd FROM cells)")
-    else:
-        src_cte += f", enc AS (SELECT {id_col}, xd FROM x)"
-    recon = " || ".join(
-        f"({_centroid_array_sql(book, 'duckdb')})"
-        f"[list_position({d}, list_min({d}))]"
-        for book, d in zip(books, _subspace_dists_sql(books, enc)))
-    if residual:
-        cmat = _centroid_array_sql(coarse, "duckdb")
-        recon = (f"list_transform(list_zip({recon}, ({cmat})[cell + 1]), "
-                 "p -> p[1] + p[2])")
-    recon = (f"list_transform({recon}, v -> "
-             + floor_round("CAST(v AS DOUBLE)", round_to, "duckdb") + ")")
-    if explode:
-        if stringify:
-            raise ValueError(
-                "pq_reconstruct_duckdb_sql: explode and stringify are "
-                "exclusive")
-        d = X.shape[1]
-        return (f"WITH {src_cte}, p AS (SELECT {id_col}, {sel_cell}"
-                f"{recon} AS approx FROM enc) "
-                f"SELECT {id_col}, {sel_cell}CAST(i - 1 AS INT) AS dim, "
-                f"approx[i] AS val "
-                f"FROM p, UNNEST(range(1, {d + 1})) AS t(i)")
-    if stringify:
-        recon = f"array_to_string({recon}, ',')"
-    return (f"WITH {src_cte} "
-            f"SELECT {id_col}, {sel_cell}{recon} AS approx FROM enc")
-
-
-def pq_encode_duckdb_sql(parquet_path: str, vec_col: str = "embedding",
-                         id_col: str = "vec_id", m: int = 16, k: int = 16,
-                         iters: int = 3, sample: int = 2048,
-                         round_to: int = 6,
-                         stringify_codes: bool = False) -> str:
-    """Oracle: re-derives identical codebooks from the parquet (same
-    numpy, same sample order), recomputes codes/err with list functions
-    in the same fold order."""
-    X, _ = _oracle_inputs(parquet_path, vec_col, id_col, sample)
-    dists = _subspace_dists_sql(_pq_train_np(X, m, k, iters), "xd")
-    codes = "[" + ", ".join(_argmin_sql(d) for d in dists) + "]"
-    codes_out = (f"array_to_string({codes}, ',')" if stringify_codes
-                 else codes)
-    err = " + ".join(f"(list_min({d}))" for d in dists)
-    return (
-        f"WITH x AS ({_double_vectors_sql(vec_col, id_col)}) "
-        f"SELECT {id_col}, {codes_out} AS codes, "
-        + floor_round(err, round_to, "duckdb") + " AS err FROM x"
-    )
-
-
-def _query_lut(q, codebooks: list) -> list:
+def query_lut(q, codebooks: list) -> list:
     """Per-query ADC lookup table: m lists of ``||q_sub − centroid||²``.
 
     Pure-Python sequential folds — the SAME code runs executor-side (in
@@ -687,7 +539,7 @@ def _coarse_dists(q, coarse: list) -> list:
             for c in coarse]
 
 
-def _probe_cells(q, coarse: list, n_probe: int) -> list[int]:
+def probe_cells(q, coarse: list, n_probe: int) -> list[int]:
     """The ``n_probe`` nearest coarse cells, lowest-cell tie-break —
     deterministic, shared by the Spark query pass and the oracle."""
     dists = _coarse_dists(q, coarse)
@@ -710,7 +562,7 @@ def _lut_df(queries_df: DataFrame, codebooks: list, vec_col: str,
     """
     total = sum(len(book[0]) for book in codebooks)
     if coarse is not None and len(coarse[0]) != total:
-        # the executor-side _probe_cells would silently truncate to the
+        # the executor-side probe_cells would silently truncate to the
         # shorter dimension and emit plausible-looking probe cells that
         # match nothing — fail the config error at build time instead
         raise ValueError(
@@ -747,15 +599,15 @@ def _lut_df(queries_df: DataFrame, codebooks: list, vec_col: str,
                         f"{id_col}={int(row[id_col])}")
                 if crs is None:
                     ids.append(int(row[id_col]))
-                    luts.append(_query_lut(q, books))
+                    luts.append(query_lut(q, books))
                 else:
-                    lut = None if res else _query_lut(q, books)
-                    for cell in _probe_cells(q, crs, p):
+                    lut = None if res else query_lut(q, books)
+                    for cell in probe_cells(q, crs, p):
                         ids.append(int(row[id_col]))
                         cells.append(cell)
                         # elementwise double subtract == Spark's zip_with
                         # (a, b) -> a - b, so residual LUTs stay bit-exact
-                        luts.append(_query_lut(q - cm[cell], books)
+                        luts.append(query_lut(q - cm[cell], books)
                                     if res else lut)
             out = {"q_id": pd.array(ids, dtype="int64")}
             if crs is not None:
@@ -942,17 +794,17 @@ def ivfpq_train(df: DataFrame, vec_col: str = "embedding",
     residuals are much smaller than raw coordinates, so the same (m, k)
     budget quantizes far more finely. Deterministic end to end; the
     oracle emitter re-derives both from the parquet."""
-    return _ivfpq_train_np(_sample_matrix(df, vec_col, id_col, sample),
+    return ivfpq_train_np(_sample_matrix(df, vec_col, id_col, sample),
                            n_cells, m, k, iters)
 
 
-def _ivfpq_train_np(X, n_cells: int, m: int, k: int, iters: int) -> tuple:
+def ivfpq_train_np(X, n_cells: int, m: int, k: int, iters: int) -> tuple:
     import numpy as np
 
-    C = _l2_kmeans_np(X, n_cells, iters)
+    C = l2_kmeans_np(X, n_cells, iters)
     d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
     R = X - C[np.argmin(d2, axis=1)]
-    books = _pq_train_np(R, m, k, iters)
+    books = pq_train_np(R, m, k, iters)
     return [[float(v) for v in c] for c in C], books
 
 
@@ -966,7 +818,7 @@ def coarse_train(df: DataFrame, vec_col: str = "embedding",
     centroids from the parquet.
     """
     X = _sample_matrix(df, vec_col, id_col, sample)
-    return [[float(v) for v in c] for c in _l2_kmeans_np(X, n_cells, iters)]
+    return [[float(v) for v in c] for c in l2_kmeans_np(X, n_cells, iters)]
 
 
 def ivfpq_topk(df: DataFrame, queries_df: DataFrame, coarse: list,
@@ -1035,116 +887,6 @@ def _ivfpq_topk(df: DataFrame, queries_df: DataFrame, coarse: list,
                        codebooks, id_col, k, round_to, own_codes)
 
 
-def pq_topk_duckdb_sql(parquet_path: str, query_pred: str = "vec_id < 20",
-                       vec_col: str = "embedding", id_col: str = "vec_id",
-                       m: int = 16, k_cb: int = 16, iters: int = 3,
-                       sample: int = 2048, k: int = 5,
-                       round_to: int = 6) -> str:
-    """Oracle for :func:`pq_topk` — codebooks AND per-query LUTs re-derive
-    from the parquet with the same numpy/fold code and embed as literals;
-    the SQL verifies encode + ADC scoring + deterministic ranking."""
-    X, queries = _oracle_inputs(parquet_path, vec_col, id_col, sample,
-                                query_pred)
-    return _adc_topk_sql(_double_vectors_sql(vec_col, id_col), _as_double,
-                         queries, _pq_train_np(X, m, k_cb, iters), id_col,
-                         k, round_to)
-
-
-def ivfpq_topk_duckdb_sql(parquet_path: str, query_pred: str = "vec_id < 20",
-                          vec_col: str = "embedding", id_col: str = "vec_id",
-                          m: int = 16, k_cb: int = 16, iters: int = 3,
-                          sample: int = 2048, n_cells: int = 16,
-                          n_probe: int = 4, k: int = 5,
-                          round_to: int = 6,
-                          residual: bool = False) -> str:
-    """Oracle for :func:`ivfpq_topk` — coarse centroids, codebooks,
-    per-query probe sets AND LUTs all re-derive from the parquet with the
-    same numpy/fold code and embed as literals; the SQL verifies the
-    distributed work: cell assignment (argmin over sequential-fold L2),
-    PQ encode (over the residual when ``residual``), the cell-keyed ADC
-    join, and deterministic ranking."""
-    X, queries = _oracle_inputs(parquet_path, vec_col, id_col, sample,
-                                query_pred)
-    if residual:
-        coarse, books = _ivfpq_train_np(X, n_cells, m, k_cb, iters)
-    else:
-        books = _pq_train_np(X, m, k_cb, iters)
-        coarse = [[float(v) for v in c]
-                  for c in _l2_kmeans_np(X, n_cells, iters)]
-    return _adc_topk_sql(_double_vectors_sql(vec_col, id_col), _as_double,
-                         queries, books, id_col, k, round_to, coarse,
-                         n_probe, residual)
-
-
-def _adc_topk_sql(vectors_sql: str, query_vector, queries: list,
-                  books: list, id_col: str, k: int, round_to: int,
-                  coarse: list | None = None, n_probe: int = 0,
-                  residual: bool = False) -> str:
-    """The one DuckDB twin of the ADC search (:func:`_adc_search`).
-
-    ``vectors_sql`` selects (id, xd), the double vectors the corpus codes
-    encode; ``query_vector`` maps a query row's vector into that space
-    (a float64 array). Each query's LUTs come from the same
-    :func:`_query_lut` the Spark side runs and embed as literals. Flat
-    when ``coarse`` is None: every code row scores against every query.
-    Otherwise each code row gets its cell (first argmin over the coarse
-    L2), each query probes its ``n_probe`` cells, and the join keys on
-    cell; ``residual`` encodes and builds LUTs over x − centroid[cell]."""
-    import numpy as np
-
-    def lut_sql(q) -> str:
-        # CAST each element: a bare literal parses as DECIMAL and the
-        # fold would run exact decimal math instead of the IEEE double
-        # sequence Spark's aggregate() produces
-        return "[" + ", ".join(
-            "[" + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in sub) + "]"
-            for sub in _query_lut(q, books)) + "]"
-
-    ctes = [f"x AS ({vectors_sql})"]
-    rows = []
-    if coarse is None:
-        src, enc, cell, null_cell = "x", "xd", "", ""
-        join = "CROSS JOIN probes l"
-        for qid, vec in queries:
-            rows.append(f"({qid}, {lut_sql(query_vector(vec))})")
-    else:
-        src, enc, cell, null_cell = ("enc", "rd" if residual else "xd",
-                                     "cell, ", "CAST(NULL AS INT), ")
-        join = "JOIN probes l ON c.cell = l.cell"
-        cmat = _centroid_array_sql(coarse, "duckdb")
-        rd = (f"list_transform(list_zip(xd, ({cmat})[cell + 1]), "
-              "p -> p[1] - p[2]) AS rd" if residual else "xd")
-        dc = _dists_sql(coarse, "xd", 1, len(coarse[0]))
-        ctes += [f"cells AS (SELECT {id_col}, xd, {_argmin_sql(dc)} AS cell "
-                 "FROM x)",
-                 f"enc AS (SELECT {id_col}, cell, {rd} FROM cells)"]
-        cm = np.asarray(coarse, dtype=np.float64)
-        for qid, vec in queries:
-            q = query_vector(vec)
-            for c in _probe_cells(q, coarse, n_probe):
-                lut = lut_sql(q - cm[c] if residual else q)
-                rows.append(f"({qid}, {int(c)}, {lut})")
-    if not rows:
-        # a bare "VALUES" is a parse error; express the (valid) empty
-        # query set so the oracle still returns the empty answer
-        rows = [f"(CAST(NULL AS BIGINT), {null_cell}"
-                "[[CAST(NULL AS DOUBLE)]])"]
-    codes = "[" + ", ".join(
-        _argmin_sql(d) for d in _subspace_dists_sql(books, enc)) + "]"
-    ctes += [f"codes AS (SELECT {id_col}, {cell}{codes} AS codes FROM {src})",
-             f"probes(q_id, {cell}lut) AS (VALUES " + ", ".join(rows) + ")"]
-    return (
-        "WITH " + ", ".join(ctes) + ", "
-        f"scored AS (SELECT l.q_id, c.{id_col} AS n_id, "
-        + floor_round("list_sum(list_transform(list_zip(c.codes, l.lut), "
-                      "p -> p[2][p[1] + 1]))", round_to, "duckdb")
-        + f" AS adc_dist FROM codes c {join} WHERE c.{id_col} <> l.q_id), "
-        "ranked AS (SELECT q_id, n_id, adc_dist, row_number() OVER "
-        "(PARTITION BY q_id ORDER BY adc_dist, n_id) AS rank FROM scored) "
-        f"SELECT q_id, n_id, adc_dist, rank FROM ranked WHERE rank <= {k}"
-    )
-
-
 _SQ_L2 = ("aggregate(zip_with({a}, {b}, (x, y) -> "
           "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
           "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
@@ -1210,39 +952,3 @@ def ivfpq_rerank(df: DataFrame, queries_df: DataFrame, coarse: list,
                                          round_to)).alias("exact_dist")))
     return attach(_rank_top_k(scored, k, "exact_dist", ascending=True),
                   *cached_deps(shortlist))
-
-
-def ivfpq_rerank_duckdb_sql(parquet_path: str,
-                            query_pred: str = "vec_id < 20",
-                            vec_col: str = "embedding",
-                            id_col: str = "vec_id",
-                            m: int = 16, k_cb: int = 16, iters: int = 3,
-                            sample: int = 2048, n_cells: int = 16,
-                            n_probe: int = 4, k: int = 5, rerank: int = 4,
-                            round_to: int = 6,
-                            residual: bool = False) -> str:
-    """Oracle for :func:`ivfpq_rerank` — the stage-1 shortlist reuses
-    :func:`ivfpq_topk_duckdb_sql` verbatim (widened to ``k·rerank``) as
-    a nested CTE; stage 2 joins both sides back to the parquet for raw
-    vectors and verifies the exact-L2 fold + deterministic re-ranking."""
-    inner = ivfpq_topk_duckdb_sql(
-        parquet_path, query_pred=query_pred, vec_col=vec_col,
-        id_col=id_col, m=m, k_cb=k_cb, iters=iters, sample=sample,
-        n_cells=n_cells, n_probe=n_probe, k=k * rerank,
-        round_to=round_to, residual=residual)
-    return (
-        f"WITH shortlist AS ({inner}), "
-        f"v AS ({_double_vectors_sql(vec_col, id_col)}), "
-        "rescored AS (SELECT s.q_id, s.n_id, "
-        + floor_round("list_sum(list_transform(list_zip(qv.xd, nv.xd), "
-                      "p -> (p[1] - p[2]) * (p[1] - p[2])))",
-                      round_to, "duckdb") + " AS exact_dist "
-        "FROM shortlist s "
-        f"JOIN v qv ON qv.{id_col} = s.q_id "
-        f"JOIN v nv ON nv.{id_col} = s.n_id), "
-        "reranked AS (SELECT q_id, n_id, exact_dist, row_number() OVER "
-        "(PARTITION BY q_id ORDER BY exact_dist, n_id) AS rank "
-        "FROM rescored) "
-        f"SELECT q_id, n_id, exact_dist, rank FROM reranked "
-        f"WHERE rank <= {k}"
-    )

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 #: portable type names for ("suppress", <type>): spark_sql, duckdb
-_SUPPRESS_TYPES = {
+SUPPRESS_TYPES = {
     "string": ("STRING", "VARCHAR"),
     "int": ("INT", "INTEGER"),
     "bigint": ("BIGINT", "BIGINT"),
@@ -40,7 +40,7 @@ _SUPPRESS_TYPES = {
 }
 
 
-def _check_cols(quasi_cols) -> list[str]:
+def check_cols(quasi_cols) -> list[str]:
     quasi_cols = list(quasi_cols)
     if not quasi_cols:
         raise ValueError("quasi_cols must be non-empty")
@@ -63,7 +63,7 @@ def k_anonymize(df: DataFrame, quasi_cols, k: int,
     a row gate, not a transform; pair with the mask library when the
     release also needs generalization.
     """
-    quasi_cols = _check_cols(quasi_cols)
+    quasi_cols = check_cols(quasi_cols)
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
     if (sensitive_col is None) != (l is None):
@@ -87,32 +87,7 @@ def k_anonymize(df: DataFrame, quasi_cols, k: int,
     return out.select(*[F.col(f"r.{c}") for c in cols])
 
 
-def k_anonymize_duckdb_sql(table: str, quasi_cols, k: int,
-                           select_cols: list[str],
-                           sensitive_col: str | None = None,
-                           l: int | None = None) -> str:
-    """DuckDB SQL twin of :func:`k_anonymize` (oracle): identical
-    class aggregation + null-safe gate."""
-    quasi_cols = _check_cols(quasi_cols)
-    if k < 1:
-        raise ValueError(f"k must be >= 1: {k}")
-    if (sensitive_col is None) != (l is None):
-        raise ValueError("sensitive_col and l must be given together")
-    qs = ", ".join(quasi_cols)
-    lsel = (f", count(DISTINCT {sensitive_col}) AS _class_l"
-            if sensitive_col else "")
-    lgate = f" AND _class_l >= {l}" if sensitive_col else ""
-    on = " AND ".join(
-        f"r.{q} IS NOT DISTINCT FROM c.{q}" for q in quasi_cols)
-    cols = ", ".join(f"r.{c}" for c in select_cols)
-    return (
-        f"WITH classes AS (SELECT {qs}, count(*) AS _class_n{lsel} "
-        f"FROM {table} GROUP BY {qs}) "
-        f"SELECT {cols} FROM {table} r JOIN classes c ON {on} "
-        f"WHERE _class_n >= {k}{lgate}")
-
-
-def _check_gen_spec(spec: dict) -> dict:
+def check_gen_spec(spec: dict) -> dict:
     for col, g in spec.items():
         if not isinstance(g, tuple) or not g:
             raise ValueError(f"generalizer for {col!r} must be a "
@@ -128,9 +103,9 @@ def _check_gen_spec(spec: dict) -> dict:
             if len(g) != 1:
                 raise ValueError(f"('year',) expected: {g!r}")
         elif kind == "suppress":
-            if len(g) != 2 or g[1] not in _SUPPRESS_TYPES:
+            if len(g) != 2 or g[1] not in SUPPRESS_TYPES:
                 raise ValueError(
-                    f"('suppress', one of {tuple(_SUPPRESS_TYPES)}) "
+                    f"('suppress', one of {tuple(SUPPRESS_TYPES)}) "
                     f"expected: {g!r}")
         else:
             raise ValueError(f"unknown generalizer kind: {g!r}")
@@ -139,7 +114,7 @@ def _check_gen_spec(spec: dict) -> dict:
 
 def _gen_column(col: str, g: tuple) -> Column:
     """Spark Column for one generalizer rung step. Shared-SQL kinds go
-    through F.expr with the EXACT string :func:`_gen_duckdb` emits (the
+    through F.expr with the EXACT string :func:`generalizer_sql` emits (the
     two dialects agree on floor/substring/year), so parity is by
     construction; the mask kind reuses the mask library's proven
     Spark/DuckDB pair (SURVEY §2.9 — generalization via masking)."""
@@ -150,12 +125,13 @@ def _gen_column(col: str, g: tuple) -> Column:
             f"mask_show_first_n({{col}}, {int(g[1])}, 'x', 'x', 'x')",
             col).sql())
     if kind == "suppress":
-        return F.expr(f"CAST(NULL AS {_SUPPRESS_TYPES[g[1]][0]})")
-    return F.expr(_gen_duckdb(col, g))
+        return F.expr(f"CAST(NULL AS {SUPPRESS_TYPES[g[1]][0]})")
+    return F.expr(generalizer_sql(col, g))
 
 
-def _gen_duckdb(col: str, g: tuple) -> str:
-    """DuckDB SQL for one generalizer rung step (oracle emitter)."""
+def generalizer_sql(col: str, g: tuple) -> str:
+    """SQL for one bucket/prefix/year rung step, valid on both engines
+    (the Spark column and the DuckDB oracle share this text)."""
     kind = g[0]
     if kind == "bucket":
         w = float(g[1])
@@ -166,16 +142,6 @@ def _gen_duckdb(col: str, g: tuple) -> str:
         return f"substring({col}, 1, {int(g[1])})"
     if kind == "year":
         return f"CAST(year({col}) AS INTEGER)"
-    if kind == "suppress":
-        return f"CAST(NULL AS {_SUPPRESS_TYPES[g[1]][1]})"
-    if kind == "mask_show_first":
-        from ..functions.masks import duckdb_mask_show_first_n_sql
-        inner = duckdb_mask_show_first_n_sql(col, int(g[1]),
-                                             up="x", low="x", dig="x")
-        # DuckDB's concat folds NULL to '' while Spark's returns NULL —
-        # the CASE keeps NULL quasi-values NULL on both engines (they
-        # then form their own class, the k_anonymize convention)
-        return f"CASE WHEN {col} IS NULL THEN NULL ELSE {inner} END"
     raise ValueError(f"unknown generalizer kind: {g!r}")
 
 
@@ -199,21 +165,13 @@ def generalize(df: DataFrame, spec: dict) -> DataFrame:
     Pure projection — no shuffle, no UDF; Catalyst folds it into the
     scan. Compose as ``k_anonymize(generalize(df, spec), quasi, k)``:
     generalize first, then gate classes (the entry corpus does)."""
-    spec = _check_gen_spec(dict(spec))
+    spec = check_gen_spec(dict(spec))
     missing = [c for c in spec if c not in df.columns]
     if missing:
         raise ValueError(f"spec columns not in DataFrame: {missing}")
     return df.select(*[
         _gen_column(c, spec[c]).alias(c) if c in spec else F.col(c)
         for c in df.columns])
-
-
-def generalize_duckdb_select(cols: list[str], spec: dict) -> str:
-    """The oracle-side projection list mirroring :func:`generalize`."""
-    spec = _check_gen_spec(dict(spec))
-    return ", ".join(
-        f"{_gen_duckdb(c, spec[c])} AS {c}" if c in spec else c
-        for c in cols)
 
 
 def generalization_report(df: DataFrame, quasi_cols, ladder, k: int,
@@ -238,7 +196,7 @@ def generalization_report(df: DataFrame, quasi_cols, ladder, k: int,
     from .cache import attach
     from ..functions.text import floor_round_col
 
-    quasi_cols = _check_cols(quasi_cols)
+    quasi_cols = check_cols(quasi_cols)
     ladder = list(ladder)
     if not ladder:
         raise ValueError("ladder must be non-empty")
@@ -290,55 +248,6 @@ def generalization_report(df: DataFrame, quasi_cols, ladder, k: int,
     return attach(out, base)
 
 
-def generalization_report_duckdb_sql(table: str, quasi_cols, ladder,
-                                     k: int,
-                                     sensitive_col: str | None = None,
-                                     l: int | None = None) -> str:
-    """DuckDB SQL twin of :func:`generalization_report` (oracle):
-    identical per-rung class aggregation, gate, and guarded divide."""
-    from ..functions.text import floor_round
-
-    quasi_cols = _check_cols(quasi_cols)
-    ladder = list(ladder)
-    if not ladder:
-        raise ValueError("ladder must be non-empty")
-    if k < 1:
-        raise ValueError(f"k must be >= 1: {k}")
-    if (sensitive_col is None) != (l is None):
-        raise ValueError("sensitive_col and l must be given together")
-    keep_cols = quasi_cols + ([sensitive_col] if sensitive_col else [])
-    qs = ", ".join(quasi_cols)
-    lsel = (f", count(DISTINCT {sensitive_col}) AS _l"
-            if sensitive_col else "")
-    parts = [f"WITH base AS MATERIALIZED "
-             f"(SELECT {', '.join(keep_cols)} FROM {table})"]
-    selects = []
-    for level, (name, spec) in enumerate(ladder):
-        sel = generalize_duckdb_select(keep_cols, spec)
-        gate = f"_n >= {k}"
-        if sensitive_col is not None:
-            gate += f" AND _l >= {l}"
-        l_eff = ("CAST(min(_l) AS BIGINT)" if sensitive_col
-                 else "CAST(NULL AS BIGINT)")
-        kept = (f"CAST(coalesce(sum(CASE WHEN {gate} THEN _n "
-                f"ELSE 0 END), 0) AS BIGINT)")
-        pct = floor_round(
-            f"CAST({kept} AS DOUBLE) * 100.0 "
-            f"/ CAST(sum(_n) AS DOUBLE)", 6, "duckdb")
-        parts.append(
-            f"c{level} AS (SELECT {qs}, count(*) AS _n{lsel} "
-            f"FROM (SELECT {sel} FROM base) GROUP BY {qs})")
-        selects.append(
-            f"SELECT {level} AS level, '{name}' AS rung, "
-            f"CAST(count(*) AS BIGINT) AS n_classes, "
-            f"CAST(min(_n) AS BIGINT) AS k_effective, "
-            f"{l_eff} AS l_effective, "
-            f"{kept} AS rows_kept, "
-            f"CASE WHEN sum(_n) > 0 THEN {pct} END AS kept_pct "
-            f"FROM c{level}")
-    return ", ".join(parts) + " " + " UNION ALL ".join(selects)
-
-
 def t_closeness_report(df: DataFrame, quasi_cols,
                        sensitive_col: str) -> DataFrame:
     """Per-class t-closeness audit (Li/Li/Venkatasubramanian 2007):
@@ -371,7 +280,7 @@ def t_closeness_report(df: DataFrame, quasi_cols,
 
     from ..functions.text import floor_round_col
 
-    quasi_cols = _check_cols(quasi_cols)
+    quasi_cols = check_cols(quasi_cols)
     if sensitive_col in quasi_cols:
         raise ValueError(
             f"sensitive_col {sensitive_col!r} overlaps quasi_cols")
@@ -414,40 +323,6 @@ def t_closeness_report(df: DataFrame, quasi_cols,
         .alias("tvd"))
 
 
-def t_closeness_report_duckdb_sql(table: str, quasi_cols,
-                                  sensitive_col: str) -> str:
-    """DuckDB SQL twin of :func:`t_closeness_report` (oracle):
-    identical exact-integer TVD numerator/denominator (HUGEINT — the
-    same exact integers the Spark plan carries as DECIMAL(38,0)), one
-    double division, same floor-round."""
-    from ..functions.text import floor_round
-
-    quasi_cols = _check_cols(quasi_cols)
-    if sensitive_col in quasi_cols:
-        raise ValueError(
-            f"sensitive_col {sensitive_col!r} overlaps quasi_cols")
-    qs = ", ".join(quasi_cols)
-    tvd = floor_round(
-        "CAST(_s1 + _n_c * _N - _n_c * _s2 AS DOUBLE) "
-        "/ CAST(2 * _n_c * _N AS DOUBLE)", 6, "duckdb")
-    return (
-        f"WITH cv AS (SELECT {qs}, {sensitive_col}, "
-        f"CAST(count(*) AS HUGEINT) AS _n_cv "
-        f"FROM {table} GROUP BY {qs}, {sensitive_col}), "
-        f"v AS (SELECT {sensitive_col}, CAST(count(*) AS HUGEINT) AS _n_v "
-        f"FROM {table} GROUP BY {sensitive_col}), "
-        f"t AS (SELECT CAST(count(*) AS HUGEINT) AS _N FROM {table}), "
-        f"j AS (SELECT cv.*, v._n_v, t._N, "
-        f"sum(_n_cv) OVER (PARTITION BY {qs}) AS _n_c "
-        f"FROM cv JOIN v ON cv.{sensitive_col} "
-        f"IS NOT DISTINCT FROM v.{sensitive_col} CROSS JOIN t), "
-        f"pc AS (SELECT {qs}, min(_n_c) AS _n_c, min(_N) AS _N, "
-        f"sum(abs(_n_cv * _N - _n_v * _n_c)) AS _s1, "
-        f"sum(_n_v) AS _s2 FROM j GROUP BY {qs}) "
-        f"SELECT {qs}, CAST(_n_c AS BIGINT) AS class_n, {tvd} AS tvd "
-        f"FROM pc")
-
-
 def t_close_release(df: DataFrame, quasi_cols, sensitive_col: str,
                     t: float) -> DataFrame:
     """Suppression release under t-closeness: rows whose class TVD
@@ -458,7 +333,7 @@ def t_close_release(df: DataFrame, quasi_cols, sensitive_col: str,
     """
     if not 0.0 <= float(t) <= 1.0:
         raise ValueError(f"t must be in [0, 1]: {t}")
-    quasi_cols = _check_cols(quasi_cols)
+    quasi_cols = check_cols(quasi_cols)
     keep = (t_closeness_report(df, quasi_cols, sensitive_col)
             .where(F.col("tvd") <= float(t)))
     cols = df.columns
@@ -467,24 +342,6 @@ def t_close_release(df: DataFrame, quasi_cols, sensitive_col: str,
         [F.col(f"r.{q}").eqNullSafe(F.col(f"c.{q}"))
          for q in quasi_cols])
     return out.select(*[F.col(f"r.{c}") for c in cols])
-
-
-def t_close_release_duckdb_sql(table: str, quasi_cols,
-                               sensitive_col: str, t: float,
-                               select_cols: list[str]) -> str:
-    """DuckDB SQL twin of :func:`t_close_release` (oracle)."""
-    if not 0.0 <= float(t) <= 1.0:
-        raise ValueError(f"t must be in [0, 1]: {t}")
-    quasi_cols = _check_cols(quasi_cols)
-    report = t_closeness_report_duckdb_sql(table, quasi_cols,
-                                           sensitive_col)
-    on = " AND ".join(
-        f"r.{q} IS NOT DISTINCT FROM c.{q}" for q in quasi_cols)
-    cols = ", ".join(f"r.{c}" for c in select_cols)
-    return (
-        f"SELECT {cols} FROM {table} r "
-        f"JOIN (SELECT * FROM ({report}) WHERE tvd <= {float(t)!r}) c "
-        f"ON {on}")
 
 
 def anonymity_report(df: DataFrame, quasi_cols,
@@ -501,7 +358,7 @@ def anonymity_report(df: DataFrame, quasi_cols,
     chain."""
     from ..functions.text import floor_round_col
 
-    quasi_cols = _check_cols(quasi_cols)
+    quasi_cols = check_cols(quasi_cols)
     aggs = [F.count("*").alias("_n")]
     if sensitive_col is not None:
         aggs.append(F.countDistinct(sensitive_col).alias("_l"))
@@ -519,33 +376,6 @@ def anonymity_report(df: DataFrame, quasi_cols,
             F.sum(F.when(F.col("_n") == 1, F.col("_n"))
                   .otherwise(F.lit(0))).cast("double") * 100.0
             / F.sum("_n").cast("double")).alias("singleton_rows_pct"))
-
-
-def anonymity_report_duckdb_sql(table: str, quasi_cols,
-                                sensitive_col: str | None = None) -> str:
-    """DuckDB SQL twin of :func:`anonymity_report` (oracle)."""
-    from ..functions.text import floor_round
-
-    quasi_cols = _check_cols(quasi_cols)
-    qs = ", ".join(quasi_cols)
-    lsel = (f", count(DISTINCT {sensitive_col}) AS _l"
-            if sensitive_col else "")
-    l_eff = ("CAST(min(_l) AS BIGINT)" if sensitive_col
-             else "CAST(NULL AS BIGINT)")
-    pct = floor_round(
-        "CAST(sum(CASE WHEN _n = 1 THEN _n ELSE 0 END) AS DOUBLE) "
-        "* 100.0 / CAST(sum(_n) AS DOUBLE)", 6, "duckdb")
-    return (
-        f"WITH classes AS (SELECT {qs}, count(*) AS _n{lsel} "
-        f"FROM {table} GROUP BY {qs}) "
-        f"SELECT CAST(sum(_n) AS BIGINT) AS n_rows, "
-        f"CAST(count(*) AS BIGINT) AS n_classes, "
-        f"CAST(min(_n) AS BIGINT) AS k_effective, "
-        f"{l_eff} AS l_effective, "
-        f"CAST(sum(CASE WHEN _n = 1 THEN 1 ELSE 0 END) AS BIGINT) "
-        f"AS singleton_classes, "
-        f"{pct} AS singleton_rows_pct "
-        f"FROM classes")
 
 
 # -- differential privacy (seeded release) ----------------------------------
@@ -583,45 +413,37 @@ def anonymity_report_duckdb_sql(table: str, quasi_cols,
 # first, e.g. with generalize()'s ('bucket', w)); the released
 # AGGREGATE may of course be any numeric.
 
-_DP_BUCKETS = 10_000
+DP_BUCKETS = 10_000
 #: NULL group values hash as this sentinel (concat_ws drops NULLs,
 #: which would collide ('a', NULL) with (NULL, 'a'))
-_DP_NULL = "<NULL>"
+DP_NULL = "<NULL>"
 
 
-def _dp_noise_sql(group_cols, seed: str, scale: float,
-                  dialect: str) -> str:
-    """ONE emitter for the Laplace draw, both dialects: the
-    (group key, seed) string → the sampling family's shared
-    deterministic bucket (sampling.py::bucket_of_key_sql — the single
-    definition of the md5→hex8→BIGINT→%N fold) → inverse CDF. The two
-    dialects differ only in the string-cast keyword and the bucket
-    fold's hex cast, both delegated; every double literal and IEEE op
-    is textually identical, so parity is by construction."""
-    from .sampling import bucket_of_key_sql
-
-    cast = "STRING" if dialect == "spark" else "VARCHAR"
-    cols = ", ".join(
-        f"coalesce(CAST({c} AS {cast}), '{_DP_NULL}')"
-        for c in group_cols)
-    key = f"concat_ws('|', {cols}, ':{seed}')"
-    bucket = bucket_of_key_sql(key, dialect, _DP_BUCKETS)
-    u = f"((CAST({bucket} AS DOUBLE) + 0.5) / {float(_DP_BUCKETS)!r})"
+def laplace_noise_sql(bucket: str, scale: float) -> str:
+    """The Laplace draw by inverse CDF from a [0, DP_BUCKETS) bucket
+    expression. The (group key, seed) string goes through the sampling
+    family's shared deterministic bucket (sampling.py::bucket_of_key_sql
+    — the single definition of the md5→hex8→BIGINT→%N fold); every
+    double literal and IEEE op here is shared with the DuckDB oracle,
+    so parity is by construction."""
+    u = f"((CAST({bucket} AS DOUBLE) + 0.5) / {float(DP_BUCKETS)!r})"
     b = repr(float(scale))
     return (f"(CASE WHEN {u} < 0.5 THEN {b} * ln(2.0 * {u}) "
             f"ELSE -{b} * ln(2.0 * (1.0 - {u})) END)")
 
 
 def _dp_noise_spark(group_cols, seed: str, scale: float) -> Column:
-    return F.expr(_dp_noise_sql(group_cols, seed, scale, "spark"))
+    from .sampling import bucket_of_key_sql
+
+    cols = ", ".join(
+        f"coalesce(CAST({c} AS STRING), '{DP_NULL}')" for c in group_cols)
+    key = f"concat_ws('|', {cols}, ':{seed}')"
+    return F.expr(laplace_noise_sql(bucket_of_key_sql(key, DP_BUCKETS),
+                                    scale))
 
 
-def _dp_noise_duckdb(group_cols, seed: str, scale: float) -> str:
-    return _dp_noise_sql(group_cols, seed, scale, "duckdb")
-
-
-def _dp_check(group_cols, epsilon: float, seed: str):
-    group_cols = _check_cols(group_cols)
+def dp_check(group_cols, epsilon: float, seed: str):
+    group_cols = check_cols(group_cols)
     if not float(epsilon) > 0:
         raise ValueError(f"epsilon must be > 0: {epsilon}")
     if (not isinstance(seed, str) or not seed
@@ -643,7 +465,7 @@ def dp_count(df: DataFrame, group_cols, *, epsilon: float, seed: str,
     ONE groupBy then per-row noise arithmetic — no second exchange;
     at 100 TB the released table is |groups| rows.
     """
-    group_cols = _dp_check(group_cols, epsilon, seed)
+    group_cols = dp_check(group_cols, epsilon, seed)
     from ..functions.text import floor_round_col
 
     noise = _dp_noise_spark(group_cols, seed, 1.0 / float(epsilon))
@@ -657,24 +479,6 @@ def dp_count(df: DataFrame, group_cols, *, epsilon: float, seed: str,
     return out
 
 
-def dp_count_duckdb_sql(table: str, group_cols, *, epsilon: float,
-                        seed: str,
-                        threshold: float | None = None) -> str:
-    """DuckDB SQL twin of :func:`dp_count` (oracle)."""
-    group_cols = _dp_check(group_cols, epsilon, seed)
-    from ..functions.text import floor_round
-
-    qs = ", ".join(group_cols)
-    noise = _dp_noise_duckdb(group_cols, seed, 1.0 / float(epsilon))
-    val = floor_round(f"CAST(_n AS DOUBLE) + {noise}", 6, "duckdb")
-    gate = (f" WHERE n_noisy >= {float(threshold)!r}"
-            if threshold is not None else "")
-    return (
-        f"SELECT * FROM (SELECT {qs}, {val} AS n_noisy FROM "
-        f"(SELECT {qs}, count(*) AS _n FROM {table} GROUP BY {qs})"
-        f"){gate}")
-
-
 def dp_sum(df: DataFrame, group_cols, value_col: str, *, clip: float,
            epsilon: float, seed: str) -> DataFrame:
     """Per-group ε-DP noisy sums: each value is clipped to [0, clip]
@@ -683,7 +487,7 @@ def dp_sum(df: DataFrame, group_cols, value_col: str, *, clip: float,
     quantization), then Laplace(clip/ε) noise lands on the total.
     Output (group…, sum_noisy) floor-rounded at 6 decimals. NULL
     values clip to 0 (they contribute nothing, matching SQL sum)."""
-    group_cols = _dp_check(group_cols, epsilon, seed)
+    group_cols = dp_check(group_cols, epsilon, seed)
     if not float(clip) > 0:
         raise ValueError(f"clip must be > 0: {clip}")
     from ..functions.text import floor_round_col
@@ -700,24 +504,3 @@ def dp_sum(df: DataFrame, group_cols, value_col: str, *, clip: float,
                     floor_round_col(
                         F.col("_qs").cast("double") / F.lit(1.0e6)
                         + noise).alias("sum_noisy")))
-
-
-def dp_sum_duckdb_sql(table: str, group_cols, value_col: str, *,
-                      clip: float, epsilon: float, seed: str) -> str:
-    """DuckDB SQL twin of :func:`dp_sum` (oracle)."""
-    group_cols = _dp_check(group_cols, epsilon, seed)
-    if not float(clip) > 0:
-        raise ValueError(f"clip must be > 0: {clip}")
-    from ..functions.text import floor_round
-
-    qs = ", ".join(group_cols)
-    clipped = (f"least(greatest(coalesce(CAST({value_col} AS DOUBLE), "
-               f"0.0), 0.0), {float(clip)!r})")
-    qexpr = f"CAST(floor({clipped} * 1000000.0 + 0.5) AS BIGINT)"
-    noise = _dp_noise_duckdb(group_cols, seed,
-                             float(clip) / float(epsilon))
-    val = floor_round(
-        f"CAST(_qs AS DOUBLE) / 1000000.0 + {noise}", 6, "duckdb")
-    return (
-        f"SELECT {qs}, {val} AS sum_noisy FROM "
-        f"(SELECT {qs}, sum({qexpr}) AS _qs FROM {table} GROUP BY {qs})")

@@ -19,7 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from flink_sql_security_spark.functions.text import (
-    floor_round as _floor_round,
     floor_round_col as _floor_round_col)
 
 
@@ -86,28 +85,6 @@ def profile_numeric(df: DataFrame, cols: list[str],
         # native-round-ok: exact DECIMAL(18,2) sum, idempotent round-2
         .withColumn("sum", F.round("sum", 2))  # native-round-ok
     )
-
-
-def profile_numeric_duckdb_sql(table: str, cols: list[str]) -> str:
-    """DuckDB SQL producing the identical profile (oracle emitter)."""
-    parts = []
-    for c in cols:
-        d = f"CAST({c} AS DECIMAL(18,2))"
-        parts.append(
-            f"SELECT '{c}' AS \"column\", count({c}) AS n, "
-            # CAST: DuckDB sums of INTEGER return HUGEINT (→ float64 in
-            # pandas); Spark's is BIGINT — align the pandas dtypes exactly
-            f"CAST(sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null, "
-            f"count(DISTINCT {c}) AS n_distinct, "
-            f"CAST(min({d}) AS DOUBLE) AS \"min\", "
-            f"CAST(max({d}) AS DOUBLE) AS \"max\", "
-            # native-round-ok (sum): exact DECIMAL(18,2) sum
-            f"round(CAST(sum({d}) AS DOUBLE), 2) "  # native-round-ok
-            f"AS \"sum\", "
-            + _floor_round(f"CAST(sum({d}) AS DOUBLE) / count({c})",
-                           6, "duckdb") + " AS mean "
-            f"FROM {table}")
-    return " UNION ALL ".join(parts)
 
 
 QUANTILE_PS = (0.25, 0.5, 0.75, 0.95)
@@ -386,20 +363,6 @@ def profile_quantiles(df: DataFrame, cols: list[str],
           for i, n in enumerate(names)])
 
 
-def profile_quantiles_duckdb_sql(table: str, cols: list[str],
-                                 ps: tuple = QUANTILE_PS) -> str:
-    """DuckDB SQL producing the identical quantile profile (oracle)."""
-    parts = []
-    for c in cols:
-        v = f"CAST(CAST({c} AS DECIMAL(18,2)) AS DOUBLE)"
-        qs = ", ".join(
-            _floor_round(f"quantile_cont({v}, {p})", 6, "duckdb")
-            + f" AS p{int(p * 100)}"
-            for p in ps)
-        parts.append(f"SELECT '{c}' AS \"column\", {qs} FROM {table}")
-    return " UNION ALL ".join(parts)
-
-
 def robust_outliers(df: DataFrame, *, value_col: str,
                     group_cols: list[str], id_cols: list[str],
                     k: float = 3.0) -> DataFrame:
@@ -463,46 +426,7 @@ def robust_outliers(df: DataFrame, *, value_col: str,
     return out
 
 
-def robust_outliers_duckdb_sql(table: str, *, value_col: str,
-                               group_cols: list[str], id_cols: list[str],
-                               k: float = 3.0) -> str:
-    """DuckDB SQL twin of :func:`robust_outliers` (oracle): the same
-    lower-median rank selection, deviation, MAD, and floor-rounded
-    score."""
-    if not group_cols or not id_cols:
-        raise ValueError("group_cols and id_cols must be non-empty")
-    g = ", ".join(group_cols)
-    ids = ", ".join(id_cols)
-    score = _floor_round("_dev / _mad", 6, "duckdb")
-    return f"""
-WITH base AS (
-  SELECT {g}, {ids}, CAST({value_col} AS DOUBLE) AS _v
-  FROM {table} WHERE {value_col} IS NOT NULL),
-med AS (
-  SELECT *,
-    max(CASE WHEN _rn = (_n + 1) // 2 THEN _v END)
-      OVER (PARTITION BY {g}) AS _med
-  FROM (
-    SELECT *,
-      row_number() OVER (PARTITION BY {g} ORDER BY _v, {ids}) AS _rn,
-      count(*) OVER (PARTITION BY {g}) AS _n
-    FROM base)),
-mad AS (
-  SELECT *,
-    max(CASE WHEN _rn2 = (_n + 1) // 2 THEN _dev END)
-      OVER (PARTITION BY {g}) AS _mad
-  FROM (
-    SELECT *, abs(_v - _med) AS _dev,
-      row_number() OVER (
-        PARTITION BY {g} ORDER BY abs(_v - _med), {ids}) AS _rn2
-    FROM med))
-SELECT {g}, {ids}, _v AS value, _med AS med, _mad AS mad,
-       CASE WHEN _mad > 0 THEN {score} END AS score
-FROM mad WHERE _dev > CAST('{float(k)!r}' AS DOUBLE) * _mad
-""".strip()
-
-
-_SCALE_METHODS = ("zscore", "minmax", "rank")
+SCALE_METHODS = ("zscore", "minmax", "rank")
 
 
 def feature_scale(df: DataFrame, *, value_col: str,
@@ -533,9 +457,9 @@ def feature_scale(df: DataFrame, *, value_col: str,
     One hash exchange on the group key (stats via window on zscore/
     minmax, the rank window for rank) — no joins, no collect.
     """
-    if method not in _SCALE_METHODS:
+    if method not in SCALE_METHODS:
         raise ValueError(
-            f"method must be one of {_SCALE_METHODS}: {method!r}")
+            f"method must be one of {SCALE_METHODS}: {method!r}")
     if not group_cols or not id_cols:
         raise ValueError("group_cols and id_cols must be non-empty")
     from pyspark.sql.window import Window
@@ -573,52 +497,6 @@ def feature_scale(df: DataFrame, *, value_col: str,
     return base.select(*group_cols, *id_cols,
                        F.col("_v").alias("value"),
                        scaled.alias("scaled"))
-
-
-def feature_scale_duckdb_sql(table: str, *, value_col: str,
-                             group_cols: list[str], id_cols: list[str],
-                             method: str = "zscore") -> str:
-    """DuckDB SQL twin of :func:`feature_scale` (oracle): identical
-    decimal-exact sums and IEEE expression order."""
-    if method not in _SCALE_METHODS:
-        raise ValueError(
-            f"method must be one of {_SCALE_METHODS}: {method!r}")
-    if not group_cols or not id_cols:
-        raise ValueError("group_cols and id_cols must be non-empty")
-    g = ", ".join(group_cols)
-    ids = ", ".join(id_cols)
-    if method == "rank":
-        expr = _floor_round(
-            f"percent_rank() OVER (PARTITION BY {g} ORDER BY _v)",
-            6, "duckdb")
-        scaled = (f"CASE WHEN count(*) OVER (PARTITION BY {g}) > 1 "
-                  f"THEN {expr} END")
-    elif method == "minmax":
-        mn = f"min(_v) OVER (PARTITION BY {g})"
-        mx = f"max(_v) OVER (PARTITION BY {g})"
-        expr = _floor_round(f"(_v - {mn}) / ({mx} - {mn})", 6, "duckdb")
-        scaled = f"CASE WHEN ({mx} - {mn}) > 0 THEN {expr} END"
-    else:
-        s1 = (f"CAST(sum(CAST(_v AS DECIMAL(18,6))) "
-              f"OVER (PARTITION BY {g}) AS DOUBLE)")
-        # widen one operand so DuckDB's int64 decimal multiply gets
-        # int128 headroom (19+18=37 ≤ 38); the product is the same
-        # exact 12-scale decimal Spark computes natively
-        s2 = (f"CAST(sum(CAST(CAST(_v AS DECIMAL(19,6)) "
-              f"* CAST(_v AS DECIMAL(18,6)) AS DECIMAL(38,12))) "
-              f"OVER (PARTITION BY {g}) AS DOUBLE)")
-        n = f"CAST(count(*) OVER (PARTITION BY {g}) AS DOUBLE)"
-        var = (f"CASE WHEN count(*) OVER (PARTITION BY {g}) > 1 "
-               f"THEN greatest(({s2} - ({s1} * {s1}) / {n}) "
-               f"/ ({n} - 1.0), 0.0) END")
-        std = f"sqrt({var})"
-        expr = _floor_round(f"(_v - {s1} / {n}) / {std}", 6, "duckdb")
-        scaled = f"CASE WHEN {std} > 0 THEN {expr} END"
-    return f"""
-SELECT {g}, {ids}, _v AS value, {scaled} AS scaled
-FROM (SELECT {g}, {ids}, CAST({value_col} AS DOUBLE) AS _v
-      FROM {table} WHERE {value_col} IS NOT NULL)
-""".strip()
 
 
 def profile_correlations(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -689,50 +567,6 @@ def profile_correlations(df: DataFrame, cols: list[str]) -> DataFrame:
     # the persist (and its job/storage bookkeeping) is gone too.
     return (stats.select(F.explode(F.array(*structs)).alias("r"))
             .select("r.col_a", "r.col_b", "r.n", "r.corr"))
-
-
-def profile_correlations_duckdb_sql(table: str, cols: list[str]) -> str:
-    """DuckDB SQL twin of :func:`profile_correlations` (oracle)."""
-    if len(cols) < 2:
-        raise ValueError(f"need >= 2 cols: {cols!r}")
-    if len(set(cols)) != len(cols):
-        raise ValueError(f"duplicate cols: {cols!r}")
-    cols = list(cols)
-    notnull = " AND ".join(f"{c} IS NOT NULL" for c in cols)
-
-    def d(c):
-        return f"CAST(CAST({c} AS DOUBLE) AS DECIMAL(18,6))"
-
-    def dw(c):
-        return f"CAST(CAST({c} AS DOUBLE) AS DECIMAL(19,6))"
-
-    sums = ["CAST(count(*) AS BIGINT) AS _n"]
-    for c in cols:
-        sums.append(f"sum({d(c)}) AS s_{c}")
-        sums.append(f"sum(CAST({dw(c)} * {d(c)} AS DECIMAL(38,12))) "
-                    f"AS ss_{c}")
-    pairs = [(a, b) for i, a in enumerate(cols) for b in cols[i + 1:]]
-    for a, b in pairs:
-        sums.append(f"sum(CAST({dw(a)} * {d(b)} AS DECIMAL(38,12))) "
-                    f"AS sp_{a}_{b}")
-    selects = []
-    for a, b in pairs:
-        pa, pb = (a, b) if a < b else (b, a)
-        n = "CAST(_n AS DOUBLE)"
-        sa, sb = f"CAST(s_{a} AS DOUBLE)", f"CAST(s_{b} AS DOUBLE)"
-        ssa, ssb = f"CAST(ss_{a} AS DOUBLE)", f"CAST(ss_{b} AS DOUBLE)"
-        sp = f"CAST(sp_{a}_{b} AS DOUBLE)"
-        va = f"({n} * {ssa} - {sa} * {sa})"
-        vb = f"({n} * {ssb} - {sb} * {sb})"
-        corr = _floor_round(
-            f"({n} * {sp} - {sa} * {sb}) / (sqrt({va}) * sqrt({vb}))",
-            6, "duckdb")
-        selects.append(
-            f"SELECT '{pa}' AS col_a, '{pb}' AS col_b, _n AS n, "
-            f"CASE WHEN {va} > 0 AND {vb} > 0 THEN {corr} END AS corr "
-            "FROM stats")
-    return (f"WITH stats AS (SELECT {', '.join(sums)} FROM {table} "
-            f"WHERE {notnull}) " + " UNION ALL ".join(selects))
 
 
 def profile_embeddings(df: DataFrame, vec_col: str = "embedding",
@@ -826,58 +660,3 @@ def profile_embeddings(df: DataFrame, vec_col: str = "embedding",
                         F.lit(None).cast("double").alias("min_v"),
                         F.lit(None).cast("double").alias("max_v")))
     return per_dim.unionAll(norm_row).unionAll(centroid)
-
-
-def profile_embeddings_duckdb_sql(table: str = "embeddings",
-                                  vec_col: str = "embedding",
-                                  id_col: str = "vec_id",
-                                  dim: int = 64) -> str:
-    """DuckDB SQL twin of :func:`profile_embeddings` (oracle)."""
-    if dim < 1:
-        raise ValueError(f"dim must be >= 1: {dim}")
-    from ..functions.text import floor_round
-
-    def tail(metric, key):
-        var = "(n * ss - s * s) / (n * n)"
-        return (f"SELECT '{metric}' AS metric, CAST({key} AS INTEGER) "
-                f"AS dim, n, "
-                + floor_round("s / n", 6, "duckdb") + " AS mean, "
-                + floor_round(
-                    f"sqrt(CASE WHEN {var} > 0 THEN {var} ELSE 0 END)",
-                    6, "duckdb")
-                + " AS std, CAST(mn AS DOUBLE) AS min_v, "
-                "CAST(mx AS DOUBLE) AS max_v")
-
-    dim_stats = (
-        # zipped unnests (DuckDB has no WITH ORDINALITY): position and
-        # value expand in lockstep
-        f"d AS (SELECT unnest(range(len({vec_col}))) AS k, "
-        f"CAST(CAST(unnest({vec_col}) AS DOUBLE) AS DECIMAL(18,6)) AS v "
-        f"FROM {table}), "
-        "da AS (SELECT k, CAST(count(*) AS BIGINT) AS n, "
-        "CAST(sum(v) AS DOUBLE) AS s, "
-        "CAST(sum(CAST(v * v AS DECIMAL(38,12))) AS DOUBLE) AS ss, "
-        "min(v) AS mn, max(v) AS mx FROM d GROUP BY k)")
-    norm_expr = floor_round(
-        f"sqrt(list_sum(list_transform({vec_col}, "
-        "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))", 6, "duckdb")
-    norm_stats = (
-        f"nv AS (SELECT CAST({norm_expr} AS DECIMAL(18,6)) AS v "
-        f"FROM {table}), "
-        "na AS (SELECT CAST(count(*) AS BIGINT) AS n, "
-        "CAST(sum(v) AS DOUBLE) AS s, "
-        "CAST(sum(CAST(v * v AS DECIMAL(38,12))) AS DOUBLE) AS ss, "
-        "min(v) AS mn, max(v) AS mx FROM nv)")
-    mean_d = floor_round("s / n", 6, "duckdb")
-    centroid = (
-        "SELECT 'centroid' AS metric, CAST(NULL AS INTEGER) AS dim, "
-        f"CAST({dim} AS BIGINT) AS n, "
-        + floor_round(
-            "sqrt(CAST(sum(CAST(m * m AS DECIMAL(38,12))) AS DOUBLE))",
-            6, "duckdb")
-        + " AS mean, CAST(NULL AS DOUBLE) AS std, "
-        "CAST(NULL AS DOUBLE) AS min_v, CAST(NULL AS DOUBLE) AS max_v "
-        f"FROM (SELECT {mean_d} AS m FROM da)")
-    return (f"WITH {dim_stats}, {norm_stats} "
-            + tail("dim", "k") + " FROM da UNION ALL "
-            + tail("norm", "NULL") + " FROM na UNION ALL " + centroid)

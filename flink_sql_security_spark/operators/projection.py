@@ -33,8 +33,7 @@ from pyspark.sql import DataFrame, functions as F
 from flink_sql_security_spark.functions.text import (
     floor_round as _floor_round, floor_round_py as _floor_round_py)
 
-__all__ = ["rp_signs", "rp_project", "rp_project_duckdb_sql",
-           "pca_train", "pca_project", "pca_project_duckdb_sql"]
+__all__ = ["rp_signs", "rp_project", "pca_train", "pca_project"]
 
 
 def rp_signs(out_dim: int, in_dim: int, salt: str = "rp") -> list[list[int]]:
@@ -46,7 +45,7 @@ def rp_signs(out_dim: int, in_dim: int, salt: str = "rp") -> list[list[int]]:
             for j in range(out_dim)]
 
 
-def _sum_expr(signs: list[int], elem) -> str:
+def sum_expr(signs: list[int], elem) -> str:
     """Left-associated ± chain over 1-indexed elements; ``elem`` formats
     one element access (engine-specific)."""
     out = f"({'' if signs[0] > 0 else '- '}{elem(1)})"
@@ -87,14 +86,6 @@ def _maybe_explode(df: DataFrame, id_col: str, comps: list,
         return (pushdown_barrier(out)
                 .select(id_col, F.posexplode("proj").alias("dim", "val")))
     return out
-
-
-def _explode_duckdb(inner: str, id_col: str, out_dim: int) -> str:
-    """Oracle twin of the exploded shape: 0-based dim via a 1-based
-    subscript walk (matches Spark posexplode's INT position)."""
-    return (f", p AS ({inner}) "
-            f"SELECT {id_col}, CAST(i - 1 AS INT) AS dim, proj[i] AS val "
-            f"FROM p, UNNEST(range(1, {out_dim + 1})) AS t(i)")
 
 
 def _project_arrow(df: DataFrame, id_col: str, vec_col: str,
@@ -227,9 +218,9 @@ def rp_project(df: DataFrame, in_dim: int, out_dim: int = 16,
         f"CAST(size({vec_col}) AS STRING), ', expected {in_dim}')) END")
     comps = []
     for j, row in enumerate(signs):
-        s = _sum_expr(row, lambda i: f"element_at(_xd, {i})")
+        s = sum_expr(row, lambda i: f"element_at(_xd, {i})")
         comps.append(_floor_round(
-            f"({s}) / CAST('{scale!r}' AS DOUBLE)", round_to, "spark"))
+            f"({s}) / CAST('{scale!r}' AS DOUBLE)", round_to))
     from .skew import pushdown_barrier, spread_partitions
 
     # the unrolled out_dim x in_dim +/- fold is the heavy narrow kernel
@@ -250,36 +241,11 @@ def rp_project(df: DataFrame, in_dim: int, out_dim: int = 16,
     return _maybe_explode(base, id_col, comps, explode)
 
 
-def rp_project_duckdb_sql(in_dim: int, out_dim: int = 16,
-                          table: str = "embeddings",
-                          vec_col: str = "embedding",
-                          id_col: str = "vec_id", salt: str = "rp",
-                          round_to: int = 6,
-                          explode: bool = False) -> str:
-    """Oracle: identical signs from the shared generator, identical
-    written-order additions and scale divide."""
-    signs = rp_signs(out_dim, in_dim, salt)
-    scale = float(out_dim) ** 0.5
-    comps = []
-    for row in signs:
-        s = _sum_expr(row, lambda i: f"xd[{i}]")
-        comps.append(_floor_round(
-            f"({s}) / CAST('{scale!r}' AS DOUBLE)", round_to, "duckdb"))
-    prefix = (
-        f"WITH x AS (SELECT {id_col}, "
-        f"list_transform({vec_col}, v -> CAST(v AS DOUBLE)) AS xd "
-        f"FROM {table})")
-    inner = f"SELECT {id_col}, [" + ", ".join(comps) + "] AS proj FROM x"
-    if explode:
-        return prefix + _explode_duckdb(inner, id_col, out_dim)
-    return f"{prefix} {inner}"
-
-
 # ---------------------------------------------------------------------------
 # PCA projection — the data-aware complement of the oblivious JL transform
 # ---------------------------------------------------------------------------
 
-def _pca_train_np(X, out_dim: int, round_to: int) -> tuple[list, list]:
+def pca_train_np(X, out_dim: int, round_to: int) -> tuple[list, list]:
     """(mean, components): quantized PCA artifacts from a sample matrix.
 
     Top ``out_dim`` right-singular vectors of the centered sample, each
@@ -330,11 +296,11 @@ def pca_train(df: DataFrame, out_dim: int = 8,
     """
     from .pq import _sample_matrix
 
-    return _pca_train_np(_sample_matrix(df, vec_col, id_col, sample),
+    return pca_train_np(_sample_matrix(df, vec_col, id_col, sample),
                          out_dim, round_to)
 
 
-def _wsum_expr(weights: list, elem) -> str:
+def wsum_expr(weights: list, elem) -> str:
     """Left-associated weighted chain Σ w_i·elem(i) over 1-indexed
     elements, every coefficient a quantized literal parsed identically
     by both engines; ``elem`` formats one element access."""
@@ -391,8 +357,8 @@ def pca_project(df: DataFrame, mean: list, components: list,
         f"CAST(size({vec_col}) AS STRING), ', expected {in_dim}')) END")
     comps = []
     for row in components:
-        s = _wsum_expr(row, lambda i: f"element_at(_cd, {i})")
-        comps.append(_floor_round(s, round_to, "spark"))
+        s = wsum_expr(row, lambda i: f"element_at(_cd, {i})")
+        comps.append(_floor_round(s, round_to))
     from .skew import pushdown_barrier, spread_partitions
 
     base = (spread_partitions(df, key_col=id_col)
@@ -408,41 +374,3 @@ def pca_project(df: DataFrame, mean: list, components: list,
     # same CollapseProject inlining blow-up, one guard per chain term)
     base = pushdown_barrier(base.select(id_col, "_cd"))
     return _maybe_explode(base, id_col, comps, explode)
-
-
-def pca_project_duckdb_sql(parquet_path: str, out_dim: int = 8,
-                           table: str = "embeddings",
-                           vec_col: str = "embedding",
-                           id_col: str = "vec_id", sample: int = 2048,
-                           round_to: int = 6,
-                           explode: bool = False) -> str:
-    """Oracle for :func:`pca_project`: re-derives (mean, components)
-    from the parquet with the same numpy on the same lowest-id sample,
-    then emits the identical center + weighted-chain fold in DuckDB —
-    same written order, same quantized literals."""
-    import duckdb
-    import numpy as np
-
-    con = duckdb.connect()
-    pdf = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{parquet_path}') "
-        f"ORDER BY {id_col} LIMIT {sample}").df()
-    con.close()
-    X = np.array([np.asarray(v, dtype=np.float64)
-                  for v in pdf[vec_col].tolist()])
-    mean, components = _pca_train_np(X, out_dim, round_to)
-    mus = ", ".join(f"CAST('{m!r}' AS DOUBLE)" for m in mean)
-    comps = []
-    for row in components:
-        s = _wsum_expr(row, lambda i: f"cd[{i}]")
-        comps.append(_floor_round(s, round_to, "duckdb"))
-    prefix = (
-        f"WITH x AS (SELECT {id_col}, "
-        f"list_transform({vec_col}, v -> CAST(v AS DOUBLE)) AS xd "
-        f"FROM {table}), "
-        f"c AS (SELECT {id_col}, list_transform(list_zip(xd, [{mus}]), "
-        f"p -> p[1] - p[2]) AS cd FROM x)")
-    inner = f"SELECT {id_col}, [" + ", ".join(comps) + "] AS proj FROM c"
-    if explode:
-        return prefix + _explode_duckdb(inner, id_col, out_dim)
-    return f"{prefix} {inner}"

@@ -29,13 +29,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from flink_sql_security_spark.functions.text import (
-    floor_round as _floor_round,
     floor_round_col as _floor_round_col)
 
 
-def _lit_array(vals: list[float], dialect: str) -> str:
-    body = ", ".join(repr(float(v)) for v in vals)
-    return f"array({body})" if dialect == "spark" else f"[{body}]"
+def _lit_array(vals: list[float]) -> str:
+    return "array(" + ", ".join(repr(float(v)) for v in vals) + ")"
 
 
 def dim_stats(df: DataFrame, vec_col: str = "embedding") -> tuple[list[float], list[float]]:
@@ -51,38 +49,23 @@ def dim_stats(df: DataFrame, vec_col: str = "embedding") -> tuple[list[float], l
     return [r["mn"] for r in rows], [r["mx"] for r in rows]
 
 
-def _codes_expr(xd: str, mn_lit: str, rng_lit: str, d: int,
-                dialect: str) -> str:
-    if dialect == "spark":
-        return (
-            f"transform(sequence(1, {d}), i -> CASE "
-            f"WHEN element_at({rng_lit}, i) = 0.0D THEN 0 "
-            f"ELSE CAST(floor(((element_at({xd}, i) - element_at({mn_lit}, i))"
-            f" / element_at({rng_lit}, i)) * 255.0D + 0.5D) AS INT) - 128 "
-            "END)"
-        )
+def _codes_expr(xd: str, mn_lit: str, rng_lit: str, d: int) -> str:
     return (
-        f"list_transform(range(1, {d + 1}), i -> CASE "
-        f"WHEN {rng_lit}[i] = 0.0 THEN 0 "
-        f"ELSE CAST(floor((({xd}[i] - {mn_lit}[i]) / {rng_lit}[i]) * 255.0 "
-        "+ 0.5) AS INT) - 128 END)"
+        f"transform(sequence(1, {d}), i -> CASE "
+        f"WHEN element_at({rng_lit}, i) = 0.0D THEN 0 "
+        f"ELSE CAST(floor(((element_at({xd}, i) - element_at({mn_lit}, i))"
+        f" / element_at({rng_lit}, i)) * 255.0D + 0.5D) AS INT) - 128 "
+        "END)"
     )
 
 
-def _err_expr(xd: str, codes: str, mn_lit: str, rng_lit: str, d: int,
-              dialect: str) -> str:
+def _err_expr(xd: str, codes: str, mn_lit: str, rng_lit: str, d: int) -> str:
     """Max abs reconstruction error: recon[i] = mn[i] + ((code+128)/255)*rng[i]."""
-    if dialect == "spark":
-        return (
-            f"aggregate(sequence(1, {d}), 0D, (m, i) -> greatest(m, "
-            f"abs(element_at({xd}, i) - (element_at({mn_lit}, i) + "
-            f"((CAST(element_at({codes}, i) AS DOUBLE) + 128.0D) / 255.0D) "
-            f"* element_at({rng_lit}, i)))))"
-        )
     return (
-        f"list_max(list_transform(range(1, {d + 1}), i -> "
-        f"abs({xd}[i] - ({mn_lit}[i] + "
-        f"((CAST({codes}[i] AS DOUBLE) + 128.0) / 255.0) * {rng_lit}[i]))))"
+        f"aggregate(sequence(1, {d}), 0D, (m, i) -> greatest(m, "
+        f"abs(element_at({xd}, i) - (element_at({mn_lit}, i) + "
+        f"((CAST(element_at({codes}, i) AS DOUBLE) + 128.0D) / 255.0D) "
+        f"* element_at({rng_lit}, i)))))"
     )
 
 
@@ -102,8 +85,8 @@ def quantize_int8(df: DataFrame, vec_col: str = "embedding",
     mn, mx = stats if stats is not None else dim_stats(df, vec_col)
     rng = [b - a for a, b in zip(mn, mx)]
     d = len(mn)
-    mn_lit = _lit_array(mn, "spark")
-    rng_lit = _lit_array(rng, "spark")
+    mn_lit = _lit_array(mn)
+    rng_lit = _lit_array(rng)
     codes_out = (
         F.expr("array_join(transform(codes, c -> CAST(c AS STRING)), ',')")
         if stringify_codes else F.col("codes"))
@@ -111,49 +94,11 @@ def quantize_int8(df: DataFrame, vec_col: str = "embedding",
         df.withColumn("_xd", F.expr(
             f"transform({vec_col}, v -> CAST(v AS DOUBLE))"))
         .withColumn("codes", F.expr(
-            _codes_expr("_xd", mn_lit, rng_lit, d, "spark")))
+            _codes_expr("_xd", mn_lit, rng_lit, d)))
         .select(
             F.col(id_col), codes_out.alias("codes"),
             _floor_round_col(F.expr(_err_expr(
-                "_xd", "codes", mn_lit, rng_lit, d, "spark")),
+                "_xd", "codes", mn_lit, rng_lit, d)),
                 round_to).alias("err"),
         )
-    )
-
-
-def quantize_int8_duckdb_sql(parquet_path: str, vec_col: str = "embedding",
-                             id_col: str = "vec_id", round_to: int = 6,
-                             stringify_codes: bool = False) -> str:
-    """Oracle: derives the identical codebook from the parquet (min/max are
-    exact), embeds it as literals, recomputes codes + error in the same op
-    order with list functions."""
-    import duckdb
-
-    con = duckdb.connect()
-    d = con.execute(
-        f"SELECT len({vec_col}) FROM read_parquet('{parquet_path}') LIMIT 1"
-    ).fetchone()[0]
-    stats = con.execute(
-        f"SELECT i, min(xd[i]), max(xd[i]) FROM (SELECT "
-        f"list_transform({vec_col}, v -> CAST(v AS DOUBLE)) AS xd "
-        f"FROM read_parquet('{parquet_path}')), "
-        f"UNNEST(range(1, {d + 1})) AS t(i) GROUP BY i ORDER BY i"
-    ).fetchall()
-    con.close()
-    mn = [r[1] for r in stats]
-    rng = [r[2] - r[1] for r in stats]
-    mn_lit = _lit_array(mn, "duckdb")
-    rng_lit = _lit_array(rng, "duckdb")
-    codes = _codes_expr("xd", mn_lit, rng_lit, d, "duckdb")
-    err = _err_expr("xd", "codes", mn_lit, rng_lit, d, "duckdb")
-    codes_out = ("array_to_string(codes, ',')" if stringify_codes
-                 else "codes")
-    return (
-        f"WITH x AS (SELECT {id_col}, "
-        f"list_transform({vec_col}, v -> CAST(v AS DOUBLE)) AS xd "
-        "FROM embeddings), "
-        f"c AS (SELECT {id_col}, xd, {codes} AS codes FROM x) "
-        f"SELECT {id_col}, {codes_out} AS codes, "
-        + _floor_round(err, round_to, "duckdb")
-        + " AS err FROM c"
     )

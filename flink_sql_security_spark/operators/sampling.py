@@ -22,49 +22,33 @@ from pyspark.sql import functions as F
 
 from flink_sql_security_spark.operators.cache import attach
 
-__all__ = ["hash_split", "hash_split_duckdb_sql",
-           "stratified_hash_sample", "stratified_hash_sample_duckdb_sql",
-           "per_key_quota", "per_key_quota_duckdb_sql",
-           "cross_split_contamination",
-           "shard_shuffle", "shard_shuffle_duckdb_sql",
-           "token_budget_sample", "token_budget_sample_duckdb_sql",
-           "weighted_sample", "weighted_sample_duckdb_sql",
-           "epoch_upsample", "epoch_upsample_duckdb_sql",
-           "rank_buckets", "rank_buckets_duckdb_sql",
-           "temperature_mix", "temperature_mix_duckdb_sql"]
+__all__ = ["hash_split", "stratified_hash_sample", "per_key_quota",
+           "cross_split_contamination", "shard_shuffle",
+           "token_budget_sample", "weighted_sample", "epoch_upsample",
+           "rank_buckets", "temperature_mix"]
 
 # 32-bit hash prefix folded into 10k buckets: plenty of resolution for
 # split fractions expressed in 0.01% steps, and exact integer arithmetic
 # in every engine (no float thresholds to drift).
-_BUCKETS = 10_000
+BUCKETS = 10_000
 
 
-def bucket_of_key_sql(key_sql: str, dialect: str = "spark",
-                      buckets: int = _BUCKETS) -> str:
+def bucket_of_key_sql(key_sql: str, buckets: int = BUCKETS) -> str:
     """THE deterministic-bucket recipe, parameterized on an arbitrary
     key expression: md5 → first 8 hex digits → BIGINT → % buckets.
-    One definition for both dialects so a change to the fold (hex
-    width, bucket count, hash) lands in one place — the sampling
-    family's id+salt forms below and the privacy tier's DP noise draw
-    (privacy.py) all delegate here. ``key_sql`` must already be a
-    string-typed SQL expression in the TARGET dialect."""
-    if dialect == "spark":
-        return (f"CAST(conv(substring(md5({key_sql}), 1, 8), 16, 10) "
-                f"AS BIGINT) % {buckets}")
-    return (f"(('0x' || substring(md5({key_sql}), 1, 8))::BIGINT) "
-            f"% {buckets}")
+    One definition so a change to the fold (hex width, bucket count,
+    hash) lands in one place — the sampling family's id+salt forms
+    below and the privacy tier's DP noise draw (privacy.py) all
+    delegate here; ``oracles.sampling.bucket_of_key_sql`` is its DuckDB
+    twin. ``key_sql`` must already be a string-typed SQL expression."""
+    return (f"CAST(conv(substring(md5({key_sql}), 1, 8), 16, 10) "
+            f"AS BIGINT) % {buckets}")
 
 
 def _bucket_expr(id_col: str, salt: str) -> str:
     """Spark SQL for the deterministic [0, 10000) bucket of a row id."""
     return bucket_of_key_sql(
-        f"concat(CAST({id_col} AS STRING), ':{salt}')", "spark")
-
-
-def _bucket_duckdb(id_col: str, salt: str) -> str:
-    """Identical bucket arithmetic in DuckDB."""
-    return bucket_of_key_sql(
-        f"CAST({id_col} AS VARCHAR) || ':{salt}'", "duckdb")
+        f"concat(CAST({id_col} AS STRING), ':{salt}')")
 
 
 def hash_split(df: DataFrame, id_col: str = "doc_id",
@@ -87,36 +71,13 @@ def hash_split(df: DataFrame, id_col: str = "doc_id",
         acc += w
         # native-round-ok: driver-side Python, same integer literal
         # embedded into BOTH engines' plans
-        cuts.append(int(round(_BUCKETS * acc / total)))  # native-round-ok
+        cuts.append(int(round(BUCKETS * acc / total)))  # native-round-ok
     bucket = F.expr(_bucket_expr(id_col, salt))
     case = F.when(bucket < cuts[0], F.lit(names[0]))
     for i in range(1, len(cuts)):
         case = case.when(bucket < cuts[i], F.lit(names[i]))
     case = case.otherwise(F.lit(names[-1]))
     return df.withColumn("bucket", bucket).withColumn("split", case)
-
-
-def hash_split_duckdb_sql(table: str = "documents", id_col: str = "doc_id",
-                          weights: tuple[float, ...] = (0.8, 0.1, 0.1),
-                          names: tuple[str, ...] = ("train", "val", "test"),
-                          salt: str = "split",
-                          select: str = "*") -> str:
-    """DuckDB SQL computing the identical split assignment (oracle)."""
-    total = sum(weights)
-    cuts, acc = [], 0.0
-    for w in weights[:-1]:
-        acc += w
-        # native-round-ok: driver-side Python, same integer literal
-        # embedded into BOTH engines' plans
-        cuts.append(int(round(_BUCKETS * acc / total)))  # native-round-ok
-    b = _bucket_duckdb(id_col, salt)
-    whens = " ".join(
-        f"WHEN bucket < {c} THEN '{n}'" for c, n in zip(cuts, names)
-    )
-    return (
-        f"SELECT {select}, bucket, CASE {whens} ELSE '{names[-1]}' END AS split "
-        f"FROM (SELECT {select}, {b} AS bucket FROM {table}) s"
-    )
 
 
 def stratified_hash_sample(df: DataFrame, fraction: float,
@@ -129,19 +90,8 @@ def stratified_hash_sample(df: DataFrame, fraction: float,
     resumed 100 TB job keeps exactly the rows the first attempt kept.
     """
     # native-round-ok: driver-side Python, same literal both engines
-    cut = int(round(_BUCKETS * fraction))  # native-round-ok
+    cut = int(round(BUCKETS * fraction))  # native-round-ok
     return df.where(F.expr(_bucket_expr(id_col, salt)) < cut)
-
-
-def stratified_hash_sample_duckdb_sql(fraction: float,
-                                      table: str = "documents",
-                                      id_col: str = "doc_id",
-                                      salt: str = "sample",
-                                      select: str = "*") -> str:
-    # native-round-ok: driver-side Python, same literal both engines
-    cut = int(round(_BUCKETS * fraction))  # native-round-ok
-    return (f"SELECT {select} FROM {table} "
-            f"WHERE {_bucket_duckdb(id_col, salt)} < {cut}")
 
 
 def per_key_quota(df: DataFrame, key_col: str, id_col: str = "doc_id",
@@ -159,21 +109,6 @@ def per_key_quota(df: DataFrame, key_col: str, id_col: str = "doc_id",
     return (df.withColumn("rn", F.row_number().over(w))
               .where(F.col("rn") <= n)
               .drop("rn"))
-
-
-def per_key_quota_duckdb_sql(table: str, key_col: str,
-                             id_col: str = "doc_id", n: int = 10,
-                             salt: str = "quota",
-                             select: str = "*") -> str:
-    """DuckDB oracle for :func:`per_key_quota`."""
-    return (
-        f"SELECT {select} FROM ("
-        f" SELECT {select}, row_number() OVER ("
-        f"  PARTITION BY {key_col}"
-        f"  ORDER BY md5(CAST({id_col} AS VARCHAR) || ':{salt}') ASC,"
-        f"  {id_col} ASC) AS rn"
-        f" FROM {table}) q WHERE rn <= {n}"
-    )
 
 
 def shard_shuffle(df: DataFrame, n_shards: int = 8,
@@ -211,20 +146,6 @@ def shard_shuffle(df: DataFrame, n_shards: int = 8,
     )
 
 
-def shard_shuffle_duckdb_sql(table: str = "documents", n_shards: int = 8,
-                             id_col: str = "doc_id",
-                             salt: str = "shuffle") -> str:
-    """DuckDB oracle for :func:`shard_shuffle` (identical hash + rank)."""
-    rk = (f"(('0x' || substring(md5(CAST({id_col} AS VARCHAR) || "
-          f"':{salt}'), 1, 15))::BIGINT)")
-    return (
-        f"SELECT {id_col}, CAST({rk} % {n_shards} AS INTEGER) AS shard, "
-        f"CAST(row_number() OVER (PARTITION BY {rk} % {n_shards} "
-        f"ORDER BY {rk} ASC, {id_col} ASC) AS INTEGER) AS pos "
-        f"FROM {table}"
-    )
-
-
 def cross_split_contamination(df: DataFrame, text_col: str = "text",
                               id_col: str = "doc_id",
                               threshold: float = 0.2,
@@ -258,7 +179,7 @@ def cross_split_contamination(df: DataFrame, text_col: str = "text",
         *cached_deps(pairs))
 
 
-def _budget_case(budget, key_col: str, quote=lambda v: f"'{v}'") -> str:
+def budget_case(budget, key_col: str, quote=lambda v: f"'{v}'") -> str:
     """SQL scalar for the per-key budget: a literal, or a CASE over keys."""
     if isinstance(budget, dict):
         whens = " ".join(f"WHEN {quote(k)} THEN {int(v)}"
@@ -296,7 +217,7 @@ def token_budget_sample(df: DataFrame, budget,
          .orderBy(pref.asc(), F.col(id_col).asc())
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     if isinstance(budget, dict):
-        budget_col = F.expr(_budget_case(budget, key_col))
+        budget_col = F.expr(budget_case(budget, key_col))
     else:
         budget_col = F.lit(int(budget))
     return (
@@ -304,30 +225,6 @@ def token_budget_sample(df: DataFrame, budget,
         .withColumn("cum_tokens", F.sum("n_tokens").over(w))
         .where(F.col("cum_tokens") <= budget_col)
         .select(F.col(id_col), F.col(key_col), "n_tokens", "cum_tokens")
-    )
-
-
-def token_budget_sample_duckdb_sql(budget, table: str = "documents",
-                                   key_col: str = "source",
-                                   id_col: str = "doc_id",
-                                   text_col: str = "text",
-                                   salt: str = "budget") -> str:
-    """DuckDB oracle: identical hash order, running sum, and cutoff."""
-    from flink_sql_security_spark.functions.text import word_count_sql
-
-    b = _budget_case(budget, key_col)
-    return (
-        f"SELECT {id_col}, {key_col}, n_tokens, cum_tokens FROM ("
-        f" SELECT {id_col}, {key_col}, n_tokens,"
-        f" CAST(sum(n_tokens) OVER ("
-        f"  PARTITION BY {key_col}"
-        f"  ORDER BY md5(CAST({id_col} AS VARCHAR) || ':{salt}') ASC,"
-        f"  {id_col} ASC"
-        f"  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)"
-        f" AS cum_tokens"
-        f" FROM (SELECT {id_col}, {key_col},"
-        f"  {word_count_sql(text_col)} AS n_tokens FROM {table}) t) s "
-        f"WHERE cum_tokens <= {b}"
     )
 
 
@@ -371,23 +268,6 @@ def weighted_sample(df: DataFrame, n: int, weight_col: str,
     return out.drop("_aes_key")
 
 
-def weighted_sample_duckdb_sql(n: int, weight_col: str,
-                               table: str = "documents",
-                               id_col: str = "doc_id",
-                               select: str = "*",
-                               salt: str = "wsample") -> str:
-    """DuckDB oracle: identical keys, identical top-n."""
-    h = (f"CAST(concat('0x', substring(md5(concat(CAST({id_col} AS VARCHAR), "
-         f"':{salt}')), 1, 15)) AS BIGINT)")
-    key = (f"ln((CAST({h} AS DOUBLE) + 1.0) / {float(1 << 60)!r}) "
-           f"/ CAST({weight_col} AS DOUBLE)")
-    return (
-        f"SELECT {select} FROM ("
-        f"SELECT *, {key} AS _aes_key FROM {table} WHERE {weight_col} > 0 "
-        f"ORDER BY _aes_key DESC, {id_col} LIMIT {n}) t"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Fractional up-sampling (mixture repeat factors / "epochs")
 # ---------------------------------------------------------------------------
@@ -406,7 +286,7 @@ def epoch_upsample(df: DataFrame, factor_col: str,
     ``explode``, no shuffle, no RNG state. Rows with factor ≤ 0 drop.
     """
     h = (f"CAST(conv(substring(md5(concat(CAST({id_col} AS STRING), "
-         f"':{salt}')), 1, 8), 16, 10) AS BIGINT) % {_BUCKETS}")
+         f"':{salt}')), 1, 8), 16, 10) AS BIGINT) % {BUCKETS}")
     # floor(x+0.5), not round(x): the fractional-part threshold is an
     # in-engine double, and native round() is the one op where the
     # engines disagree (shortest-repr HALF_UP vs exact binary) — the
@@ -414,28 +294,12 @@ def epoch_upsample(df: DataFrame, factor_col: str,
     n_copies = (
         f"CAST(floor({factor_col}) AS BIGINT) + "
         f"CASE WHEN {h} < CAST(floor(({factor_col} - floor({factor_col}))"
-        f" * {_BUCKETS} + 0.5) AS BIGINT) THEN 1 ELSE 0 END")
+        f" * {BUCKETS} + 0.5) AS BIGINT) THEN 1 ELSE 0 END")
     return (
         df.withColumn("_n", F.expr(n_copies))
         .where(F.col("_n") > 0)
         .withColumn("copy_i", F.explode(F.expr("sequence(0, _n - 1)")))
         .drop("_n")
-    )
-
-
-def epoch_upsample_duckdb_sql(factor_expr: str, table: str = "documents",
-                              id_col: str = "doc_id", select: str = "*",
-                              salt: str = "epoch") -> str:
-    """DuckDB oracle: identical copy counts and copy indexes."""
-    h = (f"CAST(concat('0x', substring(md5(concat(CAST({id_col} AS VARCHAR), "
-         f"':{salt}')), 1, 8)) AS BIGINT) % {_BUCKETS}")
-    n = (f"CAST(floor({factor_expr}) AS BIGINT) + "
-         f"CASE WHEN {h} < CAST(floor(({factor_expr} - floor({factor_expr}))"
-         f" * {_BUCKETS} + 0.5) AS BIGINT) THEN 1 ELSE 0 END")
-    return (
-        f"SELECT {select}, c.c AS copy_i FROM "
-        f"(SELECT *, {n} AS _n FROM {table}) t, "
-        f"UNNEST(range(t._n)) AS c(c) WHERE t._n > 0"
     )
 
 
@@ -484,26 +348,7 @@ def rank_buckets(df: DataFrame, score_col: str, n_buckets: int = 10,
     return attach(df.join(F.broadcast(cum), score_col), df)
 
 
-def rank_buckets_duckdb_sql(rows_sql: str, score_col: str,
-                            n_buckets: int = 10,
-                            bucket_col: str = "bucket") -> str:
-    """DuckDB SQL computing identical bucket assignments (oracle)."""
-    return f"""
-WITH rows_in AS (SELECT * FROM ({rows_sql})
-                 WHERE {score_col} IS NOT NULL),
-hist AS (SELECT {score_col}, count(*) AS _cnt FROM rows_in GROUP BY 1),
-cum AS (SELECT {score_col},
-               coalesce(sum(_cnt) OVER (ORDER BY {score_col}
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS _before,
-               sum(_cnt) OVER () AS _n
-        FROM hist)
-SELECT r.*, CAST(c._before * {n_buckets} // c._n AS BIGINT) AS {bucket_col}
-FROM rows_in r JOIN cum c USING ({score_col})
-"""
-
-
-def _temperature_take_buckets(counts: dict, alpha: float,
+def temperature_take_buckets(counts: dict, alpha: float,
                               target_rows: int) -> dict:
     """Per-group integer bucket threshold for temperature sampling.
 
@@ -525,11 +370,11 @@ def _temperature_take_buckets(counts: dict, alpha: float,
     out = {}
     for g in names:
         rate = min(1.0, target_rows * (w[g] / total) / counts[g])
-        out[g] = min(_BUCKETS, int(math.floor(rate * _BUCKETS + 0.5)))
+        out[g] = min(BUCKETS, int(math.floor(rate * BUCKETS + 0.5)))
     return out
 
 
-def _take_case_sql(take: dict, group_col: str) -> str:
+def take_case_sql(take: dict, group_col: str) -> str:
     """The per-group threshold CASE shared by the Spark operator and the
     DuckDB oracle emitter. An EMPTY take map (empty input, or every
     group NULL) must emit the literal ``0`` — ``CASE ELSE 0 END`` with
@@ -573,37 +418,12 @@ def temperature_mix(df: DataFrame, group_col: str = "source",
     counts = {r[0]: r[1]
               for r in df.groupBy(group_col).count().collect()
               if r[0] is not None}
-    take = _temperature_take_buckets(counts, alpha, target_rows)
-    case = _take_case_sql(take, group_col)
+    take = temperature_take_buckets(counts, alpha, target_rows)
+    case = take_case_sql(take, group_col)
     bucket = _bucket_expr(id_col, salt)
     return (df.where(F.expr(f"({bucket}) < ({case})"))
             .select(id_col, group_col,
                     F.expr(case).cast("int").alias("take_buckets")))
-
-
-def temperature_mix_duckdb_sql(parquet_path: str, table: str = "documents",
-                               group_col: str = "source",
-                               alpha: float = 0.5, target_rows: int = 200,
-                               id_col: str = "doc_id",
-                               salt: str = "tmix") -> str:
-    """Oracle for :func:`temperature_mix` — group counts re-derive from
-    the parquet at emit time and run through the SAME
-    :func:`_temperature_take_buckets` floats, so the emitted integer
-    thresholds are identical; the SQL verifies the bucket filter."""
-    import duckdb
-
-    con = duckdb.connect()
-    rows = con.execute(
-        f"SELECT {group_col}, count(*) FROM read_parquet('{parquet_path}') "
-        f"WHERE {group_col} IS NOT NULL GROUP BY 1").fetchall()
-    con.close()
-    take = _temperature_take_buckets({r[0]: r[1] for r in rows},
-                                     alpha, target_rows)
-    case = _take_case_sql(take, group_col)
-    bucket = _bucket_duckdb(id_col, salt)
-    return (f"SELECT {id_col}, {group_col}, "
-            f"CAST({case} AS INT) AS take_buckets "
-            f"FROM {table} WHERE ({bucket}) < ({case})")
 
 
 def component_safe_split(df: DataFrame, pairs: DataFrame,
@@ -646,37 +466,3 @@ def component_safe_split(df: DataFrame, pairs: DataFrame,
     )
     return hash_split(keyed, id_col="group_key", weights=weights,
                       names=names, salt=salt)
-
-
-def component_safe_split_duckdb_sql(pairs_sql: str,
-                                    table: str = "documents",
-                                    id_col: str = "doc_id",
-                                    weights: tuple[float, ...] = (0.8, 0.1, 0.1),
-                                    names: tuple[str, ...] = ("train", "val", "test"),
-                                    salt: str = "split") -> str:
-    """Oracle: recursive-closure components nested under the identical
-    bucket/threshold arithmetic (exact integers, no float cuts)."""
-    from .dedup import connected_components_duckdb_sql
-
-    if len(weights) != len(names):
-        raise ValueError("weights and names must align")
-    total = sum(weights)
-    cuts, acc = [], 0.0
-    for w in weights[:-1]:
-        acc += w
-        # native-round-ok: driver-side Python, same integer literal
-        # embedded into BOTH engines' plans
-        cuts.append(int(round(_BUCKETS * acc / total)))  # native-round-ok
-    case = "CASE "
-    for cut, name in zip(cuts, names):
-        case += f"WHEN bucket < {cut} THEN '{name}' "
-    case += f"ELSE '{names[-1]}' END"
-    comp_sql = connected_components_duckdb_sql(pairs_sql)
-    return (
-        f"SELECT {id_col}, group_key, bucket, {case} AS split FROM "
-        f"(SELECT {id_col}, group_key, "
-        f"{_bucket_duckdb('group_key', salt)} AS bucket FROM "
-        f"(SELECT d.{id_col}, coalesce(c.component_id, d.{id_col}) "
-        f"AS group_key FROM {table} d LEFT JOIN ({comp_sql}) c "
-        f"ON d.{id_col} = c.doc_id))"
-    )

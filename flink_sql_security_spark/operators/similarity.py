@@ -31,7 +31,6 @@ from flink_sql_security_spark.plan_stats import plan_size_bytes
 BROADCAST_LIMIT_BYTES = 256 << 20
 QUERY_BROADCAST_LIMIT_BYTES = 64 << 20
 
-_DOT = "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v)"
 _NORM = "sqrt(aggregate({a}, 0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
 
 
@@ -93,7 +92,7 @@ def _seq_sq_norms(M):
     return np.asarray(out, dtype=np.float64)
 
 
-def _exact_unit_matrix(vec_lists):
+def exact_unit_matrix(vec_lists):
     """float vectors → exact unit float64 matrix (JVM-identical values:
     float→double widening is exact, IEEE division is correctly rounded)."""
     import numpy as np
@@ -215,8 +214,8 @@ def _rescore_joined(cand: DataFrame, left: DataFrame, right: DataFrame,
         for chunk in batches:
             if len(chunk):
                 yield _rescore_rows(
-                    chunk, a, b, _exact_unit_matrix(chunk["_va"].tolist()),
-                    _exact_unit_matrix(chunk["_vb"].tolist()), threshold)
+                    chunk, a, b, exact_unit_matrix(chunk["_va"].tolist()),
+                    exact_unit_matrix(chunk["_vb"].tolist()), threshold)
 
     return cand.join(va, a).join(vb, b).mapInPandas(
         score, f"{a} long, {b} long, cosine double")
@@ -327,7 +326,7 @@ def cosine_pairs(df: DataFrame, vec_col: str = "embedding",
                                      round_to, margin, n_blocks)
     pdf = raw.toPandas()
     ids_all = pdf[id_col].to_numpy()
-    U = _exact_unit_matrix(pdf[vec_col].tolist())
+    U = exact_unit_matrix(pdf[vec_col].tolist())
     bc = df.sparkSession.sparkContext.broadcast((ids_all, U))
 
     def gen(batches):
@@ -336,7 +335,7 @@ def cosine_pairs(df: DataFrame, vec_col: str = "embedding",
             if len(chunk):
                 yield _threshold_pairs(
                     chunk[id_col].to_numpy(),
-                    _exact_unit_matrix(chunk[vec_col].tolist()), ids_b, B,
+                    exact_unit_matrix(chunk[vec_col].tolist()), ids_b, B,
                     threshold, round_to, margin, ordered=True)
 
     return raw.mapInPandas(gen, _PAIRS_SCHEMA)
@@ -375,8 +374,8 @@ def _blocked_cosine_pairs(raw: DataFrame, vec_col: str, id_col: str,
         right = pdf if gi == gj else pdf[pdf["_blk"] == gj]
         if not (len(left) and len(right)):
             return _scored(("id_a", "id_b"), [], [], [])
-        A = _exact_unit_matrix(left[vec_col].tolist())
-        B = A if gi == gj else _exact_unit_matrix(right[vec_col].tolist())
+        A = exact_unit_matrix(left[vec_col].tolist())
+        B = A if gi == gj else exact_unit_matrix(right[vec_col].tolist())
         return _threshold_pairs(left[id_col].to_numpy(), A,
                                 right[id_col].to_numpy(), B, threshold,
                                 round_to, margin, ordered=gi == gj)
@@ -418,7 +417,7 @@ def cosine_topk(df: DataFrame, queries_df: DataFrame,
     if qpdf.empty:
         return _no_topk(df.sparkSession, k)
     q_ids = qpdf[id_col].to_numpy()
-    Q = _exact_unit_matrix(qpdf[vec_col].tolist())
+    Q = exact_unit_matrix(qpdf[vec_col].tolist())
     bc = df.sparkSession.sparkContext.broadcast((q_ids, Q))
 
     def gen(batches):
@@ -427,7 +426,7 @@ def cosine_topk(df: DataFrame, queries_df: DataFrame,
             if len(chunk):
                 yield _topk_candidates(
                     ids_q, Qm, chunk[id_col].to_numpy(),
-                    _exact_unit_matrix(chunk[vec_col].tolist()), k,
+                    exact_unit_matrix(chunk[vec_col].tolist()), k,
                     round_to)
 
     cand = df.select(id_col, vec_col).mapInPandas(gen, _TOPK_SCHEMA)
@@ -505,8 +504,8 @@ def _blocked_cosine_topk(raw: DataFrame, q: DataFrame, vec_col: str,
         if not (len(qs) and len(cs)):
             return _scored(("q_id", "n_id"), [], [], [])
         return _topk_candidates(
-            qs["_id"].to_numpy(), _exact_unit_matrix(qs["_v"].tolist()),
-            cs["_id"].to_numpy(), _exact_unit_matrix(cs["_v"].tolist()),
+            qs["_id"].to_numpy(), exact_unit_matrix(qs["_v"].tolist()),
+            cs["_id"].to_numpy(), exact_unit_matrix(cs["_v"].tolist()),
             k, round_to)
 
     cand = both.groupBy("_qb", "_cb").applyInPandas(score_group,
@@ -528,10 +527,10 @@ def _ivf_centroids(u: DataFrame, id_col: str, n_cells: int,
 
     pdf = u.orderBy(id_col).limit(sample).toPandas()
     X = np.array(pdf["unit"].tolist(), dtype=np.float64)
-    return _ivf_centroids_np(X, n_cells, iters)
+    return ivf_centroids_np(X, n_cells, iters)
 
 
-def _ivf_centroids_np(X, n_cells: int, iters: int):
+def ivf_centroids_np(X, n_cells: int, iters: int):
     """Shared numpy k-means core — the SQL-oracle emitter runs the same
     code on the same unit matrix so both engines embed identical centroid
     values.
@@ -660,7 +659,7 @@ def ivf_topk(df: DataFrame, queries_df: DataFrame,
     # the global top-k. The corpus is scanned once, no vector ever joins
     # or shuffles.
     q_ids = qpdf[id_col].to_numpy()
-    Q = _exact_unit_matrix(qpdf[vec_col].tolist())
+    Q = exact_unit_matrix(qpdf[vec_col].tolist())
     p = min(n_probe, len(C))
     q_cells = np.argsort(-np.einsum("ij,kj->ik", Q, C), kind="stable", axis=1)[:, :p]
     bcq = df.sparkSession.sparkContext.broadcast((q_ids, Q, q_cells, C))
@@ -670,7 +669,7 @@ def ivf_topk(df: DataFrame, queries_df: DataFrame,
         for chunk in batches:
             if not len(chunk):
                 continue
-            A = _exact_unit_matrix(chunk[vec_col].tolist())
+            A = exact_unit_matrix(chunk[vec_col].tolist())
             cell = np.argmax(_recheck_near_tie_rows(A @ cm.T, A, cm), axis=1)
             probed = np.array([np.isin(cell, c) for c in probes])
             yield _topk_candidates(ids_q, Qm, chunk[id_col].to_numpy(), A,
@@ -710,7 +709,7 @@ def _joined_ivf_topk(df: DataFrame, q: DataFrame, vec_col: str,
         for chunk in batches:
             if not len(chunk):
                 continue
-            Qm = _exact_unit_matrix(chunk[vec_col].tolist())
+            Qm = exact_unit_matrix(chunk[vec_col].tolist())
             cells = np.argsort(-np.einsum("ij,kj->ik", Qm, cm),
                                kind="stable", axis=1)[:, :p]
             idx = np.repeat(np.arange(len(Qm)), p)
@@ -752,7 +751,7 @@ def _joined_ivf_topk(df: DataFrame, q: DataFrame, vec_col: str,
     return _rank_top_k(paired.mapInPandas(score, _TOPK_SCHEMA), k)
 
 
-def _hyperplane(table: int, plane: int, dim: int) -> list[float]:
+def hyperplane(table: int, plane: int, dim: int) -> list[float]:
     """Deterministic pseudo-random hyperplane component r[t][p][i] from
     md5(t|p|i) → uniform in [-1, 1]. Computed driver-side: same values on
     every run/executor with zero shipped state, and the plan carries plain
@@ -784,7 +783,7 @@ def lsh_buckets(df: DataFrame, vec_col: str = "embedding",
     import numpy as np
 
     H = np.array(
-        [_hyperplane(t, p, dim) for t in range(tables) for p in range(bits)],
+        [hyperplane(t, p, dim) for t in range(tables) for p in range(bits)],
         dtype=np.float64)
     weights = (2 ** np.arange(bits)).astype(np.int64)
     bc = df.sparkSession.sparkContext.broadcast((H, weights))
@@ -879,7 +878,7 @@ def ann_candidate_pairs(df: DataFrame, vec_col: str = "embedding",
     import pandas as pd
 
     pdf = df.select(id_col, vec_col).toPandas()
-    U = _exact_unit_matrix(pdf[vec_col].tolist())
+    U = exact_unit_matrix(pdf[vec_col].tolist())
     idx_map = pd.Series(
         np.arange(len(pdf)), index=pdf[id_col].to_numpy())
     bc = df.sparkSession.sparkContext.broadcast((idx_map, U))
@@ -895,133 +894,6 @@ def ann_candidate_pairs(df: DataFrame, vec_col: str = "embedding",
                                 threshold)
 
     return attach(cand.mapInPandas(score, _PAIRS_SCHEMA), b)
-
-
-def ann_candidate_pairs_duckdb_sql(table: str = "embeddings",
-                                   vec_col: str = "embedding",
-                                   id_col: str = "vec_id", bits: int = 6,
-                                   dim: int = 64, threshold: float = 0.4,
-                                   tables: int = 4) -> str:
-    """DuckDB SQL reproducing ``ann_candidate_pairs`` exactly.
-
-    The hyperplanes are deterministic driver-side constants, so they embed
-    as double literals (repr round-trips to the identical IEEE value).
-    Sign tests run on DuckDB's sequential ``list_sum`` fold — which the
-    Spark side matches exactly via its near-zero sequential recheck — so
-    bucket ids, candidate pairs, and the unit-dot cosines all agree
-    bit-for-bit.
-    """
-    def dot(plane: list[float]) -> str:
-        lits = ", ".join(repr(h) for h in plane)
-        return (f"list_sum(list_transform(list_zip({vec_col}, [{lits}]), "
-                "x -> CAST(x[1] AS DOUBLE) * x[2]))")
-
-    bucket_exprs = []
-    for t in range(tables):
-        terms = " + ".join(
-            f"(CASE WHEN {dot(_hyperplane(t, p, dim))} > 0 "
-            f"THEN {2 ** p} ELSE 0 END)"
-            for p in range(bits))
-        bucket_exprs.append(f"({terms})")
-    buckets_list = ", ".join(bucket_exprs)
-    unit = (
-        f"u AS (SELECT {id_col}, list_transform({vec_col}, "
-        "x -> CAST(x AS DOUBLE) / n) AS unit"
-        f" FROM (SELECT {id_col}, {vec_col}, "
-        f"sqrt(list_sum(list_transform({vec_col}, "
-        "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS n"
-        f" FROM {table}))"
-    )
-    return (
-        f"WITH bk AS (SELECT {id_col}, [{buckets_list}] AS bs FROM {table}), "
-        f"banded AS (SELECT {id_col}, t.i AS tbl, bs[t.i + 1] AS bucket "
-        f"FROM bk, UNNEST(range({tables})) AS t(i)), "
-        f"cand AS (SELECT DISTINCT a.{id_col} AS id_a, b.{id_col} AS id_b "
-        "FROM banded a JOIN banded b ON a.tbl = b.tbl AND a.bucket = b.bucket "
-        f"WHERE a.{id_col} < b.{id_col}), "
-        + unit + " "
-        "SELECT id_a, id_b, " + floor_round(
-            "list_sum(list_transform(list_zip(ua.unit, ub.unit), "
-            "x -> x[1] * x[2]))", 6, "duckdb") + " AS cosine "
-        f"FROM cand JOIN u ua ON ua.{id_col} = id_a "
-        f"JOIN u ub ON ub.{id_col} = id_b "
-        "WHERE " + floor_round(
-            "list_sum(list_transform(list_zip(ua.unit, ub.unit), "
-            "x -> x[1] * x[2]))", 6, "duckdb") + f" >= {threshold}"
-    )
-
-
-def ivf_topk_duckdb_sql(parquet_path: str, query_pred: str = "vec_id < 20",
-                        vec_col: str = "embedding", id_col: str = "vec_id",
-                        k: int = 5, n_cells: int = 16, n_probe: int = 4,
-                        iters: int = 5, sample: int = 4096,
-                        round_to: int = 6) -> str:
-    """DuckDB SQL reproducing ``ivf_topk`` exactly.
-
-    Centroids and query probe sets are deterministic driver-side artifacts
-    (k-means over the lowest-id sample, stable argsort of query-centroid
-    scores) — the emitter re-derives them with the SAME numpy code from the
-    parquet file and embeds them as literals; the SQL then verifies the
-    distributed work: cell assignment (argmax over sequential-fold dots —
-    matched by the Spark side's near-tie recheck), probed-cell scoring,
-    and the deterministic top-k ranking.
-    """
-    import duckdb
-    import numpy as np
-
-    con = duckdb.connect()
-    pdf = con.execute(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{parquet_path}') "
-        f"ORDER BY {id_col}").df()
-    U = _exact_unit_matrix(pdf[vec_col].tolist())
-    C = _ivf_centroids_np(U[:sample], n_cells, iters)
-    qmask = con.execute(
-        f"SELECT {id_col} FROM read_parquet('{parquet_path}') "
-        f"WHERE {query_pred} ORDER BY {id_col}").df()[id_col].to_numpy()
-    id_order = pdf[id_col].to_numpy()
-    qpos = np.searchsorted(id_order, qmask)
-    Q = U[qpos]
-    p = min(n_probe, len(C))
-    q_cells = np.argsort(-np.einsum("ij,kj->ik", Q, C), kind="stable", axis=1)[:, :p]
-
-    def dot(center) -> str:
-        lits = ", ".join(repr(h) for h in center)
-        return ("list_sum(list_transform(list_zip(unit, [" + lits + "]), "
-                "x -> x[1] * x[2]))")
-
-    d_aliases = ", ".join(
-        f"{dot(C[c])} AS d_{c}" for c in range(len(C)))
-    # first-max-wins argmax (np.argmax semantics): the first cell whose
-    # score is >= every other cell's
-    argmax = "CASE "
-    for c in range(len(C)):
-        others = ", ".join(f"d_{j}" for j in range(len(C)) if j != c)
-        argmax += f"WHEN d_{c} >= greatest({others}) THEN {c} "
-    argmax += "END"
-    probe_rows = ", ".join(
-        f"({int(q)}, {int(c)})"
-        for qi, q in enumerate(qmask) for c in q_cells[qi])
-    return (
-        f"WITH u AS (SELECT {id_col}, list_transform({vec_col}, "
-        "x -> CAST(x AS DOUBLE) / n) AS unit"
-        f" FROM (SELECT {id_col}, {vec_col}, "
-        f"sqrt(list_sum(list_transform({vec_col}, "
-        "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS n"
-        f" FROM read_parquet('{parquet_path}'))), "
-        f"dots AS (SELECT {id_col}, unit, {d_aliases} FROM u), "
-        f"assign AS (SELECT {id_col}, unit, {argmax} AS cell FROM dots), "
-        f"probes(q_id, cell) AS (VALUES {probe_rows}), "
-        f"scored AS (SELECT p.q_id, a.{id_col} AS n_id, "
-        + floor_round(
-            "list_sum(list_transform(list_zip(uq.unit, a.unit), "
-            "x -> x[1] * x[2]))", round_to, "duckdb") + " AS cosine "
-        "FROM probes p JOIN assign a ON a.cell = p.cell "
-        "JOIN u uq ON uq.{id} = p.q_id "
-        "WHERE a.{id} <> p.q_id)".format(id=id_col) + " , "
-        "ranked AS (SELECT q_id, n_id, cosine, row_number() OVER "
-        "(PARTITION BY q_id ORDER BY cosine DESC, n_id) AS rank FROM scored) "
-        f"SELECT q_id, n_id, cosine, rank FROM ranked WHERE rank <= {k}"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1080,7 +952,7 @@ def lsh_bits_for(n_vectors: int, target_bucket: int = 40,
     return max(min_bits, min(max_bits, bits))
 
 
-def _matryoshka_shortlist_k(k: int, shortlist, n_corpus) -> int:
+def matryoshka_shortlist_k(k: int, shortlist, n_corpus) -> int:
     """ONE definition of the matryoshka shortlist size (Spark and the
     DuckDB oracle compute the identical value). ``shortlist='auto'``
     sizes it to the corpus like the binary tier's ``rerank='auto'``:
@@ -1134,7 +1006,7 @@ def matryoshka_topk(df: DataFrame, queries_df: DataFrame, *,
     ``_exact_rerank`` refine stage (one tie rule for every pruned scan).
     Recall is a property of the embedding's MRL quality AND the
     shortlist size: ``shortlist='auto'`` (default) sizes it
-    ``max(8·k, ceil(5·sqrt(n)))`` via :func:`_matryoshka_shortlist_k`
+    ``max(8·k, ceil(5·sqrt(n)))`` via :func:`matryoshka_shortlist_k`
     — on the isotropic synthetic fixture (worst case for prefix
     pruning: flat spectrum) auto lifts a 32/64 prefix from ~0.72 at
     the old fixed ×8 to ≥0.9 (see tests, pinned at two corpus sizes);
@@ -1142,7 +1014,7 @@ def matryoshka_topk(df: DataFrame, queries_df: DataFrame, *,
     """
     if prefix_dims < 1:
         raise ValueError(f"prefix_dims must be >= 1: {prefix_dims}")
-    short_k = _matryoshka_shortlist_k(
+    short_k = matryoshka_shortlist_k(
         k, shortlist, lambda: _corpus_rows(df.select(id_col)))
     from .binary import _exact_rerank
 
@@ -1158,64 +1030,3 @@ def matryoshka_topk(df: DataFrame, queries_df: DataFrame, *,
     return _exact_rerank(
         df.select(id_col, vec_col), queries_df.select(id_col, vec_col),
         short.select("q_id", "n_id"), vec_col, id_col, k, round_to)
-
-
-def matryoshka_topk_duckdb_sql(table: str = "embeddings",
-                               query_pred: str = "vec_id < 20", *,
-                               prefix_dims: int,
-                               vec_col: str = "embedding",
-                               id_col: str = "vec_id", k: int = 5,
-                               shortlist: int | str = "auto",
-                               round_to: int = 6) -> str:
-    """DuckDB SQL twin of :func:`matryoshka_topk` (oracle): the same
-    prefix-unit shortlist (floor-rounded sequential-fold cosine, id tie
-    break) and full-unit rerank. ``shortlist='auto'`` emits the
-    :func:`_matryoshka_shortlist_k` sqrt rule as an in-query scalar
-    subquery over the same table — ceil/sqrt are IEEE-identical to the
-    Python fold, so both engines cut the identical shortlist."""
-    if prefix_dims < 1:
-        raise ValueError(f"prefix_dims must be >= 1: {prefix_dims}")
-    if shortlist == "auto":
-        cutoff = (f"greatest({8 * k}, CAST(ceil(5.0 * sqrt("
-                  f"(SELECT count(*) FROM {table}))) AS BIGINT))")
-    else:
-        # validates the int range with the single shared rule
-        cutoff = str(_matryoshka_shortlist_k(k, shortlist, 0))
-
-    def unit_cte(name: str, vec: str) -> str:
-        return (
-            f"{name} AS (SELECT {id_col}, list_transform(xd, "
-            "x -> x / n) AS unit "
-            f"FROM (SELECT {id_col}, "
-            f"list_transform({vec}, x -> CAST(x AS DOUBLE)) AS xd, "
-            f"sqrt(list_sum(list_transform({vec}, "
-            "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS n "
-            f"FROM {table}))")
-
-    dot = floor_round(
-        "list_sum(list_transform(list_zip({a}, {b}), x -> x[1] * x[2]))",
-        round_to, "duckdb")
-    return (
-        "WITH "
-        + unit_cte("pu", f"list_slice({vec_col}, 1, {prefix_dims})") + ", "
-        + unit_cte("fu", vec_col) + ", "
-        "pre AS (SELECT q.{i} AS q_id, n.{i} AS n_id, "
-        .format(i=id_col)
-        + dot.format(a="q.unit", b="n.unit") + " AS pcos "
-        f"FROM pu q, pu n WHERE q.{id_col} IN "
-        f"(SELECT {id_col} FROM {table} WHERE {query_pred}) "
-        f"AND q.{id_col} <> n.{id_col}), "
-        "short AS (SELECT q_id, n_id FROM ("
-        "SELECT q_id, n_id, row_number() OVER ("
-        "PARTITION BY q_id ORDER BY pcos DESC, n_id) AS prank FROM pre) "
-        f"WHERE prank <= {cutoff}), "
-        "rescored AS (SELECT s.q_id, s.n_id, "
-        + dot.format(a="qu.unit", b="nu.unit") + " AS cosine "
-        "FROM short s "
-        f"JOIN fu qu ON qu.{id_col} = s.q_id "
-        f"JOIN fu nu ON nu.{id_col} = s.n_id) "
-        "SELECT q_id, n_id, cosine, rank FROM ("
-        "SELECT q_id, n_id, cosine, row_number() OVER ("
-        "PARTITION BY q_id ORDER BY cosine DESC, n_id) AS rank "
-        f"FROM rescored) WHERE rank <= {k}"
-    )

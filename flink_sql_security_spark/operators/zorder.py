@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, Column, functions as F
 ZBITS = 16  # bits kept per dimension; k dims → k·ZBITS-bit key
 
 
-def _scale_expr(col: str, vmin: str, vmax: str, bits: int) -> str:
+def scale_expr(col: str, vmin: str, vmax: str, bits: int) -> str:
     """Map ``col`` from [vmin, vmax] onto [0, 2^bits) with exact integer
     arithmetic: ((v - min) * (2^bits - 1)) DIV max(max - min, 1).
     Inputs must already be BIGINT (money → cents via exact DECIMAL cast
@@ -62,7 +62,7 @@ def zorder_key(df: DataFrame, cols: list[str], bits: int = ZBITS,
     for c in cols:
         aggs += [F.min(c).alias(f"_mn_{c}"), F.max(c).alias(f"_mx_{c}")]
     bounds = df.agg(*aggs)
-    scaled = [_scale_expr(c, f"_mn_{c}", f"_mx_{c}", bits) for c in cols]
+    scaled = [scale_expr(c, f"_mn_{c}", f"_mx_{c}", bits) for c in cols]
     # the interleave fold is the heavy narrow kernel — spread a small
     # (single-row-group) input across cores; no-op at corpus scale
     return (
@@ -80,28 +80,3 @@ def zorder_layout(df: DataFrame, cols: list[str], n_files: int,
     keyed = zorder_key(df, cols, bits)
     return keyed.repartitionByRange(n_files, "zkey") \
                 .sortWithinPartitions("zkey")
-
-
-def zorder_key_duckdb_sql(table: str, cols: list[str], key_cols: list[str],
-                          bits: int = ZBITS) -> str:
-    """DuckDB SQL computing identical (key_cols..., zkey) rows (oracle).
-
-    ``cols`` must be BIGINT-valued expressions over ``table``.
-    """
-    k = len(cols)
-    mins = ", ".join(f"min({c}) AS _mn_{i}" for i, c in enumerate(cols))
-    maxs = ", ".join(f"max({c}) AS _mx_{i}" for i, c in enumerate(cols))
-    scaled = [
-        _scale_expr(c, f"_mn_{i}", f"_mx_{i}", bits).replace(" DIV ", " // ")
-        for i, c in enumerate(cols)]
-    terms = " + ".join(
-        f"((({s}) >> i) & 1) * (1::BIGINT << (i * {k} + {d}))"
-        for d, s in enumerate(scaled))
-    fold = (f"list_sum(list_transform(range(0, {bits}), "
-            f"i -> {terms}))")
-    key_sel = ", ".join(key_cols)
-    return (
-        f"WITH b AS (SELECT {mins}, {maxs} FROM {table}) "
-        f"SELECT {key_sel}, CAST({fold} AS BIGINT) AS zkey "
-        f"FROM {table}, b"
-    )

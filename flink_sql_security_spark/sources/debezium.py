@@ -134,46 +134,6 @@ def debezium_state(df: DataFrame, *, row_ddl: str, key_cols: list[str],
             .drop("_op", "_seq", "_tie"))
 
 
-def debezium_state_duckdb_sql(table_sql: str, *, fields: list[tuple],
-                              key_cols: list[str],
-                              value_col: str = "value",
-                              tiebreak_path: str | None = None) -> str:
-    """DuckDB oracle: identical decode (json_extract over both wrapper
-    shapes) + identical window compaction.
-
-    ``fields``: [(name, duckdb_type), ...] for the row image columns.
-    ``tiebreak_path``: e.g. ``"pos"`` for ``source.pos``, or None.
-    """
-    def ext(path: str) -> str:
-        # wrapper-tolerant: payload.<path> if present, else <path>
-        return (f"coalesce(json_extract_string({value_col}, "
-                f"'$.payload.{path}'), "
-                f"json_extract_string({value_col}, '$.{path}'))")
-
-    cols = ", ".join(
-        f"CAST(CASE WHEN {ext('op')} = 'd' THEN {ext('before.' + n)} "
-        f"ELSE {ext('after.' + n)} END AS {t}) AS {n}"
-        for n, t in fields)
-    tie = (f"CAST({ext('source.' + tiebreak_path)} AS BIGINT)"
-           if tiebreak_path else "CAST(0 AS BIGINT)")
-    keys = ", ".join(key_cols)
-    names = ", ".join(n for n, _ in fields)
-    return f"""
-WITH decoded AS (
-  SELECT {cols},
-         {ext('op')} AS _op,
-         CAST({ext('ts_ms')} AS BIGINT) AS _seq,
-         {tie} AS _tie
-  FROM {table_sql}
-  WHERE {ext('op')} IN ('c', 'u', 'r', 'd'))
-SELECT {names} FROM (
-  SELECT *, row_number() OVER (PARTITION BY {keys}
-            ORDER BY _seq DESC, _tie DESC) AS _rn
-  FROM decoded) s
-WHERE _rn = 1 AND _op <> 'd'
-""".strip()
-
-
 def debezium_state_stream(stream: DataFrame, *, row_ddl: str,
                           key_cols: list[str],
                           value_col: str = "value",

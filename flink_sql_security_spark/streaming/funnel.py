@@ -60,7 +60,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.funnel import _check_steps
+from ..operators.funnel import check_steps
 
 
 def funnel_state_stream(events: DataFrame, steps, *,
@@ -110,7 +110,7 @@ def funnel_state_stream(events: DataFrame, steps, *,
     checkpointed query, take the value from pinned configuration, not
     from ``drain_state_partitions``, which follows the input's size and
     the cluster's parallelism."""
-    steps = _check_steps(steps)
+    steps = check_steps(steps)
     k = len(steps)
     h_us = (None if within_hours is None
             else int(within_hours) * 3_600 * 1_000_000)
@@ -323,11 +323,11 @@ def retention_activity_stream(events: DataFrame, *,
     ``retention_cohorts(state_snapshot, ts_col="period",
     period=<same>)`` for results bit-identical to the batch op over
     the raw events."""
-    from ..operators.timeseries import _PERIOD_SECONDS
+    from ..operators.timeseries import PERIOD_SECONDS
 
-    if period not in _PERIOD_SECONDS:
+    if period not in PERIOD_SECONDS:
         raise ValueError(
-            f"period must be one of {tuple(_PERIOD_SECONDS)}: {period!r}")
+            f"period must be one of {tuple(PERIOD_SECONDS)}: {period!r}")
     return (events.where(F.col(ts_col).isNotNull())
             .select(F.col(user_col).alias("user_id"),
                     F.date_trunc(period, F.col(ts_col)).alias("period"))

@@ -67,14 +67,14 @@ def rrf_ingest_stream(stream: DataFrame, retrievers, sink, *,
     checkpoint/trigger and calls ``.start()``.
     """
     from flink_sql_security_spark.operators.retrieval import (
-        _check_rrf_names, rrf_fuse)
+        check_rrf_names, rrf_fuse)
 
     # config errors (duplicate/malformed arm names, bad k0) must fail
     # at CONSTRUCTION, not inside the first micro-batch's foreachBatch
     if not retrievers:
         raise ValueError("rrf_ingest_stream requires at least one arm")
     names = [n for n, _ in retrievers]
-    _check_rrf_names(names)
+    check_rrf_names(names)
     if k0 < 1:
         raise ValueError(f"rrf_ingest_stream k0 must be >= 1: {k0}")
 

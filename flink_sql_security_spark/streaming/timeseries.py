@@ -37,9 +37,9 @@ def latest_per_period_stream(stream: DataFrame, *,
     observation in each (entity, period) bucket, ties on ``ts`` broken
     by the highest ``id_col`` — bit-identical to the batch stage-1 pick
     in ``resample_ffill`` (same bucket, same recency order)."""
-    from ..operators.timeseries import _check_step
+    from ..operators.timeseries import check_step
 
-    _check_step(step)
+    check_step(step)
     # same NULL-timestamp drop as the batch stage-1 (a NULL can't be
     # bucketed; without this the stream would carry a NULL-period key
     # the batch twin never produces)

@@ -8,6 +8,7 @@ import duckdb
 import pytest
 
 from flink_sql_security_spark.operators import binary as B
+import oracles.binary
 
 EMB = "/root/testdata/sf0.001/embeddings.parquet"
 
@@ -34,7 +35,7 @@ def fetch(con, sql):
 
 
 def test_codes_cross_engine_exact(emb, con):
-    assert rows(B.binary_codes(emb)) == fetch(con, B.binary_codes_duckdb_sql())
+    assert rows(B.binary_codes(emb)) == fetch(con, oracles.binary.binary_codes_duckdb_sql())
 
 
 def test_codes_pack_semantics(emb):
@@ -52,13 +53,13 @@ def test_codes_pack_semantics(emb):
 
 def test_hamming_topk_cross_engine_exact(emb, con):
     got = rows(B.hamming_topk(emb, emb.where("vec_id < 6"), k=4))
-    want = fetch(con, B.hamming_topk_duckdb_sql(query_pred="vec_id < 6", k=4))
+    want = fetch(con, oracles.binary.hamming_topk_duckdb_sql(query_pred="vec_id < 6", k=4))
     assert got == want and len(got) == 6 * 4
 
 
 def test_hamming_rerank_cross_engine_exact(emb, con):
     got = rows(B.hamming_topk(emb, emb.where("vec_id < 6"), k=4, rerank=3))
-    want = fetch(con, B.hamming_topk_duckdb_sql(
+    want = fetch(con, oracles.binary.hamming_topk_duckdb_sql(
         query_pred="vec_id < 6", k=4, rerank=3))
     assert got == want and len(got) == 6 * 4
 
@@ -140,7 +141,7 @@ def test_null_and_nan_bit_semantics(spark):
     tail = ", ".join(["-1.0"] * 38)
     con.execute("CREATE VIEW embeddings AS SELECT 0::BIGINT AS vec_id, "
                 f"['nan'::DOUBLE, NULL, {tail}] AS embedding")
-    got = con.execute(B.binary_codes_duckdb_sql(d=40)).fetchall()
+    got = con.execute(oracles.binary.binary_codes_duckdb_sql(d=40)).fetchall()
     con.close()
     assert got == [(0, 1, 0)]
 
@@ -160,7 +161,7 @@ def test_ivf_hamming_cross_engine_exact(emb, con, coarse):
     for rr in (0, 3):
         got = rows(B.ivf_hamming_topk(emb, emb.where("vec_id < 5"),
                                       coarse, k=4, n_probe=3, rerank=rr))
-        want = fetch(con, B.ivf_hamming_topk_duckdb_sql(
+        want = fetch(con, oracles.binary.ivf_hamming_topk_duckdb_sql(
             EMB, query_pred="vec_id < 5", k=4, n_cells=8, n_probe=3,
             rerank=rr, iters=3))
         assert got == want and len(got) == 5 * 4, rr
@@ -171,7 +172,7 @@ def test_ivf_hamming_scans_only_probed_cells(emb, coarse):
     of probed-cell sizes (minus self rows), never the full n·|Q|."""
     from pyspark.sql import functions as F
 
-    from flink_sql_security_spark.operators.pq import _probe_cells
+    from flink_sql_security_spark.operators.pq import probe_cells
     import numpy as np
 
     n_probe = 3
@@ -182,7 +183,7 @@ def test_ivf_hamming_scans_only_probed_cells(emb, coarse):
     qrows = emb.where("vec_id < 5").collect()
     expected = 0
     for q in qrows:
-        probed = _probe_cells(np.asarray(q["embedding"], np.float64),
+        probed = probe_cells(np.asarray(q["embedding"], np.float64),
                               coarse, n_probe)
         expected += sum(sizes[c] for c in probed)
         if cell_of[q["vec_id"]] in probed:
@@ -233,7 +234,7 @@ def test_ivf_index_raises_on_null_vector(spark, coarse):
 def test_ivf_oracle_empty_query_set(con):
     """Review fix: an empty probe set must express valid SQL and return
     the empty answer, not a parse error."""
-    got = con.execute(B.ivf_hamming_topk_duckdb_sql(
+    got = con.execute(oracles.binary.ivf_hamming_topk_duckdb_sql(
         EMB, query_pred="vec_id < 0", k=3, n_cells=4, n_probe=2,
         iters=2)).fetchall()
     assert got == []
@@ -281,7 +282,7 @@ def test_hamming_auto_rerank_cross_engine_exact(emb, con):
     in-plan on BOTH engines — values stay strictly hash-equal."""
     got = rows(B.hamming_topk(emb, emb.where("vec_id < 6"), k=4,
                               rerank="auto"))
-    want = fetch(con, B.hamming_topk_duckdb_sql(
+    want = fetch(con, oracles.binary.hamming_topk_duckdb_sql(
         query_pred="vec_id < 6", k=4, rerank="auto"))
     assert got == want and len(got) == 6 * 4
 
@@ -289,7 +290,7 @@ def test_hamming_auto_rerank_cross_engine_exact(emb, con):
 def test_ivf_hamming_auto_rerank_cross_engine_exact(emb, con, coarse):
     got = rows(B.ivf_hamming_topk(emb, emb.where("vec_id < 6"), coarse,
                                   k=4, n_probe=3, rerank="auto"))
-    want = fetch(con, B.ivf_hamming_topk_duckdb_sql(
+    want = fetch(con, oracles.binary.ivf_hamming_topk_duckdb_sql(
         EMB, query_pred="vec_id < 6", k=4, n_cells=8, n_probe=3,
         rerank="auto"))
     assert got == want and len(got) == 6 * 4
@@ -320,7 +321,7 @@ def test_rerank_rejects_bad_string(emb):
 
 
 def test_rerank_rejects_all_non_auto_strings_at_entry(emb, coarse):
-    """Validation happens ONCE at operator entry (_check_rerank): a
+    """Validation happens ONCE at operator entry (check_rerank): a
     numeric string like "4" must raise the clear message instead of
     being silently coerced by int(), and non-numeric strings must get
     the same message instead of a bare int() ValueError — on every
@@ -333,10 +334,10 @@ def test_rerank_rejects_all_non_auto_strings_at_entry(emb, coarse):
             B.ivf_hamming_topk(emb, q, coarse, k=3, n_probe=2,
                                rerank=bad)
         with pytest.raises(ValueError, match="rerank must be"):
-            B.hamming_topk_duckdb_sql(query_pred="vec_id < 2", k=3,
-                                      rerank=bad)
+            oracles.binary.hamming_topk_duckdb_sql(query_pred="vec_id < 2", k=3,
+                                                   rerank=bad)
         with pytest.raises(ValueError, match="rerank must be"):
-            B.ivf_hamming_topk_duckdb_sql(
+            oracles.binary.ivf_hamming_topk_duckdb_sql(
                 "/root/testdata/sf0.001/embeddings.parquet",
                 query_pred="vec_id < 2", k=3, rerank=bad)
 
@@ -371,7 +372,7 @@ def test_fuzz_binary_configs_cross_engine(spark):
             con2.execute(
                 f"CREATE VIEW embeddings AS SELECT * FROM "
                 f"read_parquet('{EMB}')")
-            want = fetch(con2, B.ivf_hamming_topk_duckdb_sql(
+            want = fetch(con2, oracles.binary.ivf_hamming_topk_duckdb_sql(
                 EMB, query_pred=pred, k=k, n_cells=n_cells,
                 n_probe=n_probe, rerank=rerank, iters=2, d=64))
             con2.close()
@@ -383,7 +384,7 @@ def test_fuzz_binary_configs_cross_engine(spark):
             con2.execute(
                 f"CREATE VIEW embeddings AS SELECT * FROM "
                 f"read_parquet('{EMB}')")
-            want = fetch(con2, B.hamming_topk_duckdb_sql(
+            want = fetch(con2, oracles.binary.hamming_topk_duckdb_sql(
                 query_pred=pred, k=k, rerank=rerank, d=d))
             con2.close()
         assert got == want and len(got) == n_q * k, cfg

@@ -5,6 +5,7 @@ import duckdb
 import pytest
 
 from flink_sql_security_spark.operators import classifier as C
+import oracles.classifier
 
 EMB = "/root/testdata/sf0.001/embeddings.parquet"
 
@@ -26,7 +27,7 @@ def test_gram_cross_engine_exact(emb, con):
     got = sorted((r["j"], r["k"], int(r["qsum"]))
                  for r in C.gram_partials(emb).collect())
     want = sorted((j, k, int(q))
-                  for j, k, q in con.execute(C.gram_duckdb_sql()).fetchall())
+                  for j, k, q in con.execute(oracles.classifier.gram_duckdb_sql()).fetchall())
     assert got == want
     # 65 augmented dims: 65 y-rows + 65*66/2 upper-triangle rows
     assert len(got) == 65 + 65 * 66 // 2
@@ -39,13 +40,13 @@ def test_gram_partitioning_independent(emb):
 
 
 def test_fit_matches_emitter_replica(emb):
-    assert C.ridge_fit(emb) == C.probe_weights_from_parquet(EMB)
+    assert C.ridge_fit(emb) == oracles.classifier.probe_weights_from_parquet(EMB)
 
 
 def test_probe_cross_engine_exact(emb, con):
     got = sorted(map(tuple, C.linear_probe(
         emb, positive=0, threshold=0.2).collect()))
-    want = sorted(map(tuple, con.execute(C.linear_probe_duckdb_sql(
+    want = sorted(map(tuple, con.execute(oracles.classifier.linear_probe_duckdb_sql(
         EMB, positive=0, threshold=0.2)).fetchall()))
     assert got == want and len(got) == 500
     preds = {p for _, _, p in got}
@@ -90,7 +91,7 @@ def test_fit_rejects_bad_vectors(spark):
 
 def test_score_plan_is_narrow(emb):
     """Scoring is a pure projection: no exchange, no Python node."""
-    w = C.probe_weights_from_parquet(EMB)
+    w = oracles.classifier.probe_weights_from_parquet(EMB)
     plan = (C.linear_score(emb, w)
             ._jdf.queryExecution().executedPlan().toString())
     assert "Exchange" not in plan
@@ -110,7 +111,7 @@ def test_fuzz_probe_configs_cross_engine(spark, emb, con):
         got = sorted(map(tuple, C.linear_probe(
             emb, positive=positive, l2=l2,
             threshold=threshold).collect()))
-        want = sorted(map(tuple, con.execute(C.linear_probe_duckdb_sql(
+        want = sorted(map(tuple, con.execute(oracles.classifier.linear_probe_duckdb_sql(
             EMB, positive=positive, l2=l2,
             threshold=threshold)).fetchall()))
         assert got == want and len(got) == 500, (trial, positive, l2,
@@ -136,7 +137,7 @@ def test_gram_large_magnitude_exact_and_overflow_guard(spark):
     con.execute("CREATE VIEW g AS SELECT * FROM (VALUES " + vals +
                 ") AS t(vec_id, embedding, label)")
     want = sorted((j, k, int(q)) for j, k, q in con.execute(
-        C.gram_duckdb_sql(d=4, table="g", positive=0)).fetchall())
+        oracles.classifier.gram_duckdb_sql(d=4, table="g", positive=0)).fetchall())
     con.close()
     assert got == want
 

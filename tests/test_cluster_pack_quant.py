@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_sql_security_spark.operators import clustering as C
+import oracles.clustering
 from flink_sql_security_spark.operators import packing as PK
 from flink_sql_security_spark.operators import quantize as Q
 
@@ -42,7 +43,7 @@ def test_kmeans_fit_matches_python_replica(vecs):
     spark_c = C.kmeans_fit(vecs, k=3, iters=3)
     rows = [(r["vec_id"], list(r["embedding"]))
             for r in vecs.collect()]
-    replica_c = C.kmeans_fit_replica(rows, k=3, iters=3)
+    replica_c = oracles.clustering.kmeans_fit_replica(rows, k=3, iters=3)
     assert spark_c == replica_c  # bit-identical, not approx
 
 
@@ -234,13 +235,14 @@ def test_bpe_train_learns_frequent_pairs(spark):
 
 def test_bpe_train_matches_replica(spark, tmp_path):
     from flink_sql_security_spark.operators import bpe
+    import oracles.bpe
 
     df = _bpe_corpus(spark)
     p = str(tmp_path / "bpe.parquet")
     df.write.mode("overwrite").parquet(p)
     # Spark writes a directory of part files; glob them for DuckDB
     assert bpe.bpe_train(df, n_merges=12, min_freq=1) == \
-        bpe.bpe_train_replica(p + "/*.parquet", n_merges=12, min_freq=1)
+        oracles.bpe.bpe_train_replica(p + "/*.parquet", n_merges=12, min_freq=1)
 
 
 def test_bpe_encode_counts_shrink_with_merges(spark):
@@ -264,6 +266,7 @@ def test_bpe_encode_duckdb_parity_in_test(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import bpe
+    import oracles.bpe
 
     df = _bpe_corpus(spark)
     merges = bpe.bpe_train(df, n_merges=8, min_freq=1)
@@ -273,7 +276,7 @@ def test_bpe_encode_duckdb_parity_in_test(spark):
     con.executemany("INSERT INTO documents VALUES (?, ?)",
                     [(r["doc_id"], r["text"]) for r in df.collect()])
     want = sorted(map(tuple, con.execute(
-        bpe.bpe_encode_duckdb_sql(merges)).fetchall()))
+        oracles.bpe.bpe_encode_duckdb_sql(merges)).fetchall()))
     assert got == want
 
 
@@ -328,6 +331,8 @@ def test_pq_encode_duckdb_parity_and_reconstruction(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import pq as PQ
+    import oracles.pq
+    from tools.pin_rewrites import SF_DIR
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     books = PQ.pq_train(emb, m=8, k=16, iters=2)
@@ -339,8 +344,8 @@ def test_pq_encode_duckdb_parity_and_reconstruction(spark):
     con.execute("CREATE VIEW embeddings AS SELECT * FROM "
                 "read_parquet('/root/testdata/sf0.001/embeddings.parquet')")
     want = sorted((i, tuple(c), e) for i, c, e in con.execute(
-        PQ.pq_encode_duckdb_sql("/root/testdata/sf0.001/embeddings.parquet",
-                                m=8, k=16, iters=2)).fetchall())
+        oracles.pq.pq_encode_duckdb_sql(f"{SF_DIR}/embeddings.parquet",
+                                        m=8, k=16, iters=2)).fetchall())
     assert got == want
 
 
@@ -348,6 +353,7 @@ def test_pq_topk_duckdb_parity(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import pq as PQ
+    import oracles.pq
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     books = PQ.pq_train(emb, m=8, k=16, iters=2)
@@ -356,7 +362,7 @@ def test_pq_topk_duckdb_parity(spark):
     con = duckdb.connect()
     con.execute("CREATE VIEW embeddings AS SELECT * FROM "
                 "read_parquet('/root/testdata/sf0.001/embeddings.parquet')")
-    want = sorted(map(tuple, con.execute(PQ.pq_topk_duckdb_sql(
+    want = sorted(map(tuple, con.execute(oracles.pq.pq_topk_duckdb_sql(
         "/root/testdata/sf0.001/embeddings.parquet",
         query_pred="vec_id < 4", m=8, k_cb=16, iters=2, k=5)).fetchall()))
     assert got == want and len(got) == 20
@@ -430,6 +436,7 @@ def test_ivfpq_topk_duckdb_parity(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import pq as PQ
+    import oracles.pq
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     books = PQ.pq_train(emb, m=8, k=16, iters=2)
@@ -440,7 +447,7 @@ def test_ivfpq_topk_duckdb_parity(spark):
     con = duckdb.connect()
     con.execute("CREATE VIEW embeddings AS SELECT * FROM "
                 "read_parquet('/root/testdata/sf0.001/embeddings.parquet')")
-    want = sorted(map(tuple, con.execute(PQ.ivfpq_topk_duckdb_sql(
+    want = sorted(map(tuple, con.execute(oracles.pq.ivfpq_topk_duckdb_sql(
         "/root/testdata/sf0.001/embeddings.parquet",
         query_pred="vec_id < 4", m=8, k_cb=16, iters=2,
         n_cells=8, n_probe=3, k=5)).fetchall()))
@@ -468,7 +475,7 @@ def test_ivfpq_scores_only_probed_cells(spark):
     qvecs = {r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
              for r in df.where("vec_id < 5").collect()}
     for r in out.collect():
-        probes = PQ._probe_cells(qvecs[r["q_id"]], coarse, 2)
+        probes = PQ.probe_cells(qvecs[r["q_id"]], coarse, 2)
         assert cells[r["n_id"]] in probes, (
             f"neighbor {r['n_id']} (cell {cells[r['n_id']]}) outside "
             f"query {r['q_id']}'s probe set {probes}")
@@ -497,6 +504,7 @@ def test_ivfpq_residual_duckdb_parity(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import pq as PQ
+    import oracles.pq
 
     path = "/root/testdata/sf0.001/embeddings.parquet"
     emb = spark.read.parquet(path)
@@ -507,7 +515,7 @@ def test_ivfpq_residual_duckdb_parity(spark):
     con = duckdb.connect()
     con.execute("CREATE VIEW embeddings AS SELECT * FROM "
                 f"read_parquet('{path}')")
-    want = sorted(map(tuple, con.execute(PQ.ivfpq_topk_duckdb_sql(
+    want = sorted(map(tuple, con.execute(oracles.pq.ivfpq_topk_duckdb_sql(
         path, query_pred="vec_id < 4", m=8, k_cb=16, iters=2,
         n_cells=8, n_probe=3, k=5, residual=True)).fetchall()))
     assert got == want and len(got) == 20
@@ -579,6 +587,7 @@ def test_pq_reconstruct_duckdb_parity_all_modes(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import pq as PQ
+    import oracles.pq
 
     path = "/root/testdata/sf0.001/embeddings.parquet"
     emb = spark.read.parquet(path)
@@ -589,7 +598,7 @@ def test_pq_reconstruct_duckdb_parity_all_modes(spark):
     got = sorted((r["vec_id"], tuple(r["approx"])) for r in
                  PQ.pq_reconstruct(emb, books).collect())
     want = sorted((i, tuple(a)) for i, a in con.execute(
-        PQ.pq_reconstruct_duckdb_sql(path, m=8, k=16, iters=2)).fetchall())
+        oracles.pq.pq_reconstruct_duckdb_sql(path, m=8, k=16, iters=2)).fetchall())
     assert got == want and len(got) == 500
 
     coarseR, booksR = PQ.ivfpq_train(emb, n_cells=8, m=8, k=16, iters=2)
@@ -597,8 +606,8 @@ def test_pq_reconstruct_duckdb_parity_all_modes(spark):
                  PQ.pq_reconstruct(emb, booksR, coarse=coarseR,
                                    residual=True).collect())
     want = sorted((i, c, tuple(a)) for i, c, a in con.execute(
-        PQ.pq_reconstruct_duckdb_sql(path, m=8, k=16, iters=2, n_cells=8,
-                                     residual=True)).fetchall())
+        oracles.pq.pq_reconstruct_duckdb_sql(path, m=8, k=16, iters=2, n_cells=8,
+                                             residual=True)).fetchall())
     assert got == want
 
 
@@ -662,6 +671,7 @@ def test_ivfpq_rerank_duckdb_parity(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import pq as PQ
+    import oracles.pq
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     books = PQ.pq_train(emb, m=8, k=16, iters=2)
@@ -672,7 +682,7 @@ def test_ivfpq_rerank_duckdb_parity(spark):
     con = duckdb.connect()
     con.execute("CREATE VIEW embeddings AS SELECT * FROM "
                 "read_parquet('/root/testdata/sf0.001/embeddings.parquet')")
-    want = sorted(map(tuple, con.execute(PQ.ivfpq_rerank_duckdb_sql(
+    want = sorted(map(tuple, con.execute(oracles.pq.ivfpq_rerank_duckdb_sql(
         "/root/testdata/sf0.001/embeddings.parquet",
         query_pred="vec_id < 4", m=8, k_cb=16, iters=2,
         n_cells=8, n_probe=3, k=5, rerank=3)).fetchall()))
@@ -756,6 +766,7 @@ def test_ivfpq_rerank_residual_duckdb_parity(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import pq as PQ
+    import oracles.pq
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     coarse, books = PQ.ivfpq_train(emb, n_cells=8, m=8, k=16, iters=2)
@@ -765,7 +776,7 @@ def test_ivfpq_rerank_residual_duckdb_parity(spark):
     con = duckdb.connect()
     con.execute("CREATE VIEW embeddings AS SELECT * FROM "
                 "read_parquet('/root/testdata/sf0.001/embeddings.parquet')")
-    want = sorted(map(tuple, con.execute(PQ.ivfpq_rerank_duckdb_sql(
+    want = sorted(map(tuple, con.execute(oracles.pq.ivfpq_rerank_duckdb_sql(
         "/root/testdata/sf0.001/embeddings.parquet",
         query_pred="vec_id < 4", m=8, k_cb=16, iters=2,
         n_cells=8, n_probe=3, k=5, rerank=3,
@@ -840,6 +851,7 @@ def test_fuzz_pq_configs_cross_engine(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import pq as PQ
+    import oracles.pq
 
     path = "/root/testdata/sf0.001/embeddings.parquet"
     emb = spark.read.parquet(path)
@@ -865,7 +877,7 @@ def test_fuzz_pq_configs_cross_engine(spark):
             emb, emb.where(f"vec_id < {n_q}"), coarse, books, k=k,
             n_probe=n_probe, rerank=rerank,
             residual=residual).collect()))
-        want = sorted(map(tuple, con.execute(PQ.ivfpq_rerank_duckdb_sql(
+        want = sorted(map(tuple, con.execute(oracles.pq.ivfpq_rerank_duckdb_sql(
             path, query_pred=f"vec_id < {n_q}", m=m, k_cb=k_cb, iters=2,
             n_cells=n_cells, n_probe=n_probe, k=k, rerank=rerank,
             residual=residual)).fetchall()))
@@ -991,6 +1003,7 @@ def test_opq_topk_duckdb_parity(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import opq as O
+    import oracles.pq
 
     path = "/root/testdata/sf0.001/embeddings.parquet"
     emb = spark.read.parquet(path)
@@ -1000,7 +1013,7 @@ def test_opq_topk_duckdb_parity(spark):
     con = duckdb.connect()
     con.execute("CREATE VIEW embeddings AS SELECT * FROM "
                 f"read_parquet('{path}')")
-    want = sorted(map(tuple, con.execute(O.opq_topk_duckdb_sql(
+    want = sorted(map(tuple, con.execute(oracles.pq.opq_topk_duckdb_sql(
         path, query_pred="vec_id < 5", m=8, k_cb=16, iters=2,
         opq_iters=2, k=4)).fetchall()))
     assert got == want and len(got) == 5 * 4
@@ -1044,14 +1057,14 @@ def test_opq_cuts_quantization_distortion():
     import numpy as np
 
     from flink_sql_security_spark.operators.opq import (
-        _opq_train_np, _pq_assign_np)
-    from flink_sql_security_spark.operators.pq import _pq_train_np
+        opq_train_np, _pq_assign_np)
+    from flink_sql_security_spark.operators.pq import pq_train_np
 
     rng = np.random.RandomState(6)
     lat = rng.randn(400, 16) * np.linspace(3.0, 0.1, 16)
     X = lat @ np.linalg.qr(rng.randn(16, 16))[0]
-    books_pq = _pq_train_np(X, 8, 8, 3)
-    R, books_opq = _opq_train_np(X, 8, 8, 3, 3, 6)
+    books_pq = pq_train_np(X, 8, 8, 3)
+    R, books_opq = opq_train_np(X, 8, 8, 3, 3, 6)
     Xr = X @ np.asarray(R)
     dist_pq = float(((X - _pq_assign_np(X, books_pq)) ** 2).sum())
     dist_opq = float(((Xr - _pq_assign_np(Xr, books_opq)) ** 2).sum())
@@ -1113,6 +1126,7 @@ def test_fuzz_opq_configs_cross_engine(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import opq as O
+    import oracles.pq
 
     path = "/root/testdata/sf0.001/embeddings.parquet"
     emb = spark.read.parquet(path)
@@ -1131,7 +1145,7 @@ def test_fuzz_opq_configs_cross_engine(spark):
                                opq_iters=opq_iters)
         got = sorted(map(tuple, O.opq_topk(
             emb, emb.where(f"vec_id < {n_q}"), R, books, k=k).collect()))
-        want = sorted(map(tuple, con.execute(O.opq_topk_duckdb_sql(
+        want = sorted(map(tuple, con.execute(oracles.pq.opq_topk_duckdb_sql(
             path, query_pred=f"vec_id < {n_q}", m=m, k_cb=k_cb, iters=2,
             opq_iters=opq_iters, k=k)).fetchall()))
         assert got == want and len(got) == n_q * k, cfg
@@ -1144,6 +1158,7 @@ def test_opq_ivf_topk_duckdb_parity_both_modes(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import opq as O
+    import oracles.pq
 
     path = "/root/testdata/sf0.001/embeddings.parquet"
     emb = spark.read.parquet(path)
@@ -1157,7 +1172,7 @@ def test_opq_ivf_topk_duckdb_parity_both_modes(spark):
         got = sorted(map(tuple, O.opq_ivf_topk(
             emb, emb.where("vec_id < 5"), R, coarse, books, k=4,
             n_probe=4, residual=residual).collect()))
-        want = sorted(map(tuple, con.execute(O.opq_ivf_topk_duckdb_sql(
+        want = sorted(map(tuple, con.execute(oracles.pq.opq_ivf_topk_duckdb_sql(
             path, query_pred="vec_id < 5", m=8, k_cb=16, iters=2,
             opq_iters=2, n_cells=8, n_probe=4, k=4,
             residual=residual)).fetchall()))
@@ -1170,6 +1185,7 @@ def test_opq_ivf_scores_only_probed_cells(spark):
     import numpy as np
 
     from flink_sql_security_spark.operators import opq as O, pq as PQ
+    import oracles.pq
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     R, coarse, books = O.opq_ivf_train(emb, m=8, k=16, iters=2,
@@ -1186,8 +1202,8 @@ def test_opq_ivf_scores_only_probed_cells(spark):
     qvecs = {r["vec_id"]: r["embedding"]
              for r in emb.where("vec_id < 5").collect()}
     for r in out.collect():
-        rq = np.asarray(O._rotate_py(qvecs[r["q_id"]], R))
-        probes = PQ._probe_cells(rq, coarse, 2)
+        rq = np.asarray(oracles.pq._rotate_py(qvecs[r["q_id"]], R))
+        probes = PQ.probe_cells(rq, coarse, 2)
         assert cells[r["n_id"]] in probes, (r, probes)
 
 
@@ -1198,6 +1214,7 @@ def test_oracle_builders_handle_empty_query_set(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import opq as O, pq as PQ
+    import oracles.pq
 
     path = "/root/testdata/sf0.001/embeddings.parquet"
     con = duckdb.connect()
@@ -1205,15 +1222,15 @@ def test_oracle_builders_handle_empty_query_set(spark):
                 f"read_parquet('{path}')")
     pred = "vec_id < 0"
     for sql in (
-            PQ.pq_topk_duckdb_sql(path, query_pred=pred, m=4, k_cb=8,
-                                  iters=1, k=3),
-            PQ.ivfpq_topk_duckdb_sql(path, query_pred=pred, m=4, k_cb=8,
-                                     iters=1, n_cells=4, n_probe=2, k=3),
-            O.opq_topk_duckdb_sql(path, query_pred=pred, m=4, k_cb=8,
-                                  iters=1, opq_iters=1, k=3),
-            O.opq_ivf_topk_duckdb_sql(path, query_pred=pred, m=4,
-                                      k_cb=8, iters=1, opq_iters=1,
-                                      n_cells=4, n_probe=2, k=3)):
+            oracles.pq.pq_topk_duckdb_sql(path, query_pred=pred, m=4, k_cb=8,
+                                          iters=1, k=3),
+            oracles.pq.ivfpq_topk_duckdb_sql(path, query_pred=pred, m=4, k_cb=8,
+                                             iters=1, n_cells=4, n_probe=2, k=3),
+            oracles.pq.opq_topk_duckdb_sql(path, query_pred=pred, m=4, k_cb=8,
+                                           iters=1, opq_iters=1, k=3),
+            oracles.pq.opq_ivf_topk_duckdb_sql(path, query_pred=pred, m=4,
+                                               k_cb=8, iters=1, opq_iters=1,
+                                               n_cells=4, n_probe=2, k=3)):
         assert con.execute(sql).fetchall() == []
 
 
@@ -1246,6 +1263,7 @@ def test_cluster_balanced_sample_contract(spark):
     from collections import Counter
 
     from flink_sql_security_spark.operators import clustering as C
+    import oracles.clustering
 
     path = "/root/testdata/sf0.001/embeddings.parquet"
     emb = spark.read.parquet(path)
@@ -1263,7 +1281,7 @@ def test_cluster_balanced_sample_contract(spark):
     con.execute("CREATE VIEW embeddings AS SELECT * FROM "
                 f"read_parquet('{path}')")
     want = sorted(map(tuple, con.execute(
-        C.cluster_balanced_sample_duckdb_sql(
+        oracles.clustering.cluster_balanced_sample_duckdb_sql(
             path, k=4, iters=2, n_per_cell=6)).fetchall()))
     assert got == want
 
@@ -1279,6 +1297,7 @@ def test_fuzz_opq_ivf_configs_cross_engine(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import opq as O
+    import oracles.pq
 
     path = "/root/testdata/sf0.001/embeddings.parquet"
     emb = spark.read.parquet(path)
@@ -1301,7 +1320,7 @@ def test_fuzz_opq_ivf_configs_cross_engine(spark):
         got = sorted(map(tuple, O.opq_ivf_topk(
             emb, emb.where(f"vec_id < {n_q}"), R, coarse, books, k=k,
             n_probe=n_probe, residual=residual).collect()))
-        want = sorted(map(tuple, con.execute(O.opq_ivf_topk_duckdb_sql(
+        want = sorted(map(tuple, con.execute(oracles.pq.opq_ivf_topk_duckdb_sql(
             path, query_pred=f"vec_id < {n_q}", m=m, k_cb=k_cb,
             iters=2, opq_iters=2, n_cells=n_cells, n_probe=n_probe,
             k=k, residual=residual)).fetchall()))
@@ -1318,6 +1337,7 @@ def test_fuzz_cluster_balanced_configs_cross_engine(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import clustering as CL
+    import oracles.clustering
 
     path = "/root/testdata/sf0.001/embeddings.parquet"
     emb = spark.read.parquet(path)
@@ -1335,7 +1355,7 @@ def test_fuzz_cluster_balanced_configs_cross_engine(spark):
             emb, k=k, iters=iters, n_per_cell=n_per_cell,
             salt=salt).collect()))
         want = sorted(map(tuple, con.execute(
-            CL.cluster_balanced_sample_duckdb_sql(
+            oracles.clustering.cluster_balanced_sample_duckdb_sql(
                 path, k=k, iters=iters, n_per_cell=n_per_cell,
                 salt=salt)).fetchall()))
         assert got == want and len(got) > 0, cfg
@@ -1351,6 +1371,7 @@ def test_fuzz_grouped_hll_configs_cross_engine(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import sketch as SK
+    import oracles.sketch
 
     rng = random.Random(9797)
     cases = [
@@ -1371,7 +1392,7 @@ def test_fuzz_grouped_hll_configs_cross_engine(spark):
         got = sorted(map(tuple, SK.grouped_distinct_hll(
             df, key_col, val_col, with_exact=with_exact).collect()))
         want = sorted(map(tuple, con.execute(
-            SK.grouped_distinct_hll_duckdb_sql(
+            oracles.sketch.grouped_distinct_hll_duckdb_sql(
                 table, key_col, val_col,
                 with_exact=with_exact)).fetchall()))
         con.close()

@@ -19,6 +19,7 @@ import pytest
 
 from flink_sql_security_spark.functions.text import (
     floor_round, floor_round_py)
+from oracles.common import floor_round as duckdb_floor_round
 from flink_sql_security_spark.operators.similarity import _round_half_up
 
 
@@ -54,7 +55,7 @@ def test_floor_rule_triple_agreement_on_midpoints(spark):
     con = duckdb.connect()
     duck = list(con.execute(
         "SELECT " + ", ".join(
-            floor_round(f"CAST({x!r} AS DOUBLE)", 6, "duckdb")
+            duckdb_floor_round(f"CAST({x!r} AS DOUBLE)", 6)
             for x in xs)).fetchone())
     con.close()
     assert duck == py
@@ -79,7 +80,7 @@ def test_floor_rule_fuzz_non_midpoints(spark):
     con = duckdb.connect()
     duck = list(con.execute(
         "SELECT " + ", ".join(
-            floor_round(f"CAST({x!r} AS DOUBLE)", 6, "duckdb")
+            duckdb_floor_round(f"CAST({x!r} AS DOUBLE)", 6)
             for x in vals[:800])).fetchone())
     con.close()
     assert duck == py[:800]
@@ -109,7 +110,7 @@ def test_floor_round_nd_generalization(nd):
     xs = [1.5 / 10 ** nd, 7.25, -3.5 / 10 ** nd, 0.0]
     duck = list(con.execute(
         "SELECT " + ", ".join(
-            floor_round(f"CAST({x!r} AS DOUBLE)", nd, "duckdb")
+            duckdb_floor_round(f"CAST({x!r} AS DOUBLE)", nd)
             for x in xs)).fetchone())
     con.close()
     assert duck == [floor_round_py(x, nd) for x in xs]
@@ -123,7 +124,7 @@ def test_floor_round_nd_bounds():
     # 15 is the last exactly-representable power-of-ten scale whose
     # repr stays in positional notation ('1e+16' + 'D' would not parse
     # in Spark SQL)
-    assert "D" in floor_round("x", 15, "spark")
+    assert "D" in floor_round("x", 15)
     for bad in (-1, 16, 100):
         with pytest.raises(ValueError, match="nd"):
             floor_round("x", bad)

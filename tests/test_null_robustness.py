@@ -14,8 +14,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_sql_security_spark.functions import text as T
+import oracles.text
 from flink_sql_security_spark.operators import dedup as D
+import oracles.dedup
 from flink_sql_security_spark.operators import sketch as SK
+import oracles.sketch
 
 ROWS = [
     (1, "the quick brown fox jumps over the lazy dog"),
@@ -75,7 +78,7 @@ def test_jaccard_pairs_null_docs_never_pair(both):
 def test_simhash_null_parity(both):
     df, con = both
     got = D.simhash(df)
-    want = _duck(con, D.simhash_duckdb_sql("nulldocs"), got.columns)
+    want = _duck(con, oracles.dedup.simhash_duckdb_sql("nulldocs"), got.columns)
     assert _rows(got) == want
 
 
@@ -86,8 +89,8 @@ def test_quality_and_langid_null_parity(both):
         T.quality_score(F.col("text")).alias("q"),
         T.lang_id(F.col("text")).alias("lang"))
     want = _duck(con, f"""
-        SELECT doc_id, {T.quality_score_sql('text')} AS q,
-               {T.lang_id_sql('text')} AS lang FROM nulldocs""",
+        SELECT doc_id, {oracles.text.quality_score_sql('text')} AS q,
+               {oracles.text.lang_id_sql('text')} AS lang FROM nulldocs""",
         got.columns)
     assert _rows(got) == want
 
@@ -97,7 +100,7 @@ def test_fingerprint_null_parity(both):
     got = df.select("doc_id",
                     T.fingerprint(F.col("text")).alias("fp"))
     want = _duck(con, f"""
-        SELECT doc_id, {T.fingerprint_sql('text')} AS fp FROM nulldocs""",
+        SELECT doc_id, {oracles.text.fingerprint_sql('text')} AS fp FROM nulldocs""",
         got.columns)
     assert _rows(got) == want
 
@@ -105,7 +108,7 @@ def test_fingerprint_null_parity(both):
 def test_hll_sketch_null_parity(both):
     df, con = both
     got = SK.approx_distinct_hll(df, ["text"], with_exact=False)
-    want = _duck(con, SK.approx_distinct_hll_duckdb_sql(
+    want = _duck(con, oracles.sketch.approx_distinct_hll_duckdb_sql(
         "nulldocs", ["text"], with_exact=False), got.columns)
     assert _rows(got) == want
 
@@ -162,8 +165,8 @@ def event_both(spark):
 
 
 def test_gapfill_null_parity(event_both):
-    from flink_sql_security_spark.operators.timeseries import (
-        resample_ffill, resample_ffill_sql)
+    from flink_sql_security_spark.operators.timeseries import resample_ffill
+    from oracles.timeseries import resample_ffill_sql
 
     df, con = event_both
     got = _rows_pd(resample_ffill(df))
@@ -173,8 +176,8 @@ def test_gapfill_null_parity(event_both):
 
 
 def test_retention_null_parity(event_both):
-    from flink_sql_security_spark.operators.timeseries import (
-        retention_cohorts, retention_cohorts_sql)
+    from flink_sql_security_spark.operators.timeseries import retention_cohorts
+    from oracles.timeseries import retention_cohorts_sql
 
     df, con = event_both
     got = _rows_pd(retention_cohorts(df, period="day"))
@@ -185,8 +188,8 @@ def test_retention_null_parity(event_both):
 
 
 def test_funnel_null_parity(event_both):
-    from flink_sql_security_spark.operators.funnel import (
-        funnel, funnel_duckdb_sql)
+    from flink_sql_security_spark.operators.funnel import funnel
+    from oracles.funnel import funnel_duckdb_sql
 
     df, con = event_both
     got = _rows_pd(funnel(df, ["view", "purchase"], within_hours=48))
@@ -197,8 +200,8 @@ def test_funnel_null_parity(event_both):
 
 
 def test_scd2_null_parity(event_both):
-    from flink_sql_security_spark.operators.cdc import (
-        scd2_history, scd2_history_duckdb_sql)
+    from flink_sql_security_spark.operators.cdc import scd2_history
+    from oracles.cdc import scd2_history_duckdb_sql
 
     df, con = event_both
     got = _rows_pd(scd2_history(df, ["user_id"], "ts", ["value"],
@@ -212,8 +215,8 @@ def test_scd2_null_parity(event_both):
 
 
 def test_outliers_null_parity(event_both):
-    from flink_sql_security_spark.operators.profile import (
-        robust_outliers, robust_outliers_duckdb_sql)
+    from flink_sql_security_spark.operators.profile import robust_outliers
+    from oracles.profile import robust_outliers_duckdb_sql
 
     df, con = event_both
     got = _rows_pd(robust_outliers(df, value_col="value",

@@ -10,9 +10,12 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from flink_sql_security_spark.functions import text as T
+import oracles.text
 from flink_sql_security_spark.operators import dedup as D
+import oracles.dedup
 from flink_sql_security_spark.operators import multimodal as M
 from flink_sql_security_spark.operators import similarity as S
+import oracles.similarity
 
 
 @pytest.fixture(scope="module")
@@ -337,8 +340,8 @@ def test_fuzz_gopher_cross_engine(spark):
     import duckdb
     import pandas as pd
 
-    from flink_sql_security_spark.functions.text import (
-        gopher_select, gopher_select_sql)
+    from flink_sql_security_spark.functions.text import gopher_select
+    from oracles.text import gopher_select_sql
 
     rng = random.Random(121393)
     vocab = ["the", "be", "to", "of", "and", "word", "fox", "##",
@@ -415,8 +418,8 @@ def test_fuzz_c4_cross_engine(spark):
     import duckdb
     import pandas as pd
 
-    from flink_sql_security_spark.functions.text import (
-        c4_select, c4_select_sql)
+    from flink_sql_security_spark.functions.text import c4_select
+    from oracles.text import c4_select_sql
 
     rng = random.Random(832040)
     enders = ["", ".", "!", "?", '"']
@@ -486,8 +489,8 @@ def test_fuzz_dedup_lines_cross_engine(spark):
     import duckdb
     import pandas as pd
 
-    from flink_sql_security_spark.operators.corpus import (
-        dedup_lines, dedup_lines_duckdb_sql)
+    from flink_sql_security_spark.operators.corpus import dedup_lines
+    from oracles.corpus import dedup_lines_duckdb_sql
 
     rng = random.Random(1346269)
     base = ["alpha beta", "Alpha  Beta", "gamma", "", "delta e"]
@@ -537,7 +540,7 @@ def test_redact_pii_goldens(spark):
     # DuckDB emitter agrees on the same inputs
     import duckdb
     for s, want in cases:
-        expr = T.redact_pii_sql("'" + s.replace("'", "''") + "'")
+        expr = oracles.text.redact_pii_sql("'" + s.replace("'", "''") + "'")
         assert duckdb.sql(f"SELECT {expr}").fetchone()[0] == want
 
 
@@ -1275,8 +1278,8 @@ def test_chunk_tokens_disjoint_and_validation(spark):
 
 def test_chunk_tokens_matches_duckdb(spark):
     import duckdb
-    from flink_sql_security_spark.operators.corpus import (
-        chunk_tokens, chunk_tokens_duckdb_sql)
+    from flink_sql_security_spark.operators.corpus import chunk_tokens
+    from oracles.corpus import chunk_tokens_duckdb_sql
     rows = [(i, " ".join(f"w{j}" for j in range(i % 11 + 1)))
             for i in range(1, 40)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
@@ -1335,7 +1338,7 @@ def test_trim_duplicate_spans_matches_duckdb(spark):
     con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
     want = sorted(map(tuple, con.execute(
-        D.trim_duplicate_spans_duckdb_sql(n=3, min_df=2)).fetchall()))
+        oracles.dedup.trim_duplicate_spans_duckdb_sql(n=3, min_df=2)).fetchall()))
     assert got == want
 
 
@@ -1481,6 +1484,7 @@ def test_dsir_targetlike_docs_score_higher(spark):
 def test_dsir_duckdb_parity_and_repartition_invariance(spark):
     import duckdb
     from flink_sql_security_spark.operators import dsir as DS
+    import oracles.dsir
     rows = [(i, f"word{i % 11} word{i % 5} filler text {i % 3}")
             for i in range(80)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
@@ -1494,7 +1498,7 @@ def test_dsir_duckdb_parity_and_repartition_invariance(spark):
         "CREATE TABLE ds_t AS SELECT range AS doc_id, "
         "'word' || (range % 11) || ' word' || (range % 5) || "
         "' filler text ' || (range % 3) AS text FROM range(80)")
-    want = sorted(map(tuple, con.execute(DS.dsir_weights_duckdb_sql(
+    want = sorted(map(tuple, con.execute(oracles.dsir.dsir_weights_duckdb_sql(
         "SELECT * FROM ds_t", "SELECT * FROM ds_t WHERE doc_id % 4 = 0",
         buckets=512)).fetchall()))
     assert got == want
@@ -1663,6 +1667,7 @@ def test_source_overlap_matrix_folds_and_averages(spark):
 
 def test_rank_buckets_null_scores_excluded(spark):
     from flink_sql_security_spark.operators import sampling as SM
+    import oracles.sampling
     import duckdb
     df = spark.createDataFrame(
         [(1, 1.0), (2, None), (3, 2.0), (4, None), (5, 3.0)],
@@ -1676,7 +1681,7 @@ def test_rank_buckets_null_scores_excluded(spark):
     con.execute("INSERT INTO rb_t VALUES (1,1.0),(2,NULL),(3,2.0),"
                 "(4,NULL),(5,3.0)")
     want = sorted(map(tuple, con.execute(
-        "SELECT doc_id, score, bucket FROM (" + SM.rank_buckets_duckdb_sql(
+        "SELECT doc_id, score, bucket FROM (" + oracles.sampling.rank_buckets_duckdb_sql(
             "SELECT * FROM rb_t", "score", 3) + ")").fetchall()))
     assert got == want
 
@@ -1684,6 +1689,7 @@ def test_rank_buckets_null_scores_excluded(spark):
 def test_fim_empty_and_null_docs_pass_through(spark):
     import duckdb
     from flink_sql_security_spark.operators import corpus as C
+    import oracles.corpus
     df = spark.createDataFrame(
         [(1, "real tokens here"), (2, ""), (3, None), (4, "   ")],
         "doc_id long, text string")
@@ -1701,7 +1707,7 @@ def test_fim_empty_and_null_docs_pass_through(spark):
     con.execute("INSERT INTO fim_t VALUES (1,'real tokens here'),(2,''),"
                 "(3,NULL),(4,'   ')")
     want = sorted(map(tuple, con.execute(
-        C.fim_transform_duckdb_sql("fim_t", rate=1.0)).fetchall()))
+        oracles.corpus.fim_transform_duckdb_sql("fim_t", rate=1.0)).fetchall()))
     assert sorted(tuple(r) for r in got.values()) == want
 
 
@@ -1719,17 +1725,17 @@ def test_temperature_take_buckets_limits():
     """alpha=1 keeps the natural distribution (one global rate);
     alpha=0 equalizes groups (equal per-group expected rows)."""
     from flink_sql_security_spark.operators.sampling import (
-        _temperature_take_buckets)
+        temperature_take_buckets)
 
     counts = {"a": 80, "b": 16, "c": 4}
-    nat = _temperature_take_buckets(counts, alpha=1.0, target_rows=50)
+    nat = temperature_take_buckets(counts, alpha=1.0, target_rows=50)
     # rate_g = target/total for every group -> identical thresholds
     assert len(set(nat.values())) == 1 and nat["a"] == 5000
-    eq = _temperature_take_buckets(counts, alpha=0.0, target_rows=30)
+    eq = temperature_take_buckets(counts, alpha=0.0, target_rows=30)
     # expected rows per group = target/3 = 10 -> rate = 10/count
     assert eq["a"] == 1250 and eq["b"] == 6250 and eq["c"] == 10000
     # intermediate alpha lands between the two regimes for the big group
-    mid = _temperature_take_buckets(counts, alpha=0.5, target_rows=30)
+    mid = temperature_take_buckets(counts, alpha=0.5, target_rows=30)
     assert eq["a"] < mid["a"] < 10000 and mid["c"] == 10000
 
 
@@ -1759,6 +1765,7 @@ def test_temperature_mix_duckdb_parity(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import sampling as SM
+    import oracles.sampling
 
     path = "/root/testdata/sf0.001/documents.parquet"
     docs = spark.read.parquet(path)
@@ -1768,7 +1775,7 @@ def test_temperature_mix_duckdb_parity(spark):
     con = duckdb.connect()
     con.execute("CREATE VIEW documents AS SELECT * FROM "
                 f"read_parquet('{path}')")
-    want = sorted(map(tuple, con.execute(SM.temperature_mix_duckdb_sql(
+    want = sorted(map(tuple, con.execute(oracles.sampling.temperature_mix_duckdb_sql(
         path, alpha=0.5, target_rows=30)).fetchall()))
     assert got == want and len(got) > 0
 
@@ -1828,7 +1835,9 @@ def test_keep_best_duckdb_parity(spark):
     from pyspark.sql import functions as F
 
     from flink_sql_security_spark.functions import text as T
+    import oracles.text
     from flink_sql_security_spark.operators import dedup as D
+    import oracles.dedup
 
     path = "/root/testdata/sf0.001/documents.parquet"
     docs = spark.read.parquet(path)
@@ -1852,8 +1861,8 @@ def test_keep_best_duckdb_parity(spark):
         "SELECT id_a, id_b, round(n_inter / (sa.n_sh + sb.n_sh - n_inter), 6) AS jaccard "
         "FROM inter JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b "
         "WHERE round(n_inter / (sa.n_sh + sb.n_sh - n_inter), 6) >= 0.05")
-    want = sorted(map(tuple, con.execute(D.keep_best_duckdb_sql(
-        pairs_sql, T.quality_score_sql("text"))).fetchall()))
+    want = sorted(map(tuple, con.execute(oracles.dedup.keep_best_duckdb_sql(
+        pairs_sql, oracles.text.quality_score_sql("text"))).fetchall()))
     assert got == want and len(got) > 0
 
 
@@ -1865,6 +1874,7 @@ def test_rp_project_duckdb_parity(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import projection as RP
+    import oracles.projection
 
     path = "/root/testdata/sf0.001/embeddings.parquet"
     emb = spark.read.parquet(path)
@@ -1873,7 +1883,7 @@ def test_rp_project_duckdb_parity(spark):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
     want = sorted((i, tuple(p)) for i, p in con.execute(
-        RP.rp_project_duckdb_sql(in_dim=64, out_dim=16)).fetchall())
+        oracles.projection.rp_project_duckdb_sql(in_dim=64, out_dim=16)).fetchall())
     assert got == want and len(got) == 500
 
 
@@ -1958,6 +1968,7 @@ def test_pca_project_duckdb_parity(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import projection as RP
+    import oracles.projection
 
     path = "/root/testdata/sf0.001/embeddings.parquet"
     emb = spark.read.parquet(path)
@@ -1967,7 +1978,7 @@ def test_pca_project_duckdb_parity(spark):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
     want = sorted((i, tuple(p)) for i, p in con.execute(
-        RP.pca_project_duckdb_sql(path, out_dim=8, sample=512)).fetchall())
+        oracles.projection.pca_project_duckdb_sql(path, out_dim=8, sample=512)).fetchall())
     assert got == want and len(got) == 500
 
 
@@ -2157,6 +2168,7 @@ def test_fuzz_pca_configs_cross_engine(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import projection as RP
+    import oracles.projection
 
     path = "/root/testdata/sf0.001/embeddings.parquet"
     emb = spark.read.parquet(path)
@@ -2177,7 +2189,7 @@ def test_fuzz_pca_configs_cross_engine(spark):
                                     explode=explode).collect())
         want = sorted(
             (r[0], r[1], r[2]) if explode else (r[0], tuple(r[1]))
-            for r in con.execute(RP.pca_project_duckdb_sql(
+            for r in con.execute(oracles.projection.pca_project_duckdb_sql(
                 path, out_dim=out_dim, sample=sample,
                 explode=explode)).fetchall())
         assert got == want and len(got) > 0, cfg
@@ -2189,11 +2201,11 @@ def _filtered_topk_duckdb_sql(corpus_pred: str, query_pred: str,
     """Oracle twin of filtered_topk for the fuzz suite: unit-dot
     scoring with the predicate on the corpus side only (the
     emb_filtered_topk entry shape, parameterized)."""
-    from flink_sql_security_spark.functions.text import floor_round
+    from oracles.common import floor_round
 
     dot = floor_round(
         "list_sum(list_transform(list_zip(q.unit, c.unit), "
-        "x -> x[1] * x[2]))", 6, "duckdb")
+        "x -> x[1] * x[2]))", 6)
     return (
         "WITH x AS (SELECT vec_id, label, "
         "list_transform(embedding, v -> CAST(v AS DOUBLE)) AS xd, "
@@ -2285,6 +2297,7 @@ def test_component_safe_split_cross_engine(spark):
 
     from flink_sql_security_spark.operators import dedup as D
     from flink_sql_security_spark.operators import sampling as SM
+    import oracles.sampling
 
     path = "/root/testdata/sf0.001/documents.parquet"
     pdocs = spark.read.parquet(path)
@@ -2298,7 +2311,7 @@ def test_component_safe_split_cross_engine(spark):
     got = sorted(map(tuple, SM.component_safe_split(
         pdocs, D.ngram_jaccard_pairs(pdocs, threshold=0.05)).collect()))
     want = sorted(map(tuple, con.execute(
-        SM.component_safe_split_duckdb_sql(pairs_sql)).fetchall()))
+        oracles.sampling.component_safe_split_duckdb_sql(pairs_sql)).fetchall()))
     con.close()
     assert got == want and len(got) == 500
 
@@ -2308,7 +2321,7 @@ def test_temperature_mix_empty_and_all_null_groups(spark):
     emit `CASE ELSE 0 END` — a parse error. Both now return the empty
     result, and the shared CASE emitter degrades to the literal 0."""
     from flink_sql_security_spark.operators import sampling as SM
-    from flink_sql_security_spark.operators.sampling import _take_case_sql
+    from flink_sql_security_spark.operators.sampling import take_case_sql
 
     docs = _tmix_docs(spark)
     assert SM.temperature_mix(docs.where("doc_id < 0"),
@@ -2317,7 +2330,7 @@ def test_temperature_mix_empty_and_all_null_groups(spark):
         [(1, None), (2, None)], "doc_id long, source string")
     assert SM.temperature_mix(all_null, alpha=0.5,
                               target_rows=40).count() == 0
-    assert _take_case_sql({}, "source") == "0"
+    assert take_case_sql({}, "source") == "0"
 
 
 # ------------------------------------------- sentence-boundary chunking
@@ -2361,8 +2374,8 @@ def test_chunk_sentences_cross_engine_exact(spark):
     budgets and a custom delimiter (the entry's config)."""
     import duckdb
 
-    from flink_sql_security_spark.operators.corpus import (
-        chunk_sentences, chunk_sentences_duckdb_sql)
+    from flink_sql_security_spark.operators.corpus import chunk_sentences
+    from oracles.corpus import chunk_sentences_duckdb_sql
 
     sf = "/root/testdata/sf0.001"
     docs = spark.read.parquet(f"{sf}/documents.parquet")
@@ -2379,8 +2392,8 @@ def test_chunk_sentences_cross_engine_exact(spark):
 
 
 def test_chunk_sentences_validation_and_empty(spark):
-    from flink_sql_security_spark.operators.corpus import (
-        chunk_sentences, chunk_sentences_duckdb_sql)
+    from flink_sql_security_spark.operators.corpus import chunk_sentences
+    from oracles.corpus import chunk_sentences_duckdb_sql
 
     df = spark.createDataFrame([(1, "x. y"), (2, "   "), (3, None)],
                                ["doc_id", "text"])
@@ -2401,8 +2414,8 @@ def test_fuzz_chunk_sentences_configs_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.corpus import (
-        chunk_sentences, chunk_sentences_duckdb_sql)
+    from flink_sql_security_spark.operators.corpus import chunk_sentences
+    from oracles.corpus import chunk_sentences_duckdb_sql
 
     sf = "/root/testdata/sf0.001"
     docs = spark.read.parquet(f"{sf}/documents.parquet")
@@ -2430,8 +2443,8 @@ def test_chunk_sentences_dense_ids_metachar_delim_and_trim(spark):
     phantom token and empty segments count 0."""
     import duckdb
 
-    from flink_sql_security_spark.operators.corpus import (
-        chunk_sentences, chunk_sentences_duckdb_sql)
+    from flink_sql_security_spark.operators.corpus import chunk_sentences
+    from oracles.corpus import chunk_sentences_duckdb_sql
 
     # (a) dense ids: sentences of 10 and 10 tokens at budget 5 land in
     # raw chunks 0 and 2 -> renumbered 0 and 1
@@ -2512,8 +2525,8 @@ def test_chunk_content_defined_semantics_and_validation(spark):
 
     import pytest as _pt
 
-    from flink_sql_security_spark.operators.corpus import (
-        chunk_content_defined, chunk_content_defined_duckdb_sql)
+    from flink_sql_security_spark.operators.corpus import chunk_content_defined
+    from oracles.corpus import chunk_content_defined_duckdb_sql
 
     df = spark.createDataFrame(
         [(1, "solo"), (2, "  "), (3, None)], ["doc_id", "text"])
@@ -2554,8 +2567,8 @@ def test_fuzz_chunk_content_defined_configs_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.corpus import (
-        chunk_content_defined, chunk_content_defined_duckdb_sql)
+    from flink_sql_security_spark.operators.corpus import chunk_content_defined
+    from oracles.corpus import chunk_content_defined_duckdb_sql
 
     sf = "/root/testdata/sf0.001"
     docs = spark.read.parquet(f"{sf}/documents.parquet")
@@ -2624,8 +2637,8 @@ def test_robust_outliers_median_is_breakdown_resistant(spark):
 
 
 def test_robust_outliers_validates_args(spark):
-    from flink_sql_security_spark.operators.profile import (
-        robust_outliers, robust_outliers_duckdb_sql)
+    from flink_sql_security_spark.operators.profile import robust_outliers
+    from oracles.profile import robust_outliers_duckdb_sql
 
     df = spark.createDataFrame([("a", 1, 1.0)], ["g", "id", "v"])
     import pytest
@@ -2645,8 +2658,8 @@ def test_fuzz_robust_outliers_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.profile import (
-        robust_outliers, robust_outliers_duckdb_sql)
+    from flink_sql_security_spark.operators.profile import robust_outliers
+    from oracles.profile import robust_outliers_duckdb_sql
 
     con = duckdb.connect()
     rng = random.Random(16180)
@@ -2726,15 +2739,15 @@ def test_matryoshka_auto_shortlist_rule():
     import math
 
     from flink_sql_security_spark.operators.similarity import (
-        _matryoshka_shortlist_k)
+        matryoshka_shortlist_k)
 
-    assert _matryoshka_shortlist_k(5, "auto", 16) == 40      # floor
-    assert _matryoshka_shortlist_k(5, "auto", 10_000) == 500  # 5·√n
-    assert _matryoshka_shortlist_k(
+    assert matryoshka_shortlist_k(5, "auto", 16) == 40      # floor
+    assert matryoshka_shortlist_k(5, "auto", 10_000) == 500  # 5·√n
+    assert matryoshka_shortlist_k(
         5, "auto", 2_000) == math.ceil(5 * math.sqrt(2_000))
-    assert _matryoshka_shortlist_k(5, 8, 0) == 40             # legacy int
+    assert matryoshka_shortlist_k(5, 8, 0) == 40             # legacy int
     with pytest.raises(ValueError, match="shortlist"):
-        _matryoshka_shortlist_k(5, "AUTO", 10)
+        matryoshka_shortlist_k(5, "AUTO", 10)
 
 
 def test_matryoshka_validates_args(spark):
@@ -2746,10 +2759,10 @@ def test_matryoshka_validates_args(spark):
     with pytest.raises(ValueError, match="shortlist"):
         S.matryoshka_topk(emb, emb, prefix_dims=8, shortlist=0, k=5)
     with pytest.raises(ValueError, match="prefix_dims"):
-        S.matryoshka_topk_duckdb_sql("t", "1=1", prefix_dims=-1)
+        oracles.similarity.matryoshka_topk_duckdb_sql("t", "1=1", prefix_dims=-1)
     with pytest.raises(ValueError, match="shortlist"):
-        S.matryoshka_topk_duckdb_sql("t", "1=1", prefix_dims=8,
-                                     shortlist=0)
+        oracles.similarity.matryoshka_topk_duckdb_sql("t", "1=1", prefix_dims=8,
+                                                      shortlist=0)
 
 
 def test_fuzz_matryoshka_configs_cross_engine(spark):
@@ -2774,7 +2787,7 @@ def test_fuzz_matryoshka_configs_cross_engine(spark):
         got = sorted(map(tuple, S.matryoshka_topk(
             emb, emb.where("vec_id < 6"), prefix_dims=p, shortlist=sl,
             k=k).collect()))
-        want = sorted(map(tuple, con.execute(S.matryoshka_topk_duckdb_sql(
+        want = sorted(map(tuple, con.execute(oracles.similarity.matryoshka_topk_duckdb_sql(
             "embeddings", "vec_id < 6", prefix_dims=p, shortlist=sl,
             k=k)).fetchall()))
         assert got == want and len(got) > 0, cfg
@@ -2843,7 +2856,7 @@ def test_fuzz_containment_cross_engine(spark):
             f"sh AS (SELECT DISTINCT doc_id, array_to_string(ws[i+1:i+{n}], ' ') AS shingle "
             f"FROM w, UNNEST(range(greatest(len(ws)-{n - 1}, 0))) AS t(i))")
         want = sorted(map(tuple, con.execute(
-            D.containment_pairs_duckdb_sql(sh, n=n, threshold=thr)
+            oracles.dedup.containment_pairs_duckdb_sql(sh, n=n, threshold=thr)
         ).fetchall()))
         assert got == want and len(got) > 0, cfg
     con.close()
@@ -2872,8 +2885,8 @@ def test_basket_rules_hand_computed(spark):
 
 
 def test_basket_rules_validates_support(spark):
-    from flink_sql_security_spark.operators.assoc import (
-        basket_rules, basket_rules_duckdb_sql)
+    from flink_sql_security_spark.operators.assoc import basket_rules
+    from oracles.assoc import basket_rules_duckdb_sql
 
     df = spark.createDataFrame([(1, "a")], ["b", "i"])
     with pytest.raises(ValueError, match="min_support"):
@@ -2890,8 +2903,8 @@ def test_fuzz_basket_rules_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.assoc import (
-        basket_rules, basket_rules_duckdb_sql)
+    from flink_sql_security_spark.operators.assoc import basket_rules
+    from oracles.assoc import basket_rules_duckdb_sql
 
     con = duckdb.connect()
     rng = random.Random(26180)
@@ -2974,8 +2987,8 @@ def test_fuzz_basket_rules_2to1_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.assoc import (
-        basket_rules_2to1, basket_rules_2to1_duckdb_sql)
+    from flink_sql_security_spark.operators.assoc import basket_rules_2to1
+    from oracles.assoc import basket_rules_2to1_duckdb_sql
 
     con = duckdb.connect()
     rng = random.Random(26181)
@@ -3056,8 +3069,8 @@ def test_feature_scale_degenerate_groups(spark):
 
 
 def test_feature_scale_validates_args(spark):
-    from flink_sql_security_spark.operators.profile import (
-        feature_scale, feature_scale_duckdb_sql)
+    from flink_sql_security_spark.operators.profile import feature_scale
+    from oracles.profile import feature_scale_duckdb_sql
 
     df = spark.createDataFrame([("g", 1, 1.0)], ["g", "id", "v"])
     with pytest.raises(ValueError, match="method"):
@@ -3076,8 +3089,8 @@ def test_fuzz_feature_scale_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.profile import (
-        feature_scale, feature_scale_duckdb_sql)
+    from flink_sql_security_spark.operators.profile import feature_scale
+    from oracles.profile import feature_scale_duckdb_sql
 
     con = duckdb.connect()
     rng = random.Random(16183)
@@ -3134,8 +3147,8 @@ def test_correlations_listwise_deletion(spark):
 
 
 def test_correlations_validates_cols(spark):
-    from flink_sql_security_spark.operators.profile import (
-        profile_correlations, profile_correlations_duckdb_sql)
+    from flink_sql_security_spark.operators.profile import profile_correlations
+    from oracles.profile import profile_correlations_duckdb_sql
 
     df = spark.createDataFrame([(1.0, 2.0)], "x double, y double")
     with pytest.raises(ValueError, match=">= 2"):
@@ -3151,8 +3164,8 @@ def test_fuzz_correlations_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.profile import (
-        profile_correlations, profile_correlations_duckdb_sql)
+    from flink_sql_security_spark.operators.profile import profile_correlations
+    from oracles.profile import profile_correlations_duckdb_sql
 
     con = duckdb.connect()
     rng = random.Random(16184)
@@ -3208,8 +3221,8 @@ def test_profile_embeddings_hand_values(spark):
 def test_profile_embeddings_guards(spark):
     import pytest
 
-    from flink_sql_security_spark.operators.profile import (
-        profile_embeddings, profile_embeddings_duckdb_sql)
+    from flink_sql_security_spark.operators.profile import profile_embeddings
+    from oracles.profile import profile_embeddings_duckdb_sql
 
     ragged = spark.createDataFrame(
         [(1, [1.0, 2.0]), (2, [1.0])], ["vec_id", "embedding"])
@@ -3305,8 +3318,8 @@ def test_k_anonymize_validates_and_bites(spark):
     driver fixture (a gate that never bites tests nothing)."""
     import pytest as _pytest
 
-    from flink_sql_security_spark.operators.privacy import (
-        anonymity_report, k_anonymize, k_anonymize_duckdb_sql)
+    from flink_sql_security_spark.operators.privacy import anonymity_report, k_anonymize
+    from oracles.privacy import k_anonymize_duckdb_sql
 
     cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
     total = cust.count()
@@ -3333,9 +3346,8 @@ def test_fuzz_k_anonymity_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.privacy import (
-        anonymity_report, anonymity_report_duckdb_sql, k_anonymize,
-        k_anonymize_duckdb_sql)
+    from flink_sql_security_spark.operators.privacy import anonymity_report, k_anonymize
+    from oracles.privacy import anonymity_report_duckdb_sql, k_anonymize_duckdb_sql
 
     con = duckdb.connect()
     rng = random.Random(20250)
@@ -3449,10 +3461,8 @@ def test_fuzz_generalization_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.privacy import (
-        generalization_report, generalization_report_duckdb_sql,
-        generalize, generalize_duckdb_select, k_anonymize,
-        k_anonymize_duckdb_sql)
+    from flink_sql_security_spark.operators.privacy import generalization_report, generalize, k_anonymize
+    from oracles.privacy import generalization_report_duckdb_sql, generalize_duckdb_select, k_anonymize_duckdb_sql
 
     con = duckdb.connect()
     rng = random.Random(46368)
@@ -3536,8 +3546,8 @@ def test_t_closeness_hand_computed(spark):
 def test_t_closeness_validates(spark):
     import pytest as _pytest
 
-    from flink_sql_security_spark.operators.privacy import (
-        t_close_release, t_close_release_duckdb_sql, t_closeness_report)
+    from flink_sql_security_spark.operators.privacy import t_close_release, t_closeness_report
+    from oracles.privacy import t_close_release_duckdb_sql
 
     df = spark.createDataFrame([("a", "x")], "q string, sens string")
     with _pytest.raises(ValueError, match="overlaps"):
@@ -3558,9 +3568,8 @@ def test_fuzz_t_closeness_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.privacy import (
-        t_close_release, t_close_release_duckdb_sql,
-        t_closeness_report, t_closeness_report_duckdb_sql)
+    from flink_sql_security_spark.operators.privacy import t_close_release, t_closeness_report
+    from oracles.privacy import t_close_release_duckdb_sql, t_closeness_report_duckdb_sql
 
     con = duckdb.connect()
     rng = random.Random(514229)
@@ -3634,8 +3643,8 @@ def test_dp_release_properties(spark):
 def test_dp_release_validates(spark):
     import pytest as _pytest
 
-    from flink_sql_security_spark.operators.privacy import (
-        dp_count, dp_count_duckdb_sql, dp_sum)
+    from flink_sql_security_spark.operators.privacy import dp_count, dp_sum
+    from oracles.privacy import dp_count_duckdb_sql
 
     df = spark.createDataFrame([("a", 1.0)], "g string, v double")
     with _pytest.raises(ValueError, match="epsilon"):
@@ -3658,8 +3667,8 @@ def test_fuzz_dp_release_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.privacy import (
-        dp_count, dp_count_duckdb_sql, dp_sum, dp_sum_duckdb_sql)
+    from flink_sql_security_spark.operators.privacy import dp_count, dp_sum
+    from oracles.privacy import dp_count_duckdb_sql, dp_sum_duckdb_sql
 
     con = duckdb.connect()
     rng = random.Random(317811)
@@ -3737,8 +3746,8 @@ def test_fuzz_rolling_stats_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.timeseries import (
-        rolling_daily_stats, rolling_daily_stats_sql)
+    from flink_sql_security_spark.operators.timeseries import rolling_daily_stats
+    from oracles.timeseries import rolling_daily_stats_sql
 
     con = duckdb.connect()
     rng = random.Random(2178309)
@@ -3821,8 +3830,8 @@ def test_fuzz_basket_rules_3to1_cross_engine(spark):
     import duckdb
     import pandas as pd
 
-    from flink_sql_security_spark.operators.assoc import (
-        basket_rules_3to1, basket_rules_3to1_duckdb_sql)
+    from flink_sql_security_spark.operators.assoc import basket_rules_3to1
+    from oracles.assoc import basket_rules_3to1_duckdb_sql
 
     con = duckdb.connect()
     rng = random.Random(75025)

@@ -10,7 +10,8 @@ from pyspark.sql import functions as F
 from flink_sql_security_spark.operators import graph
 from flink_sql_security_spark.operators.cache import release
 from flink_sql_security_spark.operators.fuzzy import fuzzy_name_pairs
-from flink_sql_security_spark.operators.graph import pagerank, pagerank_sql
+from flink_sql_security_spark.operators.graph import pagerank
+from oracles.graph import pagerank_sql
 from flink_sql_security_spark.operators.retrieval import bm25_topk
 
 
@@ -132,8 +133,8 @@ def test_fuzz_bm25_indexed_configs_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.retrieval import (
-        bm25_build_index, bm25_topk, bm25_topk_indexed, bm25_topk_sql)
+    from flink_sql_security_spark.operators.retrieval import bm25_build_index, bm25_topk, bm25_topk_indexed
+    from oracles.retrieval import bm25_topk_sql
 
     path = "/root/testdata/sf0.001/documents.parquet"
     docs = spark.read.parquet(path)
@@ -224,7 +225,8 @@ def test_hits_regular_graph_is_uniform(spark):
 
 
 def test_hits_validates_iters(spark):
-    from flink_sql_security_spark.operators.graph import hits, hits_sql
+    from flink_sql_security_spark.operators.graph import hits
+    from oracles.graph import hits_sql
 
     with pytest.raises(ValueError, match="iters"):
         hits(_hits_edges(spark), iters=0)
@@ -240,7 +242,8 @@ def test_fuzz_hits_configs_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.graph import hits, hits_sql
+    from flink_sql_security_spark.operators.graph import hits
+    from oracles.graph import hits_sql
 
     con = duckdb.connect()
     rng = random.Random(16161)
@@ -299,8 +302,8 @@ def test_ppr_all_seeds_close_to_uniform_pagerank(spark):
 
 
 def test_ppr_validates_seeds(spark):
-    from flink_sql_security_spark.operators.graph import (
-        pagerank, pagerank_sql)
+    from flink_sql_security_spark.operators.graph import pagerank
+    from oracles.graph import pagerank_sql
 
     df = spark.createDataFrame([(1, 2)], ["src", "dst"])
     with pytest.raises(ValueError, match="non-empty"):
@@ -321,8 +324,8 @@ def test_fuzz_ppr_configs_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.graph import (
-        pagerank, pagerank_sql)
+    from flink_sql_security_spark.operators.graph import pagerank
+    from oracles.graph import pagerank_sql
 
     con = duckdb.connect()
     rng = random.Random(17171)
@@ -501,8 +504,8 @@ EMB_PATH = "/root/testdata/sf0.001/embeddings.parquet"
 def test_mmr_cross_engine_exact(spark):
     import duckdb
 
-    from flink_sql_security_spark.operators.retrieval import (
-        mmr_rerank, mmr_rerank_duckdb_sql)
+    from flink_sql_security_spark.operators.retrieval import mmr_rerank
+    from oracles.retrieval import mmr_rerank_duckdb_sql
 
     emb = spark.read.parquet(EMB_PATH)
     con = duckdb.connect()
@@ -586,8 +589,8 @@ def test_fuzz_mmr_configs_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.retrieval import (
-        mmr_rerank, mmr_rerank_duckdb_sql)
+    from flink_sql_security_spark.operators.retrieval import mmr_rerank
+    from oracles.retrieval import mmr_rerank_duckdb_sql
 
     emb = spark.read.parquet(EMB_PATH)
     con = duckdb.connect()
@@ -618,8 +621,8 @@ def test_mmr_short_corpus_and_shortlist_smaller_than_k(spark):
     cross-engine exact."""
     import duckdb
 
-    from flink_sql_security_spark.operators.retrieval import (
-        mmr_rerank, mmr_rerank_duckdb_sql)
+    from flink_sql_security_spark.operators.retrieval import mmr_rerank
+    from oracles.retrieval import mmr_rerank_duckdb_sql
 
     rows = [(i, [float((i * 7 + j * 3) % 5 - 2) for j in range(8)])
             for i in range(4)]
@@ -643,8 +646,8 @@ def test_mmr_lambda_zero_pure_diversity_cross_engine(spark):
     kernel and diverge from the oracle's rel-DESC sel1."""
     import duckdb
 
-    from flink_sql_security_spark.operators.retrieval import (
-        mmr_rerank, mmr_rerank_duckdb_sql)
+    from flink_sql_security_spark.operators.retrieval import mmr_rerank
+    from oracles.retrieval import mmr_rerank_duckdb_sql
 
     emb = spark.read.parquet(EMB_PATH)
     con = duckdb.connect()
@@ -731,10 +734,10 @@ def test_rrf_fuse_semantics(spark):
 def test_rrf_fuse_cross_engine_exact(spark):
     """Spark fusion == DuckDB oracle, value-exact, over real BM25 +
     cosine shortlists at sf0.001 (the entry's own composition)."""
-    from flink_sql_security_spark.functions.text import floor_round
+    from oracles.common import floor_round
     from flink_sql_security_spark.operators import similarity as S
-    from flink_sql_security_spark.operators.retrieval import (
-        bm25_topk, bm25_topk_sql, rrf_fuse, rrf_fuse_sql)
+    from flink_sql_security_spark.operators.retrieval import bm25_topk, rrf_fuse
+    from oracles.retrieval import bm25_topk_sql, rrf_fuse_sql
 
     sf = "/root/testdata/sf0.001"
     docs = spark.read.parquet(f"{sf}/documents.parquet")
@@ -748,7 +751,7 @@ def test_rrf_fuse_cross_engine_exact(spark):
 
     dot = floor_round(
         "list_sum(list_transform(list_zip(q.unit, n.unit), "
-        "x -> x[1] * x[2]))", 6, "duckdb")
+        "x -> x[1] * x[2]))", 6)
     unit = (
         "SELECT vec_id, list_transform(embedding, "
         "x -> CAST(x AS DOUBLE) / n) AS unit FROM (SELECT vec_id, "
@@ -778,8 +781,8 @@ def test_rrf_fuse_cross_engine_exact(spark):
 def test_rrf_fuse_grouped_multi_query(spark):
     """group_col fuses per group: each q_id gets its own fused top-k,
     cross-engine exact."""
-    from flink_sql_security_spark.operators.retrieval import (
-        rrf_fuse, rrf_fuse_sql)
+    from flink_sql_security_spark.operators.retrieval import rrf_fuse
+    from oracles.retrieval import rrf_fuse_sql
 
     a = spark.createDataFrame(
         [(10, 1, 1), (10, 2, 2), (20, 2, 1), (20, 3, 2)],
@@ -811,8 +814,8 @@ def test_rrf_fuse_grouped_multi_query(spark):
 
 
 def test_rrf_fuse_validation(spark):
-    from flink_sql_security_spark.operators.retrieval import (
-        rrf_fuse, rrf_fuse_sql)
+    from flink_sql_security_spark.operators.retrieval import rrf_fuse
+    from oracles.retrieval import rrf_fuse_sql
 
     df = _ranked(spark, [(1, 1)])
     with pytest.raises(ValueError, match="at least one"):
@@ -832,8 +835,8 @@ def test_rrf_fuse_weighted_cross_engine(spark):
     both engines, and weights=None reproduces the unweighted result."""
     import duckdb
 
-    from flink_sql_security_spark.operators.retrieval import (
-        rrf_fuse, rrf_fuse_sql)
+    from flink_sql_security_spark.operators.retrieval import rrf_fuse
+    from oracles.retrieval import rrf_fuse_sql
 
     lex = _ranked(spark, [(1, 1), (2, 2), (3, 3)])
     sem = _ranked(spark, [(2, 1), (4, 2), (1, 3)])
@@ -865,8 +868,8 @@ def test_rrf_fuse_weighted_cross_engine(spark):
 
 
 def test_rrf_fuse_weight_validation(spark):
-    from flink_sql_security_spark.operators.retrieval import (
-        rrf_fuse, rrf_fuse_sql)
+    from flink_sql_security_spark.operators.retrieval import rrf_fuse
+    from oracles.retrieval import rrf_fuse_sql
 
     df = _ranked(spark, [(1, 1)])
     with pytest.raises(ValueError, match="weights length"):
@@ -885,8 +888,8 @@ def test_fuzz_rrf_configs_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.retrieval import (
-        rrf_fuse, rrf_fuse_sql)
+    from flink_sql_security_spark.operators.retrieval import rrf_fuse
+    from oracles.retrieval import rrf_fuse_sql
 
     rng = random.Random(10101)
     for trial in range(4):
@@ -1006,8 +1009,8 @@ def test_fuzz_triangles_configs_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.graph import (
-        triangle_count, triangle_sql)
+    from flink_sql_security_spark.operators.graph import triangle_count
+    from oracles.graph import triangle_sql
 
     con = duckdb.connect()
     rng = random.Random(27182)
@@ -1077,8 +1080,8 @@ def test_lpa_partitioning_invariant(spark):
 def test_lpa_validates_iters(spark):
     import pytest
 
-    from flink_sql_security_spark.operators.graph import (
-        label_propagation, label_propagation_sql)
+    from flink_sql_security_spark.operators.graph import label_propagation
+    from oracles.graph import label_propagation_sql
 
     df = spark.createDataFrame([(1, 2)], ["src", "dst"])
     with pytest.raises(ValueError, match="iters"):
@@ -1094,8 +1097,8 @@ def test_fuzz_lpa_configs_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.graph import (
-        label_propagation, label_propagation_sql)
+    from flink_sql_security_spark.operators.graph import label_propagation
+    from oracles.graph import label_propagation_sql
 
     con = duckdb.connect()
     rng = random.Random(14143)
@@ -1173,8 +1176,8 @@ def test_fuzz_weighted_pagerank_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.graph import (
-        pagerank, pagerank_sql)
+    from flink_sql_security_spark.operators.graph import pagerank
+    from oracles.graph import pagerank_sql
 
     con = duckdb.connect()
     rng = random.Random(16182)
@@ -1227,8 +1230,8 @@ def test_bfs_early_exhaustion(spark):
 def test_bfs_validates_args(spark):
     import pytest
 
-    from flink_sql_security_spark.operators.graph import (
-        bfs_levels, bfs_levels_sql)
+    from flink_sql_security_spark.operators.graph import bfs_levels
+    from oracles.graph import bfs_levels_sql
 
     df = spark.createDataFrame([(1, 2)], ["src", "dst"])
     with pytest.raises(ValueError, match="max_hops"):
@@ -1247,8 +1250,8 @@ def test_bfs_string_node_ids(spark):
     the SQL twin quotes string seed literals under the escape guard."""
     import duckdb
 
-    from flink_sql_security_spark.operators.graph import (
-        bfs_levels, bfs_levels_sql)
+    from flink_sql_security_spark.operators.graph import bfs_levels
+    from oracles.graph import bfs_levels_sql
 
     df = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d")], ["src", "dst"])
@@ -1269,8 +1272,8 @@ def test_fuzz_bfs_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.graph import (
-        bfs_levels, bfs_levels_sql)
+    from flink_sql_security_spark.operators.graph import bfs_levels
+    from oracles.graph import bfs_levels_sql
 
     con = duckdb.connect()
     rng = random.Random(27184)
@@ -1330,7 +1333,8 @@ def test_k_core_hand_graph_cascade(spark):
 def test_k_core_validates_and_self_loops(spark):
     import pytest as _pytest
 
-    from flink_sql_security_spark.operators.graph import k_core, k_core_sql
+    from flink_sql_security_spark.operators.graph import k_core
+    from oracles.graph import k_core_sql
 
     df = spark.createDataFrame([(1, 1), (1, 2), (2, 1)], ["src", "dst"])
     # self-loop dropped, duplicate/reversed edges collapse: max core
@@ -1355,7 +1359,8 @@ def test_fuzz_k_core_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.graph import k_core, k_core_sql
+    from flink_sql_security_spark.operators.graph import k_core
+    from oracles.graph import k_core_sql
 
     con = duckdb.connect()
     rng = random.Random(196418)

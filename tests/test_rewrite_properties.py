@@ -358,12 +358,20 @@ def _rows(df):
     return sorted(map(repr, df.collect()))
 
 
+def _same_plan(a, b) -> bool:
+    """Catalyst's ``sameResult`` on the two optimized plans: equal
+    canonical plans return the same rows, so only the rest execute."""
+    return a._jdf.queryExecution().optimizedPlan().sameResult(
+        b._jdf.queryExecution().optimizedPlan())
+
+
 def test_executed_form_matches_the_printed_form_over_the_corpus(
         spark, monkeypatch):
     """For the 56 corpus queries × the 9 preset users and one user of each
     perfbench role: ``ctx.sql`` returns the rows and schema of the printed
     ``mixed_rewrite``, and every column a lean wrap drops has a name that
-    occurs nowhere in the row-filtered statement."""
+    occurs nowhere in the row-filtered statement. Rows are compared by
+    execution only where the two optimized plans differ."""
     import __spark_entry__ as corpus
     from flink_sql_security_spark.presets import demo_context
     from flink_sql_security_spark.sources import register_tables
@@ -397,7 +405,8 @@ def test_executed_form_matches_the_printed_form_over_the_corpus(
             n_lean += 1
             got, want = ctx.sql(user, sql), spark.sql(printed)
             assert got.schema == want.schema, (name, user)
-            assert _rows(got) == _rows(want), (name, user)
+            if not _same_plan(got, want):
+                assert _rows(got) == _rows(want), (name, user)
     assert n_lean > 300 and n_dropped > n_lean
 
 

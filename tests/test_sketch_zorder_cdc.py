@@ -10,6 +10,9 @@ import pytest
 from pyspark.sql import Window, functions as F
 
 from flink_sql_security_spark.operators import cdc, sketch, zorder
+import oracles.cdc
+import oracles.zorder
+import oracles.sketch
 
 
 # ---------------------------------------------------------------------------
@@ -60,7 +63,7 @@ def test_hll_duckdb_parity(spark):
     con.execute("CREATE TABLE hll_t AS SELECT range AS k, range % 700 AS g "
                 "FROM range(4000)")
     want = sorted(map(tuple, con.execute(
-        sketch.approx_distinct_hll_duckdb_sql("hll_t", ["k", "g"])).fetchall()))
+        oracles.sketch.approx_distinct_hll_duckdb_sql("hll_t", ["k", "g"])).fetchall()))
     assert got == want
 
 
@@ -155,7 +158,7 @@ def test_zorder_duckdb_parity(spark):
     con.execute("CREATE TABLE zt AS SELECT range AS rid, "
                 "(range * 37) % 100 AS x, (range * 91) % 1000 AS y "
                 "FROM range(300)")
-    want = sorted(map(tuple, con.execute(zorder.zorder_key_duckdb_sql(
+    want = sorted(map(tuple, con.execute(oracles.zorder.zorder_key_duckdb_sql(
         "zt", ["x", "y"], key_cols=["rid"])).fetchall()))
     assert got == want
 
@@ -210,7 +213,7 @@ def test_upsert_latest_duckdb_parity(spark):
     con = duckdb.connect()
     con.execute("CREATE TABLE ch (k BIGINT, seq BIGINT, op VARCHAR, v VARCHAR)")
     con.executemany("INSERT INTO ch VALUES (?, ?, ?, ?)", _CDC_ROWS)
-    want = sorted(map(tuple, con.execute(cdc.upsert_latest_duckdb_sql(
+    want = sorted(map(tuple, con.execute(oracles.cdc.upsert_latest_duckdb_sql(
         "ch", ["k"], "seq", select_cols=["k", "seq", "v"], op_col="op",
         tiebreak_cols=["v"])).fetchall()))
     assert got == want
@@ -452,7 +455,7 @@ def test_bloom_decon_duckdb_parity(spark):
     con = duckdb.connect()
     con.execute("CREATE TABLE bl_t AS SELECT range AS doc_id, "
                 "'doc text number ' || (range % 7) AS text FROM range(60)")
-    want = sorted(map(tuple, con.execute(sketch.bloom_decontaminate_duckdb_sql(
+    want = sorted(map(tuple, con.execute(oracles.sketch.bloom_decontaminate_duckdb_sql(
         "SELECT * FROM bl_t", "SELECT * FROM bl_t WHERE doc_id < 10")).fetchall()))
     assert got == want
     # normalized texts repeat mod 7 → docs ≥ 10 with text-class < 3 are
@@ -523,7 +526,7 @@ def test_cms_token_counts_duckdb_parity(spark):
     con.execute("CREATE TABLE cms_t AS SELECT range AS doc_id, "
                 "'alpha beta ' || repeat('gamma ', range % 3) AS text "
                 "FROM range(40)")
-    want = sorted(map(tuple, con.execute(sketch.cms_token_counts_duckdb_sql(
+    want = sorted(map(tuple, con.execute(oracles.sketch.cms_token_counts_duckdb_sql(
         "cms_t", min_count=10, width=128, depth=4)).fetchall()))
     assert got == want
 
@@ -549,7 +552,7 @@ def test_double_hash_cross_engine_on_adversarial_strings(spark):
     got = {r["v"]: (r["h1"], r["h2"]) for r in df.selectExpr(
         "v", f"{h1s} AS h1", f"{h2s} AS h2").collect()}
     con = duckdb.connect()
-    h1d, h2d = sketch._dh_duckdb("v", 4096)
+    h1d, h2d = oracles.sketch._dh_duckdb("v", 4096)
     for v in vals:
         want = con.execute(
             f"SELECT {h1d}, {h2d} FROM (SELECT ? AS v)", [v]).fetchone()
@@ -597,7 +600,7 @@ def test_snapshot_diff_duckdb_parity(spark):
     con.execute("CREATE TABLE dnew AS SELECT range AS doc_id, "
                 "'text number ' || ((range % 9) + CASE WHEN range % 5 = 0 "
                 "THEN 1 ELSE 0 END) AS text FROM range(10, 60)")
-    want = sorted(map(tuple, con.execute(cdc.snapshot_diff_duckdb_sql(
+    want = sorted(map(tuple, con.execute(oracles.cdc.snapshot_diff_duckdb_sql(
         "SELECT * FROM dold", "SELECT * FROM dnew",
         ["doc_id"], "text")).fetchall()))
     assert got == want
@@ -681,7 +684,7 @@ def test_bloom_decon_null_text_rows_kept(spark):
     con.execute("CREATE TABLE bn_t(doc_id BIGINT, text VARCHAR)")
     con.execute("INSERT INTO bn_t VALUES (1,'member text'),(2,NULL),"
                 "(3,'other text')")
-    want = sorted(map(tuple, con.execute(sketch.bloom_decontaminate_duckdb_sql(
+    want = sorted(map(tuple, con.execute(oracles.sketch.bloom_decontaminate_duckdb_sql(
         "SELECT * FROM bn_t", "SELECT * FROM bn_t WHERE doc_id = 1")).fetchall()))
     spark_rows = sorted((k,) + v for k, v in got.items())
     assert spark_rows == want
@@ -706,6 +709,7 @@ def test_grouped_distinct_hll_contract(spark):
     import duckdb
 
     from flink_sql_security_spark.operators import sketch as SK
+    import oracles.sketch
 
     path = "/root/testdata/sf0.01/events.parquet"
     ev = spark.read.parquet(path)
@@ -718,7 +722,7 @@ def test_grouped_distinct_hll_contract(spark):
     con.execute(f"CREATE VIEW events AS SELECT * FROM "
                 f"read_parquet('{path}')")
     want = sorted(map(tuple, con.execute(
-        SK.grouped_distinct_hll_duckdb_sql(
+        oracles.sketch.grouped_distinct_hll_duckdb_sql(
             "events", "event_type", "user_id")).fetchall()))
     assert sorted(map(tuple, out)) == want
 
@@ -776,8 +780,8 @@ def test_fuzz_scd2_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.cdc import (
-        scd2_history, scd2_history_duckdb_sql)
+    from flink_sql_security_spark.operators.cdc import scd2_history
+    from oracles.cdc import scd2_history_duckdb_sql
 
     con = duckdb.connect()
     rng = random.Random(27183)
@@ -812,8 +816,7 @@ def test_cdc_oracle_emitters_guard_delete_op():
     r09)."""
     import pytest
 
-    from flink_sql_security_spark.operators.cdc import (
-        scd2_history_duckdb_sql, upsert_latest_duckdb_sql)
+    from oracles.cdc import scd2_history_duckdb_sql, upsert_latest_duckdb_sql
 
     for bad in ("D'; DROP TABLE x; --", "a\\b", "x;y"):
         with pytest.raises(ValueError, match="delete_op"):

@@ -183,8 +183,8 @@ def test_gapfill_day_step(spark):
 
 
 def test_gapfill_validates_step(spark):
-    from flink_sql_security_spark.operators.timeseries import (
-        resample_ffill, resample_ffill_sql)
+    from flink_sql_security_spark.operators.timeseries import resample_ffill
+    from oracles.timeseries import resample_ffill_sql
 
     with pytest.raises(ValueError, match="step"):
         resample_ffill(_gap_events(spark), step="minute")
@@ -199,8 +199,8 @@ def test_fuzz_gapfill_configs_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.timeseries import (
-        resample_ffill, resample_ffill_sql)
+    from flink_sql_security_spark.operators.timeseries import resample_ffill
+    from oracles.timeseries import resample_ffill_sql
 
     con = duckdb.connect()
     rng = random.Random(14142)
@@ -300,8 +300,8 @@ def test_funnel_takes_earliest_chain(spark):
 def test_funnel_validates_steps(spark):
     import pytest
 
-    from flink_sql_security_spark.operators.funnel import (
-        funnel, funnel_duckdb_sql)
+    from flink_sql_security_spark.operators.funnel import funnel
+    from oracles.funnel import funnel_duckdb_sql
 
     with pytest.raises(ValueError, match="steps"):
         funnel(_funnel_events(spark), ["view"])
@@ -317,8 +317,8 @@ def test_fuzz_funnel_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.funnel import (
-        funnel, funnel_duckdb_sql)
+    from flink_sql_security_spark.operators.funnel import funnel
+    from oracles.funnel import funnel_duckdb_sql
 
     con = duckdb.connect()
     rng = random.Random(31416)
@@ -377,8 +377,8 @@ def test_retention_decay_and_exactness(spark):
 def test_retention_validates_period(spark):
     import pytest
 
-    from flink_sql_security_spark.operators.timeseries import (
-        retention_cohorts, retention_cohorts_sql)
+    from flink_sql_security_spark.operators.timeseries import retention_cohorts
+    from oracles.timeseries import retention_cohorts_sql
 
     df = spark.createDataFrame([(1,)], "user_id long").withColumn(
         "ts", F.current_timestamp())
@@ -396,8 +396,8 @@ def test_fuzz_retention_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.timeseries import (
-        retention_cohorts, retention_cohorts_sql)
+    from flink_sql_security_spark.operators.timeseries import retention_cohorts
+    from oracles.timeseries import retention_cohorts_sql
 
     con = duckdb.connect()
     rng = random.Random(16181)
@@ -485,8 +485,8 @@ def test_fuzz_funnel_attempts_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.funnel import (
-        funnel_attempts, funnel_attempts_duckdb_sql)
+    from flink_sql_security_spark.operators.funnel import funnel_attempts
+    from oracles.funnel import funnel_attempts_duckdb_sql
 
     con = duckdb.connect()
     rng = random.Random(31417)
@@ -620,8 +620,8 @@ def test_funnel_summary_zero_denominator_cross_engine(spark):
 
     import duckdb
 
-    from flink_sql_security_spark.operators.funnel import (
-        funnel_summary, funnel_summary_duckdb_sql)
+    from flink_sql_security_spark.operators.funnel import funnel_summary
+    from oracles.funnel import funnel_summary_duckdb_sql
 
     d = dt.datetime
     rows = [(1, d(2024, 1, 1), "view"), (2, d(2024, 1, 2), "view")]

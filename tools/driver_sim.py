@@ -6,7 +6,9 @@ sorting columns by name, ``sort_values`` over all columns (this is the
 step that raises on list-valued cells — round-2's emb_quantize_int8
 failure), stringifying, and hashing. This tool replays exactly that
 canonicalization for the first 50 ``_CHECK_ORDER`` entries so a window
-rotation can be validated BEFORE the driver runs.
+rotation can be validated BEFORE the driver runs. It imports
+``__spark_entry__`` from the repo root as the driver does, so it also
+checks that the entry module finds the top-level ``oracles`` package.
 
 Usage: python tools/driver_sim.py [entry ...]   (default: the window)
        SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 (default)
